@@ -53,25 +53,29 @@ object AnalystMarts {
     */
   def foldBatch(spark: SparkSession, batch: DataFrame, mart: Mart,
                 batchId: Long, maxDeltas: Int = 16): Unit = {
-    val act = batch
-      .select(col("user_id"), to_date(col("ts")).as("day"))
-      .filter(col("user_id").isNotNull && col("day").isNotNull)
-      .distinct()
-    BaseDelta.appendAndMaybeCompact(spark, mart.activityTable, act,
-      batchId, maxDeltas)
-    if (!StateLedger.applied(spark, mart.aggStatePath, batchId)) {
-      val partial = IncrementalAgg.partial(
-        batch.withColumn("day", to_date(col("ts"))), AggKeys, AggMeasures)
-      val merged =
-        if (SnapshotStore.exists(spark, mart.aggStatePath))
-          IncrementalAgg.merge(
-            StateLedger.readState(spark, mart.aggStatePath), partial,
-            AggKeys, AggMeasures)
-        else partial
-      SnapshotStore.publish(StateLedger.stamp(merged, batchId),
-        mart.aggStatePath)
-      ()
-    }
+    // both states derive from one read of the micro-batch
+    val pinned = batch.persist()
+    try {
+      val act = pinned
+        .select(col("user_id"), to_date(col("ts")).as("day"))
+        .filter(col("user_id").isNotNull && col("day").isNotNull)
+        .distinct()
+      BaseDelta.appendAndMaybeCompact(spark, mart.activityTable, act,
+        batchId, maxDeltas)
+      if (!StateLedger.applied(spark, mart.aggStatePath, batchId)) {
+        val partial = IncrementalAgg.partial(
+          pinned.withColumn("day", to_date(col("ts"))), AggKeys, AggMeasures)
+        val merged =
+          if (SnapshotStore.exists(spark, mart.aggStatePath))
+            IncrementalAgg.merge(
+              StateLedger.readState(spark, mart.aggStatePath), partial,
+              AggKeys, AggMeasures)
+          else partial
+        SnapshotStore.publish(StateLedger.stamp(merged, batchId),
+          mart.aggStatePath)
+        ()
+      }
+    } finally pinned.unpersist()
   }
 
   /** The marts as a `foreachBatch` stream over a CDC/events source —

@@ -2,6 +2,7 @@ package graft.gold
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** A committer lost its pointer CAS to a concurrent commit that touched
   * overlapping state (or exhausted its rebase retries). The losing
@@ -358,14 +359,61 @@ object MultiSnapshot {
     * advancing an overlapping member is a conflict, even though a fresh
     * entry read would not have seen it. Transactional callers
     * (MultiTableStream.foldBatch, Erasure.eraseCoordinated) MUST use
-    * this form; bare [[publish]] is for blind replaces whose content
-    * does not depend on prior committed state.
+    * this form (or its two halves, [[stage]] then [[commit]]); bare
+    * [[publish]] is for blind replaces whose content does not depend on
+    * prior committed state.
     */
   def publishFrom(spark: SparkSession, root: String,
                   observed: Option[Commit],
                   tables: Map[String, DataFrame],
                   pointers: Map[String, Long] = Map.empty,
-                  conflictRetries: Int = 3): Commit = {
+                  conflictRetries: Int = 3): Commit =
+    commit(spark, stage(spark, root, observed, tables, pointers,
+      conflictRetries))
+
+  /** A publish between its two halves: every member generation is
+    * reserved and written (durable, invisible — no commit references
+    * it), the pointer CAS has not run. `schemas` are the written frames'
+    * schemas, so [[readStaged]] needs no footer inference. Abandoning a
+    * `Staged` (an audit refusal, a crash) leaves invisible orphans that
+    * [[vacuum]] or a later publish's retirement reclaims — the same state
+    * a lost CAS leaves.
+    */
+  final case class Staged(root: String, observed: Option[Commit],
+                          gens: Map[String, Long],
+                          schemas: Map[String, StructType],
+                          pointers: Map[String, Long],
+                          conflictRetries: Int)
+
+  /** Throws [[CommitConflictException]] iff a commit after `observed`
+    * (now `cur`) advanced a member this publish advances: a staged
+    * `table` or a `pointer`.
+    */
+  private def conflictIfOverlap(root: String, observed: Option[Commit],
+                                tables: Set[String], pointers: Set[String],
+                                cur: Option[Commit]): Unit = {
+    val prevGens = observed.map(_.gens).getOrElse(Map.empty)
+    val curGens = cur.map(_.gens).getOrElse(Map.empty)
+    val touched = tables ++ pointers.map(PointerPrefix + _)
+    val overlap = touched.filter(t => curGens.get(t) != prevGens.get(t))
+    if (overlap.nonEmpty)
+      throw new CommitConflictException(
+        s"MultiSnapshot.publish at $root: concurrent commit advanced " +
+          s"${overlap.mkString(", ")} (observed v${observed.map(_.version).getOrElse(0L)}, " +
+          s"now v${cur.map(_.version).getOrElse(0L)}) — re-derive from " +
+          "the current commit and publish again; this attempt's staged " +
+          "generations are invisible orphans (vacuum reclaims them)")
+  }
+
+  /** First half of [[publishFrom]]: the overlap fast-path check, then
+    * RESERVE + STAGE every member of `tables`. Nothing becomes visible;
+    * [[commit]] flips the pointer.
+    */
+  def stage(spark: SparkSession, root: String,
+            observed: Option[Commit],
+            tables: Map[String, DataFrame],
+            pointers: Map[String, Long] = Map.empty,
+            conflictRetries: Int = 3): Staged = {
     require(tables.nonEmpty || pointers.nonEmpty,
       "MultiSnapshot.publish: no tables given")
     (tables.keys ++ pointers.keys).foreach(t =>
@@ -375,26 +423,11 @@ object MultiSnapshot {
     require(tables.keySet.intersect(pointers.keySet).isEmpty,
       "MultiSnapshot.publish: a table cannot be both staged and a pointer")
     val f = fs(spark, root)
-    val prev = observed
-    val prevGens = prev.map(_.gens).getOrElse(Map.empty)
-    // the member names this call wants to advance — the overlap set for
-    // conflict detection
-    val touched: Set[String] =
-      tables.keySet ++ pointers.keySet.map(PointerPrefix + _)
-    def conflictIfOverlap(cur: Option[Commit]): Unit = {
-      val curGens = cur.map(_.gens).getOrElse(Map.empty)
-      val overlap = touched.filter(t => curGens.get(t) != prevGens.get(t))
-      if (overlap.nonEmpty)
-        throw new CommitConflictException(
-          s"MultiSnapshot.publish at $root: concurrent commit advanced " +
-            s"${overlap.mkString(", ")} (observed v${prev.map(_.version).getOrElse(0L)}, " +
-            s"now v${cur.map(_.version).getOrElse(0L)}) — re-derive from " +
-            "the current commit and publish again; this attempt's staged " +
-            "generations are invisible orphans (vacuum reclaims them)")
-    }
+    val prevGens = observed.map(_.gens).getOrElse(Map.empty)
     // fast-path abort BEFORE staging: if the caller's observation is
     // already overtaken on an overlapping member, don't write data at all
-    conflictIfOverlap(currentCommit(spark, root))
+    conflictIfOverlap(root, observed, tables.keySet, pointers.keySet,
+      currentCommit(spark, root))
     // RESERVE + STAGE: each contender claims a distinct generation number
     // before writing a byte of data — durable, invisible, collision-free.
     // Member stagings write DISJOINT generation dirs, so they run
@@ -406,7 +439,27 @@ object MultiSnapshot {
         .parquet(genPath(root, t, gen))
       t -> gen
     }).toMap
+    Staged(root, observed, staged, tables.map { case (t, df) => t -> df.schema },
+      pointers, conflictRetries)
+  }
 
+  /** The staged generations of `s`, read with the schemas they were
+    * written with — the exact bytes [[commit]] would publish, e.g. for a
+    * write–audit–publish gate.
+    */
+  def readStaged(spark: SparkSession, s: Staged): Map[String, DataFrame] =
+    s.gens.map { case (t, g) =>
+      t -> spark.read.schema(s.schemas(t)).parquet(genPath(s.root, t, g))
+    }
+
+  /** Second half of [[publishFrom]]: the pointer CAS (rebasing over
+    * disjoint contenders up to `s.conflictRetries` times), then
+    * retirement below the retained window. Returns the new commit.
+    */
+  def commit(spark: SparkSession, s: Staged): Commit = {
+    val Staged(root, observed, _, _, pointers, conflictRetries) = s
+    val f = fs(spark, root)
+    val prevGens = observed.map(_.gens).getOrElse(Map.empty)
     var attempt = 0
     var committed: Commit = null
     while (committed == null) {
@@ -416,8 +469,8 @@ object MultiSnapshot {
       // advance a member we are publishing? If so our staged content may
       // be derived from state the winner replaced — fail clean, never
       // merge blindly.
-      conflictIfOverlap(cur)
-      val newGens = curGens ++ staged ++
+      conflictIfOverlap(root, observed, s.gens.keySet, pointers.keySet, cur)
+      val newGens = curGens ++ s.gens ++
         pointers.map { case (t, v) => (PointerPrefix + t) -> v }
       // COMMIT: one pointer PUT — the CAS
       val v = cur.map(_.version).getOrElse(0L) + 1

@@ -18,27 +18,38 @@ import graft.gold.{MultiSnapshot, Scd2Merge, UpsertByKey}
   * and replay.
   *
   * Per micro-batch b (one `foreachBatch` body, batch-callable for tests
-  * via [[foldBatch]]):
+  * via [[foldBatch]]) — write–audit–publish over one pinned read of the
+  * batch:
   *
-  *  1. ledger check — the COORDINATOR VERSION is the exactly-once
-  *     ledger: batch b commits version b+1 (same generation-number
-  *     recipe as scd2LogStream/AnalystMarts, lifted one level to the
-  *     multi-table commit). A replayed batch sees its version already
-  *     committed and skips whole — no table advances twice.
-  *  2. route — the batch splits by `routeCol` (the topic/table column
-  *     `fromKafkaRouted` carries through the envelope), each slice
-  *     projected to its table's shape by the spec's `project`.
-  *  3. fold — dims through [[Scd2Merge.applyLog]] (exact-changelog SCD2,
-  *     per-row effective timestamps, tombstones via `opCol`), facts
-  *     through [[UpsertByKey.mergeBatch]] (latest-wins keyed upsert with
-  *     CDC deletes), each reading the generation committed by the
+  *  1. ledger check — the committed `@sys.batch` marker is the
+  *     exactly-once ledger (see [[BatchLedger]]): a replayed batch sees
+  *     its id already folded and skips whole — no table advances twice.
+  *     Otherwise the batch is persisted once for the whole fold (every
+  *     route slice, fold and audit reads that one copy, never the source
+  *     again) and unpersisted when the fold ends.
+  *  2. route + fold — the batch splits by `routeCol` (the topic/table
+  *     column `fromKafkaRouted` carries through the envelope), each slice
+  *     projected to its table's shape by the spec's `project`. Dims fold
+  *     through [[Scd2Merge.applyLog]] (exact-changelog SCD2, per-row
+  *     effective timestamps, tombstones via `opCol`), facts through
+  *     [[UpsertByKey.mergeBatch]] (latest-wins keyed upsert with CDC
+  *     deletes), each reading the generation committed by the
   *     coordinator — never a staged orphan.
-  *  4. publish — ONE `MultiSnapshot.publish` call stages every new
-  *     generation (durable, invisible) and flips the single coordinator
-  *     pointer. Crash anywhere before the pointer PUT leaves the
-  *     previous commit fully intact; the replayed batch recomputes from
-  *     the SAME committed inputs (the folds are deterministic) and
-  *     overwrites the orphan staging dirs.
+  *  3. write — delta facts stage their batch-id delta dir, then
+  *     `MultiSnapshot.stage` reserves and writes every new dim/fact
+  *     generation (durable, invisible: no commit references them).
+  *  4. audit — each [[Audit]] runs over the STAGED generation dirs (read
+  *     with the written schema) and the delta facts as of this batch: the
+  *     exact bytes the flip would publish, with no second fold. Any
+  *     violation refuses the batch; its staged generations stay invisible
+  *     orphans, as after a lost CAS.
+  *  5. publish — `MultiSnapshot.commit` flips the single coordinator
+  *     pointer (the `@sys.batch` marker rides the same flip). Crash
+  *     anywhere before the pointer PUT leaves the previous commit fully
+  *     intact; the replayed batch recomputes from the SAME committed
+  *     inputs (the folds are deterministic) and stages again, and
+  *     `MultiSnapshot.vacuum` or a later publish's retirement reclaims
+  *     the orphans.
   *
   * Scale shape: per batch, each dim fold is O(touched keys' rows) window
   * work (applyLog's semi/anti split) and each fact merge is the keyed
@@ -52,6 +63,8 @@ import graft.gold.{MultiSnapshot, Scd2Merge, UpsertByKey}
   * readers resolving the coordinator.
   */
 object MultiTableStream {
+
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** An SCD2 dimension fed by change-log rows routed at `route`.
     * `project` maps the routed slice (routeCol already dropped) to the
@@ -102,10 +115,12 @@ object MultiTableStream {
 
   /** A write–audit–publish gate (Iceberg's WAP pattern, carrying the
     * reference's dbt-test semantics to the COMMIT): `check` receives the
-    * candidate post-fold tables (dims, facts, and delta-fact views as of
-    * this batch) and returns a VIOLATIONS frame; any surviving row
-    * aborts the fold BEFORE the pointer flip — readers keep the previous
-    * consistent commit, the staged state is orphaned-but-invisible, and
+    * candidate post-fold tables — dims and facts read back from their
+    * STAGED generation dirs, delta facts as of this batch (staged delta
+    * included) — and returns a VIOLATIONS frame. The audit only reads:
+    * it runs after the write and before the pointer flip, so any
+    * surviving row refuses the batch with readers on the previous
+    * consistent commit and the staged state orphaned-but-invisible, and
     * a replay re-stages and re-audits (a poisoned batch keeps failing
     * until upstream or the audit is fixed — WAP's intent: bad data must
     * not publish silently).
@@ -172,116 +187,124 @@ object MultiTableStream {
     // without consuming a batch id (see BatchLedger).
     if (committed.flatMap(MultiSnapshot.pointer(_, BatchLedger))
         .exists(_ >= batchId)) return
-    // the whole read-fold-stage-commit phase is one transaction based
-    // on `committed`: a concurrent erasure that retires the observed
-    // generations mid-execution surfaces as the TYPED retryable
-    // conflict (same race publishFrom reports at the commit point,
-    // caught earlier at read execution), never a raw FILE_NOT_EXIST
-    val c = MultiSnapshot.conflictIfRetired(spark, root, committed) {
-      val gens = committed.map(_.gens).getOrElse(Map.empty)
+    // one read of the micro-batch serves every slice, fold and audit
+    val pinned = batch.persist()
+    try {
+      // the whole read-fold-stage-commit phase is one transaction based
+      // on `committed`: a concurrent erasure that retires the observed
+      // generations mid-execution surfaces as the TYPED retryable
+      // conflict (same race the commit point reports, caught earlier at
+      // read execution), never a raw FILE_NOT_EXIST
+      val c = MultiSnapshot.conflictIfRetired(spark, root, committed) {
+        val gens = committed.map(_.gens).getOrElse(Map.empty)
 
-      def slice(route: String, project: DataFrame => DataFrame): DataFrame =
-        project(batch.filter(col(routeCol) === route).drop(routeCol))
+        def slice(route: String, project: DataFrame => DataFrame): DataFrame =
+          project(pinned.filter(col(routeCol) === route).drop(routeCol))
 
-      val newDims = dims.map { d =>
-        val rows0 = slice(d.route, d.project)
-        val snapshot0 =
-          if (gens.contains(d.table))
-            MultiSnapshot.readPinned(spark, root, committed.get, d.table)
-          else Scd2Merge.emptyLogSnapshot(rows0, d.tsCol)
-        // opt-in evolution: an upstream ALTER TABLE that grew (or widened)
-        // columns aligns both sides to the least-common-supertype union
-        // schema — old versions read typed nulls for new columns, a NEW
-        // check column opens versions where its value differs from null
-        // (the correct SCD2 reading of "this attribute started existing").
-        // Off by default so accidental drift fails loudly.
-        val (snapshot, rows) =
-          if (!d.allowSchemaEvolution) (snapshot0, rows0)
-          else {
-            import graft.sources.SchemaEvolution
-            val target = SchemaEvolution.evolvedSchema(Seq(
-              snapshot0.drop(Scd2Merge.EffectiveFrom, Scd2Merge.EffectiveTo),
-              rows0.drop(d.tsCol)))
-            val tsType = rows0.schema(d.tsCol).dataType
-            val eff = org.apache.spark.sql.types.TimestampType
-            (SchemaEvolution.alignTo(snapshot0,
-              target :+ (Scd2Merge.EffectiveFrom -> eff)
-                :+ (Scd2Merge.EffectiveTo -> eff)),
-              SchemaEvolution.alignTo(rows0, target :+ (d.tsCol -> tsType)))
-          }
-        d.table -> Scd2Merge.applyLog(snapshot, rows, d.keys, d.checkCols,
-          d.tsCol, d.tieBreak, d.opCol)
-      }
-      val newFacts = facts.map { f =>
-        val rows0 = slice(f.route, f.project)
-        val existing0 =
-          if (gens.contains(f.table))
-            Some(MultiSnapshot.readPinned(spark, root, committed.get, f.table))
-          else None
-        val (existing, rows) =
-          if (!f.allowSchemaEvolution || existing0.isEmpty) (existing0, rows0)
-          else {
-            import graft.sources.SchemaEvolution
-            val target = SchemaEvolution.evolvedSchema(Seq(existing0.get, rows0))
-            (Some(SchemaEvolution.alignTo(existing0.get, target)),
-              SchemaEvolution.alignTo(rows0, target))
-          }
-        f.table -> UpsertByKey.mergeBatch(existing, rows, f.keys, f.orderCols,
-          f.opCol)
-      }
-      // O(batch) facts: STAGE the delta dir now (durable, invisible — no
-      // committed pointer reaches this batch id yet); the pointer advances
-      // to batchId in the same atomic flip as the dims. An empty slice
-      // stages nothing — readAt(batchId) then serves the earlier deltas.
-      val pointers = deltaFacts.map { f =>
-        val rows = slice(f.route, f.project)
-        if (!rows.isEmpty)
-          // table-tier retired-state guard: an eager coordinated erasure
-          // compacting/rewriting this member mid-append surfaces as the
-          // typed conflict (the stream retries the batch), never a raw
-          // task-level fs failure
-          graft.gold.BaseDelta.conflictIfRetired(spark, f.deltaTable(root)) {
-            graft.gold.BaseDelta.append(spark, f.deltaTable(root), rows, batchId)
-          }
-        f.table -> batchId
-      }.toMap
-      // AUDIT before the flip: candidate views are the post-fold frames
-      // (delta facts read as-of THIS batch — staged deltas included, which
-      // coordinator readers cannot see yet)
-      if (audits.nonEmpty) {
-        val candidates: Map[String, DataFrame] =
-          (newDims ++ newFacts).toMap ++ deltaFacts.flatMap { f =>
-            val t = f.deltaTable(root)
-            val (base, ds) = graft.gold.BaseDelta.resolveSnapshot(spark, t)
-            if (base.isEmpty && ds.isEmpty) None
-            else Some(f.table -> graft.gold.BaseDelta.readAt(spark, t, batchId,
-              f.allowSchemaEvolution))
-          }
-        val failed = audits.flatMap { a =>
-          val n = a.check(candidates).limit(21).count()
-          if (n > 0) Some(s"${a.name} (${if (n > 20) ">20" else n} violations)")
-          else None
+        val newDims = dims.map { d =>
+          val rows0 = slice(d.route, d.project)
+          val snapshot0 =
+            if (gens.contains(d.table))
+              MultiSnapshot.readPinned(spark, root, committed.get, d.table)
+            else Scd2Merge.emptyLogSnapshot(rows0, d.tsCol)
+          // opt-in evolution: an upstream ALTER TABLE that grew (or widened)
+          // columns aligns both sides to the least-common-supertype union
+          // schema — old versions read typed nulls for new columns, a NEW
+          // check column opens versions where its value differs from null
+          // (the correct SCD2 reading of "this attribute started existing").
+          // Off by default so accidental drift fails loudly.
+          val (snapshot, rows) =
+            if (!d.allowSchemaEvolution) (snapshot0, rows0)
+            else {
+              import graft.sources.SchemaEvolution
+              val target = SchemaEvolution.evolvedSchema(Seq(
+                snapshot0.drop(Scd2Merge.EffectiveFrom, Scd2Merge.EffectiveTo),
+                rows0.drop(d.tsCol)))
+              val tsType = rows0.schema(d.tsCol).dataType
+              val eff = org.apache.spark.sql.types.TimestampType
+              (SchemaEvolution.alignTo(snapshot0,
+                target :+ (Scd2Merge.EffectiveFrom -> eff)
+                  :+ (Scd2Merge.EffectiveTo -> eff)),
+                SchemaEvolution.alignTo(rows0, target :+ (d.tsCol -> tsType)))
+            }
+          d.table -> Scd2Merge.applyLog(snapshot, rows, d.keys, d.checkCols,
+            d.tsCol, d.tieBreak, d.opCol)
         }
-        if (failed.nonEmpty)
-          throw new AuditFailedException(
-            s"MultiTableStream: batch $batchId REFUSED at the publish gate — " +
-              s"${failed.mkString("; ")}. Readers keep commit " +
-              s"${committed.map(_.version).getOrElse(0L)}; staged state is " +
-              "invisible and a replay re-audits.")
+        val newFacts = facts.map { f =>
+          val rows0 = slice(f.route, f.project)
+          val existing0 =
+            if (gens.contains(f.table))
+              Some(MultiSnapshot.readPinned(spark, root, committed.get, f.table))
+            else None
+          val (existing, rows) =
+            if (!f.allowSchemaEvolution || existing0.isEmpty) (existing0, rows0)
+            else {
+              import graft.sources.SchemaEvolution
+              val target = SchemaEvolution.evolvedSchema(Seq(existing0.get, rows0))
+              (Some(SchemaEvolution.alignTo(existing0.get, target)),
+                SchemaEvolution.alignTo(rows0, target))
+            }
+          f.table -> UpsertByKey.mergeBatch(existing, rows, f.keys, f.orderCols,
+            f.opCol)
+        }
+        // WRITE. O(batch) facts first: STAGE the delta dir (durable,
+        // invisible — no committed pointer reaches this batch id yet); the
+        // pointer advances to batchId in the same atomic flip as the dims.
+        // An empty slice stages nothing — readAt(batchId) then serves the
+        // earlier deltas.
+        val pointers = deltaFacts.map { f =>
+          val rows = slice(f.route, f.project)
+          if (!rows.isEmpty)
+            // table-tier retired-state guard: an eager coordinated erasure
+            // compacting/rewriting this member mid-append surfaces as the
+            // typed conflict (the stream retries the batch), never a raw
+            // task-level fs failure
+            graft.gold.BaseDelta.conflictIfRetired(spark, f.deltaTable(root)) {
+              graft.gold.BaseDelta.append(spark, f.deltaTable(root), rows, batchId)
+            }
+          f.table -> batchId
+        }.toMap
+        // then the new generations. Every batch stages a commit (the
+        // @sys.batch ledger marker rides it) even when all slices are
+        // empty — the replay check needs the marker to advance
+        // monotonically with batch ids. The publish is BASED ON the
+        // commit this fold read (`committed`): an erasure/repair that
+        // advanced one of our tables in between makes this batch a typed
+        // conflict the stream retries, never a silent overwrite of the
+        // erased state with our stale fold
+        val staged = MultiSnapshot.stage(spark, root, committed,
+          (newDims ++ newFacts).toMap, pointers + (BatchLedger -> batchId))
+        // AUDIT the staged bytes before the flip (delta facts read as of
+        // THIS batch — staged deltas included, which coordinator readers
+        // cannot see yet)
+        if (audits.nonEmpty) {
+          val candidates: Map[String, DataFrame] =
+            MultiSnapshot.readStaged(spark, staged) ++ deltaFacts.flatMap { f =>
+              val t = f.deltaTable(root)
+              val (base, ds) = graft.gold.BaseDelta.resolveSnapshot(spark, t)
+              if (base.isEmpty && ds.isEmpty) None
+              else Some(f.table -> graft.gold.BaseDelta.readAt(spark, t, batchId,
+                f.allowSchemaEvolution))
+            }
+          val failed = audits.flatMap { a =>
+            val n = a.check(candidates).limit(21).count()
+            if (n > 0) Some(s"${a.name} (${if (n > 20) ">20" else n} violations)")
+            else None
+          }
+          if (failed.nonEmpty)
+            throw new AuditFailedException(
+              s"MultiTableStream: batch $batchId REFUSED at the publish gate — " +
+                s"${failed.mkString("; ")}. Readers keep commit " +
+                s"${committed.map(_.version).getOrElse(0L)}; staged state is " +
+                "invisible and a replay re-audits.")
+        }
+        // PUBLISH: the one pointer flip
+        MultiSnapshot.commit(spark, staged)
       }
-      // every batch commits (the @sys.batch ledger marker rides the same
-      // atomic flip) even when all slices are empty — the replay check
-      // needs the marker to advance monotonically with batch ids. The
-      // publish is BASED ON the commit this fold read (`committed`): an
-      // erasure/repair that advanced one of our tables in between makes
-      // this batch a typed conflict the stream retries, never a silent
-      // overwrite of the erased state with our stale fold
-      MultiSnapshot.publishFrom(spark, root, committed,
-        (newDims ++ newFacts).toMap, pointers + (BatchLedger -> batchId))
-    }
-    require(c.version > committed.map(_.version).getOrElse(0L),
-      s"MultiTableStream: version regressed to ${c.version} publishing " +
-        s"batch $batchId")
+      require(c.version > committed.map(_.version).getOrElse(0L),
+        s"MultiTableStream: version regressed to ${c.version} publishing " +
+          s"batch $batchId")
+    } finally pinned.unpersist()
     // maintenance AFTER the flip, bounded at the PREVIOUS commit's
     // pointer: folding only deltas <= that pointer leaves this batch's
     // delta separable, so the time-travel floor lands on the previous
@@ -302,7 +325,12 @@ object MultiTableStream {
         // fold) leaves the upgrade to the next batch's re-check.
         try graft.gold.BaseDelta.compact(spark, t,
           transform = Some(identity), upTo = Some(batchId))
-        catch { case _: graft.gold.CommitConflictException => () }
+        catch {
+          case e: graft.gold.CommitConflictException =>
+            log.warn("MultiTableStream: budget-tripped compaction of " +
+              s"${t.path} lost to a concurrent commit at batch $batchId; " +
+              s"the next batch re-checks the budget (${e.getMessage})")
+        }
       else if (graft.gold.BaseDelta.deltaBatches(spark, t).size > f.maxDeltas)
         graft.gold.BaseDelta.compact(spark, t, upTo = prevPtr)
     }

@@ -342,7 +342,16 @@ class MultiTableStreamSpec extends SparkSpec {
     val root = tmpDir("mts-wap") + "/r"
     MultiTableStream.foldBatch(spark, root, cdc(batches(0): _*), "route",
       Seq(dimSpec), Seq(factSpec), 0L, audits = Seq(fkGate))
-    assert(MultiSnapshot.currentCommit(spark, root).get.version == 1L)
+    val v1 = MultiSnapshot.currentCommit(spark, root).get
+    assert(v1.version == 1L)
+    def view(): Map[String, Set[String]] =
+      MultiTableStream.readCommitted(spark, root).map { case (t, df) =>
+        t -> df.collect().map(_.toString).toSet
+      }
+    val viewV1 = view()
+    def stagedAbove(k: Long): Seq[String] = Seq("accounts", "txns")
+      .map(t => MultiSnapshot.genPath(root, t, v1.gens(t) + k))
+    def exists(p: String) = new java.io.File(p).exists()
     // batch 1 poisoned: a txn references account 99 that no dim row creates
     val poisoned = batches(1) :+ txn(199L, 99, 5.0, "c", 99L, "2024-01-02 12:00:00")
     val e = intercept[MultiTableStream.AuditFailedException](
@@ -350,26 +359,99 @@ class MultiTableStreamSpec extends SparkSpec {
         Seq(dimSpec), Seq(factSpec), 1L, audits = Seq(fkGate)))
     assert(e.getMessage.contains("REFUSED") &&
       e.getMessage.contains("fk_txns_account_id_to_accounts"), e.getMessage)
-    // readers keep the batch-0 commit, FK-clean
-    assert(MultiSnapshot.currentCommit(spark, root).get.version == 1L)
+    // readers keep the batch-0 commit, FK-clean, byte for byte
+    assert(MultiSnapshot.currentCommit(spark, root).get == v1)
+    assert(view() == viewV1)
     val t1 = MultiTableStream.readCommitted(spark, root)
     assert(orphans(t1).isEmpty)
     assert(t1("txns").select("txn_id").collect().map(_.getLong(0)).toSet
       == Set(101L, 102L))
-    // a replay of the same poisoned batch re-audits and fails again
+    // the audit ran over STAGED generations: they sit above the committed
+    // ones, invisible
+    stagedAbove(1).foreach(p => assert(exists(p), s"no staged generation $p"))
+    // a replay of the same poisoned batch re-stages, re-audits and fails
+    // again
     intercept[MultiTableStream.AuditFailedException](
       MultiTableStream.foldBatch(spark, root, cdc(poisoned: _*), "route",
         Seq(dimSpec), Seq(factSpec), 1L, audits = Seq(fkGate)))
+    assert(MultiSnapshot.currentCommit(spark, root).get == v1)
+    (stagedAbove(1) ++ stagedAbove(2)).foreach(p =>
+      assert(exists(p), s"no staged generation $p"))
+    // the refused stagings are orphans vacuum reclaims; the commit stays
+    val deleted = MultiSnapshot.vacuum(spark, root)
+    (stagedAbove(1) ++ stagedAbove(2)).foreach { p =>
+      assert(!exists(p), s"vacuum left the orphan $p")
+      assert(deleted.exists(_.endsWith(p)), s"$p not in $deleted")
+    }
+    assert(MultiSnapshot.currentCommit(spark, root).get == v1)
+    assert(view() == viewV1)
     // the FIXED batch (acct 99 created with its txn) publishes under the
     // same batch id
     val fixed = poisoned :+ acct(99, "SAVINGS", "c", 98L, "2024-01-02 11:59:00")
     MultiTableStream.foldBatch(spark, root, cdc(fixed: _*), "route",
       Seq(dimSpec), Seq(factSpec), 1L, audits = Seq(fkGate))
     assert(MultiSnapshot.currentCommit(spark, root).get.version == 2L)
+    assert(MultiTableStream.lastFoldedBatch(spark, root).contains(1L))
     val t2 = MultiTableStream.readCommitted(spark, root)
     assert(orphans(t2).isEmpty)
     assert(t2("txns").select("txn_id").collect().map(_.getLong(0)).toSet
       .contains(199L))
+  }
+
+  test("the fold derives its micro-batch once and audits staged generations, not a re-fold") {
+    val root = tmpDir("mts-once") + "/r"
+    // a second SCD2 dim on its own route, beside accounts and the delta fact
+    val ownerSpec = Scd2Dim("owners", "own", Seq("account_id"),
+      Seq("account_type"), "ts", tieBreak = Seq("seq"), opCol = Some("op"),
+      project = _.select("account_id", "account_type", "op", "seq", "ts"))
+    def fold(rows: Seq[(String, Int, Long, String, Double, String, Long, String)],
+             id: Long, src: String): Long = {
+      cdc(rows: _*).write.parquet(src)
+      val counted = spark.sparkContext.longAccumulator(s"rows-$id")
+      // non-deterministic, so no plan may share or elide its evaluations:
+      // every derivation of the batch from its source counts every row
+      val touch = udf { (q: Long) => counted.add(1); q }.asNondeterministic()
+      val batch = spark.read.parquet(src).withColumn("seq", touch(col("seq")))
+      MultiTableStream.foldBatch(spark, root, batch, "route",
+        Seq(dimSpec, ownerSpec), Seq.empty, id,
+        deltaFacts = Seq(deltaFactSpec), audits = Seq(fkGate))
+      counted.value
+    }
+    def owners(rows: Seq[(String, Int, Long, String, Double, String, Long, String)]) =
+      rows.filter(_._1 == "acct").map(_.copy(_1 = "own"))
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    d: Long): Unit = plans.add(f -> qe.executedPlan.toString)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    e: Exception): Unit = ()
+    }
+    val b0 = batches(0) ++ owners(batches(0))
+    assert(fold(b0, 0L, tmpDir("mts-once-b0") + "/b") == b0.size)
+    spark.listenerManager.register(listener)
+    try {
+      // batch 1 folds onto committed state: dims re-version, the fact
+      // stages its second delta
+      val b1 = batches(1) ++ owners(batches(1))
+      assert(fold(b1, 1L, tmpDir("mts-once-b1") + "/b") == b1.size)
+      org.apache.spark.ListenerBusDrain(spark)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    val audit = plans.asScala.collect {
+      case ("count", p) if p.contains("LeftAnti") => p
+    }
+    assert(audit.nonEmpty, s"no audit plan captured among ${plans.size} plans")
+    // applyLog derives effective_to with a window: an audit over the
+    // staged generation reads files instead of folding the dim again
+    audit.foreach(p => assert(!p.contains("Window"),
+      s"the audit re-folded the dim:\n$p"))
+    val t = MultiTableStream.readCommitted(spark, root,
+      deltaFacts = Seq(deltaFactSpec))
+    assert(orphans(t).isEmpty)
+    assert(t("txns").select("txn_id").collect().map(_.getLong(0)).toSet
+      == Set(101L, 102L, 103L, 104L, 105L))
+    assert(t("owners").exceptAll(t("accounts")).isEmpty &&
+      t("accounts").exceptAll(t("owners")).isEmpty)
   }
 
   test("publish gate on the DeltaFact path: staged delta stays invisible through a refusal") {

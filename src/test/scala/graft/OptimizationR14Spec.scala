@@ -66,7 +66,7 @@ class OptimizationR14Spec extends SparkSpec {
       val m = operators.Bpe.train(df, "text", nMerges = 2).collect()
       assert(m.head.getString(1) == "a" && m.head.getString(2) == "a")
       // QueryExecutionListener events are delivered asynchronously
-      Thread.sleep(1000)
+      org.apache.spark.ListenerBusDrain(spark)
       import scala.jdk.CollectionConverters._
       // the per-merge argmax collects (TakeOrdered over the vocab frame)
       // must plan without a shuffle; the ONE corpus-sized word count is
