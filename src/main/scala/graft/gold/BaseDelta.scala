@@ -14,10 +14,11 @@ import org.apache.spark.sql.functions._
   * 1440× a day. Here a micro-batch only APPENDS its (deduped) rows:
   *
   * {{{
-  * <path>/_manifests/v<V>           {"generation":N,"deltas":[ids…]} — the
-  *                                  commit point readers resolve through
-  *                                  (highest version wins; commits are
-  *                                  rename-to-new-name, atomic everywhere)
+  * <path>/_manifests/v<V>           {"generation":N,"deltas":[ids…]}, plus
+  *                                  ,"folded_through":B once compacted — a
+  *                                  [[CommitCas]] version, the commit point
+  *                                  readers resolve through
+  * <path>/_manifests/.reserve.base<N> base generation reservations
   * <path>/base_g<N>/…parquet        compacted snapshot, one dir per
   *                                  generation (never mutated in place)
   * <path>/delta/batch=<id>/…parquet immutable per-batch appends
@@ -59,7 +60,11 @@ import org.apache.spark.sql.functions._
   * The ordering contract is the usual one: `orderCols` must totally order
   * versions of a key (include a unique id as the final tie-break).
   * Concurrency contract: single WRITER (the streaming sink serializes
-  * batches); any number of concurrent readers.
+  * batches); any number of concurrent readers. Conflict policy, ENFORCED:
+  * a writer commits version `basedOn + 1` of the version its content
+  * was derived from, fast-failed against a fresh listing; any other
+  * committed version is a typed [[CommitConflictException]], never a
+  * rebase.
   */
 object BaseDelta {
 
@@ -94,28 +99,10 @@ object BaseDelta {
   private def fs(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def manifestFile(t: Table, v: Long) =
-    new Path(t.manifestRoot, f"v$v%020d")
+  private def manifestVersions(spark: SparkSession, t: Table): Seq[Long] =
+    CommitCas.versions(fs(spark, t.path), new Path(t.manifestRoot))
 
-  /** Committed manifest versions present on disk, ascending. */
-  private def manifestVersions(spark: SparkSession, t: Table): Seq[Long] = {
-    val f = fs(spark, t.manifestRoot)
-    val root = new Path(t.manifestRoot)
-    if (!f.exists(root)) Seq.empty
-    else f.listStatus(root).toSeq.map(_.getPath.getName).collect {
-      case n if n.startsWith("v") && n.drop(1).forall(_.isDigit) => n.drop(1).toLong
-    }.sorted
-  }
-
-  /** The committed manifest, or None for a legacy/empty table.
-    *
-    * Commits are NEW files `_manifests/v<N>` renamed into place — a rename
-    * to a nonexistent target, atomic on HDFS and POSIX alike (a replacing
-    * rename is not: local FS implements overwrite as delete-then-rename,
-    * whose window would dump readers into the legacy path and silently
-    * lose all compacted history). Readers take the highest version; stale
-    * versions are retained one commit and retired by the next write.
-    */
+  /** The committed manifest, or None for a legacy/empty table. */
   def readManifest(spark: SparkSession, t: Table): Option[Manifest] =
     readManifestVersioned(spark, t).map(_._2)
 
@@ -128,20 +115,13 @@ object BaseDelta {
   private def readManifestVersioned(spark: SparkSession,
                                     t: Table): Option[(Long, Manifest)] =
     manifestVersions(spark, t).lastOption.map { v =>
-      val f = fs(spark, t.path)
-      val in = f.open(manifestFile(t, v))
-      val s = try {
-        val bytes = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](8192)
-        var n = in.read(buf)
-        while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-        new String(bytes.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-      } finally in.close()
+      val s = CommitCas.readVersion(fs(spark, t.path), new Path(t.manifestRoot), v)
+      def corrupt = sys.error(s"corrupt manifest v$v at ${t.path}: $s")
       val gen = "\"generation\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(s)
-        .getOrElse(sys.error(s"corrupt manifest ${manifestFile(t, v)}: $s"))
+        .getOrElse(corrupt)
         .group(1).toLong
       val ds = "\"deltas\"\\s*:\\s*\\[([^\\]]*)\\]".r.findFirstMatchIn(s)
-        .getOrElse(sys.error(s"corrupt manifest ${manifestFile(t, v)}: $s"))
+        .getOrElse(corrupt)
         .group(1).split(",").map(_.trim).filter(_.nonEmpty).map(_.toLong).toSeq
       val folded = "\"folded_through\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(s)
         .map(_.group(1).toLong)
@@ -150,81 +130,39 @@ object BaseDelta {
 
   /** Commit a manifest as version `basedOn + 1`, where `basedOn` is the
     * version the new content was DERIVED from (0 when no manifest
-    * existed), and retire versions older than the previous one. The
-    * version is part of the CAS, not recomputed from a fresh listing: a
-    * contender that committed after our read would otherwise let us
-    * write stale-derived content under a higher fresh version — a
-    * silent lost update the rename alone cannot catch.
+    * existed). The version is part of the CAS, not recomputed from a
+    * fresh listing: a contender that committed after our read would
+    * otherwise let us write stale-derived content under a higher fresh
+    * version — a silent lost update the publish alone cannot catch.
     */
   private def writeManifest(spark: SparkSession, t: Table, m: Manifest,
                             basedOn: Long): Unit = {
     val f = fs(spark, t.path)
-    f.mkdirs(new Path(t.manifestRoot))
-    // CAS-on-read-version, FAST-FAILED against a fresh listing before the
-    // link: the link alone stopped being a conflict detector the moment
-    // committed version files could be deleted — a writer that read v3
-    // and then stalled (fold in progress) could link v4 long after v7
-    // committed if v4's file had been reclaimed, silently committing an
-    // INVISIBLE stale manifest whose side effects (tombstone retirement,
-    // base generations) corrupt the real lineage (caught live by
-    // StorageChaosSpec: a phantom fold's retirement dropped acked
-    // erasure ids whose rewrite never joined the committed lineage).
-    // Belt: this check. Suspenders: committed version files are never
-    // deleted inline anywhere — only [[vacuum]] (writer-quiet) reclaims
-    // them, so a freed number can never be re-linked while writers run.
-    val versions = manifestVersions(spark, t)
-    if (versions.lastOption.getOrElse(0L) != basedOn)
+    // fast-fail against a fresh listing before the CAS (belt to
+    // CommitCas's never-delete-inline suspenders against phantom commits)
+    val committed = manifestVersions(spark, t).lastOption.getOrElse(0L)
+    if (committed != basedOn)
       throw new CommitConflictException(
         s"BaseDelta manifest CAS at ${t.path}: derived from v$basedOn but " +
-          s"the committed version is v${versions.lastOption.getOrElse(0L)} — " +
+          s"the committed version is v$committed — " +
           "a concurrent writer committed since this read; re-read and redo")
     val next = basedOn + 1
-    // nonce'd tmp name: two contenders must not share a scratch file —
-    // the winner's rename would steal it and turn the loser's clean CAS
-    // failure into a spurious IO error
-    val tmp = new Path(t.manifestRoot,
-      f".v$next%020d.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-    val out = f.create(tmp, true)
     val foldedJson = m.foldedThrough.map(b => s""","folded_through":$b""").getOrElse("")
-    try out.write(
-      (s"""{"generation":${m.generation},"deltas":[${m.deltas.sorted.mkString(",")}]""" +
-        foldedJson + "}")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    // single-writer contract, ENFORCED: a fresh-name rename fails only
-    // when a contender committed this version first — fail clean (typed)
-    // instead of silently losing the manifest update
-    if (!CommitCas.publish(f, tmp, manifestFile(t, next))) {
-      f.delete(tmp, false)
+    val body = s"""{"generation":${m.generation},"deltas":[${m.deltas.sorted.mkString(",")}]""" +
+      foldedJson + "}"
+    if (!CommitCas.commitNext(f, new Path(t.manifestRoot), next, body))
       throw new CommitConflictException(
         s"BaseDelta manifest CAS lost at ${t.path} v$next — a concurrent " +
           "writer committed first; this table is single-writer (re-read " +
           "and redo the append/compact against the new manifest)")
-    }
-    // committed manifest files are IMMUTABLE HISTORY — deleting one here
-    // would free its version number for a stalled writer's link (the
-    // phantom-commit hazard above); [[vacuum]] reclaims old versions at
-    // a writer-quiet moment (retainManifests window)
-    if (sys.props.contains("graft.debug.snapshot"))
-      println(s"[snapdbg ${Thread.currentThread().getName}] MANIFEST ${t.path} " +
-        s"v=$next basedOn=$basedOn gen=${m.generation} deltas=${m.deltas.sorted.mkString(",")} " +
-        s"folded=${m.foldedThrough} listed=${versions.mkString(",")}")
   }
 
   /** Delta dirs present on disk (live + retained) — cleanup's view, not the
     * reader's.
     */
-  private def diskDeltas(spark: SparkSession, t: Table): Seq[Long] = {
-    val f = fs(spark, t.deltaRoot)
-    val root = new Path(t.deltaRoot)
-    if (!f.exists(root)) Seq.empty
-    else f.listStatus(root).toSeq
-      .map(_.getPath.getName)
-      .filter(_.startsWith("batch="))
-      .map(_.stripPrefix("batch="))
-      .filter(s => s.nonEmpty && s.forall(_.isDigit))  // ignore foreign dirs
-      .map(_.toLong)
-  }
+  private def diskDeltas(spark: SparkSession, t: Table): Seq[Long] =
+    CommitCas.numbered(fs(spark, t.path), new Path(t.deltaRoot), "batch=")
+      .map(_._1)
 
   /** Outstanding (live, unfolded) delta batch ids. */
   def deltaBatches(spark: SparkSession, t: Table): Seq[Long] =
@@ -526,9 +464,6 @@ object BaseDelta {
       try {
         SnapshotStore.publishFrom(merged, path, observed)
         pendingAfter = merged.count() // request-sized, pinned
-        if (sys.props.contains("graft.debug.snapshot"))
-          println(s"[snapdbg ${Thread.currentThread().getName}] ERASE-ACK " +
-            s"$path obs=$observed merged=${merged.as[Long](org.apache.spark.sql.Encoders.scalaLong).collect().sorted.mkString(",")}")
       } catch {
         case e: CommitConflictException =>
           attempt += 1
@@ -764,9 +699,6 @@ object BaseDelta {
                   .join(s.ids, Seq("__erased"), "left_anti")
                   .localCheckpoint(true)
               val gen = SnapshotStore.stage(remaining, path)
-              if (sys.props.contains("graft.debug.snapshot"))
-                println(s"[snapdbg ${Thread.currentThread().getName}] RETIRE " +
-                  s"$path sgen=${s.gen} cur=$g staged=$gen applied=${s.ids.count()} remaining=${remaining.count()}")
               if (remaining.isEmpty) {
                 // committed-cleared state: marker lands in the staged dir
                 // BEFORE the pointer commit, so readers never resolve a
@@ -1026,17 +958,12 @@ object BaseDelta {
     if (foldable.isEmpty && transform.isEmpty) return
     if (live.isEmpty && currentBasePath(spark, t).isEmpty) return // empty table
     val gen = mOpt.map(_.generation).getOrElse(0L)
-    // RESERVE the new base generation number (create-exclusive marker,
-    // the MultiSnapshot recipe): two concurrent compactors must never
-    // co-stage one base dir — each claims a distinct number, the
-    // manifest CAS then decides whose lineage commits, and the loser's
-    // dir is an invisible orphan for vacuum. A marker left by a crashed
-    // compactor just bumps the number.
-    f.mkdirs(new Path(t.manifestRoot))
-    var newGen = gen + 1
-    while (!CommitCas.createExclusive(f, f.makeQualified(
-        new Path(t.manifestRoot, s".reserve.base$newGen"))))
-      newGen += 1
+    // RESERVE the new base generation number: two concurrent compactors
+    // must never co-stage one base dir — each claims a distinct number,
+    // the manifest CAS then decides whose lineage commits, and the
+    // loser's dir is an invisible orphan for vacuum
+    val newGen = CommitCas.reserve(f, new Path(t.manifestRoot),
+      ".reserve.base", gen + 1)
     val newBase = new Path(t.baseGenPath(newGen))
     if (f.exists(newBase)) f.delete(newBase, true)  // crashed earlier attempt
     val baseOpt = resolveSnapshot(spark, t)._1
@@ -1154,23 +1081,10 @@ object BaseDelta {
     // committed pointer) or an in-flight compactor's above-current
     // staging.
     val writerSafe = writerSafeUpTo.isDefined
-    val baseRoot = new Path(t.path)
-    if (f.exists(baseRoot)) f.listStatus(baseRoot).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("base_g") && n.stripPrefix("base_g").forall(_.isDigit) &&
-          (if (writerSafe) n.stripPrefix("base_g").toLong < m.generation
-           else n.stripPrefix("base_g").toLong != m.generation))
-        drop(st.getPath)
-    }
-    val mroot = new Path(t.manifestRoot)
-    if (f.exists(mroot)) f.listStatus(mroot).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith(".reserve.base") &&
-          n.stripPrefix(".reserve.base").forall(_.isDigit) &&
-          (if (writerSafe) n.stripPrefix(".reserve.base").toLong < m.generation
-           else n.stripPrefix(".reserve.base").toLong != m.generation))
-        drop(st.getPath)
-    }
+    def retired(g: Long) =
+      if (writerSafe) g < m.generation else g != m.generation
+    deleted ++= CommitCas.retire(f, new Path(t.path), "base_g")(retired)
+    deleted ++= CommitCas.retire(f, new Path(t.manifestRoot), ".reserve.base")(retired)
     if (m.generation >= 1) {
       drop(new Path(t.basePath))
       drop(new Path(t.basePath + ".__old"))
@@ -1197,9 +1111,8 @@ object BaseDelta {
       }
     }
     // manifest history beyond the retention window (never the newest)
-    val versions = manifestVersions(spark, t)
-    versions.dropRight(math.max(1, retainManifests))
-      .foreach(v => drop(manifestFile(t, v)))
+    manifestVersions(spark, t).dropRight(math.max(1, retainManifests))
+      .foreach(v => drop(CommitCas.versionPath(new Path(t.manifestRoot), v)))
     // committed-cleared tombstone ledgers: their pending set is empty,
     // so the dir is pure history — physically reclaimable in FULL mode
     // only (the writer-quiet contract covers the eraser race a live

@@ -1,5 +1,7 @@
 package graft.gold
 
+import java.nio.charset.StandardCharsets
+
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** A commit-CAS primitive was requested on a filesystem scheme with no
@@ -58,14 +60,7 @@ abstract class ConditionalPutBackend extends CommitBackend {
 
   final def publish(f: FileSystem, tmp: Path, dst: Path): Boolean = {
     val in = f.open(tmp)
-    val bytes =
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val b = new Array[Byte](8192)
-        var n = in.read(b)
-        while (n >= 0) { buf.write(b, 0, n); n = in.read(b) }
-        buf.toByteArray
-      } finally in.close()
+    val bytes = try in.readAllBytes() finally in.close()
     val won = putIfAbsent(f, dst, bytes)
     if (won) f.delete(tmp, false)
     won
@@ -76,12 +71,34 @@ abstract class ConditionalPutBackend extends CommitBackend {
 }
 
 /** The commit-point primitives shared by every pointer store here
-  * (SnapshotStore, MultiSnapshot, BaseDelta manifests), dispatched by
-  * filesystem scheme through an explicit capability registry — a scheme
-  * with no registered backend gets a typed
-  * [[UnsupportedCommitStoreException]] instead of a silently non-atomic
-  * rename (see that exception's scaladoc for why the refusal is the
-  * only safe default on object stores).
+  * (SnapshotStore, MultiSnapshot, BaseDelta manifests), and the
+  * versioned commit log all three keep on top of them. Each store owns
+  * only its body format and its conflict policy; the log is:
+  *
+  * {{{
+  * <dir>/v<N>                    committed version N (20-digit N) —
+  *                               readers resolve the HIGHEST version
+  * <dir>/.v<N>.<nonce>.tmp       a contender's scratch body, published
+  *                               to the fresh name v<N> ([[commitNext]])
+  * <dir>/<prefix><N>             create-exclusive reservation markers
+  *                               ([[reserve]]), numbered dirs
+  *                               ([[numbered]], [[retire]])
+  * }}}
+  *
+  * Committed version files are IMMUTABLE HISTORY: deleting one inline
+  * would free its number, and a freed number is a hole a stalled
+  * contender can still publish into — its "successful" commit lands
+  * BELOW the real latest, an invisible phantom whose caller believes it
+  * committed (StorageChaosSpec caught this live on BaseDelta manifests:
+  * a phantom fold's retirement dropped acked erasure ids). Only the
+  * stores' writer-quiet `vacuum` and single-writer `reclaimHistory`
+  * delete version files.
+  *
+  * The two CAS primitives are dispatched by filesystem scheme through
+  * an explicit capability registry — a scheme with no registered
+  * backend gets a typed [[UnsupportedCommitStoreException]] instead of
+  * a silently non-atomic rename (see that exception's scaladoc for why
+  * the refusal is the only safe default on object stores).
   *
   * Built-in backends:
   *
@@ -187,4 +204,67 @@ private[graft] object CommitCas {
   /** Atomic create-no-overwrite — the reservation primitive. */
   def createExclusive(f: FileSystem, p: Path): Boolean =
     backendFor(f).createExclusive(f, p)
+
+  /** The file of committed version `v` in `dir`. */
+  def versionPath(dir: Path, v: Long): Path = new Path(dir, f"v$v%020d")
+
+  /** Committed versions in `dir`, ascending. */
+  def versions(f: FileSystem, dir: Path): Seq[Long] =
+    numbered(f, dir, "v").map(_._1)
+
+  /** The body of committed version `v` of `dir`. */
+  def readVersion(f: FileSystem, dir: Path, v: Long): String = {
+    val in = f.open(versionPath(dir, v))
+    try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
+  }
+
+  /** Commit `body` as version `v` of `dir`; `true` iff this contender
+    * committed it. A lost CAS commits nothing and leaves no tmp file.
+    */
+  def commitNext(f: FileSystem, dir: Path, v: Long, body: String): Boolean = {
+    f.mkdirs(dir)
+    // nonce'd tmp: contenders must not share a scratch file (the
+    // winner's publish would steal the loser's and turn its clean CAS
+    // loss into a spurious I/O error)
+    val tmp = new Path(dir,
+      f".v$v%020d.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
+    val out = f.create(tmp, true)
+    try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    publish(f, tmp, versionPath(dir, v)) || { f.delete(tmp, false); false }
+  }
+
+  /** Claim the first number >= `start` whose marker `dir/<prefix><N>`
+    * this caller creates exclusively. A marker left by a crashed or
+    * losing contender just bumps the number, so progress never waits on
+    * cleanup.
+    */
+  def reserve(f: FileSystem, dir: Path, prefix: String, start: Long): Long = {
+    f.mkdirs(dir)
+    var n = start
+    while (!createExclusive(f, f.makeQualified(new Path(dir, s"$prefix$n"))))
+      n += 1
+    n
+  }
+
+  /** The `<prefix><N>` entries of `dir` by ascending N; names whose
+    * suffix is not a number are foreign and skipped.
+    */
+  def numbered(f: FileSystem, dir: Path, prefix: String): Seq[(Long, Path)] =
+    if (!f.exists(dir)) Seq.empty
+    else f.listStatus(dir).toSeq.flatMap { st =>
+      val n = st.getPath.getName
+      val digits = n.stripPrefix(prefix)
+      if (n.startsWith(prefix) && digits.forall(_.isDigit))
+        digits.toLongOption.map(_ -> st.getPath)
+      else None
+    }.sortBy(_._1)
+
+  /** Delete every `<prefix><N>` entry of `dir` with `drop(N)`; the
+    * paths deleted.
+    */
+  def retire(f: FileSystem, dir: Path, prefix: String)(
+      drop: Long => Boolean): Seq[String] =
+    numbered(f, dir, prefix).collect {
+      case (n, p) if drop(n) && f.delete(p, true) => p.toString
+    }
 }

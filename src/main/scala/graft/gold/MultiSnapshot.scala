@@ -22,92 +22,53 @@ final class CommitConflictException(msg: String, cause: Throwable = null)
   * published moments after its accounts dim must not be readable with
   * the OLD dim (phantom FK orphans during the gap). Lakehouse formats
   * grew the same organ (Delta commit coordination / Iceberg's
-  * multi-table transactions in the REST catalog); here it is one more
-  * pointer level:
+  * multi-table transactions in the REST catalog); here it is one
+  * [[CommitCas]] log over per-table generations:
   *
-  *  - each member table stages its new generation under
-  *    `root/<table>/gen=<g>` (durable, invisible — nothing references
-  *    it yet);
-  *  - ONE coordinator pointer `root/_commit/v<N>` (tmp + rename-to-
-  *    fresh-name, the same single-small-file PUT as SnapshotStore —
-  *    atomic on HDFS/POSIX and on object stores by the store's own
-  *    semantics) maps every table name to its committed generation;
-  *  - readers resolve the coordinator ONCE and then touch only
-  *    immutable generation dirs — a concurrent publish of ANY subset of
-  *    tables cannot tear a multi-table read.
+  * {{{
+  * <root>/_commit/v<N>            one "table=gen" line per member, sorted;
+  *                                external pointers as "@name=value"
+  * <root>/<table>/gen=<g>/…       immutable staged generations
+  * <root>/<table>/.reserve.g<g>   generation reservations
+  * }}}
   *
-  * Crash isolation: a crash after staging any prefix of the tables
-  * leaves orphan generation dirs and the coordinator untouched — readers
-  * still see the previous consistent set, and the next publish
-  * overwrites the orphans (generation numbers come from the committed
-  * coordinator, never from directory listings). Retention mirrors
-  * SnapshotStore: the previous commit's generations survive one cycle
-  * for in-flight readers; older ones are retired on commit.
+  * Readers resolve the coordinator ONCE and then touch only immutable
+  * generation dirs, so a concurrent publish of ANY subset of tables
+  * cannot tear a multi-table read. Partial publishes are legal: tables
+  * absent from a `publish` call keep their current generation. The
+  * previous commit's generations survive one cycle for in-flight
+  * readers; older ones are retired on commit.
   *
-  * Partial publishes are legal: tables absent from a `publish` call keep
-  * their current generation in the new commit (the common case — the
-  * fact advances every batch, the dim only when it changes).
-  *
-  * Concurrency contract: any number of readers, and CONTENDING WRITERS
-  * resolve through two primitives instead of corrupting each other:
-  *
-  *  - generation RESERVATION — before staging, a writer claims its
-  *    generation number with a create-exclusive marker file
-  *    (`<table>/.reserve.g<N>`; atomic create-no-overwrite on
-  *    HDFS/POSIX, a conditional If-None-Match PUT on object stores), so
-  *    two writers advancing the same table stage into DIFFERENT dirs —
-  *    the overwrite-into-one-dir corruption a bare protocol would allow
-  *    is unrepresentable;
-  *  - pointer CAS — the commit rename targets a fresh version name;
-  *    exactly one contender wins it. The loser REBASES (bounded
-  *    retries) when the winning commit touched only DISJOINT members —
-  *    its staged dirs are already safe under reserved numbers, so the
-  *    rebase is a pointer-level merge, no restaging — and throws
-  *    [[CommitConflictException]] when the winner advanced a member it
-  *    also staged (a read-modify-write lost its read: the caller must
-  *    re-derive and redo). Either way no partial state is ever
-  *    committed, and a loser's orphaned generations/markers are
-  *    reclaimed by [[vacuum]].
-  *
-  * Crashed writers leave reserved-but-unpublished markers; later writers
-  * simply skip those numbers (reservation start = committed + 1, bump on
-  * collision), so progress never depends on cleanup. Streaming replay
-  * stays exact because the exactly-once ledger is the committed
-  * `@sys.batch` marker, not generation/version arithmetic.
+  * Conflict policy: a writer that loses the coordinator CAS REBASES
+  * (bounded retries) when the winning commit advanced only DISJOINT
+  * members — its staged dirs are already safe under reserved numbers,
+  * so the rebase is a pointer-level merge, no restaging — and throws
+  * [[CommitConflictException]] when the winner advanced a member it
+  * also publishes (a read-modify-write lost its read: the caller must
+  * re-derive and redo). Streaming replay stays exact because the
+  * exactly-once ledger is the committed `@sys.batch` marker, not
+  * generation/version arithmetic.
   */
 object MultiSnapshot {
 
   final case class Commit(version: Long, gens: Map[String, Long])
 
-  private def commitRoot(root: String) = s"$root/_commit"
-  private def tablePath(root: String, table: String) = s"$root/$table"
+  private def commitDir(root: String) = new Path(s"$root/_commit")
+  private def tableDir(root: String, table: String) = new Path(s"$root/$table")
   def genPath(root: String, table: String, gen: Long): String =
     s"$root/$table/gen=$gen"
 
   private def fs(spark: SparkSession, root: String): FileSystem =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def commitFile(root: String, v: Long) =
-    new Path(commitRoot(root), f"v$v%020d")
-
-  private def commitVersions(spark: SparkSession, root: String): Seq[Long] = {
-    val f = fs(spark, root)
-    val dir = new Path(commitRoot(root))
-    if (!f.exists(dir)) Seq.empty
-    else f.listStatus(dir).toSeq.map(_.getPath.getName).collect {
-      case n if n.startsWith("v") && n.drop(1).forall(_.isDigit) => n.drop(1).toLong
-    }.sorted
-  }
+  private def commitVersions(spark: SparkSession, root: String): Seq[Long] =
+    CommitCas.versions(fs(spark, root), commitDir(root))
 
   private def readCommitFile(spark: SparkSession, root: String,
                              v: Long): Commit = {
-    val f = fs(spark, root)
-    val in = f.open(commitFile(root, v))
-    val body =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    // format: one "table=gen" pair per line — no JSON parser needed,
-    // table names are path segments (no '=', '\n')
+    val body = CommitCas.readVersion(fs(spark, root), commitDir(root), v)
+    // table names are path segments (no '=', '\n'), so a line splits at
+    // its last '='
     val gens = body.linesIterator.filter(_.nonEmpty).map { line =>
       val i = line.lastIndexOf('=')
       require(i > 0, s"MultiSnapshot: malformed commit line '$line' in v$v")
@@ -184,8 +145,9 @@ object MultiSnapshot {
     * exception's cause either way.
     */
   private[graft] def retiredGuard[A](what: String,
-      fingerprint: () => Map[String, Long])(body: => A): A = {
-    val observed = fingerprint()
+      fingerprint: () => Map[String, Long],
+      baseline: Option[Map[String, Long]] = None)(body: => A): A = {
+    val observed = baseline.getOrElse(fingerprint())
     try body
     catch {
       case e: CommitConflictException => throw e
@@ -216,37 +178,22 @@ object MultiSnapshot {
     * outlive the ack), so a transaction that resolved the PREVIOUS
     * commit can have its pinned reads die mid-execution with
     * FILE_NOT_EXIST — the same lost-my-read race `publishFrom` would
-    * report at the commit point, just surfacing earlier, at read
-    * execution. Only that case is translated: a file error while the
-    * root's commit has NOT advanced past `observed` is a genuine storage
-    * fault and propagates untouched.
+    * report at the commit point, just surfacing earlier. The baseline is
+    * the caller's `observed` commit, not a version read at entry: a
+    * commit landing between the caller's resolve and this call is
+    * already a retirement. A file error while the root's commit has NOT
+    * advanced past `observed` is a genuine storage fault and propagates.
     */
   def conflictIfRetired[A](spark: SparkSession, root: String,
-                           observed: Option[Commit])(body: => A): A =
-    try body
-    catch {
-      case e: CommitConflictException => throw e
-      case e: Throwable if snapshotReadFailure(e) =>
-        val obsV = observed.map(_.version).getOrElse(0L)
-        // announce-then-destroy protocols commit their version bump just
-        // BEFORE the destruction, but a reader can observe the failure a
-        // beat before the commit file lands — grace-recheck briefly
-        // before declaring a genuine storage fault
-        var curV = currentCommit(spark, root).map(_.version).getOrElse(0L)
-        var grace = 0
-        while (curV <= obsV && grace < 3) {
-          Thread.sleep(250)
-          curV = currentCommit(spark, root).map(_.version).getOrElse(0L)
-          grace += 1
-        }
-        if (curV > obsV)
-          throw new CommitConflictException(
-            s"MultiSnapshot: snapshot at $root retired mid-transaction — " +
-              s"based on version $obsV, current is $curV (an erasure or " +
-              "maintenance commit destroyed the observed generations); " +
-              "re-read the current commit and redo", e)
-        else throw e
-    }
+                           observed: Option[Commit])(body: => A): A = {
+    val obsV = observed.map(_.version).getOrElse(0L)
+    // clamped: a version BELOW the observed one (the root deleted under
+    // the reader) is a storage fault, not a retirement
+    retiredGuard(s"MultiSnapshot($root)",
+      () => Map("commit" -> (commitVersions(spark, root).lastOption
+        .getOrElse(0L) max obsV)),
+      Some(Map("commit" -> obsV)))(body)
+  }
 
   /** Cross-table TIME TRAVEL: the commit at `version`, refused loudly
     * when it has been retired (retention keeps the current and previous
@@ -259,7 +206,7 @@ object MultiSnapshot {
   def commitAt(spark: SparkSession, root: String, version: Long): Commit = {
     // the retained WINDOW is the last two commit versions (one after an
     // erasure vacuum) — older version FILES may still exist on disk
-    // (immutable CAS history, reclaimed only by vacuum; see publish),
+    // (immutable CAS history, reclaimed only by vacuum; see CommitCas),
     // but their generation dirs are retired on publish, so resolving
     // them must refuse typed here rather than fail on missing data dirs
     val retained = commitVersions(spark, root).takeRight(2)
@@ -296,28 +243,6 @@ object MultiSnapshot {
   def pointer(c: Commit, table: String): Option[Long] =
     c.gens.get(PointerPrefix + table)
 
-  /** Reservation marker for generation `gen` of `table` — a zero-byte
-    * file whose create-exclusive semantics hand each contending writer a
-    * DISTINCT generation number before any data is staged.
-    */
-  private def reserveMarker(root: String, table: String, gen: Long) =
-    new Path(tablePath(root, table), s".reserve.g$gen")
-
-  /** Claim the first unreserved generation number >= `start` for `table`
-    * via create-exclusive marker files. A marker left by a crashed or
-    * lost-race writer just bumps the number — correctness never waits on
-    * cleanup ([[vacuum]] reclaims markers below the committed
-    * generation).
-    */
-  private def reserveGen(f: FileSystem, root: String, table: String,
-                         start: Long): Long = {
-    f.mkdirs(new Path(tablePath(root, table)))
-    var g = start
-    while (!CommitCas.createExclusive(f, f.makeQualified(reserveMarker(root, table, g))))
-      g += 1
-    g
-  }
-
   /** Atomically publish new contents for `tables` (a subset of the
     * root's tables; others carry forward). Returns the new commit.
     *
@@ -330,18 +255,10 @@ object MultiSnapshot {
     * coordinator get the gen tables AND the pointer values of one
     * consistent commit.
     *
-    * Contention (see the object scaladoc): each staged table's
-    * generation number is RESERVED first, so concurrent writers never
-    * share a staging dir; the pointer CAS then admits one commit at a
-    * time. On a lost CAS the publish rebases and retries up to
-    * `conflictRetries` times iff the winning commit(s) advanced only
-    * members DISJOINT from this call's `tables`/`pointers` — commuting
-    * writes, e.g. two streams maintaining different members of one root.
-    * Overlap means this call's inputs may be stale reads of state the
-    * winner just replaced, so it throws [[CommitConflictException]]
-    * instead of silently losing the winner's update; the caller
-    * re-derives from the new commit and redoes the publish.
-    * `conflictRetries = 0` refuses ANY interleaved commit — full
+    * Contention follows the object scaladoc's conflict policy, with at
+    * most `conflictRetries` rebases over disjoint winners (commuting
+    * writes, e.g. two streams maintaining different members of one
+    * root). `conflictRetries = 0` refuses ANY interleaved commit — full
     * fail-stop for callers wanting strict serialization.
     */
   def publish(spark: SparkSession, root: String,
@@ -434,7 +351,8 @@ object MultiSnapshot {
     // concurrently (guide §2.6): a dim+fact commit pays the slower
     // member's write, not the sum of both.
     val staged = graft.Par.run(tables.toSeq.map { case (t, df) => () =>
-      val gen = reserveGen(f, root, t, prevGens.getOrElse(t, 0L) + 1)
+      val gen = CommitCas.reserve(f, tableDir(root, t), ".reserve.g",
+        prevGens.getOrElse(t, 0L) + 1)
       df.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(genPath(root, t, gen))
       t -> gen
@@ -472,24 +390,14 @@ object MultiSnapshot {
       conflictIfOverlap(root, observed, s.gens.keySet, pointers.keySet, cur)
       val newGens = curGens ++ s.gens ++
         pointers.map { case (t, v) => (PointerPrefix + t) -> v }
-      // COMMIT: one pointer PUT — the CAS
       val v = cur.map(_.version).getOrElse(0L) + 1
-      f.mkdirs(new Path(commitRoot(root)))
-      // nonce'd tmp: contenders must not share a scratch file (the
-      // winner's rename would steal the loser's)
-      val tmp = new Path(commitRoot(root),
-        f".v$v%020d.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-      val out = f.create(tmp, true)
-      try out.write(newGens.toSeq.sortBy(_._1)
+      val body = newGens.toSeq.sortBy(_._1)
         .map { case (t, g) => s"$t=$g" }.mkString("\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      if (CommitCas.publish(f, tmp, commitFile(root, v))) committed = Commit(v, newGens)
+      if (CommitCas.commitNext(f, commitDir(root), v, body))
+        committed = Commit(v, newGens)
       else {
-        // lost the CAS — a fresh-name rename fails only if a contender
-        // took this version. Loop re-reads and either rebases (disjoint)
-        // or throws (overlap), up to the retry budget.
-        f.delete(tmp, false)
+        // lost the CAS: the loop re-reads and either rebases (disjoint)
+        // or throws (overlap), up to the retry budget
         attempt += 1
         if (attempt > conflictRetries)
           throw new CommitConflictException(
@@ -508,28 +416,13 @@ object MultiSnapshot {
         .filterNot(_.startsWith(PointerPrefix))
         .map(t => t -> Set(committed.gens.get(t), prevGens.get(t)).flatten)
         .toMap
+    // (reservation markers below the committed generation can never be
+    // contended again: reservations start at committed+1)
     keep.foreach { case (t, keepGens) =>
       val floor = if (keepGens.nonEmpty) keepGens.min else Long.MaxValue
-      val dir = new Path(tablePath(root, t))
-      if (f.exists(dir)) f.listStatus(dir).foreach { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("gen=") && n.stripPrefix("gen=").forall(_.isDigit) &&
-            n.stripPrefix("gen=").toLong < floor)
-          f.delete(st.getPath, true)
-        // reservation markers below the committed generation can never be
-        // contended again (reservations start at committed+1)
-        if (n.startsWith(".reserve.g") &&
-            n.stripPrefix(".reserve.g").forall(_.isDigit) &&
-            n.stripPrefix(".reserve.g").toLong < floor)
-          f.delete(st.getPath, false)
-      }
+      CommitCas.retire(f, tableDir(root, t), "gen=")(_ < floor)
+      CommitCas.retire(f, tableDir(root, t), ".reserve.g")(_ < floor)
     }
-    // committed version files are IMMUTABLE HISTORY: deleting one here
-    // would free its number for a stalled contender's link — a phantom
-    // commit landing below the real latest that its writer believes
-    // succeeded (the lineage-corruption class StorageChaosSpec caught on
-    // BaseDelta manifests). [[vacuum]] reclaims commit history at a
-    // writer-quiet moment; readers only ever resolve the max version.
     committed
   }
 
@@ -572,37 +465,17 @@ object MultiSnapshot {
              belowCurrentOnly: Boolean = false): Seq[String] = {
     val f = fs(spark, root)
     val c = currentCommit(spark, root).getOrElse(return Seq.empty)
-    val keep: Map[String, Set[Long]] = c.gens
-      .filterNot(_._1.startsWith(PointerPrefix))
-      .map { case (t, g) => t -> Set(g) }
-    val deleted = scala.collection.mutable.ArrayBuffer[String]()
-    keep.foreach { case (t, keepGens) =>
-      val cur = keepGens.max
-      def retire(g: Long): Boolean =
-        if (belowCurrentOnly) g < cur else !keepGens.contains(g)
-      val dir = new Path(tablePath(root, t))
-      if (f.exists(dir)) f.listStatus(dir).foreach { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("gen=") && n.stripPrefix("gen=").forall(_.isDigit) &&
-            retire(n.stripPrefix("gen=").toLong)) {
-          f.delete(st.getPath, true)
-          deleted += st.getPath.toString
-        }
-        if (n.startsWith(".reserve.g") &&
-            n.stripPrefix(".reserve.g").forall(_.isDigit) &&
-            (!belowCurrentOnly || n.stripPrefix(".reserve.g").toLong < cur) &&
-            f.delete(st.getPath, false))
-          deleted += st.getPath.toString
-      }
-    }
-    // only pointers BELOW the resolved commit: a contender may have
-    // committed a newer version since our read — deleting it would
-    // destroy a completed commit, not an orphan
-    commitVersions(spark, root).filter(_ < c.version).foreach { v =>
-      f.delete(commitFile(root, v), false)
-      deleted += commitFile(root, v).toString
-    }
-    deleted.toSeq
+    val tables = c.gens.toSeq.filterNot(_._1.startsWith(PointerPrefix))
+    tables.flatMap { case (t, cur) =>
+      CommitCas.retire(f, tableDir(root, t), "gen=")(g =>
+        if (belowCurrentOnly) g < cur else g != cur) ++
+        CommitCas.retire(f, tableDir(root, t), ".reserve.g")(g =>
+          !belowCurrentOnly || g < cur)
+    } ++
+      // only versions BELOW the resolved commit: a contender may have
+      // committed a newer version since our read — deleting it would
+      // destroy a completed commit, not an orphan
+      CommitCas.retire(f, commitDir(root), "v")(_ < c.version)
   }
 
   /** Commit history over the RETAINED window — the DESCRIBE HISTORY

@@ -6,124 +6,78 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 /** Object-store-safe atomic snapshot publish — the manifest-pointer swap
   * that replaces `UpsertByKey.writeAtomic`'s directory-rename swap where
   * renames are copy+delete (S3/MinIO — the reference's own storage
-  * substrate, kafka_to_minio.py:45-51).
-  *
-  * `writeAtomic` publishes by renaming a freshly-written directory over
-  * the target. Directory rename is atomic on HDFS/POSIX but NOT on object
-  * stores: S3 "rename" is an O(files) copy+delete during which readers
-  * see a half-table. Here nothing is ever renamed over anything — the
-  * commit point is a tiny pointer file, the same protocol
-  * [[BaseDelta]]'s manifests use:
+  * substrate, kafka_to_minio.py:45-51): nothing is ever renamed over
+  * anything, the commit point is a [[CommitCas]] version file.
   *
   * {{{
-  * <path>/_ptr/v<V>     pointer file {"gen":N} — readers resolve the
-  *                      HIGHEST version; commits create a NEW version
-  *                      (rename-to-fresh-name on HDFS/POSIX, a single
-  *                      small PUT on object stores — atomic either way)
+  * <path>/_ptr/v<V>     body {"gen":N} — the committed generation
   * <path>/gen=<N>/…     immutable parquet snapshot generations
+  * <path>/.reserve.g<N> generation reservations
   * }}}
   *
-  *  - `publish` = `stage` (write generation N+1's data; the table still
-  *    serves N) + `commit` (write the next pointer version naming N+1).
-  *  - A crash between the two leaves an orphaned `gen=<N+1>` directory
-  *    that readers never resolve — the table keeps serving generation N —
-  *    and the next publish overwrites it (generation numbers come from
-  *    the committed pointer, not from directory listings).
+  *  - `publish` = `stage` (reserve and write generation N+1; the table
+  *    still serves N) + `commit` (the next pointer version naming N+1).
+  *    A crash between the two leaves an orphaned generation readers
+  *    never resolve; [[vacuum]] reclaims it.
   *  - A reader resolves the pointer ONCE and then touches only an
-  *    immutable generation dir, so a concurrent publish cannot tear it;
-  *    the previous generation is retained for one publish cycle (same
-  *    bounded-retention compromise as [[BaseDelta]] / Delta VACUUM).
+  *    immutable generation dir; the previous generation is retained for
+  *    one publish cycle (same bounded-retention compromise as
+  *    [[BaseDelta]] / Delta VACUUM).
   *
-  * Concurrency contract: single writer, any number of readers. The
-  * single-writer rule is ENFORCED rather than assumed, at both steps:
-  * staging RESERVES its generation number (create-exclusive marker, so
-  * contenders never share — and can never tear — a staging directory),
-  * and a writer that loses the pointer CAS (or finds its staged
-  * generation stale) gets a typed [[CommitConflictException]] — nothing
-  * partial commits, readers keep the winner, and the loser's staged
-  * generation is an invisible orphan that [[vacuum]] reclaims; recovery
-  * is to redo the whole read-modify-write publish against the new
-  * committed generation ([[publishFrom]] makes the conflict window span
-  * the caller's reads, which retrying read-merge-publish writers — the
-  * tombstone ledger's concurrent erasers — must use). Multi-TABLE
-  * atomicity belongs on [[MultiSnapshot]].
+  * Conflict policy: this is a single-table read-modify-write surface, so
+  * a commit checks the committed generation against what the caller
+  * derived from and NEVER rebases — a lost pointer CAS or a stale
+  * observation is a typed [[CommitConflictException]]; nothing partial
+  * commits and the loser's staged generation is an invisible orphan.
+  * Recovery is to redo the whole publish against the new generation
+  * ([[publishFrom]] makes the conflict window span the caller's reads).
+  * Multi-TABLE atomicity belongs on [[MultiSnapshot]].
   */
 object SnapshotStore {
 
-  private def ptrRoot(path: String) = s"$path/_ptr"
+  private def ptrDir(path: String) = new Path(s"$path/_ptr")
   def genPath(path: String, gen: Long) = s"$path/gen=$gen"
 
   private[gold] def fs(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def ptrFile(path: String, v: Long) =
-    new Path(ptrRoot(path), f"v$v%020d")
-
-  /** Committed pointer versions on disk, ascending. */
-  private def ptrVersions(spark: SparkSession, path: String): Seq[Long] = {
+  /** The committed generation, or None for an unpublished table. */
+  def currentGen(spark: SparkSession, path: String): Option[Long] = {
     val f = fs(spark, path)
-    val root = new Path(ptrRoot(path))
-    if (!f.exists(root)) Seq.empty
-    else f.listStatus(root).toSeq.map(_.getPath.getName).collect {
-      case n if n.startsWith("v") && n.drop(1).forall(_.isDigit) => n.drop(1).toLong
-    }.sorted
+    CommitCas.versions(f, ptrDir(path)).lastOption.map(readPtrGen(f, path, _))
   }
 
-  /** The committed generation, or None for an unpublished table. */
-  def currentGen(spark: SparkSession, path: String): Option[Long] =
-    ptrVersions(spark, path).lastOption.map(readPtrGen(spark, path, _))
-
-  private def readPtrGen(spark: SparkSession, path: String, v: Long): Long = {
-    val f = fs(spark, path)
-    val in = f.open(ptrFile(path, v))
-    val s = try {
-      val bytes = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](256)
-      var n = in.read(buf)
-      while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-      new String(bytes.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-    } finally in.close()
+  private def readPtrGen(f: FileSystem, path: String, v: Long): Long = {
+    val s = CommitCas.readVersion(f, ptrDir(path), v)
     "\"gen\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(s)
-      .getOrElse(sys.error(s"corrupt pointer ${ptrFile(path, v)}: $s"))
+      .getOrElse(sys.error(
+        s"corrupt pointer ${CommitCas.versionPath(ptrDir(path), v)}: $s"))
       .group(1).toLong
   }
 
-  private def reserveMarker(path: String, gen: Long) =
-    new Path(path, s".reserve.g$gen")
-
   /** Write a fresh generation's data WITHOUT committing it — the table
     * keeps serving the current generation until [[commit]]. The
-    * generation number is RESERVED first (create-exclusive marker
-    * `.reserve.g<N>`, the [[MultiSnapshot]] recipe), so two concurrent
-    * stagers never share a staging directory — without the reservation,
-    * a loser's `SaveMode.Overwrite` into the shared `currentGen+1` dir
-    * could delete/rewrite it AFTER the winner's pointer CAS committed
-    * it, tearing a committed generation before the loser's typed
-    * conflict ever fired. A marker left by a crashed or CAS-losing
-    * stager just bumps the number; its orphaned dir is reclaimed by
-    * [[vacuum]]. Exposed (rather than folded into [[publish]]) so
-    * crash-recovery tests can stop between the two steps — the window
-    * the rename swap could not make safe on object stores.
+    * generation number is RESERVED first, so two concurrent stagers
+    * never share a staging directory — without the reservation, a
+    * loser's `SaveMode.Overwrite` into the shared `currentGen+1` dir
+    * could rewrite it AFTER the winner's pointer CAS committed it. Exposed
+    * (rather than folded into [[publish]]) so crash-recovery tests can
+    * stop between the two steps.
     */
   def stage(df: DataFrame, path: String,
             partitionCols: Seq[String] = Nil): Long = {
     val spark = df.sparkSession
-    val f = fs(spark, path)
-    f.mkdirs(new Path(path))
-    var next = currentGen(spark, path).getOrElse(0L) + 1
-    while (!CommitCas.createExclusive(f, f.makeQualified(reserveMarker(path, next))))
-      next += 1
+    val next = CommitCas.reserve(fs(spark, path), new Path(path), ".reserve.g",
+      currentGen(spark, path).getOrElse(0L) + 1)
     val w = df.write.mode(SaveMode.Overwrite)
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
       .parquet(genPath(path, next))
     next
   }
 
-  /** Commit a staged generation: write the next pointer version naming it
-    * (tmp file + rename to a FRESH name — atomic on HDFS/POSIX; on an
-    * object store this maps to one small PUT, atomic by the store's own
-    * semantics), then retire generations older than the PREVIOUS one
-    * (in-flight readers may still hold it) and stale pointer versions.
+  /** Commit a staged generation as the next pointer version, then retire
+    * generations older than the PREVIOUS one (in-flight readers may
+    * still hold it).
     */
   def commit(spark: SparkSession, path: String, gen: Long): Unit =
     commitChecked(spark, path, gen, observed = None)
@@ -158,8 +112,8 @@ object SnapshotStore {
     // deriving `prev` and `next` from separate listings would leave a
     // window where a commit lands between them and stale-derived content
     // commits under a higher fresh version
-    val versions = ptrVersions(spark, path)
-    val prev = versions.lastOption.map(readPtrGen(spark, path, _))
+    val versions = CommitCas.versions(f, ptrDir(path))
+    val prev = versions.lastOption.map(readPtrGen(f, path, _))
     observed.foreach { obs =>
       if (prev != obs)
         throw new CommitConflictException(
@@ -175,61 +129,19 @@ object SnapshotStore {
           s"newer than committed $prev — a concurrent publish won; " +
           "re-derive from the current generation and redo the whole " +
           "publish (this staged dir is an invisible orphan for vacuum)")
-    f.mkdirs(new Path(ptrRoot(path)))
     val next = versions.lastOption.getOrElse(0L) + 1
-    // nonce'd tmp: contenders must not share a scratch file (the
-    // winner's rename would steal the loser's)
-    val tmp = new Path(ptrRoot(path),
-      f".v$next%020d.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-    val out = f.create(tmp, true)
-    try out.write(s"""{"gen":$gen}"""
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    // Commit point. Hadoop rename reports failure (dest exists, src
-    // vanished) by RETURNING false, not throwing — swallowing it would
-    // return success while readers still resolve the old generation. A
-    // fresh-name rename fails only when a contender took this version:
-    // this store is a single-table read-modify-write surface, so a lost
-    // CAS ALWAYS means our staged content read a replaced generation —
-    // fail clean (typed), never rebase; the caller redoes the publish
-    // from the new commit.
-    if (!CommitCas.publish(f, tmp, ptrFile(path, next))) {
-      f.delete(tmp, false)
+    if (!CommitCas.commitNext(f, ptrDir(path), next, s"""{"gen":$gen}"""))
       throw new CommitConflictException(
         s"SnapshotStore.commit at $path: lost the pointer CAS at " +
           s"v$next; generation $gen is NOT committed and remains an " +
           "invisible orphan for vacuum — re-derive and redo the publish")
-    }
-    if (sys.props.contains("graft.debug.snapshot"))
-      println(s"[snapdbg ${Thread.currentThread().getName}] COMMIT $path " +
-        s"gen=$gen v=$next prev=$prev obs=$observed")
     // retention: keep the just-replaced generation for readers that
-    // resolved it before this commit; drop anything older. Delete only
-    // generations that are actually on disk (one listing), not a
-    // 1..prev sweep that issues O(all-generations-ever) calls.
+    // resolved it before this commit; reservations start at committed + 1,
+    // so markers below it can never be contended again
     prev.foreach { p =>
-      val root = new Path(path)
-      if (f.exists(root)) f.listStatus(root).foreach { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("gen=") && n.stripPrefix("gen=").forall(_.isDigit) &&
-            n.stripPrefix("gen=").toLong < p)
-          f.delete(st.getPath, true)
-        // reservation markers below the replaced generation can never be
-        // contended again (reservations start at committed + 1)
-        if (n.startsWith(".reserve.g") &&
-            n.stripPrefix(".reserve.g").forall(_.isDigit) &&
-            n.stripPrefix(".reserve.g").toLong < p)
-          f.delete(st.getPath, false)
-      }
+      CommitCas.retire(f, new Path(path), "gen=")(_ < p)
+      CommitCas.retire(f, new Path(path), ".reserve.g")(_ < p)
     }
-    // committed pointer files are IMMUTABLE HISTORY: deleting one inline
-    // would free its version number, and a freed number is a hole a
-    // stalled contender can still link into — its "successful" commit
-    // lands BELOW the real latest, an invisible phantom whose caller
-    // believes the publish happened (for a tombstone ledger that is a
-    // lost erasure ack; the manifest-side twin was caught live by
-    // StorageChaosSpec). Reclamation belongs to [[vacuum]] /
-    // [[reclaimHistory]] — writer-quiet or single-writer maintenance.
   }
 
   /** Atomic publish: stage + commit. Returns the committed generation. */
@@ -276,34 +188,20 @@ object SnapshotStore {
     * marker exists to prevent. (Readers are always safe.)
     */
   def vacuum(spark: SparkSession, path: String): Seq[String] = {
-    val curOpt = currentGen(spark, path)
-    if (curOpt.isEmpty) return Seq.empty
-    val cur = curOpt.get
     val f = fs(spark, path)
-    val deleted = scala.collection.mutable.ArrayBuffer[String]()
-    val root = new Path(path)
-    if (f.exists(root)) f.listStatus(root).toSeq.foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("gen=") && n.stripPrefix("gen=").forall(_.isDigit) &&
-          n.stripPrefix("gen=").toLong != cur && f.delete(st.getPath, true))
-        deleted += st.getPath.toString
-      if (n.startsWith(".reserve.g") &&
-          n.stripPrefix(".reserve.g").forall(_.isDigit) &&
-          n.stripPrefix(".reserve.g").toLong != cur &&
-          f.delete(st.getPath, false))
-        deleted += st.getPath.toString
-    }
-    ptrVersions(spark, path).dropRight(1)
-      .foreach(v => if (f.delete(ptrFile(path, v), false))
-        deleted += ptrFile(path, v).toString)
-    deleted.toSeq
+    val versions = CommitCas.versions(f, ptrDir(path))
+    if (versions.isEmpty) return Seq.empty
+    val cur = readPtrGen(f, path, versions.last)
+    CommitCas.retire(f, new Path(path), "gen=")(_ != cur) ++
+      CommitCas.retire(f, new Path(path), ".reserve.g")(_ != cur) ++
+      CommitCas.retire(f, ptrDir(path), "v")(_ < versions.last)
   }
 
   /** Bounded pointer-history reclamation for a SINGLE-WRITER table (a
     * streaming sink's state store): delete pointer versions below
     * `keepVersions` from the top. Safe ONLY where the caller is the one
     * writer of `path` (no stalled contender can exist whose link a freed
-    * number would admit — the phantom-commit hazard [[commitChecked]]
+    * number would admit — the phantom-commit hazard [[CommitCas]]
     * documents); multi-writer paths (tombstone ledgers) must use the
     * writer-quiet [[vacuum]] instead. Readers stay safe: the newest
     * version always survives, and a reader racing the window onto an
@@ -313,8 +211,11 @@ object SnapshotStore {
                      keepVersions: Int = 8): Seq[String] = {
     require(keepVersions >= 1, s"keepVersions must be >= 1, got $keepVersions")
     val f = fs(spark, path)
-    ptrVersions(spark, path).dropRight(keepVersions)
-      .map { v => f.delete(ptrFile(path, v), false); ptrFile(path, v).toString }
+    CommitCas.versions(f, ptrDir(path)).dropRight(keepVersions).map { v =>
+      val p = CommitCas.versionPath(ptrDir(path), v)
+      f.delete(p, false)
+      p.toString
+    }
   }
 
   /** Read-merge-publish convenience — `UpsertByKey.intoParquet` on the

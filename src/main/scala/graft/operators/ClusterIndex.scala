@@ -68,6 +68,8 @@ import graft.gold.{BaseDelta, CommitConflictException, MultiSnapshot, SnapshotSt
   */
 object ClusterIndex {
 
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
   /** State root: the two BaseDelta tables live under it. */
   final case class State(root: String) {
     def postingsTable: BaseDelta.Table =
@@ -126,7 +128,11 @@ object ClusterIndex {
                                    allowSchemaEvolution: Boolean): Unit =
     if (BaseDelta.deltaBatches(spark, t).size > maxDeltas) {
       try BaseDelta.compact(spark, t, allowSchemaEvolution)
-      catch { case _: CommitConflictException => () }
+      catch {
+        case e: CommitConflictException =>
+          log.warn(s"ClusterIndex: deferred compaction of ${t.path} lost " +
+            s"to a concurrent commit; the next batch retries (${e.getMessage})")
+      }
     }
 
   private def tableNonEmpty(spark: SparkSession, t: BaseDelta.Table): Boolean = {

@@ -508,11 +508,6 @@ object Dedup {
               .select(col("id").as("cluster_id"), col("cluster_id").as("__jump"))),
             Seq("cluster_id"))
           .select(col("id"), col("__jump").as("cluster_id"))
-        if (iter == 0 && sys.props.contains("graft.debug.cc")) {
-          println(s"[ccdbg] single=$single nEdges=$nEdges round-1 plans:")
-          propagatedRaw.explain("formatted")
-          jump.explain("formatted")
-        }
         val next = truncate(jump)
         if (!single)
           propagated.unpersist() // next is already materialized (eager checkpoint)

@@ -25,6 +25,8 @@ import graft.operators.{ClusterIndex, SearchIndex, VectorIndex}
   */
 object IndexStreams {
 
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
   /** Bounded retry on the typed conflict, with jittered exponential
     * backoff between attempts (100ms·2^n ± half, capped at 2s): an
     * immediate re-fold against an in-flight erasure — whose retired-state
@@ -67,7 +69,12 @@ object IndexStreams {
       try retryConflict(3) {
         graft.gold.BaseDelta.materializePendingIfOverBudget(spark, t, budget)
       }
-      catch { case _: CommitConflictException => () /* next batch retries */ }
+      catch {
+        case e: CommitConflictException =>
+          log.warn(s"IndexStreams: over-budget materialization of ${t.path} " +
+            "lost to a concurrent commit; the next batch re-checks the " +
+            s"budget (${e.getMessage})")
+      }
     }
 
   /** Continuously fold documents (idCol, textCol) into a BM25 + phrase
@@ -130,7 +137,12 @@ object IndexStreams {
         try { retryConflict(3) {
           ClusterIndex.repairStructural(b.sparkSession, st, threshold)
         }; () }
-        catch { case _: CommitConflictException => () }
+        catch {
+          case e: CommitConflictException =>
+            log.warn(s"IndexStreams: structural repair of ${st.root} lost " +
+              s"to a concurrent commit at batch $id; the next batch " +
+              s"retries (${e.getMessage})")
+        }
         // pane refresh LAST, so the snapshot reflects this batch's fold,
         // materializations, and repairs; batch-id idempotent like the fold
         pane.foreach(p =>

@@ -3,8 +3,9 @@ package graft
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 import scala.util.{Failure, Success, Try}
 import org.apache.spark.sql.functions._
-import graft.gold.{CommitCas, CommitConflictException, MultiSnapshot,
-  SnapshotStore, UnsupportedCommitStoreException}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import graft.gold.{BaseDelta, CommitCas, CommitConflictException,
+  MultiSnapshot, SnapshotStore, UnsupportedCommitStoreException}
 
 /** Scheme-capability gating of the commit-CAS primitives: filesystems
   * whose rename/create are not exclusive-atomic (the object-store
@@ -172,5 +173,123 @@ class CommitStoreSpec extends SparkSpec {
       assert(got == Set(0L, 1L, 2L, 10L, 11L),
         s"round $round: a committed merge was lost: $got")
     }
+  }
+
+  // ── on-disk formats: committed bytes, and hand-written files read ──
+
+  private def localFs: FileSystem =
+    new Path("/tmp").getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private def versionName(v: Long) = f"v$v%020d"
+
+  private def bodyOf(dir: String, v: Long): String =
+    new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(dir, versionName(v))), "UTF-8")
+
+  private def writeVersion(dir: String, v: Long, body: String): Unit = {
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, versionName(v)),
+      body.getBytes("UTF-8"))
+  }
+
+  private def names(dir: String): Set[String] =
+    Option(new java.io.File(dir).list()).map(_.toSet).getOrElse(Set.empty)
+
+  test("committed bytes: SnapshotStore {\"gen\":N}, MultiSnapshot sorted lines, BaseDelta manifest JSON") {
+    val path = tmpDir("fmt-ss") + "/t"
+    SnapshotStore.publish(tagged("a", 2), path)
+    SnapshotStore.publish(tagged("b", 2), path)
+    assert(bodyOf(s"$path/_ptr", 1) == """{"gen":1}""")
+    assert(bodyOf(s"$path/_ptr", 2) == """{"gen":2}""")
+    assert(names(s"$path/_ptr") == Set(versionName(1), versionName(2)))
+
+    val root = tmpDir("fmt-ms") + "/r"
+    MultiSnapshot.publish(spark, root,
+      Map("orders" -> tagged("a", 1), "accounts" -> tagged("a", 1)),
+      pointers = Map("fact" -> 7L))
+    MultiSnapshot.publish(spark, root, Map("orders" -> tagged("b", 1)))
+    assert(bodyOf(s"$root/_commit", 1) == "@fact=7\naccounts=1\norders=1")
+    assert(bodyOf(s"$root/_commit", 2) == "@fact=7\naccounts=1\norders=2")
+    assert(names(s"$root/_commit") == Set(versionName(1), versionName(2)))
+
+    val t = BaseDelta.Table(tmpDir("fmt-bd") + "/t", Seq("id"), Seq("ver"))
+    def batch(ids: Long*) = ids.map(i => (i, 1)).toDF("id", "ver")
+    BaseDelta.append(spark, t, batch(1L), 3L)
+    BaseDelta.append(spark, t, batch(2L), 5L)
+    BaseDelta.compact(spark, t, upTo = Some(3L))
+    val m = s"${t.path}/_manifests"
+    assert(bodyOf(m, 1) == """{"generation":0,"deltas":[3]}""")
+    assert(bodyOf(m, 2) == """{"generation":0,"deltas":[3,5]}""")
+    assert(bodyOf(m, 3) == """{"generation":1,"deltas":[5],"folded_through":3}""")
+    assert(names(m).filterNot(_.startsWith(".reserve.")) ==
+      Set(versionName(1), versionName(2), versionName(3)))
+  }
+
+  test("hand-written version files in each store's format still read") {
+    val path = tmpDir("old-ss") + "/t"
+    tagged("old", 3).write.parquet(SnapshotStore.genPath(path, 5))
+    writeVersion(s"$path/_ptr", 3, """{"gen":5}""")
+    assert(SnapshotStore.currentGen(spark, path).contains(5L))
+    assert(SnapshotStore.read(spark, path).count() == 3)
+
+    val root = tmpDir("old-ms") + "/r"
+    tagged("old", 4).write.parquet(MultiSnapshot.genPath(root, "t", 2))
+    writeVersion(s"$root/_commit", 4, "@p=9\nt=2")
+    assert(MultiSnapshot.currentCommit(spark, root).contains(
+      MultiSnapshot.Commit(4, Map("t" -> 2L, "@p" -> 9L))))
+    assert(MultiSnapshot.read(spark, root, "t").count() == 4)
+
+    val t = BaseDelta.Table(tmpDir("old-bd") + "/t", Seq("id"), Seq("ver"))
+    Seq((1L, 1), (2L, 1)).toDF("id", "ver").write.parquet(t.deltaPath(3))
+    writeVersion(t.manifestRoot, 2, """{"generation":0,"deltas":[3]}""")
+    assert(BaseDelta.readManifest(spark, t).contains(
+      BaseDelta.Manifest(0L, Seq(3L), None)))
+    assert(BaseDelta.read(spark, t).count() == 2)
+    Seq((1L, 1)).toDF("id", "ver").write.parquet(t.baseGenPath(1))
+    writeVersion(t.manifestRoot, 3,
+      """{"generation":1,"deltas":[],"folded_through":3}""")
+    assert(BaseDelta.readManifest(spark, t).contains(
+      BaseDelta.Manifest(1L, Seq.empty, Some(3L))))
+    assert(BaseDelta.timeTravelFloor(spark, t).contains(3L))
+    assert(BaseDelta.read(spark, t).count() == 1)
+  }
+
+  // ── the versioned-log primitives ──
+
+  test("CommitCas.commitNext: a lost CAS returns false and leaves no tmp file") {
+    val dir = new Path(tmpDir("cas-next") + "/log")
+    assert(CommitCas.commitNext(localFs, dir, 1L, "first"))
+    assert(!CommitCas.commitNext(localFs, dir, 1L, "second"))
+    assert(names(dir.toString) == Set(versionName(1)))
+    assert(CommitCas.readVersion(localFs, dir, 1L) == "first")
+    assert(CommitCas.versions(localFs, dir) == Seq(1L))
+  }
+
+  test("CommitCas.reserve skips taken numbers") {
+    val dir = new Path(tmpDir("cas-reserve") + "/t")
+    assert(CommitCas.reserve(localFs, dir, ".reserve.g", 3L) == 3L)
+    assert(CommitCas.reserve(localFs, dir, ".reserve.g", 3L) == 4L)
+    java.nio.file.Files.createFile(
+      java.nio.file.Paths.get(dir.toString, ".reserve.g5"))
+    assert(CommitCas.reserve(localFs, dir, ".reserve.g", 3L) == 6L)
+    assert(CommitCas.reserve(localFs, dir, ".reserve.base", 3L) == 3L)
+  }
+
+  test("CommitCas.numbered ignores foreign names") {
+    val dir = tmpDir("cas-numbered") + "/t"
+    Seq("gen=12", "gen=2", "gen=", "gen=abc", "gen=1x").foreach(n =>
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir, n)))
+    Seq(".reserve.g3", ".reserve.gx", "v12.tmp", ".v12.ab12cd34.tmp",
+        versionName(7)).foreach(n =>
+      java.nio.file.Files.createFile(java.nio.file.Paths.get(dir, n)))
+    val d = new Path(dir)
+    assert(CommitCas.numbered(localFs, d, "gen=").map(_._1) == Seq(2L, 12L))
+    assert(CommitCas.numbered(localFs, d, ".reserve.g").map(_._1) == Seq(3L))
+    assert(CommitCas.versions(localFs, d) == Seq(7L))
+    assert(CommitCas.numbered(localFs, new Path(dir + "/absent"), "gen=")
+      .isEmpty)
+    assert(CommitCas.retire(localFs, d, "gen=")(_ < 12).map(new Path(_).getName)
+      == Seq("gen=2"))
+    assert(names(dir).contains("gen=12") && names(dir).contains("gen=abc"))
   }
 }

@@ -163,5 +163,35 @@ class MultiSnapshotSpec extends SparkSpec {
         spark.read.parquet(missing).collect()
       }
     }
+    // the COORDINATOR form: the baseline is the caller's observed commit,
+    // not a version read at entry
+    val root = tmpDir("ms-coord-guard") + "/r"
+    MultiSnapshot.publish(spark, root, Map("t" -> dim(1)))
+    val v1 = MultiSnapshot.currentCommit(spark, root)
+    val unmoved = intercept[Throwable] {
+      MultiSnapshot.conflictIfRetired(spark, root, v1) {
+        spark.read.parquet(missing).collect()
+      }
+    }
+    assert(!unmoved.isInstanceOf[graft.gold.CommitConflictException],
+      s"a fault with the commit at the observed version was reclassified: $unmoved")
+    // a commit landing BEFORE entry but after the caller's observation
+    // is already a retirement (an entry-read baseline would miss it)
+    MultiSnapshot.publish(spark, root, Map("t" -> dim(2)))
+    val retired = intercept[graft.gold.CommitConflictException] {
+      MultiSnapshot.conflictIfRetired(spark, root, v1) {
+        spark.read.parquet(missing).collect()
+      }
+    }
+    assert(retired.getCause != null &&
+      !retired.getCause.isInstanceOf[graft.gold.CommitConflictException],
+      s"the real fault must ride as the cause: $retired")
+    // a failure that is not a snapshot read failure always propagates raw
+    val other = intercept[IllegalStateException] {
+      MultiSnapshot.conflictIfRetired(spark, root, v1) {
+        throw new IllegalStateException("not a read failure")
+      }
+    }
+    assert(other.getMessage == "not a read failure")
   }
 }
