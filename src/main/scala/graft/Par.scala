@@ -16,6 +16,8 @@ package graft
   */
 private[graft] object Par {
 
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
   /** Some call sites run inside Spark's analyzer with the
     * SessionCatalog MONITOR HELD — the TVF surface executes its
     * side-effecting builders during function resolution, which is
@@ -50,12 +52,20 @@ private[graft] object Par {
       // unwind before rethrowing, so no half-running task outlives the
       // call (tasks are idempotent commit protocols; cancellation is
       // safe, and a plain shutdown() would leave them running detached).
+      // A second interrupt cuts the wait short: the interrupt status is
+      // restored and the ORIGINAL interrupt is what propagates.
       val settled =
         try futs.map(f => scala.util.Try(f.get()))
         catch {
           case ie: InterruptedException =>
             pool.shutdownNow()
-            pool.awaitTermination(10, java.util.concurrent.TimeUnit.MINUTES)
+            try {
+              if (!pool.awaitTermination(10, java.util.concurrent.TimeUnit.MINUTES))
+                log.warn("Par.run: interrupted, but tasks still running after " +
+                  "10 minutes; rethrowing with them detached")
+            } catch {
+              case _: InterruptedException => Thread.currentThread().interrupt()
+            }
             throw ie
         }
       settled.foreach {

@@ -579,7 +579,7 @@ object Perf {
     if (what == "sinks") {
       // per-micro-batch merge cost of the three sink tiers, same 5M-row
       // fact spread over 30 date partitions, same 50k-row batch touching
-      // exactly ONE partition: whole-table swap is O(table), the pruned
+      // exactly ONE partition: whole-table publish is O(table), the pruned
       // sink O(touched partition), base+delta O(batch)
       import java.nio.file.Files
       val root = Scratch.dir("sinks")
@@ -592,13 +592,13 @@ object Perf {
         .withColumn("amount", col("amount") + 1.0)
       batch.cache().count()
       val keys = Seq("id"); val ord = Seq("created_at", "id")
-      // tier 1: whole-table atomic swap
+      // tier 1: whole-table rewrite, committed through the snapshot pointer
       val whole = root + "/whole"
-      fact.write.parquet(whole)
+      gold.SnapshotStore.publish(fact, whole)
       time("sink-whole-table") {
-        gold.UpsertByKey.writeAtomic(
-          gold.UpsertByKey.byMax(spark.read.parquet(whole), batch, keys, ord), whole)
-        spark.read.parquet(whole).count()
+        gold.SnapshotStore.publish(gold.UpsertByKey.byMax(
+          gold.SnapshotStore.read(spark, whole), batch, keys, ord), whole)
+        gold.SnapshotStore.read(spark, whole).count()
       }
       // tier 2: partition-pruned dynamic overwrite
       val pruned = root + "/pruned"
@@ -609,7 +609,8 @@ object Perf {
       }
       // tier 3: base+delta append (write cost) + merge-on-read (read cost)
       val bdTable = gold.BaseDelta.Table(root + "/bd", keys, ord)
-      gold.UpsertByKey.writeAtomic(fact, bdTable.basePath)
+      gold.BaseDelta.append(spark, bdTable, fact, 0L)
+      gold.BaseDelta.compact(spark, bdTable)
       time("sink-basedelta-append") {
         gold.BaseDelta.append(spark, bdTable, batch, 1L); 1L
       }

@@ -7223,8 +7223,7 @@ object Queries {
     // ── object-store-safe publish: the q05 merge run through the
     //    SnapshotStore pointer protocol (stage gen → pointer PUT → read
     //    through the committed pointer); same algebra, so the same oracle —
-    //    proves the atomic-publish path returns byte-identical results to
-    //    the rename-swap sink it replaces ──
+    //    proves the atomic-publish path returns byte-identical results ──
     Q("q158_snapshot_publish",
       (s, d) => {
         val root = Scratch.dir("q158-snap") + "/t"

@@ -42,8 +42,7 @@ import org.apache.spark.sql.functions._
   * bounded-retention compromise as Delta's `VACUUM`).
   *
   * Reads never mutate the layout (a reader racing a writer must not rename
-  * directories — see the legacy fallback in `read`); crash recovery is the
-  * write path's job.
+  * directories); crash recovery is the write path's job.
   *
   * Idempotence/crash safety: delta dirs are written by overwrite keyed on
   * the caller's batch id, so a replayed micro-batch overwrites its own
@@ -174,10 +173,8 @@ object BaseDelta {
   /** Resolve one consistent snapshot: (base dir if any, live delta ids).
     * The manifest is read exactly ONCE — resolving it twice could tear
     * across a concurrent compaction commit (old base + new empty delta
-    * list = silently missing data). Legacy tables resolve by listing, with
-    * a non-mutating fallback to a dangling `base.__old` left by a crashed
-    * legacy compaction — a reader must not rename directories a writer may
-    * be touching; the write path recovers via `UpsertByKey.recoverDangling`.
+    * list = silently missing data). Legacy (manifest-less) tables resolve
+    * by listing: the flat `base` dir, if any, plus the delta dirs on disk.
     */
   def resolveSnapshot(spark: SparkSession, t: Table): (Option[String], Seq[Long]) =
     readManifest(spark, t) match {
@@ -185,13 +182,8 @@ object BaseDelta {
         (if (m.generation > 0) Some(t.baseGenPath(m.generation)) else None,
           m.deltas)
       case None =>
-        val f = fs(spark, t.path)
-        val base =
-          if (f.exists(new Path(t.basePath))) Some(t.basePath)
-          else if (f.exists(new Path(t.basePath + ".__old")))
-            Some(t.basePath + ".__old")
-          else None
-        (base, diskDeltas(spark, t))
+        (Option.when(fs(spark, t.path).exists(new Path(t.basePath)))(t.basePath),
+          diskDeltas(spark, t))
     }
 
   /** The active base directory, if a compacted base exists. */
@@ -804,9 +796,7 @@ object BaseDelta {
         // the old listing path — their migration is compact's, under the
         // single-writer maintenance contract.
         val f = fs(spark, t.path)
-        val legacyBase = f.exists(new Path(t.basePath)) ||
-          f.exists(new Path(t.basePath + ".__old"))
-        if (!legacyBase)
+        if (!f.exists(new Path(t.basePath)))
           writeManifest(spark, t,
             Manifest(0L, (diskDeltas(spark, t).toSet + batchId).toSeq.sorted),
             basedOn = 0L)
@@ -905,9 +895,7 @@ object BaseDelta {
     * Tombstoned keys are physically removed here. Retention: the previous
     * generation's base and delta dirs survive one more cycle for in-flight
     * readers; anything older is retired now. The first compaction of a
-    * legacy (pre-manifest) table migrates it to the manifest layout, and
-    * the legacy write path's dangling-swap recovery runs here — in the
-    * writer, never in `read`.
+    * legacy (pre-manifest) table migrates it to the manifest layout.
     *
     * `upTo` bounds the fold: only deltas with id <= upTo fold into the
     * new base; later deltas stay LIVE (and separable). This is how a
@@ -946,10 +934,6 @@ object BaseDelta {
             "re-derive and retry")
     }
     val mOpt = mvOpt.map(_._2)
-    if (mOpt.isEmpty)
-      // legacy crash recovery (writer-side): restore a base left dangling
-      // between writeAtomic's two renames before reading it
-      UpsertByKey.recoverDangling(f, t.basePath)
     val live = mOpt.map(_.deltas).getOrElse(diskDeltas(spark, t))
     val foldable = upTo.map(b => live.filter(_ <= b)).getOrElse(live)
     val kept = live.diff(foldable)
@@ -1017,10 +1001,7 @@ object BaseDelta {
     // APPEND's in-flight dir carries a HIGHER batch id — sweeping it
     // would corrupt the appender mid-write; orphans above the floor are
     // vacuum's job, at a writer-quiet moment)
-    if (gen >= 1) {
-      f.delete(new Path(t.basePath), true)
-      f.delete(new Path(t.basePath + ".__old"), true)
-    }
+    if (gen >= 1) f.delete(new Path(t.basePath), true)
     (1L until gen).foreach(g => f.delete(new Path(t.baseGenPath(g)), true))
     (diskDeltas(spark, t).toSet -- live.toSet)
       .filter(id => folded.exists(_ >= id))
@@ -1085,10 +1066,7 @@ object BaseDelta {
       if (writerSafe) g < m.generation else g != m.generation
     deleted ++= CommitCas.retire(f, new Path(t.path), "base_g")(retired)
     deleted ++= CommitCas.retire(f, new Path(t.manifestRoot), ".reserve.base")(retired)
-    if (m.generation >= 1) {
-      drop(new Path(t.basePath))
-      drop(new Path(t.basePath + ".__old"))
-    }
+    if (m.generation >= 1) drop(new Path(t.basePath))
     // folded (or orphaned) delta dirs: anything not in the live set —
     // bounded at the fold point in writer-safe mode
     (diskDeltas(spark, t).toSet -- m.deltas.toSet).toSeq.sorted

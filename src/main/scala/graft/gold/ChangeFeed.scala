@@ -86,12 +86,8 @@ object ChangeFeed {
   def latest(spark: SparkSession, path: String, keys: Seq[String]): DataFrame = {
     val cur = SnapshotStore.currentGen(spark, path).getOrElse(
       sys.error(s"ChangeFeed.latest: nothing published at $path"))
-    val f = SnapshotStore.fs(spark, path)
-    val root = new org.apache.hadoop.fs.Path(path)
-    val gens = f.listStatus(root).toSeq.map(_.getPath.getName).collect {
-      case s if s.startsWith("gen=") && s.stripPrefix("gen=").forall(_.isDigit) =>
-        s.stripPrefix("gen=").toLong
-    }.filter(_ < cur)
+    val gens = CommitCas.numbered(SnapshotStore.fs(spark, path),
+      new org.apache.hadoop.fs.Path(path), "gen=").map(_._1).filter(_ < cur)
     require(gens.nonEmpty,
       s"ChangeFeed.latest: no prior generation of $path is retained")
     between(spark, path, gens.max, cur, keys)

@@ -7,9 +7,9 @@ import org.apache.spark.sql.functions._
   * form of the reference's `incremental_strategy='merge'`,
   * readme.md:142-151).
   *
-  * The whole-table rewrite in `UpsertByKey.writeAtomic` is O(table) I/O per
-  * batch — fine for dimension-sized tables, a scale-killer for a fact table
-  * maintained every minute. Here the sink is Hive-partitioned and a
+  * A whole-table rewrite per batch (the `SnapshotStore.upsertInto` sink) is
+  * O(table) I/O — fine for dimension-sized tables, a scale-killer for a fact
+  * table maintained every minute. Here the sink is Hive-partitioned and a
   * micro-batch touches ONLY the partitions its rows land in:
   *
   *  1. the batch's distinct partition values are collected (one value per
@@ -33,8 +33,8 @@ import org.apache.spark.sql.functions._
   * committer (staging dir + commit). A crash mid-job can leave a subset of
   * touched partitions committed, but the streaming checkpoint replays the
   * batch and the merge is idempotent (latest-wins on the same input), so
-  * the sink converges. No rename-swap of the table root is involved, which
-  * also makes this layout object-store safe — unlike `writeAtomic`.
+  * the sink converges. No rename of the table root is involved, which also
+  * makes this layout object-store safe.
   */
 object PartitionedUpsert {
 
@@ -44,6 +44,11 @@ object PartitionedUpsert {
     */
   def touched(incoming: DataFrame, partCol: String): Seq[Any] =
     incoming.select(partCol).distinct().collect().map(_.get(0)).toSeq
+
+  private def exists(spark: SparkSession, path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
 
   /** Overwrite exactly the partitions present in `df`; all others keep
     * their existing files.
@@ -77,7 +82,7 @@ object PartitionedUpsert {
         if (nonNull.size < parts.size) col(partCol).isin(nonNull: _*) || col(partCol).isNull
         else col(partCol).isin(parts: _*)
       val existing =
-        if (UpsertByKey.exists(spark, path))
+        if (exists(spark, path))
           Some(spark.read.parquet(path).filter(prune))
         else None
       val merged = UpsertByKey.mergeBatch(existing, batch, keys, orderCols, opCol)
@@ -149,30 +154,15 @@ object PartitionedUpsert {
     // same-day closures on the second batch of a day.
     val zone = java.time.ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone)
     val asOfPart = "closed_" + asOf.toInstant.atZone(zone).toLocalDate.toString
-    val exists = UpsertByKey.exists(spark, path)
-    // a snapshot written by the non-partitioned path has no scd_part
-    // column: migrate it wholesale this batch (read all, write
-    // partitioned) instead of failing on the pruning filter
-    val legacy = exists &&
-      !spark.read.parquet(path).columns.contains(ScdPartCol)
     val snapshot =
-      if (legacy) spark.read.parquet(path)
-      else if (exists)
+      if (exists(spark, path))
         spark.read.parquet(path)
           .filter(col(ScdPartCol).isin(ScdCurrent, asOfPart))
           .drop(ScdPartCol)
       else Scd2Merge.emptySnapshot(staged)
     val merged = Scd2Merge(snapshot, staged, keys, checkCols, asOf)
       .withColumn(ScdPartCol, scdPart)
-    if (legacy) {
-      // full rewrite through a tmp+swap: static overwrite of the old flat
-      // layout, atomic for readers
-      val tmp = path + ".__migrate"
-      writeDynamic(merged, tmp, ScdPartCol)
-      val f = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      UpsertByKey.writeSwap(f, tmp, path)
-    } else writeDynamic(merged, path, ScdPartCol)
+    writeDynamic(merged, path, ScdPartCol)
   }
 
   /** Read the full SCD2 table back (partition column dropped — it is

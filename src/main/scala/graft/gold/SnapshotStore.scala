@@ -3,11 +3,11 @@ package graft.gold
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
-/** Object-store-safe atomic snapshot publish — the manifest-pointer swap
-  * that replaces `UpsertByKey.writeAtomic`'s directory-rename swap where
-  * renames are copy+delete (S3/MinIO — the reference's own storage
-  * substrate, kafka_to_minio.py:45-51): nothing is ever renamed over
-  * anything, the commit point is a [[CommitCas]] version file.
+/** Object-store-safe atomic snapshot publish — the whole-table publish
+  * protocol, safe where renames are copy+delete (S3/MinIO — the
+  * reference's own storage substrate, kafka_to_minio.py:45-51): nothing is
+  * ever renamed over anything, the commit point is a [[CommitCas]] version
+  * file.
   *
   * {{{
   * <path>/_ptr/v<V>     body {"gen":N} — the committed generation
@@ -218,11 +218,10 @@ object SnapshotStore {
     }
   }
 
-  /** Read-merge-publish convenience — `UpsertByKey.intoParquet` on the
-    * pointer protocol: upsert `incoming` into the snapshot table at
-    * `path` (creating it if absent). The merge plan reads the CURRENT
-    * generation while the new one is staged elsewhere, so no step ever
-    * reads a path being written.
+  /** Read-merge-publish convenience: upsert `incoming` into the snapshot
+    * table at `path` (creating it if absent). The merge plan reads the
+    * CURRENT generation while the new one is staged elsewhere, so no step
+    * ever reads a path being written.
     */
   def upsertInto(spark: SparkSession, incoming: DataFrame, path: String,
                  keys: Seq[String],

@@ -1,6 +1,6 @@
 package graft.gold
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Incremental upsert by unique key (SURVEY.md §2 row 25).
@@ -13,8 +13,9 @@ import org.apache.spark.sql.functions._
   *
   * Parquet has no MERGE, so the operator is pure DataFrame algebra:
   * `existing ▷ incoming (anti) ∪ incoming` — one shuffle on the key (the
-  * anti-join), incoming side broadcast when small. Persisting uses a
-  * crash-safe write-tmp-then-rename swap (SURVEY.md §7.5 risk 3).
+  * anti-join), incoming side broadcast when small. This object is only the
+  * merge algebra; the sinks persist its result through [[SnapshotStore]]'s
+  * pointer commit or [[PartitionedUpsert]]'s partition overwrite.
   */
 object UpsertByKey {
 
@@ -91,88 +92,5 @@ object UpsertByKey {
     existing
       .join(latest.select(keys.map(col): _*).distinct(), keys, "left_anti")
       .unionByName(upserts.join(deletes, keys, "left_anti"))
-  }
-
-  /** Atomic swap-overwrite: write to `<path>.__tmp`, then rename over the
-    * target. Readers see either the old or the new table, never a partial
-    * write.
-    *
-    * Crash window: between `rename(target, old)` and `rename(tmp, target)`
-    * the table exists only at `<path>.__old`. `recoverDangling` (called on
-    * entry here and usable from readers) rolls that state back, so no run
-    * can mistake it for a first write and discard the merged history.
-    * Limitation: directory rename is atomic on HDFS/POSIX but not on object
-    * stores (S3 renames are copy+delete) — there, select the pointer
-    * protocol via `writeAtomic(df, path, objectStoreSafe = true)` (a
-    * [[SnapshotStore]] table: commit is one tiny pointer PUT, read via
-    * `SnapshotStore.read`), or use the partitioned sinks
-    * (`PartitionedUpsert`), whose commit goes through Spark's output
-    * committer instead of a rename swap.
-    */
-  def writeAtomic(df: DataFrame, path: String): Unit = {
-    val spark = df.sparkSession
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(hconf)
-    recoverDangling(fs, path)
-    val tmp = new org.apache.hadoop.fs.Path(path + ".__tmp")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    writeSwap(fs, tmp.toString, path)
-  }
-
-  /** Publish-protocol selector: rename swap (HDFS/POSIX) or the
-    * object-store-safe pointer swap ([[SnapshotStore]] layout — readers
-    * resolve through `SnapshotStore.read`, not a bare parquet path).
-    */
-  def writeAtomic(df: DataFrame, path: String, objectStoreSafe: Boolean): Unit =
-    if (objectStoreSafe) { SnapshotStore.publish(df, path); () }
-    else writeAtomic(df, path)
-
-  /** Swap an already-written directory over the target — the rename tail
-    * of `writeAtomic`, shared by layout migrations.
-    */
-  def writeSwap(fs: org.apache.hadoop.fs.FileSystem, tmpPath: String,
-                path: String): Unit = {
-    val target = new org.apache.hadoop.fs.Path(path)
-    val tmp = new org.apache.hadoop.fs.Path(tmpPath)
-    val old = new org.apache.hadoop.fs.Path(path + ".__old")
-    if (fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(target)) fs.rename(target, old)
-    fs.rename(tmp, target)
-    fs.delete(old, true)
-  }
-
-  /** Roll back a swap interrupted between its two renames: if the target is
-    * missing but `<path>.__old` exists, rename it back. Also used by
-    * `exists` so callers' first-write checks see the recovered table.
-    */
-  def recoverDangling(fs: org.apache.hadoop.fs.FileSystem, path: String): Unit = {
-    val target = new org.apache.hadoop.fs.Path(path)
-    val old = new org.apache.hadoop.fs.Path(path + ".__old")
-    if (!fs.exists(target) && fs.exists(old)) fs.rename(old, target)
-  }
-
-  /** Existence check that first recovers any dangling swap. */
-  def exists(spark: SparkSession, path: String): Boolean = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverDangling(fs, path)
-    fs.exists(new org.apache.hadoop.fs.Path(path))
-  }
-
-  /** Read-modify-swap convenience: upsert `incoming` into the Parquet table
-    * at `path` (creating it if absent).
-    */
-  def intoParquet(spark: SparkSession, incoming: DataFrame, path: String,
-                  keys: Seq[String], ordering: Seq[Column]): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val merged =
-      if (fs.exists(new org.apache.hadoop.fs.Path(path)))
-        apply(spark.read.parquet(path), incoming, keys, ordering)
-      else graft.silver.Staging.dedupLatest(incoming, keys, ordering)
-    // safe: the plan reads `path` while writing the tmp dir — the target is
-    // only renamed away after the tmp write has fully materialized
-    writeAtomic(merged, path)
   }
 }

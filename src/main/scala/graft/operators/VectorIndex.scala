@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.gold.{BaseDelta, MultiSnapshot, SnapshotStore}
+import graft.gold.{BaseDelta, CommitCas, MultiSnapshot, SnapshotStore}
 import graft.functions.VectorFunctions
 
 /** Incrementally-maintained IVF vector index — the steady-state form of
@@ -409,18 +409,10 @@ object VectorIndex {
     */
   def vacuumManaged(spark: SparkSession, m: Managed): Seq[String] = {
     val keep = activeQgen(spark, m)
-    val f = new org.apache.hadoop.fs.Path(m.root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val root = new org.apache.hadoop.fs.Path(m.root)
-    val deleted = scala.collection.mutable.ArrayBuffer[String]()
-    if (f.exists(root)) f.listStatus(root).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("q") && n.drop(1).forall(_.isDigit) &&
-          n.drop(1).toLong < keep - 1 && f.delete(st.getPath, true))
-        deleted += st.getPath.toString
-    }
-    deleted ++= SnapshotStore.vacuum(spark, m.activePath)
-    deleted.toSeq
+    val f = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    CommitCas.retire(f, root, "q")(_ < keep - 1) ++
+      SnapshotStore.vacuum(spark, m.activePath)
   }
 
   /** The MANAGED reader recipe: [[conflictIfRetired]] over the active
@@ -487,12 +479,7 @@ object VectorIndex {
       val act = m.subState(keep)
       if (deferred) { eraseLogical(spark, act, ids); () }
       else erase(spark, act, ids)
-      if (f.exists(root)) f.listStatus(root).foreach { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("q") && n.drop(1).forall(_.isDigit) &&
-            n.drop(1).toLong < keep && f.delete(st.getPath, true))
-          destroyed += st.getPath.toString
-      }
+      destroyed ++= CommitCas.retire(f, root, "q")(_ < keep)
       val now = activeQgen(spark, m)
       if (now == keep) settled = true
       else {

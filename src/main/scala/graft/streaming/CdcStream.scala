@@ -157,12 +157,12 @@ object CdcStream {
     * as the final tie-break or the merged sink is nondeterministic across
     * replays.
     *
-    * With `partCol` set (a batch column that is STABLE per key, e.g.
-    * `to_date(created_at)`), the sink is Hive-partitioned and each batch
+    * `partCol` is a batch column that is STABLE per key (e.g.
+    * `to_date(created_at)`): the sink is Hive-partitioned and each batch
     * rewrites only the partitions it touches — O(touched partitions) I/O
-    * instead of O(table) (see PartitionedUpsert). Without it, the sink is a
-    * single directory swapped atomically per batch — only appropriate for
-    * dimension-sized tables.
+    * instead of O(table) (see PartitionedUpsert). Unpartitioned tables
+    * take [[upsertStreamSnapshot]], which commits the whole merged table
+    * through the snapshot pointer.
     *
     * With `opCol` set, Debezium tombstones (op='d') delete their key from
     * the sink instead of merging a junk row — streaming and batch CDC
@@ -170,26 +170,13 @@ object CdcStream {
     */
   def upsertStream(parsed: DataFrame, sinkPath: String, checkpoint: String,
                    keys: Seq[String], orderCols: Seq[String],
-                   partCol: Option[String] = None,
+                   partCol: String,
                    opCol: Option[String] = None,
                    trigger: Trigger = Trigger.ProcessingTime("1 minute")): StreamingQuery =
     parsed.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        val incoming = batch.toDF()
-        partCol match {
-          case Some(pc) =>
-            graft.gold.PartitionedUpsert.upsert(
-              spark, incoming, sinkPath, keys, orderCols, pc, opCol)
-          case None =>
-            val existing =
-              if (graft.gold.UpsertByKey.exists(spark, sinkPath))
-                Some(spark.read.parquet(sinkPath))
-              else None
-            graft.gold.UpsertByKey.writeAtomic(
-              graft.gold.UpsertByKey.mergeBatch(existing, incoming, keys, orderCols, opCol),
-              sinkPath)
-        }
+        graft.gold.PartitionedUpsert.upsert(
+          batch.sparkSession, batch.toDF(), sinkPath, keys, orderCols, partCol, opCol)
       }
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
@@ -224,8 +211,8 @@ object CdcStream {
 
   /** Object-store-safe streaming upsert: per micro-batch, merge into the
     * committed snapshot and publish through [[graft.gold.SnapshotStore]]'s
-    * pointer protocol — `upsertStream`'s CTAS-shaped sink for storage
-    * where directory rename is copy+delete (S3/MinIO). The merge plan
+    * pointer protocol — the unpartitioned form of `upsertStream`, safe on
+    * storage where directory rename is copy+delete (S3/MinIO). The merge plan
     * reads the CURRENT generation while the next is staged elsewhere, and
     * readers flip atomically on the pointer commit; a crash mid-publish
     * leaves an orphan generation the replayed batch overwrites. Whole-
@@ -269,15 +256,13 @@ object CdcStream {
     * streaming form of the daily dbt-snapshot cadence
     * (docker/dags/scd_snapshots.py), at micro-batch granularity. The
     * batch's asOf timestamp is its max `asOfCol` (deterministic under
-    * replay). By default the snapshot uses the pruned `scd_part` layout —
-    * per-batch I/O is O(current rows + today's closures) regardless of how
-    * deep the closed history grows; `partitioned=false` keeps the
-    * whole-table atomic swap for small dims.
+    * replay). The snapshot uses the pruned `scd_part` layout — per-batch
+    * I/O is O(current rows + today's closures) regardless of how deep the
+    * closed history grows (PartitionedUpsert.scd2).
     */
   def scd2Stream(parsed: DataFrame, snapshotPath: String, checkpoint: String,
                  keys: Seq[String], checkCols: Seq[String], asOfCol: String,
                  orderCols: Seq[String],
-                 partitioned: Boolean = true,
                  trigger: Trigger = Trigger.ProcessingTime("1 minute")): StreamingQuery =
     parsed.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
@@ -285,23 +270,12 @@ object CdcStream {
         val staged = graft.silver.Staging.dedupLatestByMax(
           batch.toDF(), keys, orderCols)
         val asOfRow = staged.agg(max(col(asOfCol))).head()
-        if (!asOfRow.isNullAt(0)) {
-          val asOf = asOfRow.getTimestamp(0)
-          if (partitioned)
-            // pruned layout: the batch reads/writes only the `current`
-            // partition and its own close-date partition — history stays
-            // untouched on disk (PartitionedUpsert.scd2)
-            graft.gold.PartitionedUpsert.scd2(
-              spark, staged, snapshotPath, keys, checkCols, asOf)
-          else {
-            val snapshot =
-              if (graft.gold.UpsertByKey.exists(spark, snapshotPath))
-                spark.read.parquet(snapshotPath)
-              else graft.gold.Scd2Merge.emptySnapshot(staged)
-            val merged = graft.gold.Scd2Merge(snapshot, staged, keys, checkCols, asOf)
-            graft.gold.UpsertByKey.writeAtomic(merged, snapshotPath)
-          }
-        }
+        if (!asOfRow.isNullAt(0))
+          // pruned layout: the batch reads/writes only the `current`
+          // partition and its own close-date partition — history stays
+          // untouched on disk
+          graft.gold.PartitionedUpsert.scd2(
+            spark, staged, snapshotPath, keys, checkCols, asOfRow.getTimestamp(0))
       }
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)

@@ -119,22 +119,20 @@ class BaseDeltaSpec extends SparkSpec {
     // legacy layout = what pre-manifest code wrote: flat base, no _manifest
     val path = tmpDir("bd-dangle") + "/t"
     val table = t(path)
-    UpsertByKey.writeAtomic(Seq((1L, "a", 1)).toDF("id", "v", "ver"), table.basePath)
+    Seq((1L, "a", 1)).toDF("id", "v", "ver").write.parquet(table.basePath)
     BaseDelta.append(spark, table, Seq((2L, "b", 1)).toDF("id", "v", "ver"), 1L)
     val fs = new org.apache.hadoop.fs.Path(table.basePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(path, "_manifest"), false)  // stay legacy
-    // crash window: base renamed to .__old, replacement never landed
-    fs.rename(new org.apache.hadoop.fs.Path(table.basePath),
-      new org.apache.hadoop.fs.Path(table.basePath + ".__old"))
-    // read sees the full history through .__old but must NOT rename it —
-    // a reader racing a writer's compact would otherwise drop the writer's
-    // new base inside the restored directory (reader-as-mutator bug)
+    assert(BaseDelta.readManifest(spark, table).isEmpty,
+      "an append onto a flat base must stay legacy")
+    // read resolves the flat base plus the on-disk deltas by listing, and
+    // must not migrate anything — a reader racing a writer's compact must
+    // never mutate the layout
     assert(snap(BaseDelta.read(spark, table)) ==
       Map(1L -> (("a", 1)), 2L -> (("b", 1))))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(table.basePath)))
-    assert(fs.exists(new org.apache.hadoop.fs.Path(table.basePath + ".__old")))
-    // the WRITE path recovers the dangling swap and migrates to a manifest
+    assert(BaseDelta.readManifest(spark, table).isEmpty)
+    assert(fs.exists(new org.apache.hadoop.fs.Path(table.basePath)))
+    // the WRITE path migrates the flat base to a manifest generation
     BaseDelta.compact(spark, table)
     assert(BaseDelta.readManifest(spark, table).exists(_.generation == 1))
     assert(snap(BaseDelta.read(spark, table)) ==

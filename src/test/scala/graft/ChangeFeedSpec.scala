@@ -51,6 +51,12 @@ class ChangeFeedSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException](
       ChangeFeed.between(spark, path, 1L, 3L, Seq("id")).collect())
     assert(e.getMessage.contains("no longer derivable"))
+    // foreign names under the root are not generations: a bare prefix, a
+    // suffix past Long range, a non-numeric suffix
+    val root = new org.apache.hadoop.fs.Path(path)
+    val f = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Seq("gen=", "gen=" + "9" * 25, "gen=x1").foreach(n =>
+      f.mkdirs(new org.apache.hadoop.fs.Path(root, n)))
     // latest() diffs 2 -> 3: the delete of id 2
     val latest = ChangeFeed.latest(spark, path, Seq("id"))
       .collect().map(r => (r.getLong(0), r.getString(3))).toSet

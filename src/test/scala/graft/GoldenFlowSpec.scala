@@ -137,12 +137,11 @@ class GoldenFlowSpec extends SparkSpec {
     // ── publish the dim via the object-store-safe pointer protocol and
     //    re-publish after the epoch-2 merge: readers flip atomically ──
     val dimPath = tmpDir("gf-dim") + "/dim_accounts"
-    UpsertByKey.writeAtomic(dimAccounts, dimPath, objectStoreSafe = true)
+    graft.gold.SnapshotStore.publish(dimAccounts, dimPath)
     val published = graft.gold.SnapshotStore.read(spark, dimPath)
     assert(published.count() == 3)
     assert(published.filter($"is_current").count() == 2)
-    UpsertByKey.writeAtomic(dimAccounts.filter($"is_current"), dimPath,
-      objectStoreSafe = true)
+    graft.gold.SnapshotStore.publish(dimAccounts.filter($"is_current"), dimPath)
     assert(graft.gold.SnapshotStore.read(spark, dimPath).count() == 2)
   }
 }

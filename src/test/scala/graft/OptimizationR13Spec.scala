@@ -50,6 +50,49 @@ class OptimizationR13Spec extends SparkSpec {
     assert(hits.get() == 2)
   }
 
+  test("Par.run: a second interrupt rethrows the first with the status kept") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val release = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val started = new CountDownLatch(2)
+    // tasks that swallow interrupts: shutdownNow cannot stop them, so the
+    // caller is still in awaitTermination when the second interrupt lands
+    val stubborn = () => {
+      started.countDown()
+      while (!release.get())
+        try Thread.sleep(5) catch { case _: InterruptedException => () }
+      1
+    }
+    @volatile var thrown: Throwable = null
+    @volatile var statusAfter = false
+    val caller = new Thread(() =>
+      try { Par.run(Seq(stubborn, stubborn)); () }
+      catch {
+        case t: Throwable =>
+          thrown = t; statusAfter = Thread.currentThread().isInterrupted
+      })
+    def awaitState(s: Thread.State): Unit = {
+      val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(30)
+      while (caller.getState != s && System.nanoTime() < deadline) Thread.sleep(5)
+      assert(caller.getState == s)
+    }
+    try {
+      caller.start()
+      assert(started.await(30, TimeUnit.SECONDS))
+      awaitState(Thread.State.WAITING)       // blocked in Future.get
+      caller.interrupt()
+      awaitState(Thread.State.TIMED_WAITING) // blocked in awaitTermination
+      caller.interrupt()
+      caller.join(30000)
+      assert(!caller.isAlive)
+    } finally release.set(true)
+    // the original interrupt (raised by Future.get), not a new one from
+    // the cut-short wait
+    assert(thrown.isInstanceOf[InterruptedException])
+    assert(!thrown.getStackTrace.exists(_.getMethodName == "awaitTermination"))
+    assert(thrown.getStackTrace.exists(_.getClassName.contains("FutureTask")))
+    assert(statusAfter)
+  }
+
   test("Par.run degrades to the calling thread inside sequential scopes") {
     val caller = Thread.currentThread()
     val threads = Par.sequentialInThisThread {

@@ -122,30 +122,6 @@ class SilverSpec extends SparkSpec {
     assert(again.collect().map(r => r.getAs[Long]("id") -> r.getAs[String]("v")).toMap == byId)
   }
 
-  test("UpsertByKey.intoParquet: atomic swap roundtrip") {
-    val path = tmpDir("upsert") + "/fact"
-    val ord = Seq($"ver".desc)
-    UpsertByKey.intoParquet(spark, Seq((1L, "a", 1)).toDF("id", "v", "ver"), path, Seq("id"), ord)
-    UpsertByKey.intoParquet(spark, Seq((1L, "b", 2), (2L, "c", 1)).toDF("id", "v", "ver"), path, Seq("id"), ord)
-    val out = spark.read.parquet(path).collect()
-      .map(r => r.getAs[Long]("id") -> r.getAs[String]("v")).toMap
-    assert(out == Map(1L -> "b", 2L -> "c"))
-  }
-
-  test("writeAtomic recovers the table from a crash between the swap renames") {
-    val path = tmpDir("recover") + "/fact"
-    UpsertByKey.writeAtomic(Seq((1L, "a")).toDF("id", "v"), path)
-    // simulate the crash window: target renamed away, tmp never renamed in
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.rename(new org.apache.hadoop.fs.Path(path),
-      new org.apache.hadoop.fs.Path(path + ".__old"))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(path)))
-    // exists() must recover the dangling state, not report a first write
-    assert(UpsertByKey.exists(spark, path))
-    assert(spark.read.parquet(path).collect().map(_.getAs[String]("v")).toSeq == Seq("a"))
-  }
-
   test("PartitionedUpsert merges null partition values against the default partition") {
     import graft.gold.PartitionedUpsert
     val path = tmpDir("pu-null") + "/t"
@@ -200,27 +176,6 @@ class SilverSpec extends SparkSpec {
       val dirs = new java.io.File(path).listFiles().map(_.getName).filter(_.startsWith("pd="))
       assert(dirs.toSeq == Seq("pd=plain"), dirs.mkString(","))
     }
-  }
-
-  test("PartitionedUpsert.scd2 migrates a legacy non-partitioned snapshot in place") {
-    import graft.gold.{PartitionedUpsert, Scd2Merge, UpsertByKey}
-    val path = tmpDir("scd-legacy") + "/dim"
-    // legacy layout: whole-table swap, no scd_part column
-    val staged1 = Seq((1, "x", 10.0), (2, "y", 20.0)).toDF("id", "name", "bal")
-    val snap1 = Scd2Merge(Scd2Merge.emptySnapshot(staged1), staged1,
-      Seq("id"), Seq("name", "bal"), ts("2024-01-01 06:00:00"))
-    UpsertByKey.writeAtomic(snap1, path)
-    assert(!spark.read.parquet(path).columns.contains("scd_part"))
-    // next batch through the partitioned path: auto-migrates + merges
-    val staged2 = Seq((1, "x", 99.0)).toDF("id", "name", "bal")
-    PartitionedUpsert.scd2(spark, staged2, path,
-      Seq("id"), Seq("name", "bal"), ts("2024-01-02 06:00:00"))
-    val out = PartitionedUpsert.readScd2(spark, path)
-    assert(out.count() == 3)  // 2 current + 1 closed
-    assert(spark.read.parquet(path).columns.contains("scd_part"))
-    val current = out.filter(col("effective_to").isNull).collect()
-      .map(r => r.getAs[Int]("id") -> r.getAs[Double]("bal")).toMap
-    assert(current == Map(1 -> 99.0, 2 -> 20.0))
   }
 
   test("DQ checks flag exactly the planted violations") {

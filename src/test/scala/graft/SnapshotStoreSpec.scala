@@ -5,7 +5,7 @@ import graft.gold.{SnapshotStore, UpsertByKey}
 
 /** The object-store-safe publish protocol: pointer-swap commits, reader
   * isolation across a crash between data write and publish, bounded
-  * retention, and merge parity with the rename-swap path it replaces.
+  * retention, and merge parity with [[UpsertByKey]]'s algebra.
   */
 class SnapshotStoreSpec extends SparkSpec {
   import spark.implicits._
@@ -29,8 +29,8 @@ class SnapshotStoreSpec extends SparkSpec {
     val path = tmpDir("snap-crash") + "/t"
     SnapshotStore.publish(table(1 -> "old"), path)
     // writer "crashes" here: generation 2's data is fully written but the
-    // pointer was never moved — exactly the window where the rename swap
-    // exposes a half-table on S3
+    // pointer was never moved — exactly the window where a directory-rename
+    // publish would expose a half-table on S3
     val staged = SnapshotStore.stage(table(1 -> "new", 2 -> "extra"), path)
     assert(staged == 2L)
     assert(SnapshotStore.currentGen(spark, path).contains(1L),
@@ -83,14 +83,14 @@ class SnapshotStoreSpec extends SparkSpec {
       Set(1 -> "v2"))
   }
 
-  test("upsertInto matches the rename-swap merge and replays idempotently") {
+  test("upsertInto matches the UpsertByKey merge and replays idempotently") {
     val path = tmpDir("snap-merge") + "/t"
     val keys = Seq("id"); val ord = Seq(col("seq").desc)
     val b1 = Seq((1, "a", 1L), (2, "b", 1L)).toDF("id", "v", "seq")
     val b2 = Seq((2, "b2", 2L), (3, "c", 2L)).toDF("id", "v", "seq")
     SnapshotStore.upsertInto(spark, b1, path, keys, ord)
     SnapshotStore.upsertInto(spark, b2, path, keys, ord)
-    // parity with the rename-swap path's merge algebra
+    // parity with the batch merge algebra
     val expected = UpsertByKey(
       graft.silver.Staging.dedupLatest(b1, keys, ord), b2, keys, ord)
       .select("id", "v", "seq").as[(Int, String, Long)].collect().toSet
@@ -128,18 +128,5 @@ class SnapshotStoreSpec extends SparkSpec {
           assert(!SnapshotStore.exists(spark, path), s"step $step")
       }
     }
-  }
-
-  test("writeAtomic(objectStoreSafe = true) routes through the pointer protocol") {
-    val path = tmpDir("snap-route") + "/t"
-    UpsertByKey.writeAtomic(table(7 -> "x"), path, objectStoreSafe = true)
-    assert(SnapshotStore.currentGen(spark, path).contains(1L))
-    assert(SnapshotStore.read(spark, path).as[(Int, String)].collect().toSet ==
-      Set(7 -> "x"))
-    // and the rename-swap selector still writes a bare parquet table
-    val path2 = tmpDir("snap-route2") + "/t"
-    UpsertByKey.writeAtomic(table(8 -> "y"), path2, objectStoreSafe = false)
-    assert(spark.read.parquet(path2).as[(Int, String)].collect().toSet ==
-      Set(8 -> "y"))
   }
 }

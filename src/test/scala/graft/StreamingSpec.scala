@@ -84,14 +84,14 @@ class StreamingSpec extends SparkSpec {
         envelope(2, 50.0, "c", "2024-01-01T10:30:00Z", 3)).mkString("\n"))
     val parsed = CdcStream.fromJsonFiles(spark, in, Schemas.accounts)
       .drop(Envelope.CorruptCol)
-    val q = CdcStream.upsertStream(parsed, sink, ckpt,
+    val q = CdcStream.upsertStreamSnapshot(parsed, sink, ckpt,
       keys = Seq("id"), orderCols = Seq("ts_ms"), trigger = Trigger.ProcessingTime(0))
     q.processAllAvailable()
     Files.writeString(Paths.get(s"$in/b2.json"),
       envelope(2, 75.0, "u", "2024-01-01T12:00:00Z", 4))
     q.processAllAvailable()
     q.stop()
-    val out = spark.read.parquet(sink).collect()
+    val out = graft.gold.SnapshotStore.read(spark, sink).collect()
       .map(r => r.getAs[Int]("id") -> r.getAs[Double]("balance")).toMap
     assert(out == Map(1 -> 150.0, 2 -> 75.0))
   }
@@ -217,7 +217,7 @@ class StreamingSpec extends SparkSpec {
         .drop(Envelope.CorruptCol)
         .withColumn("part_date", to_date(col("created_at")))
       CdcStream.upsertStream(parsed, sink, ckpt, keys = Seq("id"),
-        orderCols = Seq("ts_ms"), partCol = Some("part_date"), opCol = Some("op"),
+        orderCols = Seq("ts_ms"), partCol = "part_date", opCol = Some("op"),
         trigger = Trigger.ProcessingTime(0))
     }
     val q = start(); q.processAllAvailable()
@@ -259,7 +259,7 @@ class StreamingSpec extends SparkSpec {
       .drop(Envelope.CorruptCol)
       .withColumn("part_date", to_date(col("created_at")))
     val q = CdcStream.upsertStream(parsed, sink, ckpt, keys = Seq("id"),
-      orderCols = Seq("ts_ms"), partCol = Some("part_date"), opCol = Some("op"),
+      orderCols = Seq("ts_ms"), partCol = "part_date", opCol = Some("op"),
       trigger = Trigger.ProcessingTime(0))
     q.processAllAvailable()
     // the delete's before-image carries the key and the original created_at

@@ -288,9 +288,14 @@ class VectorIndexSpec extends SparkSpec {
     // second refresh retires gen-1 after its reader cycle
     VectorIndex.refreshQuantizer(spark, m, nCells = 6, refineIters = 2)
     assert(VectorIndex.activeQgen(spark, m) == 3L)
-    VectorIndex.vacuumManaged(spark, m)
     val f = new org.apache.hadoop.fs.Path(m.root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // foreign names under the root are not generations: never parsed or swept
+    val foreign = Seq("q", "qx", "q" + "9" * 25)
+      .map(n => new org.apache.hadoop.fs.Path(m.root, n))
+    foreign.foreach(f.mkdirs)
+    VectorIndex.vacuumManaged(spark, m)
+    assert(foreign.forall(f.exists), "vacuumManaged swept a foreign entry")
     assert(!f.exists(new org.apache.hadoop.fs.Path(m.subState(1L).root)),
       "gen-1 sub-index survived vacuum two generations later")
     assert(f.exists(new org.apache.hadoop.fs.Path(m.subState(2L).root)),
@@ -324,10 +329,14 @@ class VectorIndexSpec extends SparkSpec {
     // builder would let the refresh publish a silently partial generation
     val staging = fs(m.subState(9L).root)
     hfs.mkdirs(staging)
+    // foreign names under the root are not generations: never parsed or swept
+    val foreign = Seq("q", "qx", "q" + "9" * 25).map(n => fs(s"${m.root}/$n"))
+    foreign.foreach(hfs.mkdirs)
     val destroyed = VectorIndex.eraseManaged(spark, m, subjects)
     assert(hfs.exists(staging) && !destroyed.exists(_.endsWith("q9")),
       s"eraseManaged destroyed an above-active staging generation: $destroyed")
-    hfs.delete(staging, true)
+    assert(foreign.forall(hfs.exists), s"eraseManaged swept a foreign entry: $destroyed")
+    (staging +: foreign).foreach(hfs.delete(_, true))
     // retired bytes gone NOW, not at the next refresh cycle
     assert(destroyed.exists(_.endsWith("q1")) && !hfs.exists(fs(retired.root)),
       s"retired generation survived the erasure: $destroyed")
