@@ -1476,7 +1476,7 @@ object Perf {
           val subs = (0 until 500 by 20)
             .map(j => (b - 1).toLong * batchDocsN + j)
           val t1 = System.nanoTime()
-          graft.streaming.IndexStreams.retryConflict(5)(
+          graft.gold.CommitCas.retryConflict(5)(
             ClusterIndex.eraseLogical(spark, st, subs.toDF("doc_id"),
               maxAffected = 0L).count())
           eraseS = (System.nanoTime() - t1) / 1e9

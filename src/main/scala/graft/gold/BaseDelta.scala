@@ -440,9 +440,7 @@ object BaseDelta {
     // lost; the observed generation dir is read DIRECTLY (not through
     // read()'s fresh pointer resolve) so contents and observation point
     // can't tear.
-    var attempt = 0
-    var pendingAfter = -1L
-    while (pendingAfter < 0) {
+    val pendingAfter = CommitCas.retryConflict(6) {
       val observed = SnapshotStore.currentGen(spark, path)
       val existing = observed.map(g => spark.read
         .parquet(SnapshotStore.genPath(path, g)).select(col("__erased")))
@@ -453,14 +451,8 @@ object BaseDelta {
         // anti-join, so file count is the read-side cost too
         .coalesce(1)
         .localCheckpoint(true)
-      try {
-        SnapshotStore.publishFrom(merged, path, observed)
-        pendingAfter = merged.count() // request-sized, pinned
-      } catch {
-        case e: CommitConflictException =>
-          attempt += 1
-          if (attempt > 5) throw e
-      }
+      SnapshotStore.publishFrom(merged, path, observed)
+      merged.count() // request-sized, pinned
     }
     // budget adjudication rides the receipt: once this column's backlog
     // of acked-but-unmaterialized values passes `pendingBudget`, every

@@ -267,4 +267,29 @@ private[graft] object CommitCas {
     numbered(f, dir, prefix).collect {
       case (n, p) if drop(n) && f.delete(p, true) => p.toString
     }
+
+  /** The one conflict-retry policy: run `body` up to `attempts` times
+    * while it throws the typed [[CommitConflictException]], with jittered
+    * exponential backoff between attempts (100ms·2^n ± half, capped at
+    * 2s): an immediate re-run against an in-flight competitor — whose
+    * retired-state grace loop alone holds 3×250ms — would hot-spin full
+    * state re-reads that mostly re-conflict; the backoff lets the
+    * competing window close first. The last conflict is rethrown.
+    */
+  def retryConflict[A](attempts: Int)(body: => A): A = {
+    var n = 0
+    var out: Option[A] = None
+    while (out.isEmpty) {
+      try out = Some(body)
+      catch {
+        case e: CommitConflictException =>
+          n += 1
+          if (n >= attempts) throw e
+          val base = math.min(100L << (n - 1), 2000L)
+          Thread.sleep(base / 2 +
+            java.util.concurrent.ThreadLocalRandom.current().nextLong(base))
+      }
+    }
+    out.get
+  }
 }

@@ -25,8 +25,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * can't win a merge anyway once `topVocab` exceeds the distinct-word
   * count of interest).
   *
-  * Iteration state is `localCheckpoint`ed per round (the resolveClusters
-  * pattern) so the plan doesn't grow linearly with nMerges.
+  * The merge loop is a single-partition [[Loop]]: the vocabulary frame is
+  * bounded at `topVocab` rows by construction (a few MB at the 10⁵
+  * default), so each round is one collect job + one checkpoint job with
+  * zero exchanges, and the plan doesn't grow with nMerges.
   */
 object Bpe {
 
@@ -56,53 +58,38 @@ object Bpe {
       .filter(length(col("w")) > 0)
       .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("w").asc).limit(topVocab)
-    // The merge loop runs nMerges tiny aggregations over a frame BOUNDED
-    // at topVocab rows by construction (a few MB at the 10⁵ default) —
-    // run it on SinglePartition frames: `coalesce(1)` on the checkpointed
-    // vocab restates the partitioning fact each round, SinglePartition
-    // satisfies every required distribution, so the pair-count
-    // aggregation and the TakeOrdered argmax plan with ZERO exchanges and
-    // each round is one collect job + one checkpoint job (guide §2.2 —
-    // the resolveClusters single-partition rationale). Round 14: this
-    // replaces the r13 session-conf width pin, which (a) needed the
-    // Par.tryConfPin semaphore, and (b) engaged BEFORE `words`
-    // materialized, so the one corpus-sized pass below ran at the narrow
-    // loop width with AQE off — the corpus pass now keeps the session
-    // width and AQE (its shuffle is corpus-sized; the deployment's knobs
-    // are the right ones).
-    // initial symbol sequences: one character per symbol
-    var vocab = words.select(
-        // (?!^)(?!$): split at every inter-char position — NOT at the ends
-        // (Spark's split keeps the trailing empty piece a bare (?!^) emits)
-        split(col("w"), "(?!^)(?!$)").as("syms"), col("cnt"))
-      .localCheckpoint()
-      .coalesce(1)
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    var rank = 1
-    while (rank <= nMerges) {
-      val top = vocab.filter(size(col("syms")) >= 2)
-        .select(explode(transform(sequence(lit(1), size(col("syms")) - 1),
-          i => struct(element_at(col("syms"), i).as("l"),
-            element_at(col("syms"), i + 1).as("r")))).as("p"), col("cnt"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum(col("cnt")).as("n"))
-        .orderBy(col("n").desc, col("l").asc, col("r").asc)
-        .limit(1).collect()
-      if (top.isEmpty) rank = nMerges + 1 // every word fully merged — stop
-      else {
-        val row = top.head
-        val (l, r, n) = (row.getString(0), row.getString(1), row.getLong(2))
-        merges += ((rank, l, r, n))
-        val next = vocab.select(applyMerge(col("syms"), l, r).as("syms"), col("cnt"))
-          .localCheckpoint()
-          .coalesce(1)
-        vocab.unpersist()
-        vocab = next
-        rank += 1
+    // The corpus pass above keeps the session width and AQE (its shuffle
+    // is corpus-sized; the deployment's knobs are the right ones); only
+    // the merge loop below runs single-partition.
+    Loop.single { loop =>
+      // initial symbol sequences: one character per symbol
+      var vocab = loop.round(words.select(
+          // (?!^)(?!$): split at every inter-char position — NOT at the ends
+          // (Spark's split keeps the trailing empty piece a bare (?!^) emits)
+          split(col("w"), "(?!^)(?!$)").as("syms"), col("cnt")))
+      val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
+      var rank = 1
+      while (rank <= nMerges) {
+        val top = vocab.filter(size(col("syms")) >= 2)
+          .select(explode(transform(sequence(lit(1), size(col("syms")) - 1),
+            i => struct(element_at(col("syms"), i).as("l"),
+              element_at(col("syms"), i + 1).as("r")))).as("p"), col("cnt"))
+          .groupBy(col("p.l").as("l"), col("p.r").as("r"))
+          .agg(sum(col("cnt")).as("n"))
+          .orderBy(col("n").desc, col("l").asc, col("r").asc)
+          .limit(1).collect()
+        if (top.isEmpty) rank = nMerges + 1 // every word fully merged — stop
+        else {
+          val row = top.head
+          val (l, r, n) = (row.getString(0), row.getString(1), row.getLong(2))
+          merges += ((rank, l, r, n))
+          vocab = loop.round(
+            vocab.select(applyMerge(col("syms"), l, r).as("syms"), col("cnt")))
+          rank += 1
+        }
       }
+      merges.toSeq.toDF("rank", "left", "right", "pair_count")
     }
-    vocab.unpersist()
-    merges.toSeq.toDF("rank", "left", "right", "pair_count")
   }
 
   /** Tokenize text with a learned merge table: normalized chars → merges

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.gold.{BaseDelta, CommitConflictException, MultiSnapshot, SnapshotStore}
+import graft.gold.{BaseDelta, CommitCas, CommitConflictException, MultiSnapshot, SnapshotStore}
 
 /** Incremental near-dup cluster maintenance — the steady-state form of
   * `Dedup.ngramJaccard` + `Dedup.resolveClusters`: fold each incoming
@@ -288,15 +288,12 @@ object ClusterIndex {
               .select(col("id_a"), col("cluster_id").as("id_b")))
             .distinct()
         }
-      // edges is consumed up to THREE times below (the isEmpty probe,
-      // resolveClusters' src/dst union, the remap's oldCids) — without a
-      // persist each consumer re-runs the Σdf²-bounded cross join from
-      // scratch (measured ~3 s × 2 redundant executions per sf0.1 fold)
+      // edges is consumed twice below (resolveClusters' src/dst union,
+      // the remap's oldCids) — without a persist each consumer re-runs
+      // the Σdf²-bounded cross join from scratch (measured ~3 s per
+      // redundant execution per sf0.1 fold)
       edges.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val comp =
-        if (edges.isEmpty) edges.select(col("id_a").as("id"),
-          col("id_b").as("cluster_id")).limit(0)
-        else Dedup.resolveClusters(edges)
+      val comp = Dedup.resolveClusters(edges)
       // assignments for every batch doc (singletons → own id)
       val batchIds = batch.select(col(idCol).as("id")).distinct()
       val assign = batchIds.join(comp, Seq("id"), "left")
@@ -512,54 +509,19 @@ object ClusterIndex {
         // 4'. mark the stale labels for the async repair — read-merge-
         // publish under the observation CAS (two over-budget erasures
         // may race; neither's marks may be lost)
-        var attempt = 0
-        var published = false
-        while (!published) {
+        CommitCas.retryConflict(6) {
           val observed = SnapshotStore.currentGen(spark, st.repairPath)
           val merged = observed.map(g => spark.read
               .parquet(SnapshotStore.genPath(st.repairPath, g))
               .select(col("cluster_id"))
               .unionByName(marks).distinct()).getOrElse(marks)
             .localCheckpoint(true)
-          try { SnapshotStore.publishFrom(merged, st.repairPath, observed); published = true }
-          catch {
-            case e: CommitConflictException =>
-              attempt += 1
-              if (attempt > 5) throw e
-          }
+          SnapshotStore.publishFrom(merged, st.repairPath, observed)
         }
       } else {
-      // 3. surviving members' exact-Jaccard pairs from surviving postings
-      val mp0 = BaseDelta.read(spark, st.postingsTable, allowSchemaEvolution = true)
-        .join(broadcast(members), Seq("id"))
-      val mp = Dedup.adaptivePairParts(spark, FoldFloorMb) match {
-        case Some(n) => mp0.repartition(n, col("s"))
-        case None => mp0
-      }
-      val pairs = mp.select(col("id").as("id_a"), col("s"),
-          col("n_sh").as("n_a"))
-        .join(mp.select(col("id").as("id_b"), col("s"),
-          col("n_sh").as("n_b")), Seq("s"))
-        .filter(col("id_a") < col("id_b"))
-        .groupBy(col("id_a"), col("id_b"), col("n_a"), col("n_b"))
-        .agg(count(lit(1)).as("n_shared"))
-        .filter(col("n_shared").cast("double")
-          / (col("n_a") + col("n_b") - col("n_shared")) >= threshold)
-        .select(col("id_a"), col("id_b"))
-      // 4. re-label the members
-      val comp =
-        if (pairs.isEmpty) pairs.select(col("id_a").as("id"),
-          col("id_b").as("cluster_id")).limit(0)
-        else Dedup.resolveClusters(pairs)
-      // keep each member's ORIGINAL as_of: inside the compaction the old
-      // rows are dropped outright (no merge contest), and a FUTURE fold's
-      // remap (higher batch id) must still be able to supersede these
-      val relabeled = members.join(comp, Seq("id"), "left")
-        .join(cur.select(col("id"), col("as_of")), Seq("id"))
-        .select(col("id"),
-          coalesce(col("cluster_id"), col("id")).as("cluster_id"),
-          col("as_of"))
-        .localCheckpoint(true)
+      // 3.–4. re-pair the surviving members from the surviving postings
+      //    and re-label them
+      val relabeled = relabel(spark, st, members, cur, threshold)
       // 5. clusters table: erased gone, affected members replaced — the
       //    COMMIT POINT of the whole erase, CAS'd against the clusters
       //    version observed at entry (the members/relabel sets derive
@@ -576,6 +538,47 @@ object ClusterIndex {
       }
       receipt
     } finally members.unpersist()
+  }
+
+  /** The structural re-label shared by the eager erase and
+    * [[repairStructural]]: `members`' exact-Jaccard pairs (≥ `threshold`)
+    * from the surviving postings, resolved into clusters, each member
+    * re-labelled (singletons keep their own id). Each member keeps its
+    * ORIGINAL `as_of` from `cur`: inside the compaction the old rows are
+    * dropped outright (no merge contest), and a FUTURE fold's remap
+    * (higher batch id) must still be able to supersede these.
+    */
+  private def relabel(spark: SparkSession, st: State, members: DataFrame,
+                      cur: DataFrame, threshold: Double): DataFrame = {
+    val mp0 = BaseDelta.read(spark, st.postingsTable, allowSchemaEvolution = true)
+      .join(broadcast(members), Seq("id"))
+    val mp = Dedup.adaptivePairParts(spark, FoldFloorMb) match {
+      case Some(n) => mp0.repartition(n, col("s"))
+      case None => mp0
+    }
+    val pairs = mp.select(col("id").as("id_a"), col("s"),
+        col("n_sh").as("n_a"))
+      .join(mp.select(col("id").as("id_b"), col("s"),
+        col("n_sh").as("n_b")), Seq("s"))
+      .filter(col("id_a") < col("id_b"))
+      .groupBy(col("id_a"), col("id_b"), col("n_a"), col("n_b"))
+      .agg(count(lit(1)).as("n_shared"))
+      .filter(col("n_shared").cast("double")
+        / (col("n_a") + col("n_b") - col("n_shared")) >= threshold)
+      .select(col("id_a"), col("id_b"))
+    // an erase often leaves no surviving pair: `isEmpty` evaluates the pair
+    // plan once, where resolveClusters' edge count evaluates it under both
+    // branches of its src/dst union (measured: 5 more jobs on q264)
+    val comp =
+      if (pairs.isEmpty) pairs.select(col("id_a").as("id"),
+        col("id_b").as("cluster_id")).limit(0)
+      else Dedup.resolveClusters(pairs)
+    members.join(comp, Seq("id"), "left")
+      .join(cur.select(col("id"), col("as_of")), Seq("id"))
+      .select(col("id"),
+        coalesce(col("cluster_id"), col("id")).as("cluster_id"),
+        col("as_of"))
+      .localCheckpoint(true)
   }
 
   /** Pending structural-repair marker labels (clusters an over-budget
@@ -624,32 +627,7 @@ object ClusterIndex {
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
           members.count()
-          val mp0 = BaseDelta.read(spark, st.postingsTable,
-            allowSchemaEvolution = true).join(broadcast(members), Seq("id"))
-          val mp = Dedup.adaptivePairParts(spark, FoldFloorMb) match {
-            case Some(n) => mp0.repartition(n, col("s"))
-            case None => mp0
-          }
-          val pairs = mp.select(col("id").as("id_a"), col("s"),
-              col("n_sh").as("n_a"))
-            .join(mp.select(col("id").as("id_b"), col("s"),
-              col("n_sh").as("n_b")), Seq("s"))
-            .filter(col("id_a") < col("id_b"))
-            .groupBy(col("id_a"), col("id_b"), col("n_a"), col("n_b"))
-            .agg(count(lit(1)).as("n_shared"))
-            .filter(col("n_shared").cast("double")
-              / (col("n_a") + col("n_b") - col("n_shared")) >= threshold)
-            .select(col("id_a"), col("id_b"))
-          val comp =
-            if (pairs.isEmpty) pairs.select(col("id_a").as("id"),
-              col("id_b").as("cluster_id")).limit(0)
-            else Dedup.resolveClusters(pairs)
-          val relabeled = members.join(comp, Seq("id"), "left")
-            .join(cur.select(col("id"), col("as_of")), Seq("id"))
-            .select(col("id"),
-              coalesce(col("cluster_id"), col("id")).as("cluster_id"),
-              col("as_of"))
-            .localCheckpoint(true)
+          val relabeled = relabel(spark, st, members, cur, threshold)
           val cBound = BaseDelta.deltaBatches(spark, st.clustersTable)
             .foldLeft(-1L)(_ max _)
           BaseDelta.compact(spark, st.clustersTable, transform = Some(df =>
@@ -660,9 +638,7 @@ object ClusterIndex {
             writerSafeUpTo = Some(cBound))
           // clear ONLY the observed marks: an over-budget erasure that
           // marked labels after our read keeps its marks for the next run
-          var attempt = 0
-          var published = false
-          while (!published) {
+          CommitCas.retryConflict(6) {
             val curGen = SnapshotStore.currentGen(spark, st.repairPath)
             val remaining =
               if (curGen == observed) marks.limit(0)
@@ -670,15 +646,8 @@ object ClusterIndex {
                 .parquet(SnapshotStore.genPath(st.repairPath, curGen.get))
                 .select(col("cluster_id"))
                 .join(marks, Seq("cluster_id"), "left_anti")
-            try {
-              SnapshotStore.publishFrom(remaining.localCheckpoint(true),
-                st.repairPath, curGen)
-              published = true
-            } catch {
-              case e: CommitConflictException =>
-                attempt += 1
-                if (attempt > 5) throw e
-            }
+            SnapshotStore.publishFrom(remaining.localCheckpoint(true),
+              st.repairPath, curGen)
           }
           true
         } finally members.unpersist()

@@ -365,30 +365,11 @@ object Dedup {
     * labels strictly decreased. The sum runs in DECIMAL(38,0), exact at
     * any id magnitude and count.
     *
-    * `reliableCheckpoint = true` switches the per-round truncation from
-    * `localCheckpoint` (executor-local blocks — fast, but a lost executor
-    * kills the lineage mid-run) to reliable `checkpoint` files; callers
-    * must have set `sc.setCheckpointDir` to a fault-tolerant path. That is
-    * the right trade on a 1000-executor cluster where a multi-hour
-    * clustering job should survive preemption.
-    *
-    * Graphs at or under [[SmallGraphEdges]] edges run the loop on
-    * SinglePartition frames (plan-local `coalesce(1)` — zero exchanges,
-    * one job per round, no session confs touched), so concurrent loops
-    * compose; larger graphs keep the session width and AQE.
+    * Rounds, their checkpoint kind, layout and release follow [[Loop]].
+    * An empty pair frame returns the empty `(id, cluster_id)` frame.
     */
-  /** Edge count at or under which an iterative graph loop (connected
-    * components here, PageRank in [[GraphOps]]) runs single-partition:
-    * one task comfortably owns the per-round join/agg over ≤4M edge rows
-    * (tens of MB, tens of ms), where session-width rounds pay more in
-    * task/AQE-stage scheduling than the whole round's compute — the r13
-    * q134 measurement (~0.25 s/round of pure overhead at width 32).
-    */
-  private[graft] val SmallGraphEdges = 4000000L
-
   def resolveClusters(pairs: DataFrame, aCol: String = "id_a",
-                      bCol: String = "id_b", maxIter: Int = 20,
-                      reliableCheckpoint: Boolean = false): DataFrame =
+                      bCol: String = "id_b", maxIter: Int = 20): DataFrame =
     // eager (persist + per-round actions over the pair plan) → it OWNS
     // its actions, so the sub-floor degradation is scoped here like the
     // ClusterIndex fold/erase family — a lazy pair BUILDER must never
@@ -396,48 +377,27 @@ object Dedup {
     // executor of pair plans at a sub-floor heap must not run them with
     // optimistic auto-broadcast live
     graft.gold.MemoryBudget.withLowMemoryProfile(pairs.sparkSession)(
-      resolveClustersBody(pairs, aCol, bCol, maxIter, reliableCheckpoint))
+      resolveClustersBody(pairs, aCol, bCol, maxIter))
 
   private def resolveClustersBody(pairs: DataFrame, aCol: String,
-                                  bCol: String, maxIter: Int,
-                                  reliableCheckpoint: Boolean): DataFrame = {
+                                  bCol: String, maxIter: Int): DataFrame = {
     import org.apache.spark.storage.StorageLevel
-    val spark = pairs.sparkSession
     val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
       .unionByName(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // SCALE-ADAPTIVE loop parallelism (guide §2.2/§2.5): the edge frame
-    // is persisted anyway, so one count sizes the loop. Each round
-    // otherwise runs 2-3 exchanges at the SESSION width over a frame that
-    // is usually orders of magnitude smaller than the corpus (pairs, not
-    // docs) — measured at sf0.1 as ~0.25 s/round of pure task/AQE-stage
-    // overhead (q134: 6.1 s of its 7.8 s total in the round checkpoints).
-    val nEdges = edges.count()
-    // PLAN-LOCAL parallelism control (round 14 — replaces the r13
-    // session-conf width pin and its Par.tryConfPin semaphore, whose
-    // losers silently ran un-pinned and whose save/restore could not
-    // compose with concurrent loops or the TVF surface): a graph under
-    // [[Dedup.SmallGraphEdges]] runs the WHOLE loop on SinglePartition
-    // frames — `coalesce(1)` re-states the partitioning fact after every
-    // checkpoint, and SinglePartition satisfies every required
-    // distribution, so each round's joins and aggregations plan with
-    // ZERO exchanges and each round is ONE job regardless of AQE. That
-    // is strictly narrower than the r13 pin (which still planned 3-4
-    // width-1 exchanges per round) and mutates nothing session-global,
-    // so any number of loops compose. Graphs above the threshold keep
-    // the session width and AQE — the deployment's scale knobs — and the
-    // persisted edge frame; a ≥4M-edge round's real shuffle work
-    // amortizes per-stage overhead, which is exactly where runtime
-    // re-optimization earns its jobs.
-    val single = nEdges <= Dedup.SmallGraphEdges
-    def pin(df: DataFrame): DataFrame = if (single) df.coalesce(1) else df
-    // each round's result is checkpoint'ed (eager): iterative plans
-    // otherwise embed the previous round's lineage 2-3× per iteration —
-    // an exponentially growing logical plan that blows up analysis and
-    // the per-action plan-string rendering long before data does. This is
-    // the standard Pregel-loop shape.
-    def truncate(df: DataFrame): DataFrame =
-      pin(if (reliableCheckpoint) df.checkpoint(true) else df.localCheckpoint(true))
+    try {
+      // the edge frame is persisted anyway, so one count sizes the loop
+      // (the [[Loop]] layout) and answers the empty input
+      val nEdges = edges.count()
+      if (nEdges == 0)
+        edges.select(col("src").as("id"), col("src").as("cluster_id")).limit(0)
+      else Loop(nEdges)(propagate(_, edges, maxIter))
+    } finally edges.unpersist()
+  }
+
+  private def propagate(loop: Loop, edges: DataFrame, maxIter: Int): DataFrame = {
+    import org.apache.spark.storage.StorageLevel
+    val single = loop.single
     // exact label sum — the monotone convergence witness (see scaladoc);
     // a cheap scan of already-checkpointed blocks, no join, no recompute
     def labelSum(df: DataFrame): java.math.BigDecimal = df
@@ -448,16 +408,13 @@ object Dedup {
     // ONCE as a one-partition checkpoint — two measured effects on q134:
     // (a) the loop's plans carry no InMemoryRelation, so AQE has no
     // per-round TableCacheQueryStage jobs to submit (x55 submissions
-    // ≈ 2.3 s/run); (b) the cache blocks are released up front. The
-    // trailing `pin` matters: a checkpoint's LogicalRDD reports Unknown
-    // partitioning even for a 1-partition RDD, and the per-round join
-    // would re-exchange the edge side every round (measured: 9 MB of
-    // shuffle writes across the loop) — CoalesceExec(1) re-states
-    // SinglePartition. Big mode keeps the persisted frame at session
-    // width.
+    // ≈ 2.3 s/run); (b) the cache blocks are released up front (without
+    // the restated SinglePartition the per-round join re-exchanged the
+    // edge side every round: 9 MB of shuffle writes across the loop).
+    // Big mode keeps the persisted frame at session width.
     val loopEdges =
       if (single) {
-        val e1 = pin(edges.coalesce(1).localCheckpoint(true))
+        val e1 = loop.hold(loop.pin(edges))
         edges.unpersist()
         e1
       } else edges
@@ -471,55 +428,53 @@ object Dedup {
     // this loop).
     def hinted(df: DataFrame): DataFrame =
       if (single) df.hint("shuffle_hash") else df
-    var labels = truncate(loopEdges.select(col("src").as("id")).distinct()
+    var labels = loop.round(loopEdges.select(col("src").as("id")).distinct()
       .withColumn("cluster_id", col("id")))
     var prevSum = labelSum(labels)
-    try {
-      var iter = 0
-      var converged = false
-      while (!converged && iter < maxIter) {
-        // each node adopts the min of its own and its neighbors' labels…
-        val proposals = loopEdges
-          .join(hinted(labels.withColumnRenamed("id", "dst")), Seq("dst"))
-          .select(col("src").as("id"), col("cluster_id"))
-        // materialized because the jump is a SELF-join: unmaterialized,
-        // the propagate join+aggregation would execute twice per round
-        // (the two join inputs are identical subtrees; exchange reuse
-        // shares only the shuffle files under them, not the aggregation
-        // work). Single mode CHECKPOINTS it (`truncate`) instead of
-        // persisting: a cached scan above an adaptive plan reports
-        // Unknown partitioning (which re-inserts session-width exchanges
-        // under the self-join) and every cache reference becomes its own
-        // AQE TableCacheQueryStage job — a checkpointed one-partition
-        // leaf has neither problem. `pin` restates SinglePartition over
-        // the 2-partition union so the aggregation plans exchange-free.
-        val propagatedRaw = pin(labels.unionByName(proposals))
-          .groupBy(col("id")).agg(min(col("cluster_id")).as("cluster_id"))
-        val propagated =
-          if (single) truncate(propagatedRaw)
-          else propagatedRaw.persist(StorageLevel.MEMORY_AND_DISK)
-        // …then jumps to its label's label (pointer doubling): labels are
-        // monotone (label(x) <= x), so the jump only improves, and the
-        // effective distance to the cluster minimum halves per round —
-        // O(log diameter) rounds instead of O(diameter), which is what
-        // lets maxIter=20 cover even chain-shaped clusters of ~10⁶ docs
-        val jump = propagated
-          .join(hinted(propagated
-              .select(col("id").as("cluster_id"), col("cluster_id").as("__jump"))),
-            Seq("cluster_id"))
-          .select(col("id"), col("__jump").as("cluster_id"))
-        val next = truncate(jump)
-        if (!single)
-          propagated.unpersist() // next is already materialized (eager checkpoint)
-        val s = labelSum(next)
-        converged = s.compareTo(prevSum) == 0 // any change strictly lowers the sum
-        prevSum = s
-        labels = next
-        iter += 1
-      }
-      require(converged, s"resolveClusters did not converge in $maxIter iterations")
-      labels
-    } finally edges.unpersist()
+    var iter = 0
+    var converged = false
+    while (!converged && iter < maxIter) {
+      // each node adopts the min of its own and its neighbors' labels…
+      val proposals = loopEdges
+        .join(hinted(labels.withColumnRenamed("id", "dst")), Seq("dst"))
+        .select(col("src").as("id"), col("cluster_id"))
+      // materialized because the jump is a SELF-join: unmaterialized,
+      // the propagate join+aggregation would execute twice per round
+      // (the two join inputs are identical subtrees; exchange reuse
+      // shares only the shuffle files under them, not the aggregation
+      // work). Single mode CHECKPOINTS it as a round instead of
+      // persisting: a cached scan above an adaptive plan reports
+      // Unknown partitioning (which re-inserts session-width exchanges
+      // under the self-join) and every cache reference becomes its own
+      // AQE TableCacheQueryStage job — a checkpointed one-partition
+      // leaf has neither problem. `pin` restates SinglePartition over
+      // the 2-partition union so the aggregation plans exchange-free.
+      val propagatedRaw = loop.pin(labels.unionByName(proposals))
+        .groupBy(col("id")).agg(min(col("cluster_id")).as("cluster_id"))
+      val propagated =
+        if (single) loop.round(propagatedRaw)
+        else propagatedRaw.persist(StorageLevel.MEMORY_AND_DISK)
+      // …then jumps to its label's label (pointer doubling): labels are
+      // monotone (label(x) <= x), so the jump only improves, and the
+      // effective distance to the cluster minimum halves per round —
+      // O(log diameter) rounds instead of O(diameter), which is what
+      // lets maxIter=20 cover even chain-shaped clusters of ~10⁶ docs
+      val jump = propagated
+        .join(hinted(propagated
+            .select(col("id").as("cluster_id"), col("cluster_id").as("__jump"))),
+          Seq("cluster_id"))
+        .select(col("id"), col("__jump").as("cluster_id"))
+      val next = loop.round(jump)
+      if (!single)
+        propagated.unpersist() // next is already materialized (eager checkpoint)
+      val s = labelSum(next)
+      converged = s.compareTo(prevSum) == 0 // any change strictly lowers the sum
+      prevSum = s
+      labels = next
+      iter += 1
+    }
+    require(converged, s"resolveClusters did not converge in $maxIter iterations")
+    labels
   }
 
   /** 64-bit SimHash over whitespace tokens: per-token 64-bit hash votes

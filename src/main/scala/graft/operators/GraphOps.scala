@@ -32,17 +32,14 @@ object GraphOps {
     * Scale shape: per iteration ONE edge-key join (edges ⋈ ranks, both
     * partitioned by src) and ONE hash aggregation on dst — the textbook
     * message-passing round; the rank frame is node-sized, degrees are
-    * computed once. The edge frame is materialized ONCE up front
-    * (`localCheckpoint` — it feeds the degree pass, the node pass, and
-    * every iteration's message join; left lazy, the caller's candidate
-    * plan would be re-embedded under each of those ~`iters`+2 references,
-    * which measured as 4–7× anti-scaling at wide sessions on q169), and
-    * its row count picks the loop layout: graphs at or under
-    * [[Dedup.SmallGraphEdges]] run the whole fixed-depth plan on
-    * SinglePartition frames — zero exchanges, one job at the caller's
-    * action — while larger graphs keep the session width and AQE (the
-    * [[Dedup.resolveClusters]] round-14 policy). Result values are a
-    * pure function of (edges, iters, dampPct) either way.
+    * computed once. The edge frame is checkpointed ONCE up front (it
+    * feeds the degree pass, the node pass, and every iteration's message
+    * join; left lazy, the caller's candidate plan would be re-embedded
+    * under each of those ~`iters`+2 references, which measured as 4–7×
+    * anti-scaling at wide sessions on q169), and its row count picks the
+    * [[Loop]] layout; the rounds themselves stay one lazy fixed-depth
+    * plan, run at the caller's action. Result values are a pure function
+    * of (edges, iters, dampPct) either way.
     */
   def pageRankInt(edges: DataFrame, srcCol: String, dstCol: String,
                   iters: Int = 3, dampPct: Int = 85): DataFrame = {
@@ -50,26 +47,26 @@ object GraphOps {
       s"iters must be in [1,10] (fixed-depth plan), got $iters")
     require(dampPct >= 1 && dampPct <= 99, s"dampPct must be in [1,99], got $dampPct")
     val base = (1000000L * (100 - dampPct)) / 100  // 150_000 at damp 85
-    val eChk = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .localCheckpoint(true)
-    val single = eChk.count() <= Dedup.SmallGraphEdges
-    val e = if (single) eChk.coalesce(1) else eChk
-    def pin(df: DataFrame): DataFrame = if (single) df.coalesce(1) else df
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    val nodes = pin(e.select(col("src").as("id"))
-      .unionByName(e.select(col("dst").as("id")))).distinct()
-    var p = nodes.withColumn("p", lit(1000000L))
-    for (_ <- 1 to iters) {
-      val inflow = e.join(deg, Seq("src"))
-        .join(p.withColumnRenamed("id", "src"), Seq("src"))
-        .select(col("dst").as("id"), expr("p DIV deg").as("__c"))
-        .groupBy(col("id")).agg(sum(col("__c")).as("__in"))
-      p = nodes.join(inflow, Seq("id"), "left")
-        .select(col("id"),
-          (lit(base) + expr(s"($dampPct * coalesce(__in, 0L)) DIV 100"))
-            .as("p"))
+    val eChk = Loop.checkpoint(
+      edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
+    Loop(eChk.count()) { loop =>
+      val e = loop.pin(eChk)
+      val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+      val nodes = loop.pin(e.select(col("src").as("id"))
+        .unionByName(e.select(col("dst").as("id")))).distinct()
+      var p = nodes.withColumn("p", lit(1000000L))
+      for (_ <- 1 to iters) {
+        val inflow = e.join(deg, Seq("src"))
+          .join(p.withColumnRenamed("id", "src"), Seq("src"))
+          .select(col("dst").as("id"), expr("p DIV deg").as("__c"))
+          .groupBy(col("id")).agg(sum(col("__c")).as("__in"))
+        p = nodes.join(inflow, Seq("id"), "left")
+          .select(col("id"),
+            (lit(base) + expr(s"($dampPct * coalesce(__in, 0L)) DIV 100"))
+              .as("p"))
+      }
+      p
     }
-    p
   }
 
   /** Exact per-node triangle count over an undirected edge frame — the
@@ -133,10 +130,8 @@ object GraphOps {
     * Pointer DOUBLING, not level-at-a-time walking: round k composes
     * the closure-so-far with itself (`a.ancestor = b.node`, dist sums),
     * so covered depth doubles per round — ⌈log₂ maxDepth⌉ self-joins
-    * instead of maxDepth chained joins. Each round is checkpointed
-    * (the [[graft.operators.Dedup.resolveClusters]] Pregel-loop shape:
-    * iterative plans otherwise embed the previous round's lineage
-    * exponentially). In a forest the node→ancestor path is unique, so
+    * instead of maxDepth chained joins. Each round is a [[Loop]] round
+    * at session width. In a forest the node→ancestor path is unique, so
     * the per-round `distinct` just collapses the d₁+d₂ split
     * multiplicity; the fixed round count also bounds the damage of an
     * accidental cycle — document-and-audit, never hang.
@@ -149,23 +144,24 @@ object GraphOps {
                 maxDepth: Int = 32): DataFrame = {
     require(maxDepth >= 1 && maxDepth <= 1024,
       s"maxDepth must be in [1,1024], got $maxDepth")
-    var anc = edges
-      .select(col(childCol).as("node"), col(parentCol).as("ancestor"),
-        lit(1L).as("dist"))
-      .filter(col("node").isNotNull && col("ancestor").isNotNull)
-      .distinct()
-      .localCheckpoint(true)
-    var covered = 1
-    while (covered < maxDepth) {
-      val b = anc.select(col("node").as("__mid"),
-        col("ancestor").as("__anc2"), col("dist").as("__d2"))
-      val composed = anc.join(b, col("ancestor") === col("__mid"))
-        .select(col("node"), col("__anc2").as("ancestor"),
-          (col("dist") + col("__d2")).as("dist"))
-        .filter(col("dist") <= maxDepth)
-      anc = anc.unionByName(composed).distinct().localCheckpoint(true)
-      covered *= 2
+    Loop.wide { loop =>
+      var anc = loop.round(edges
+        .select(col(childCol).as("node"), col(parentCol).as("ancestor"),
+          lit(1L).as("dist"))
+        .filter(col("node").isNotNull && col("ancestor").isNotNull)
+        .distinct())
+      var covered = 1
+      while (covered < maxDepth) {
+        val b = anc.select(col("node").as("__mid"),
+          col("ancestor").as("__anc2"), col("dist").as("__d2"))
+        val composed = anc.join(b, col("ancestor") === col("__mid"))
+          .select(col("node"), col("__anc2").as("ancestor"),
+            (col("dist") + col("__d2")).as("dist"))
+          .filter(col("dist") <= maxDepth)
+        anc = loop.round(anc.unionByName(composed).distinct())
+        covered *= 2
+      }
+      anc
     }
-    anc
   }
 }

@@ -250,7 +250,7 @@ object Similarity {
           seed0Rows.head.getSeq[Float](0).toArray)
       val l = math.min(1000.0, math.max(1.0, oversample * nCells))
       // NOTE (optimization round 13): eliding the per-round
-      // localCheckpoint in favor of a lazy least(prev, dist(new)) chain
+      // checkpoint in favor of a lazy least(prev, dist(new)) chain
       // was tried and REVERTED — the phi aggregate and the sampling
       // filter each re-evaluate the whole probe chain per round, and by
       // round r that is the FULL cumulative candidate set twice over,
@@ -266,41 +266,43 @@ object Similarity {
       // 1.8 s + SnapshotStore.stage 1.2 s driver samples) which width
       // pinning cannot touch. Not worth the float-summation-order delta
       // in phi for zero measured gain.
-      var state = vecs.withColumn("__mind",
-        distToNew(cands.toSeq, col("__cv"))).localCheckpoint(true)
-      var r = 0
-      var saturated = false
-      while (r < rounds && !saturated) {
-        val phi = state.agg(sum(col("__mind") * col("__mind"))).head()
-          .getDouble(0)
-        if (phi <= 1e-12) saturated = true // every vector ≈ on a candidate
-        else {
-          // deterministic coin: u(id, round) uniform in [0,1)
-          val u = pmod(xxhash64(col("__cid"), lit(r)), lit(1000000000L))
-            .cast("double") / lit(1e9)
-          val picked = state
-            .filter(u < lit(l) * col("__mind") * col("__mind") / lit(phi))
-            .select(col("__cv")).collect()
-            .map(_.getSeq[Float](0).toArray)
-          if (picked.isEmpty) r += 1 // unlucky round, re-coin with r+1
+      // the per-round state is a session-width [[Loop]] round
+      val weights: Map[Int, Long] = Loop.wide { loop =>
+        var state = loop.round(vecs.withColumn("__mind",
+          distToNew(cands.toSeq, col("__cv"))))
+        var r = 0
+        var saturated = false
+        while (r < rounds && !saturated) {
+          val phi = state.agg(sum(col("__mind") * col("__mind"))).head()
+            .getDouble(0)
+          if (phi <= 1e-12) saturated = true // every vector ≈ on a candidate
           else {
-            cands ++= picked
-            state = state.withColumn("__mind",
-              least(col("__mind"), distToNew(picked.toSeq, col("__cv"))))
-              .localCheckpoint(true)
-            r += 1
+            // deterministic coin: u(id, round) uniform in [0,1)
+            val u = pmod(xxhash64(col("__cid"), lit(r)), lit(1000000000L))
+              .cast("double") / lit(1e9)
+            val picked = state
+              .filter(u < lit(l) * col("__mind") * col("__mind") / lit(phi))
+              .select(col("__cv")).collect()
+              .map(_.getSeq[Float](0).toArray)
+            if (picked.isEmpty) r += 1 // unlucky round, re-coin with r+1
+            else {
+              cands ++= picked
+              state = loop.round(state.withColumn("__mind",
+                least(col("__mind"), distToNew(picked.toSeq, col("__cv")))))
+              r += 1
+            }
           }
         }
+        // ONE weighting pass: each candidate's basin size — map-only argmax
+        // probe + a candidate-sized hash agg (the crossJoin + window form
+        // shuffles n·k rows for the same answer)
+        state
+          .select(graft.functions.SeedFunctions
+            .nearestSeedIdx(col("__cv"), cands.toArray).as("cell_id"))
+          .filter(col("cell_id") >= 0)
+          .groupBy(col("cell_id")).agg(count(lit(1)).as("__w"))
+          .collect().map(row => row.getInt(0) -> row.getLong(1)).toMap
       }
-      // ONE weighting pass: each candidate's basin size — map-only argmax
-      // probe + a candidate-sized hash agg (the crossJoin + window form
-      // shuffles n·k rows for the same answer)
-      val weights: Map[Int, Long] = state
-        .select(graft.functions.SeedFunctions
-          .nearestSeedIdx(col("__cv"), cands.toArray).as("cell_id"))
-        .filter(col("cell_id") >= 0)
-        .groupBy(col("cell_id")).agg(count(lit(1)).as("__w"))
-        .collect().map(row => row.getInt(0) -> row.getLong(1)).toMap
       // driver-side weighted k-center over the candidate set: heaviest
       // basin first, then argmax of weight · d²(nearest chosen) —
       // separation AND mass, deterministic index tie-break

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.gold.CommitConflictException
+import graft.gold.{CommitCas, CommitConflictException}
 import graft.operators.{ClusterIndex, SearchIndex, VectorIndex}
 
 /** Streaming maintenance of the three persisted LLM-pipeline indexes —
@@ -27,30 +27,6 @@ object IndexStreams {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** Bounded retry on the typed conflict, with jittered exponential
-    * backoff between attempts (100ms·2^n ± half, capped at 2s): an
-    * immediate re-fold against an in-flight erasure — whose retired-state
-    * grace loop alone holds 3×250ms — would hot-spin full state re-reads
-    * that mostly re-conflict; the backoff lets the competing maintenance
-    * window close first.
-    */
-  private[graft] def retryConflict[A](attempts: Int)(body: => A): A = {
-    var n = 0
-    var out: Option[A] = None
-    while (out.isEmpty) {
-      try out = Some(body)
-      catch {
-        case e: CommitConflictException =>
-          n += 1
-          if (n >= attempts) throw e
-          val base = math.min(100L << (n - 1), 2000L)
-          Thread.sleep(base / 2 +
-            java.util.concurrent.ThreadLocalRandom.current().nextLong(base))
-      }
-    }
-    out.get
-  }
-
   /** Budget-tripped tombstone materialization, run as post-fold batch
     * maintenance: any state table whose acked-but-unmaterialized erasure
     * backlog exceeds `budget` takes the full fold that rewrites and
@@ -66,7 +42,7 @@ object IndexStreams {
                                     spark: org.apache.spark.sql.SparkSession,
                                     budget: Long): Unit =
     tables.foreach { t =>
-      try retryConflict(3) {
+      try CommitCas.retryConflict(3) {
         graft.gold.BaseDelta.materializePendingIfOverBudget(spark, t, budget)
       }
       catch {
@@ -88,7 +64,7 @@ object IndexStreams {
     docs.writeStream
       .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
         if (!b.isEmpty)
-          retryConflict(5) {
+          CommitCas.retryConflict(5) {
             SearchIndex.fold(b.sparkSession, st, b.toDF(), id, idCol,
               textCol, maxDeltas)
           }
@@ -124,7 +100,7 @@ object IndexStreams {
     docs.writeStream
       .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
         if (!b.isEmpty)
-          retryConflict(5) {
+          CommitCas.retryConflict(5) {
             ClusterIndex.fold(b.sparkSession, st, b.toDF(), id, idCol,
               textCol, k, threshold, maxStateDf, maxDeltas)
           }
@@ -134,7 +110,7 @@ object IndexStreams {
         // stale-merged clusters it marked — this per-batch cadence IS
         // the documented staleness bound; a typed conflict defers to the
         // next trigger
-        try { retryConflict(3) {
+        try { CommitCas.retryConflict(3) {
           ClusterIndex.repairStructural(b.sparkSession, st, threshold)
         }; () }
         catch {
@@ -166,7 +142,7 @@ object IndexStreams {
                         tombstoneBudget: Long = graft.gold.BaseDelta.DefaultTombstoneBudget): StreamingQuery =
     embeddings.writeStream
       .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        retryConflict(5) {
+        CommitCas.retryConflict(5) {
           VectorIndex.fold(b.sparkSession, st, b.toDF(), id, idCol, vecCol,
             nCells, refineIters, maxDeltas, pqM, pqK)
         }
@@ -196,7 +172,7 @@ object IndexStreams {
                            pane: Option[PaneConfig] = None): StreamingQuery =
     embeddings.writeStream
       .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        retryConflict(5) {
+        CommitCas.retryConflict(5) {
           graft.operators.LshVectorIndex.fold(b.sparkSession, st, b.toDF(),
             id, idCol, vecCol, numTables, numPlanes, maxDeltas)
         }

@@ -68,7 +68,7 @@ class IndexStreamsSpec extends SparkSpec {
   test("sink conflict retry: re-runs on the typed conflict, rethrows past the bound") {
     import graft.gold.CommitConflictException
     var calls = 0
-    val out = IndexStreams.retryConflict(5) {
+    val out = graft.gold.CommitCas.retryConflict(5) {
       calls += 1
       if (calls < 3) throw new CommitConflictException("injected")
       calls
@@ -76,7 +76,7 @@ class IndexStreamsSpec extends SparkSpec {
     assert(out == 3 && calls == 3)
     calls = 0
     intercept[CommitConflictException] {
-      IndexStreams.retryConflict(3) {
+      graft.gold.CommitCas.retryConflict(3) {
         calls += 1; throw new CommitConflictException("storm")
       }
     }
@@ -84,7 +84,7 @@ class IndexStreamsSpec extends SparkSpec {
     // a non-conflict failure must propagate immediately, never retried
     calls = 0
     intercept[IllegalStateException] {
-      IndexStreams.retryConflict(5) {
+      graft.gold.CommitCas.retryConflict(5) {
         calls += 1; throw new IllegalStateException("storage fault")
       }
     }
@@ -94,7 +94,7 @@ class IndexStreamsSpec extends SparkSpec {
     // against an in-flight erasure's grace window
     calls = 0
     val t0 = System.nanoTime()
-    IndexStreams.retryConflict(5) {
+    graft.gold.CommitCas.retryConflict(5) {
       calls += 1
       if (calls < 4) throw new CommitConflictException("backoff probe")
       calls

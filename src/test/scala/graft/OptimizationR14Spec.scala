@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 /** Focused pins for the round-14 optimization internals: the iterative
   * graph loops now use PLAN-LOCAL parallelism control (single-partition
-  * frames under [[operators.Dedup.SmallGraphEdges]]) instead of the r13
+  * frames under [[operators.Loop.SmallGraphEdges]]) instead of the r13
   * session-conf width pin — so they must mutate NO session confs, compose
   * under concurrency, and keep byte-identical outputs; pageRank must
   * materialize its edge frame exactly once (no candidate-plan
