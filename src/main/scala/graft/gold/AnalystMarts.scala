@@ -49,32 +49,36 @@ object AnalystMarts {
 
   /** Fold ONE events micro-batch (schema: user_id, event_type, ts, value)
     * into both states. O(batch) + O(agg-state keys); idempotent under
-    * replay of the same `batchId`.
+    * replay of the same `batchId`. The fold's [[graft.Width]] comes from
+    * the batch's rows (one count, which also fills the batch's cache) plus
+    * the two states' stored rows (footer counts); a small fold plans no
+    * exchange.
     */
   def foldBatch(spark: SparkSession, batch: DataFrame, mart: Mart,
                 batchId: Long, maxDeltas: Int = 16): Unit = {
     // both states derive from one read of the micro-batch
     val pinned = batch.persist()
     try {
-      val act = pinned
+      val small = graft.Width.SmallRows
+      // the count runs on the RDD: one job, where `Dataset.count`'s
+      // exchange would add adaptive stages (cache, shuffle, result)
+      val width = graft.Width.of(pinned.queryExecution.toRdd.count() +
+        BaseDelta.storedRows(spark, mart.activityTable, small) +
+        SnapshotStore.storedRows(spark, mart.aggStatePath, small))
+      val events = width.pin(pinned)
+      val act = events
         .select(col("user_id"), to_date(col("ts")).as("day"))
         .filter(col("user_id").isNotNull && col("day").isNotNull)
         .distinct()
       BaseDelta.appendAndMaybeCompact(spark, mart.activityTable, act,
-        batchId, maxDeltas)
-      if (!StateLedger.applied(spark, mart.aggStatePath, batchId)) {
+        batchId, maxDeltas, width = width)
+      StateLedger.fold(spark, mart.aggStatePath, batchId, width) { state =>
         val partial = IncrementalAgg.partial(
-          pinned.withColumn("day", to_date(col("ts"))), AggKeys, AggMeasures)
-        val merged =
-          if (SnapshotStore.exists(spark, mart.aggStatePath))
-            IncrementalAgg.merge(
-              StateLedger.readState(spark, mart.aggStatePath), partial,
-              AggKeys, AggMeasures)
-          else partial
-        SnapshotStore.publish(StateLedger.stamp(merged, batchId),
-          mart.aggStatePath)
-        ()
+          events.withColumn("day", to_date(col("ts"))), AggKeys, AggMeasures)
+        state.fold(partial)(
+          IncrementalAgg.merge(_, partial, AggKeys, AggMeasures, width))
       }
+      ()
     } finally pinned.unpersist()
   }
 

@@ -264,20 +264,18 @@ object BaseDelta {
       val path = t.tombstonePath(c)
       val g = SnapshotStore.currentGen(spark, path).getOrElse(
         sys.error(s"pendingTombstoneCounts: ledger vanished at $path"))
-      c -> parquetRowCount(spark, SnapshotStore.genPath(path, g))
+      c -> Footers.rows(spark, Seq(SnapshotStore.genPath(path, g)))
     }.toMap
 
-  /** Sum of footer row counts across a directory's parquet files. */
-  private def parquetRowCount(spark: SparkSession, dir: String): Long = {
-    val f = fs(spark, dir)
-    f.listStatus(new Path(dir)).toSeq
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .map { st =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromStatus(st, spark.sparkContext.hadoopConfiguration)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      }.sum
+  /** Rows stored in the committed base and live deltas (footer counts, no
+    * Spark job), read only until the sum passes `stopAbove` — a fold's
+    * [[graft.Width]] input. Counts pre-merge rows: an upper bound on the
+    * merged view.
+    */
+  private[graft] def storedRows(spark: SparkSession, t: Table,
+                                stopAbove: Long = Long.MaxValue): Long = {
+    val (base, deltas) = resolveSnapshot(spark, t)
+    Footers.rows(spark, base.toSeq ++ deltas.map(t.deltaPath), stopAbove)
   }
 
   /** The committed manifest version (0 when none) — the PIN for a
@@ -811,20 +809,29 @@ object BaseDelta {
     // ledgers BEFORE the manifest — see applyTombstones' ordering contract
     val tombs = pendingTombstones(spark, t)
     val (baseOpt, deltaIds) = resolveSnapshot(spark, t)
-    val parts = baseOpt.toSeq.map(spark.read.parquet(_)) ++
-      deltaIds.map(id => spark.read.parquet(t.deltaPath(id)))
-    require(parts.nonEmpty, s"BaseDelta.read: empty table at ${t.path}")
-    val all = parts.reduce(_.unionByName(_, allowMissingColumns = allowSchemaEvolution))
+    val dirs = baseOpt.toSeq ++ deltaIds.map(t.deltaPath)
+    require(dirs.nonEmpty, s"BaseDelta.read: empty table at ${t.path}")
+    applyTombstones(mergedView(spark, t, dirs, allowSchemaEvolution,
+      graft.Width.Session), tombs)
+  }
+
+  /** The merge-on-read view of `dirs` (a base and/or deltas): one scan
+    * with the written schema ([[Footers.readAll]]; a union only when the
+    * dirs' schemas differ), pinned to `width`, then latest-wins per key,
+    * tombstoned keys and null-key junk (even from a delta predating the
+    * CDC contract) dropped.
+    */
+  private def mergedView(spark: SparkSession, t: Table, dirs: Seq[String],
+                         allowSchemaEvolution: Boolean,
+                         width: graft.Width): DataFrame = {
+    val all = width.pin(Footers.readAll(spark, dirs, allowSchemaEvolution))
     val merged = graft.silver.Staging.dedupLatestByMax(all, t.keys, t.orderCols)
-    val view = t.opCol match {
+    t.opCol match {
       case Some(op) =>
-        // tombstoned keys absent; null-key junk dropped even if a delta
-        // predating the CDC contract carried one
         merged.filter(col(op) =!= "d" || col(op).isNull)
           .filter(t.keys.map(col(_).isNotNull).reduce(_ && _))
       case None => merged
     }
-    applyTombstones(view, tombs)
   }
 
   /** Time-travel read: the table as of `asOfBatch` — the merge-on-read
@@ -843,10 +850,13 @@ object BaseDelta {
     * size it via `maxDeltas` (a larger window costs read amplification,
     * not write cost). Probe the floor first via [[timeTravelFloor]].
     * Pre-upgrade manifests (no recorded boundary) keep the old silent-
-    * floor behavior — the floor is simply unknown.
+    * floor behavior — the floor is simply unknown. `width` is the
+    * caller's [[graft.Width]]: the one scan is pinned to it before the
+    * merge.
     */
   def readAt(spark: SparkSession, t: Table, asOfBatch: Long,
-             allowSchemaEvolution: Boolean = false): DataFrame = {
+             allowSchemaEvolution: Boolean = false,
+             width: graft.Width = graft.Width.Session): DataFrame = {
     timeTravelFloor(spark, t).foreach { floor =>
       require(asOfBatch >= floor,
         s"BaseDelta.readAt: asOfBatch $asOfBatch predates the compaction " +
@@ -857,22 +867,13 @@ object BaseDelta {
     // ledgers BEFORE the manifest — see applyTombstones' ordering contract
     val tombs = pendingTombstones(spark, t)
     val (baseOpt, deltaIds) = resolveSnapshot(spark, t)
-    val visible = deltaIds.filter(_ <= asOfBatch)
-    val parts = baseOpt.toSeq.map(spark.read.parquet(_)) ++
-      visible.map(id => spark.read.parquet(t.deltaPath(id)))
-    require(parts.nonEmpty,
+    val dirs = baseOpt.toSeq ++ deltaIds.filter(_ <= asOfBatch).map(t.deltaPath)
+    require(dirs.nonEmpty,
       s"BaseDelta.readAt: nothing committed at or before batch $asOfBatch at ${t.path}")
-    val all = parts.reduce(_.unionByName(_, allowMissingColumns = allowSchemaEvolution))
-    val merged = graft.silver.Staging.dedupLatestByMax(all, t.keys, t.orderCols)
-    val view = t.opCol match {
-      case Some(op) =>
-        merged.filter(col(op) =!= "d" || col(op).isNull)
-          .filter(t.keys.map(col(_).isNotNull).reduce(_ && _))
-      case None => merged
-    }
     // erasure overrides time travel: logically-erased rows are
     // unreachable at EVERY retained as-of point, not just the head
-    applyTombstones(view, tombs)
+    applyTombstones(
+      mergedView(spark, t, dirs, allowSchemaEvolution, width), tombs)
   }
 
   /** The oldest batch id `readAt` can still separate, if known: the max
@@ -903,13 +904,15 @@ object BaseDelta {
     * own state reads) widens the manifest CAS to cover that read window
     * — for a `transform` derived from earlier reads (the
     * `ClusterIndex.erase` relabel set), not just from this compaction's
-    * own snapshot.
+    * own snapshot. `width` is the caller's [[graft.Width]] for the fold
+    * scan, as in [[readAt]].
     */
   def compact(spark: SparkSession, t: Table,
               allowSchemaEvolution: Boolean = false,
               transform: Option[DataFrame => DataFrame] = None,
               upTo: Option[Long] = None,
-              pinnedFrom: Option[Long] = None): Unit =
+              pinnedFrom: Option[Long] = None,
+              width: graft.Width = graft.Width.Session): Unit =
       // same guard as logicalErase: the fold scan and the tombstone
       // observation pin generation dirs concurrent erasure acks can
       // retire mid-fold — typed conflict, not a raw read fault
@@ -943,18 +946,10 @@ object BaseDelta {
     val newBase = new Path(t.baseGenPath(newGen))
     if (f.exists(newBase)) f.delete(newBase, true)  // crashed earlier attempt
     val baseOpt = resolveSnapshot(spark, t)._1
-    val parts = baseOpt.toSeq.map(spark.read.parquet(_)) ++
-      foldable.map(id => spark.read.parquet(t.deltaPath(id)))
-    require(parts.nonEmpty,
+    val dirs = baseOpt.toSeq ++ foldable.map(t.deltaPath)
+    require(dirs.nonEmpty,
       s"BaseDelta.compact: nothing to fold at ${t.path}")
-    val all = parts.reduce(_.unionByName(_, allowMissingColumns = allowSchemaEvolution))
-    val merged = graft.silver.Staging.dedupLatestByMax(all, t.keys, t.orderCols)
-    val folded1 = t.opCol match {
-      case Some(op) =>
-        merged.filter(col(op) =!= "d" || col(op).isNull)
-          .filter(t.keys.map(col(_).isNotNull).reduce(_ && _))
-      case None => merged
-    }
+    val folded1 = mergedView(spark, t, dirs, allowSchemaEvolution, width)
     // pending logical erasures MATERIALIZE here: the fold is the
     // deferred rewrite's vehicle, so the new base is physically free of
     // tombstoned rows. The ledgers are OBSERVED once — (generation, ids)
@@ -1006,10 +1001,11 @@ object BaseDelta {
     */
   def appendAndMaybeCompact(spark: SparkSession, t: Table, incoming: DataFrame,
                             batchId: Long, maxDeltas: Int = 16,
-                            allowSchemaEvolution: Boolean = false): Unit = {
+                            allowSchemaEvolution: Boolean = false,
+                            width: graft.Width = graft.Width.Session): Unit = {
     append(spark, t, incoming, batchId)
     if (deltaBatches(spark, t).size > maxDeltas)
-      compact(spark, t, allowSchemaEvolution)
+      compact(spark, t, allowSchemaEvolution, width = width)
   }
 
   /** Retire state unreachable from the CURRENT manifest — the VACUUM to

@@ -44,20 +44,17 @@ object DistinctMart {
     */
   def foldBatch(spark: SparkSession, batch: DataFrame, statePath: String,
                 keyCol: String, tsCol: String, batchId: Long): Unit = {
-    if (StateLedger.applied(spark, statePath, batchId)) return
-    val delta = sketchBatch(batch, keyCol, tsCol)
-    val merged =
-      if (SnapshotStore.exists(spark, statePath))
-        StateLedger.readState(spark, statePath)
-          .select(col("day"), col("sketch").as("__a"))
+    StateLedger.fold(spark, statePath, batchId) { state =>
+      val delta = sketchBatch(batch, keyCol, tsCol)
+      state.fold(delta)(
+        _.select(col("day"), col("sketch").as("__a"))
           .join(delta.select(col("day"), col("sketch").as("__b")),
             Seq("day"), "full_outer")
           .select(col("day"),
             when(col("__a").isNull, col("__b"))
               .when(col("__b").isNull, col("__a"))
-              .otherwise(hll_union(col("__a"), col("__b"))).as("sketch"))
-      else delta
-    SnapshotStore.publish(StateLedger.stamp(merged, batchId), statePath)
+              .otherwise(hll_union(col("__a"), col("__b"))).as("sketch")))
+    }
     ()
   }
 

@@ -44,17 +44,19 @@ object IncrementalAgg {
   }
 
   /** Fold a batch's partial state into the maintained table. Either side
-    * may hold keys the other has not seen (union semantics).
+    * may hold keys the other has not seen (union semantics). In single
+    * [[graft.Width]] the union is pinned, so the re-aggregation plans no
+    * exchange.
     */
   def merge(state: DataFrame, delta: DataFrame, keys: Seq[String],
-            m: Measures): DataFrame = {
+            m: Measures, width: graft.Width = graft.Width.Session): DataFrame = {
     val aggs = m.cols.flatMap { c =>
       Seq(sum(col(s"${c}_sum")).as(s"${c}_sum"),
         min(col(s"${c}_min")).as(s"${c}_min"),
         max(col(s"${c}_max")).as(s"${c}_max"))
     } :+ sum(col("n_rows")).as("n_rows")
-    state.select((keys ++ stateCols(m)).map(col): _*)
-      .unionByName(delta.select((keys ++ stateCols(m)).map(col): _*))
+    width.pin(state.select((keys ++ stateCols(m)).map(col): _*)
+        .unionByName(delta.select((keys ++ stateCols(m)).map(col): _*)))
       .groupBy(keys.map(col): _*)
       .agg(aggs.head, aggs.tail: _*)
   }

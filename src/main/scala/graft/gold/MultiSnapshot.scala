@@ -226,7 +226,7 @@ object MultiSnapshot {
                 version: Long): Map[String, DataFrame] = {
     val c = commitAt(spark, root, version)
     c.gens.filterNot(_._1.startsWith(PointerPrefix)).map { case (t, g) =>
-      t -> spark.read.parquet(genPath(root, t, g))
+      t -> Footers.read(spark, genPath(root, t, g))
     }
   }
 
@@ -363,11 +363,12 @@ object MultiSnapshot {
 
   /** The staged generations of `s`, read with the schemas they were
     * written with — the exact bytes [[commit]] would publish, e.g. for a
-    * write–audit–publish gate.
+    * write–audit–publish gate — each leaf pinned to `width`.
     */
-  def readStaged(spark: SparkSession, s: Staged): Map[String, DataFrame] =
+  def readStaged(spark: SparkSession, s: Staged,
+                 width: graft.Width = graft.Width.Session): Map[String, DataFrame] =
     s.gens.map { case (t, g) =>
-      t -> spark.read.schema(s.schemas(t)).parquet(genPath(s.root, t, g))
+      t -> width.pin(spark.read.schema(s.schemas(t)).parquet(genPath(s.root, t, g)))
     }
 
   /** Second half of [[publishFrom]]: the pointer CAS (rebasing over
@@ -436,7 +437,7 @@ object MultiSnapshot {
     val c = currentCommit(spark, root).getOrElse(
       sys.error(s"MultiSnapshot.readAll: nothing committed at $root"))
     c.gens.filterNot(_._1.startsWith(PointerPrefix)).map { case (t, g) =>
-      t -> spark.read.parquet(genPath(root, t, g))
+      t -> Footers.read(spark, genPath(root, t, g))
     }
   }
 
@@ -516,12 +517,25 @@ object MultiSnapshot {
   /** One table resolved through a SPECIFIC commit — the read form a
     * read-modify-write transaction must use so every input comes from
     * its single observation point (pairing with [[publishFrom]], whose
-    * conflict check then covers exactly these reads).
+    * conflict check then covers exactly these reads). Read with the
+    * schema recorded in the generation's footers (no inference job) and
+    * pinned to `width`.
     */
   def readPinned(spark: SparkSession, root: String, c: Commit,
-                 table: String): DataFrame = {
+                 table: String,
+                 width: graft.Width = graft.Width.Session): DataFrame = {
     val g = c.gens.getOrElse(table,
       sys.error(s"MultiSnapshot.read: table '$table' not in commit v${c.version}"))
-    spark.read.parquet(genPath(root, table, g))
+    width.pin(Footers.read(spark, genPath(root, table, g)))
   }
+
+  /** Rows stored in `tables`' generations of commit `c` (footer counts,
+    * no Spark job; tables absent from `c` count 0), read only until the
+    * sum passes `stopAbove` — a fold's [[graft.Width]] input.
+    */
+  private[graft] def storedRows(spark: SparkSession, root: String, c: Commit,
+                                tables: Seq[String],
+                                stopAbove: Long = Long.MaxValue): Long =
+    Footers.rows(spark,
+      tables.flatMap(t => c.gens.get(t).map(genPath(root, t, _))), stopAbove)
 }

@@ -191,11 +191,17 @@ object Scd2Merge {
     * @param tieBreak  extra payload columns ordering rows that share one
     *                  `tsCol` value (e.g. a change-log sequence id) —
     *                  required for a deterministic fold when ties exist.
+    * @param width     the caller's [[graft.Width]]; in single mode both
+    *                  inputs arrive pinned, the touched-key split is a
+    *                  shuffled-hash join instead of a broadcast, and the
+    *                  anchor ∪ incoming union is pinned again, so the whole
+    *                  fold plans no exchange.
     */
   def applyLog(snapshot: DataFrame, batchLog: DataFrame, key: Seq[String],
                checkCols: Seq[String], tsCol: String,
                tieBreak: Seq[String] = Seq.empty,
-               opCol: Option[String] = None): DataFrame = {
+               opCol: Option[String] = None,
+               width: graft.Width = graft.Width.Session): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val payloadCols =
       batchLog.columns.filterNot(c => key.contains(c) || c == tsCol).toSeq
@@ -209,7 +215,9 @@ object Scd2Merge {
     val touched = batchLog.select(key.map(k => col(k).as(s"t_$k")): _*)
       .distinct().withColumn("__touched", lit(true))
     val touchCond = key.map(k => col(k) <=> col(s"t_$k")).reduce(_ && _)
-    val curFlagged = current.join(broadcast(touched), touchCond, "left")
+    val curFlagged = current.join(
+      if (width.single) width.hashSide(touched) else broadcast(touched),
+      touchCond, "left")
     val untouched = curFlagged.filter(col("__touched").isNull).select(outCols: _*)
 
     // anchor = the current version, re-entering the fold at its original
@@ -233,7 +241,7 @@ object Scd2Merge {
       tieBreak.map(col(_).asc_nulls_first)): Seq[Column]
     val wOrd = wAll.orderBy(ord: _*)
 
-    val seq0 = anchor.unionByName(incoming)
+    val seq0 = width.pin(anchor.unionByName(incoming))
       .withColumn("__anchor_ts", max(when(col("__anchor"), col("__ts"))).over(wAll))
       // replay/late guard: rows not strictly newer than the applied anchor
       .filter(col("__anchor") ||

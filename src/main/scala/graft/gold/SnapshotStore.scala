@@ -168,11 +168,23 @@ object SnapshotStore {
   /** The committed snapshot. Resolves the pointer once; the plan then
     * touches only the immutable generation dir.
     */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val gen = currentGen(spark, path).getOrElse(
-      sys.error(s"SnapshotStore.read: nothing published at $path"))
-    spark.read.parquet(genPath(path, gen))
-  }
+  def read(spark: SparkSession, path: String): DataFrame =
+    readGen(spark, path, currentGen(spark, path).getOrElse(
+      sys.error(s"SnapshotStore.read: nothing published at $path")))
+
+  /** Generation `gen`, read with the schema recorded in its footers (no
+    * inference job; a partitioned generation falls back to inference).
+    */
+  def readGen(spark: SparkSession, path: String, gen: Long): DataFrame =
+    Footers.read(spark, genPath(path, gen))
+
+  /** Rows in the committed generation (footer counts, no Spark job; 0 when
+    * nothing is published), read only until the sum passes `stopAbove`.
+    */
+  private[graft] def storedRows(spark: SparkSession, path: String,
+                                stopAbove: Long = Long.MaxValue): Long =
+    currentGen(spark, path).fold(0L)(g =>
+      Footers.rows(spark, Seq(genPath(path, g)), stopAbove))
 
   def exists(spark: SparkSession, path: String): Boolean =
     currentGen(spark, path).isDefined

@@ -15,9 +15,10 @@ import org.apache.spark.sql.functions._
   * marker; here the marker is a constant `__last_batch` column stamped
   * on the state rows themselves, so ledger and state commit in ONE
   * atomic publish (a sidecar file could tear from the state between
-  * crashes). Writers check [[applied]] and publish [[stamp]]ed frames;
-  * every reader goes through [[readState]], which strips the column —
-  * readouts and merges never see it.
+  * crashes). Writers fold through [[fold]] (one state read serves the
+  * ledger check and the merge; the publish is checked against the
+  * generation read); every reader goes through [[readState]], which
+  * strips the column — readouts and merges never see it.
   *
   * A compaction that republishes identical contents carries the column
   * (it is contents), so maintenance generations no longer break replay
@@ -64,18 +65,41 @@ object StateLedger {
     * upgrade boundary.
     */
   def applied(spark: SparkSession, path: String, batchId: Long): Boolean =
-    if (!SnapshotStore.exists(spark, path)) false
+    SnapshotStore.currentGen(spark, path).exists(g =>
+      appliedOn(SnapshotStore.readGen(spark, path, g), g, batchId))
+
+  /** [[applied]] over an already-read generation `gen` of the state. */
+  private def appliedOn(state: DataFrame, gen: Long, batchId: Long): Boolean =
+    if (state.columns.contains(Col)) {
+      val r = state.select(max(col(Col))).head()
+      !r.isNullAt(0) && r.getLong(0) >= batchId
+    } else gen >= batchId + 1
+
+  /** One ledgered fold of batch `batchId` into the state at `path`: the
+    * committed generation is read ONCE (pinned to `width`), the ledger is
+    * checked on that frame, `merge` gets it stripped (None when nothing
+    * is published yet), and the stamped result publishes through
+    * [[SnapshotStore.publishFrom]] against the generation read — a
+    * publish landing in between is a typed conflict, never a silent
+    * overwrite of state this fold did not merge. Returns false (nothing
+    * published) when the batch was already folded.
+    */
+  def fold(spark: SparkSession, path: String, batchId: Long,
+           width: graft.Width = graft.Width.Session)(
+      merge: Option[DataFrame] => DataFrame): Boolean = {
+    val observed = SnapshotStore.currentGen(spark, path)
+    val state = observed.map(g => g -> width.pin(SnapshotStore.readGen(spark, path, g)))
+    if (state.exists { case (g, df) => appliedOn(df, g, batchId) }) false
     else {
-      val df = SnapshotStore.read(spark, path)
-      if (df.columns.contains(Col)) {
-        val r = df.select(max(col(Col))).head()
-        !r.isNullAt(0) && r.getLong(0) >= batchId
-      } else
-        SnapshotStore.currentGen(spark, path).exists(_ >= batchId + 1)
+      SnapshotStore.publishFrom(
+        stamp(merge(state.map { case (_, df) => strip(df) }), batchId),
+        path, observed)
+      true
     }
+  }
 
   /** Stamp the ledger column onto a state frame about to publish.
-    * Callers fold strictly increasing batch ids (the [[applied]] gate),
+    * Callers fold strictly increasing batch ids (the [[fold]] gate),
     * so the constant stamp is the running maximum.
     */
   def stamp(df: DataFrame, batchId: Long): DataFrame =

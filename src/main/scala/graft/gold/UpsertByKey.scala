@@ -35,9 +35,11 @@ object UpsertByKey {
     * combine, no sort) instead of the window form.
     */
   def byMax(existing: DataFrame, incoming: DataFrame, keys: Seq[String],
-            orderCols: Seq[String]): DataFrame = {
+            orderCols: Seq[String],
+            width: graft.Width = graft.Width.Session): DataFrame = {
     val deduped = graft.silver.Staging.dedupLatestByMax(incoming, keys, orderCols)
-    existing.join(deduped.select(keys.map(col): _*).distinct(), keys, "left_anti")
+    existing.join(width.hashSide(deduped.select(keys.map(col): _*).distinct()),
+        keys, "left_anti")
       .unionByName(deduped, allowMissingColumns = false)
   }
 
@@ -48,25 +50,29 @@ object UpsertByKey {
     * than merged as junk. This is the streaming-sink form of `applyCdc`.
     */
   def byMaxCdc(existing: DataFrame, incoming: DataFrame, keys: Seq[String],
-               orderCols: Seq[String], opCol: String = "op"): DataFrame = {
+               orderCols: Seq[String], opCol: String = "op",
+               width: graft.Width = graft.Width.Session): DataFrame = {
     val keyed = incoming.filter(keys.map(col(_).isNotNull).reduce(_ && _))
     val latest = graft.silver.Staging.dedupLatestByMax(keyed, keys, orderCols)
     val upserts = latest.filter(col(opCol) =!= "d" || col(opCol).isNull)
-    existing.join(latest.select(keys.map(col): _*).distinct(), keys, "left_anti")
+    existing.join(width.hashSide(latest.select(keys.map(col): _*).distinct()),
+        keys, "left_anti")
       .unionByName(upserts)
   }
 
   /** One micro-batch merge step shared by the streaming sinks: dedup the
     * batch latest-wins (hash aggregation) and merge into `existing`
     * (`None` = first write). With `opCol` set, tombstones delete and
-    * null-key rows are dropped.
+    * null-key rows are dropped. `width` is the fold's [[graft.Width]]: in
+    * single mode the key anti-join is a shuffled-hash build.
     */
   def mergeBatch(existing: Option[DataFrame], incoming: DataFrame,
                  keys: Seq[String], orderCols: Seq[String],
-                 opCol: Option[String]): DataFrame =
+                 opCol: Option[String],
+                 width: graft.Width = graft.Width.Session): DataFrame =
     (existing, opCol) match {
-      case (Some(ex), Some(op)) => byMaxCdc(ex, incoming, keys, orderCols, op)
-      case (Some(ex), None)     => byMax(ex, incoming, keys, orderCols)
+      case (Some(ex), Some(op)) => byMaxCdc(ex, incoming, keys, orderCols, op, width)
+      case (Some(ex), None)     => byMax(ex, incoming, keys, orderCols, width)
       case (None, opt) =>
         val keyed = if (opt.isDefined)
           incoming.filter(keys.map(col(_).isNotNull).reduce(_ && _))

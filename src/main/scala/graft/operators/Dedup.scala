@@ -397,7 +397,7 @@ object Dedup {
 
   private def propagate(loop: Loop, edges: DataFrame, maxIter: Int): DataFrame = {
     import org.apache.spark.storage.StorageLevel
-    val single = loop.single
+    val single = loop.width.single
     // exact label sum — the monotone convergence witness (see scaladoc);
     // a cheap scan of already-checkpointed blocks, no join, no recompute
     def labelSum(df: DataFrame): java.math.BigDecimal = df
@@ -426,8 +426,6 @@ object Dedup {
     // mode keeps the planner's choice (a per-partition hash build at
     // cluster widths is a memory bet the deployment should place, not
     // this loop).
-    def hinted(df: DataFrame): DataFrame =
-      if (single) df.hint("shuffle_hash") else df
     var labels = loop.round(loopEdges.select(col("src").as("id")).distinct()
       .withColumn("cluster_id", col("id")))
     var prevSum = labelSum(labels)
@@ -436,7 +434,7 @@ object Dedup {
     while (!converged && iter < maxIter) {
       // each node adopts the min of its own and its neighbors' labels…
       val proposals = loopEdges
-        .join(hinted(labels.withColumnRenamed("id", "dst")), Seq("dst"))
+        .join(loop.width.hashSide(labels.withColumnRenamed("id", "dst")), Seq("dst"))
         .select(col("src").as("id"), col("cluster_id"))
       // materialized because the jump is a SELF-join: unmaterialized,
       // the propagate join+aggregation would execute twice per round
@@ -460,7 +458,7 @@ object Dedup {
       // O(log diameter) rounds instead of O(diameter), which is what
       // lets maxIter=20 cover even chain-shaped clusters of ~10⁶ docs
       val jump = propagated
-        .join(hinted(propagated
+        .join(loop.width.hashSide(propagated
             .select(col("id").as("cluster_id"), col("cluster_id").as("__jump"))),
           Seq("cluster_id"))
         .select(col("id"), col("__jump").as("cluster_id"))

@@ -19,19 +19,15 @@ import org.apache.spark.sql.execution.LogicalRDD
   * executor kills the lineage mid-run) otherwise — the deployment's
   * checkpoint dir is the switch, not a per-call option.
   *
-  * '''Layout.''' A loop over at most [[Loop.SmallGraphEdges]] edge rows
-  * (or over a frame bounded by construction, like BPE's vocabulary) runs
-  * SINGLE-PARTITION: `coalesce(1)` restates the partitioning fact after
-  * every checkpoint — a checkpoint's LogicalRDD reports Unknown
-  * partitioning even for a one-partition RDD, so the next round would
-  * re-exchange it — and SinglePartition satisfies every required
-  * distribution, so each round's joins and aggregations plan with ZERO
-  * exchanges and each round is ONE job regardless of AQE. Nothing
-  * session-global is touched, so any number of loops compose (this
-  * replaced the r13 session-conf width pin, whose `Par.tryConfPin`
-  * losers silently ran un-pinned). A larger loop keeps the session width
-  * and AQE — the deployment's scale knobs — where a round's real shuffle
-  * work amortizes per-stage overhead.
+  * '''Layout.''' The loop's [[graft.Width]] (the one width policy; its
+  * scaladoc states the rationale): a loop over at most
+  * [[graft.Width.SmallRows]] edge rows (or over a frame bounded by
+  * construction, like BPE's vocabulary) runs SINGLE-PARTITION — `pin`
+  * restates the partitioning fact after every checkpoint, since a
+  * checkpoint's LogicalRDD reports Unknown partitioning even for a
+  * one-partition RDD, so each round's joins and aggregations plan with
+  * zero exchanges. Nothing session-global is touched, so any number of
+  * loops compose. A larger loop keeps the session width and AQE.
   *
   * '''Release.''' Once round n is materialized, round n−1's checkpoint
   * is released without blocking. `Dataset.unpersist` on a checkpointed
@@ -39,15 +35,17 @@ import org.apache.spark.sql.execution.LogicalRDD
   * not to a cache entry), so the leaf's RDD is unpersisted. Frames the
   * rounds read throughout ([[Loop.hold]]) are released when the loop
   * ends; a frame the loop's returned plan still references never is.
-  * Reliable checkpoint files are left to the deployment's
-  * `spark.cleaner.referenceTracking.cleanCheckpoints`.
+  * A reliable checkpoint's files (its `rdd-N` dir under the session's
+  * checkpoint dir) are deleted with the release: the session's context
+  * cleaner leaves them by default, so without the delete every round of
+  * every loop stayed on disk. The returned frame's own files stay.
   */
-final class Loop private (val single: Boolean) {
+final class Loop private (val width: graft.Width) {
   private var held = Vector.empty[DataFrame]
   private var last: Option[DataFrame] = None
 
   /** `df` as one partition in single mode; unchanged at session width. */
-  def pin(df: DataFrame): DataFrame = if (single) df.coalesce(1) else df
+  def pin(df: DataFrame): DataFrame = width.pin(df)
 
   /** Materializes a frame every round reads; released when the loop ends. */
   def hold(df: DataFrame): DataFrame = {
@@ -67,23 +65,15 @@ final class Loop private (val single: Boolean) {
 
 object Loop {
 
-  /** Edge count at or under which a graph loop runs single-partition: one
-    * task comfortably owns the per-round join/agg over ≤4M edge rows
-    * (tens of MB, tens of ms), where session-width rounds pay more in
-    * task/AQE-stage scheduling than the whole round's compute — the r13
-    * q134 measurement (~0.25 s/round of pure overhead at width 32).
-    */
-  val SmallGraphEdges = 4000000L
-
-  /** A loop over `edges` edge rows, laid out by [[SmallGraphEdges]]. */
+  /** A loop over `edges` edge rows, laid out by [[graft.Width.of]]. */
   def apply[A](edges: Long)(body: Loop => A): A =
-    run(new Loop(edges <= SmallGraphEdges), body)
+    run(new Loop(graft.Width.of(edges)), body)
 
   /** A loop over a frame bounded by construction: always single-partition. */
-  def single[A](body: Loop => A): A = run(new Loop(true), body)
+  def single[A](body: Loop => A): A = run(new Loop(graft.Width.Single), body)
 
   /** A loop that keeps the session width. */
-  def wide[A](body: Loop => A): A = run(new Loop(false), body)
+  def wide[A](body: Loop => A): A = run(new Loop(graft.Width.Session), body)
 
   private def run[A](loop: Loop, body: Loop => A): A = {
     var keep = Set.empty[RDD[_]]
@@ -108,5 +98,11 @@ object Loop {
     df.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd: RDD[_] }.toSet
 
   private def release(df: DataFrame, keep: Set[RDD[_]]): Unit =
-    leaves(df).diff(keep).foreach(_.unpersist(blocking = false))
+    leaves(df).diff(keep).foreach { rdd =>
+      rdd.unpersist(blocking = false)
+      rdd.getCheckpointFile.foreach { dir =>
+        val p = new org.apache.hadoop.fs.Path(dir)
+        p.getFileSystem(rdd.sparkContext.hadoopConfiguration).delete(p, true)
+      }
+    }
 }

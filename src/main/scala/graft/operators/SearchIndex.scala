@@ -74,7 +74,7 @@ object SearchIndex {
     * over-claim only if a pre-upgrade maintenance publish inflated the
     * generation out of band — round 8's own residual, carried for at
     * most one fold: the first post-upgrade fold writes the column and
-    * the true ledger takes over. (Round-9+ erasure corrections preserve
+    * the true ledger takes over. (Erasure corrections write
     * `last_batch`, so they never re-enter this fallback.)
     */
   private def statsLastBatch(spark: SparkSession, st: State): Option[Long] =
@@ -130,6 +130,32 @@ object SearchIndex {
     }
   }
 
+  /** An erasure's stats correction: (n_docs, sum_dl) re-aggregated from
+    * the docstats view, stamped with the batches that view holds. A
+    * fold appends docstats before it merges stats, so the view can hold
+    * a batch whose stats merge has not published yet; stamping only the
+    * previous `last_batch` let that merge, retried onto this row, add its
+    * batch a second time. The docstats ledger is read on both sides of
+    * the view's resolution and must agree (else the typed conflict, and
+    * [[publishStatsCas]] recomputes).
+    */
+  private def recomputedStats(spark: SparkSession, st: State,
+                              cur: Option[DataFrame]): DataFrame = {
+    val prevLb = cur.filter(_.columns.contains("last_batch"))
+      .map(_.agg(max(col("last_batch"))).collect()(0).getLong(0))
+      .getOrElse(-1L)
+    def through(): Long = (BaseDelta.deltaBatches(spark, st.docstatsTable) ++
+      BaseDelta.timeTravelFloor(spark, st.docstatsTable)).maxOption.getOrElse(-1L)
+    val before = through()
+    val view = BaseDelta.read(spark, st.docstatsTable, allowSchemaEvolution = true)
+    if (through() != before)
+      throw new graft.gold.CommitConflictException(
+        s"SearchIndex(${st.root}): docstats moved during the stats recompute")
+    view.agg(count(lit(1)).as("n_docs"),
+        coalesce(sum(col("dl")), lit(0L)).as("sum_dl"))
+      .withColumn("last_batch", lit(prevLb max before))
+  }
+
   /** Fold one document batch (idCol, textCol) into the index. Replays
     * are no-ops PER STATE TABLE: each of postings/docstats/positions
     * checks its own delta-id ledger (plus its compaction fold floor —
@@ -139,9 +165,9 @@ object SearchIndex {
     * deterministic, so the recomputed slices are identical — instead of
     * a whole-batch no-op that would permanently lose doc lengths, phrase
     * positions, or corpus stats (the round-8 postings-only guard's crash
-    * hole). Erasure republishes stats out of band but PRESERVES
-    * `last_batch`, so the ledger survives corrections without consuming
-    * a batch id.
+    * hole). Erasure republishes stats out of band, stamped with the
+    * docstats batches it counted ([[recomputedStats]]), so the ledger
+    * survives corrections without consuming a batch id.
     */
   def fold(spark: SparkSession, st: State, batch: DataFrame, batchId: Long,
            idCol: String, textCol: String, maxDeltas: Int = 16,
@@ -193,6 +219,10 @@ object SearchIndex {
             coalesce(sum(col("dl")), lit(0L)).as("sum_dl"))
           .withColumn("last_batch", lit(batchId))
         publishStatsCas(spark, st, {
+          // an erasure's recompute already counted this batch's docstats
+          case Some(old0) if old0.columns.contains("last_batch") &&
+              old0.agg(max(col("last_batch"))).head().getLong(0) >= batchId =>
+            old0
           case Some(old0) =>
             val old = if (old0.columns.contains("last_batch")) old0
               else old0.withColumn("last_batch", lit(-1L))
@@ -242,25 +272,17 @@ object SearchIndex {
       BaseDelta.vacuum(spark, t, writerSafeUpTo = Some(bound))
     }
     // the stats ledger survives the out-of-band correction: erasure does
-    // not consume a batch id, so the republished row carries the SAME
-    // last_batch — a later fold's replay check stays exact. The
-    // correction rides the observation CAS so a concurrent fold's merge
-    // cannot silently overwrite it (and vice versa: a lost CAS here
-    // recomputes from the post-fold docstats).
+    // not consume a batch id, so the republished row carries the batches
+    // its docstats view holds ([[recomputedStats]]) — a later fold's
+    // replay check stays exact. The correction rides the observation CAS
+    // so a concurrent fold's merge cannot silently overwrite it (and vice
+    // versa: a lost CAS here recomputes from the post-fold docstats).
     // The three tables are independent roots with independent protocols —
     // rewrite them concurrently (guide §2.6) instead of paying three
     // straggler tails back to back.
     graft.Par.run(Seq(st.postingsTable, st.positionsTable, st.docstatsTable)
       .map(t => () => drop(t)))
-    publishStatsCas(spark, st, { cur =>
-      val prevLb = cur.filter(_.columns.contains("last_batch"))
-        .map(_.agg(max(col("last_batch"))).collect()(0).getLong(0))
-        .getOrElse(-1L)
-      BaseDelta.read(spark, st.docstatsTable, allowSchemaEvolution = true)
-        .agg(count(lit(1)).as("n_docs"),
-          coalesce(sum(col("dl")), lit(0L)).as("sum_dl"))
-        .withColumn("last_batch", lit(prevLb))
-    })
+    publishStatsCas(spark, st, recomputedStats(spark, st, _))
     ()
   }
 
@@ -297,17 +319,9 @@ object SearchIndex {
         countRows = false); None }))
     val receipt = results.head.get
     // stats correction reads the FILTERED docstats view; the fold
-    // ledger (last_batch) survives, as in [[erase]] — and rides the same
+    // ledger (last_batch) is kept as in [[erase]] — and rides the same
     // observation CAS so a racing fold merge cannot undo the correction
-    publishStatsCas(spark, st, { cur =>
-      val prevLb = cur.filter(_.columns.contains("last_batch"))
-        .map(_.agg(max(col("last_batch"))).collect()(0).getLong(0))
-        .getOrElse(-1L)
-      BaseDelta.read(spark, st.docstatsTable, allowSchemaEvolution = true)
-        .agg(count(lit(1)).as("n_docs"),
-          coalesce(sum(col("dl")), lit(0L)).as("sum_dl"))
-        .withColumn("last_batch", lit(prevLb))
-    })
+    publishStatsCas(spark, st, recomputedStats(spark, st, _))
     receipt
   }
 

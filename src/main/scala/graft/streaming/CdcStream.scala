@@ -303,20 +303,14 @@ object CdcStream {
                     trigger: Trigger = Trigger.ProcessingTime("1 minute")): StreamingQuery =
     parsed.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
         val b = batch.toDF()
-        if (!graft.gold.StateLedger.applied(spark, snapshotPath, batchId)) {
-          val snapshot =
-            if (graft.gold.SnapshotStore.exists(spark, snapshotPath))
-              graft.gold.StateLedger.readState(spark, snapshotPath)
-            else graft.gold.Scd2Merge.emptyLogSnapshot(b, tsCol)
-          graft.gold.SnapshotStore.publish(
-            graft.gold.StateLedger.stamp(
-              graft.gold.Scd2Merge.applyLog(snapshot, b, keys, checkCols,
-                tsCol, tieBreak, opCol), batchId),
-            snapshotPath)
-          ()
+        graft.gold.StateLedger.fold(batch.sparkSession, snapshotPath, batchId) {
+          state =>
+            graft.gold.Scd2Merge.applyLog(
+              state.getOrElse(graft.gold.Scd2Merge.emptyLogSnapshot(b, tsCol)),
+              b, keys, checkCols, tsCol, tieBreak, opCol)
         }
+        ()
       }
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)

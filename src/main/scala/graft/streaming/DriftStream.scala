@@ -40,16 +40,11 @@ object DriftStream {
                         statePath: String, keyCols: Seq[String],
                         cntCol: String, batchId: Long): Unit = {
     import org.apache.spark.sql.functions.{col, sum}
-    if (graft.gold.StateLedger.applied(spark, statePath, batchId)) return
-    val merged =
-      if (SnapshotStore.exists(spark, statePath))
-        graft.gold.StateLedger.readState(spark, statePath)
-          .unionByName(delta)
-          .groupBy(keyCols.map(col): _*)
-          .agg(sum(col(cntCol)).as(cntCol))
-      else delta
-    SnapshotStore.publish(
-      graft.gold.StateLedger.stamp(merged, batchId), statePath)
+    graft.gold.StateLedger.fold(spark, statePath, batchId) { state =>
+      state.fold(delta)(_.unionByName(delta)
+        .groupBy(keyCols.map(col): _*)
+        .agg(sum(col(cntCol)).as(cntCol)))
+    }
     ()
   }
 

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.gold.SnapshotStore
 import graft.operators.RangeJoin
 
 /** Streaming ledger-continuity monitor: the O(batch) form of
@@ -37,24 +36,20 @@ object GapStream {
   def foldBatch(spark: SparkSession, batch: DataFrame, statePath: String,
                 keyCols: Seq[String], seqCol: String,
                 batchId: Long = 0L): Unit = {
-    if (graft.gold.StateLedger.applied(spark, statePath, batchId)) return
-    val delta = batch.filter(col(seqCol).isNotNull)
-      .select(keyCols.map(col)
-        :+ col(seqCol).cast("long").as("lo")
-        :+ col(seqCol).cast("long").as("hi"): _*)
-    val unioned =
-      if (SnapshotStore.exists(spark, statePath))
-        graft.gold.StateLedger.readState(spark, statePath).unionByName(delta)
-      else delta
-    // adjacency-aware compaction: widen hi by 1 so integer-adjacent
-    // runs ([1,3] and [4,5]) touch and merge, then narrow back
-    val merged = RangeJoin.mergeIntervals(
-        unioned.withColumn("hi", col("hi") + 1L), keyCols, "lo", "hi")
-      .select(keyCols.map(col)
-        :+ col("merged_lo").as("lo")
-        :+ (col("merged_hi") - 1L).as("hi"): _*)
-    SnapshotStore.publish(
-      graft.gold.StateLedger.stamp(merged, batchId), statePath)
+    graft.gold.StateLedger.fold(spark, statePath, batchId) { state =>
+      val delta = batch.filter(col(seqCol).isNotNull)
+        .select(keyCols.map(col)
+          :+ col(seqCol).cast("long").as("lo")
+          :+ col(seqCol).cast("long").as("hi"): _*)
+      val unioned = state.fold(delta)(_.unionByName(delta))
+      // adjacency-aware compaction: widen hi by 1 so integer-adjacent
+      // runs ([1,3] and [4,5]) touch and merge, then narrow back
+      RangeJoin.mergeIntervals(
+          unioned.withColumn("hi", col("hi") + 1L), keyCols, "lo", "hi")
+        .select(keyCols.map(col)
+          :+ col("merged_lo").as("lo")
+          :+ (col("merged_hi") - 1L).as("hi"): _*)
+    }
     ()
   }
 

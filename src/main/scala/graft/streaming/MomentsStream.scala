@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.gold.SnapshotStore
 import graft.silver.Quality
 
 /** Streaming feature-correlation monitor: the O(batch) form of
@@ -28,16 +27,13 @@ object MomentsStream {
     */
   def foldBatch(spark: SparkSession, batch: DataFrame, statePath: String,
                 cols: Seq[String], batchId: Long = 0L): Unit = {
-    if (graft.gold.StateLedger.applied(spark, statePath, batchId)) return
-    val delta = Quality.corrMoments(batch, cols)
-    val merged =
-      if (SnapshotStore.exists(spark, statePath)) {
-        val prev = graft.gold.StateLedger.readState(spark, statePath)
+    graft.gold.StateLedger.fold(spark, statePath, batchId) { state =>
+      val delta = Quality.corrMoments(batch, cols)
+      state.fold(delta) { prev =>
         val sums = prev.columns.toSeq.map(c => sum(col(c)).as(c))
         prev.unionByName(delta).groupBy().agg(sums.head, sums.tail: _*)
-      } else delta
-    SnapshotStore.publish(
-      graft.gold.StateLedger.stamp(merged, batchId), statePath)
+      }
+    }
     ()
   }
 

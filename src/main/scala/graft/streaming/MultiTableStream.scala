@@ -3,7 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.gold.{MultiSnapshot, Scd2Merge, UpsertByKey}
+import graft.Width
+import graft.gold.{BaseDelta, MultiSnapshot, Scd2Merge, UpsertByKey}
 
 /** Streaming multi-table ATOMIC commit — each micro-batch folds the SCD2
   * dimension(s) AND the fact table(s) it touches, then publishes ALL of
@@ -26,7 +27,10 @@ import graft.gold.{MultiSnapshot, Scd2Merge, UpsertByKey}
   *     its id already folded and skips whole — no table advances twice.
   *     Otherwise the batch is persisted once for the whole fold (every
   *     route slice, fold and audit reads that one copy, never the source
-  *     again) and unpersisted when the fold ends.
+  *     again) and unpersisted when the fold ends. ONE job materializes
+  *     it: a per-route row count, which sizes the fold's
+  *     [[graft.Width]] (with the committed inputs' footer row counts)
+  *     and tells which routes are empty.
   *  2. route + fold — the batch splits by `routeCol` (the topic/table
   *     column `fromKafkaRouted` carries through the envelope), each slice
   *     projected to its table's shape by the spec's `project`. Dims fold
@@ -57,7 +61,12 @@ import graft.gold.{MultiSnapshot, Scd2Merge, UpsertByKey}
   * per batch, nothing data-sized. Dimension tables rewrite per batch
   * (dimension-sized by assumption); a fact that outgrows whole-table
   * rewrites belongs in BaseDelta with the commit pointer naming its
-  * manifest — same protocol, O(batch) staging.
+  * manifest — same protocol, O(batch) staging. The fold's width is the
+  * one [[graft.Width]] policy (its scaladoc has the rationale), decided
+  * from the rows the fold reads — the batch plus the committed inputs'
+  * footer row counts — and passed to every read, merge and audit.
+  * Committed inputs are read with the schema recorded in their footers,
+  * never with an inference job.
   *
   * Concurrency contract: single writer (the stream), any number of
   * readers resolving the coordinator.
@@ -109,8 +118,8 @@ object MultiTableStream {
                              maxDeltas: Int = 64,
                              allowSchemaEvolution: Boolean = false,
                              project: DataFrame => DataFrame = identity) {
-    def deltaTable(root: String): graft.gold.BaseDelta.Table =
-      graft.gold.BaseDelta.Table(s"$root/_delta/$table", keys, orderCols, opCol)
+    def deltaTable(root: String): BaseDelta.Table =
+      BaseDelta.Table(s"$root/_delta/$table", keys, orderCols, opCol)
   }
 
   /** A write–audit–publish gate (Iceberg's WAP pattern, carrying the
@@ -123,24 +132,27 @@ object MultiTableStream {
     * consistent commit and the staged state orphaned-but-invisible, and
     * a replay re-stages and re-audits (a poisoned batch keeps failing
     * until upstream or the audit is fixed — WAP's intent: bad data must
-    * not publish silently).
+    * not publish silently). `check` also receives the fold's
+    * [[graft.Width]], which its candidates are pinned to, so its own joins
+    * can keep a small fold exchange-free.
     */
   final case class Audit(name: String,
-                         check: Map[String, DataFrame] => DataFrame)
+                         check: (Map[String, DataFrame], Width) => DataFrame)
 
   /** The banking FK audit: every fact `fkCol` must resolve to a LIVE
     * current dim row (readme.md:213-217's orphan check, enforced at
-    * publish time instead of discovered after).
+    * publish time instead of discovered after). In a single-width fold
+    * the live keys are a shuffled-hash build, not a broadcast.
     */
   def fkAudit(factTable: String, fkCol: String, dimTable: String,
               dimKey: String, dimOpCol: Option[String] = None): Audit =
-    Audit(s"fk_${factTable}_${fkCol}_to_$dimTable", { t =>
+    Audit(s"fk_${factTable}_${fkCol}_to_$dimTable", { (t, width) =>
       val dim = t(dimTable)
       val live = dimOpCol match {
         case Some(op) => Scd2Merge.liveFromLog(dim, op)
         case None     => dim.filter(col(Scd2Merge.EffectiveTo).isNull)
       }
-      t(factTable).join(live.select(col(dimKey).as(fkCol)).distinct(),
+      t(factTable).join(width.hashSide(live.select(col(dimKey).as(fkCol)).distinct()),
         Seq(fkCol), "left_anti")
     })
 
@@ -172,7 +184,20 @@ object MultiTableStream {
                 facts: Seq[UpsertFact], batchId: Long,
                 deltaFacts: Seq[DeltaFact] = Seq.empty,
                 audits: Seq[Audit] = Seq.empty,
-                tombstoneBudget: Long = graft.gold.BaseDelta.DefaultTombstoneBudget): Unit = {
+                tombstoneBudget: Long = BaseDelta.DefaultTombstoneBudget): Unit =
+    foldBatchSized(spark, root, batch, routeCol, dims, facts, batchId,
+      deltaFacts, audits, tombstoneBudget, Width.of)
+
+  /** [[foldBatch]] with the width rule as an argument: `widthOf` maps the
+    * rows the fold will read (batch plus committed inputs) to its
+    * [[graft.Width]]. [[foldBatch]] passes `Width.of`; a plan spec passes
+    * a fixed width to pin both sides of the threshold.
+    */
+  private[graft] def foldBatchSized(spark: SparkSession, root: String,
+      batch: DataFrame, routeCol: String, dims: Seq[Scd2Dim],
+      facts: Seq[UpsertFact], batchId: Long, deltaFacts: Seq[DeltaFact],
+      audits: Seq[Audit], tombstoneBudget: Long,
+      widthOf: Long => Width): Unit = {
     require(dims.nonEmpty || facts.nonEmpty || deltaFacts.nonEmpty,
       "MultiTableStream: at least one table spec required")
     val names = dims.map(_.table) ++ facts.map(_.table) ++
@@ -189,24 +214,31 @@ object MultiTableStream {
         .exists(_ >= batchId)) return
     // one read of the micro-batch serves every slice, fold and audit
     val pinned = batch.persist()
-    try {
+    val width = try {
       // the whole read-fold-stage-commit phase is one transaction based
       // on `committed`: a concurrent erasure that retires the observed
       // generations mid-execution surfaces as the TYPED retryable
       // conflict (same race the commit point reports, caught earlier at
       // read execution), never a raw FILE_NOT_EXIST
-      val c = MultiSnapshot.conflictIfRetired(spark, root, committed) {
+      val (c, w) = MultiSnapshot.conflictIfRetired(spark, root, committed) {
         val gens = committed.map(_.gens).getOrElse(Map.empty)
+        val routeRows = rowsByRoute(pinned, routeCol)
+        val width = widthOf(routeRows.values.sum +
+          committed.fold(0L)(MultiSnapshot.storedRows(spark, root, _,
+            (dims.map(_.table) ++ facts.map(_.table)), Width.SmallRows)) +
+          deltaFacts.map(f => BaseDelta.storedRows(spark, f.deltaTable(root),
+            Width.SmallRows)).sum)
+        val events = width.pin(pinned)
 
         def slice(route: String, project: DataFrame => DataFrame): DataFrame =
-          project(pinned.filter(col(routeCol) === route).drop(routeCol))
+          project(events.filter(col(routeCol) === route).drop(routeCol))
 
         val newDims = dims.map { d =>
           val rows0 = slice(d.route, d.project)
           val snapshot0 =
             if (gens.contains(d.table))
-              MultiSnapshot.readPinned(spark, root, committed.get, d.table)
-            else Scd2Merge.emptyLogSnapshot(rows0, d.tsCol)
+              MultiSnapshot.readPinned(spark, root, committed.get, d.table, width)
+            else width.pin(Scd2Merge.emptyLogSnapshot(rows0, d.tsCol))
           // opt-in evolution: an upstream ALTER TABLE that grew (or widened)
           // columns aligns both sides to the least-common-supertype union
           // schema — old versions read typed nulls for new columns, a NEW
@@ -228,13 +260,14 @@ object MultiTableStream {
                 SchemaEvolution.alignTo(rows0, target :+ (d.tsCol -> tsType)))
             }
           d.table -> Scd2Merge.applyLog(snapshot, rows, d.keys, d.checkCols,
-            d.tsCol, d.tieBreak, d.opCol)
+            d.tsCol, d.tieBreak, d.opCol, width)
         }
         val newFacts = facts.map { f =>
           val rows0 = slice(f.route, f.project)
           val existing0 =
             if (gens.contains(f.table))
-              Some(MultiSnapshot.readPinned(spark, root, committed.get, f.table))
+              Some(MultiSnapshot.readPinned(spark, root, committed.get, f.table,
+                width))
             else None
           val (existing, rows) =
             if (!f.allowSchemaEvolution || existing0.isEmpty) (existing0, rows0)
@@ -245,22 +278,22 @@ object MultiTableStream {
                 SchemaEvolution.alignTo(rows0, target))
             }
           f.table -> UpsertByKey.mergeBatch(existing, rows, f.keys, f.orderCols,
-            f.opCol)
+            f.opCol, width)
         }
         // WRITE. O(batch) facts first: STAGE the delta dir (durable,
         // invisible — no committed pointer reaches this batch id yet); the
         // pointer advances to batchId in the same atomic flip as the dims.
-        // An empty slice stages nothing — readAt(batchId) then serves the
+        // An empty route stages nothing — readAt(batchId) then serves the
         // earlier deltas.
         val pointers = deltaFacts.map { f =>
-          val rows = slice(f.route, f.project)
-          if (!rows.isEmpty)
+          if (routeRows.getOrElse(f.route, 0L) > 0)
             // table-tier retired-state guard: an eager coordinated erasure
             // compacting/rewriting this member mid-append surfaces as the
             // typed conflict (the stream retries the batch), never a raw
             // task-level fs failure
-            graft.gold.BaseDelta.conflictIfRetired(spark, f.deltaTable(root)) {
-              graft.gold.BaseDelta.append(spark, f.deltaTable(root), rows, batchId)
+            BaseDelta.conflictIfRetired(spark, f.deltaTable(root)) {
+              BaseDelta.append(spark, f.deltaTable(root),
+                slice(f.route, f.project), batchId)
             }
           f.table -> batchId
         }.toMap
@@ -279,15 +312,15 @@ object MultiTableStream {
         // cannot see yet)
         if (audits.nonEmpty) {
           val candidates: Map[String, DataFrame] =
-            MultiSnapshot.readStaged(spark, staged) ++ deltaFacts.flatMap { f =>
+            MultiSnapshot.readStaged(spark, staged, width) ++ deltaFacts.flatMap { f =>
               val t = f.deltaTable(root)
-              val (base, ds) = graft.gold.BaseDelta.resolveSnapshot(spark, t)
+              val (base, ds) = BaseDelta.resolveSnapshot(spark, t)
               if (base.isEmpty && ds.isEmpty) None
-              else Some(f.table -> graft.gold.BaseDelta.readAt(spark, t, batchId,
-                f.allowSchemaEvolution))
+              else Some(f.table -> BaseDelta.readAt(spark, t, batchId,
+                f.allowSchemaEvolution, width))
             }
           val failed = audits.flatMap { a =>
-            val n = a.check(candidates).limit(21).count()
+            val n = a.check(candidates, width).limit(21).count()
             if (n > 0) Some(s"${a.name} (${if (n > 20) ">20" else n} violations)")
             else None
           }
@@ -299,11 +332,12 @@ object MultiTableStream {
                 "invisible and a replay re-audits.")
         }
         // PUBLISH: the one pointer flip
-        MultiSnapshot.commit(spark, staged)
+        (MultiSnapshot.commit(spark, staged), width)
       }
       require(c.version > committed.map(_.version).getOrElse(0L),
         s"MultiTableStream: version regressed to ${c.version} publishing " +
           s"batch $batchId")
+      w
     } finally pinned.unpersist()
     // maintenance AFTER the flip, bounded at the PREVIOUS commit's
     // pointer: folding only deltas <= that pointer leaves this batch's
@@ -313,7 +347,7 @@ object MultiTableStream {
     deltaFacts.foreach { f =>
       val t = f.deltaTable(root)
       val prevPtr = committed.flatMap(MultiSnapshot.pointer(_, f.table))
-      if (graft.gold.BaseDelta.tombstoneBacklogOver(spark, t, tombstoneBudget))
+      if (BaseDelta.tombstoneBacklogOver(spark, t, tombstoneBudget))
         // BUDGET-TRIPPED erasure materialization: fold EVERYTHING through
         // the tombstone filter, bounded at THIS batch's just-committed
         // pointer (a full fold is what retires the ledgers — a
@@ -323,17 +357,29 @@ object MultiTableStream {
         // when the acked backlog has outgrown what every read should
         // keep anti-joining. A typed conflict (an eraser racing the
         // fold) leaves the upgrade to the next batch's re-check.
-        try graft.gold.BaseDelta.compact(spark, t,
-          transform = Some(identity), upTo = Some(batchId))
+        try BaseDelta.compact(spark, t,
+          transform = Some(identity), upTo = Some(batchId), width = width)
         catch {
           case e: graft.gold.CommitConflictException =>
             log.warn("MultiTableStream: budget-tripped compaction of " +
               s"${t.path} lost to a concurrent commit at batch $batchId; " +
               s"the next batch re-checks the budget (${e.getMessage})")
         }
-      else if (graft.gold.BaseDelta.deltaBatches(spark, t).size > f.maxDeltas)
-        graft.gold.BaseDelta.compact(spark, t, upTo = prevPtr)
+      else if (BaseDelta.deltaBatches(spark, t).size > f.maxDeltas)
+        BaseDelta.compact(spark, t, upTo = prevPtr, width = width)
     }
+  }
+
+  /** Rows per route value of the persisted batch `b` — ONE job, no
+    * exchange (per-partition counts merged on the driver); this job is
+    * also what fills `b`'s cache.
+    */
+  private def rowsByRoute(b: DataFrame, routeCol: String): Map[String, Long] = {
+    def add(m: Map[String, Long], k: String, n: Long) =
+      m.updated(k, m.getOrElse(k, 0L) + n)
+    b.select(col(routeCol).cast("string")).rdd.aggregate(Map.empty[String, Long])(
+      (m, r) => if (r.isNullAt(0)) m else add(m, r.getString(0), 1L),
+      (a, o) => o.foldLeft(a) { case (m, (k, n)) => add(m, k, n) })
   }
 
   /** Start the streaming sink: one coordinator commit per micro-batch. */
@@ -342,7 +388,7 @@ object MultiTableStream {
             deltaFacts: Seq[DeltaFact] = Seq.empty,
             audits: Seq[Audit] = Seq.empty,
             trigger: Trigger = Trigger.ProcessingTime("1 minute"),
-            tombstoneBudget: Long = graft.gold.BaseDelta.DefaultTombstoneBudget): StreamingQuery =
+            tombstoneBudget: Long = BaseDelta.DefaultTombstoneBudget): StreamingQuery =
     parsed.writeStream
       .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
         foldBatch(b.sparkSession, root, b.toDF(), routeCol, dims, facts, id,
@@ -368,9 +414,9 @@ object MultiTableStream {
         val t = f.deltaTable(root)
         // a fact whose slices were all empty so far has a pointer but no
         // store yet — absent from the view rather than an error
-        val (base, deltas) = graft.gold.BaseDelta.resolveSnapshot(spark, t)
+        val (base, deltas) = BaseDelta.resolveSnapshot(spark, t)
         if (base.isEmpty && deltas.isEmpty) None
-        else Some(f.table -> graft.gold.BaseDelta.readAt(spark, t, asOf,
+        else Some(f.table -> BaseDelta.readAt(spark, t, asOf,
           f.allowSchemaEvolution))
       }
     }

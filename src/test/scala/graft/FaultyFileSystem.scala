@@ -11,7 +11,7 @@ import org.apache.hadoop.util.Progressable
   * (CrashSweepSpec). Two phases per protocol:
   *
   *  1. RECORD: run the protocol once, logging every MUTATING filesystem
-  *     op as a normalized signature (op kind + digit/uuid-stripped
+  *     op as a normalized signature (op kind + digit/uuid/nonce-stripped
   *     relative path) in execution order.
   *  2. ARMED(k): re-run from a fresh fixture; the k-th mutating op — and
   *     every mutating op after it — throws. The post-trigger poisoning is
@@ -48,12 +48,21 @@ object FaultClock {
   private val Uuid =
     "[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{12}".r
 
+  /** The 8-hex scratch nonces of `CommitCas.commitNext`
+    * (`.v<N>.<hex8>.tmp`) and of a delta swap (`.stage-<hex8>`,
+    * `.trash-<hex8>`): random per call, so each maps to one token `H` —
+    * otherwise one protocol step records a different signature on every
+    * run and two traces cannot be diffed.
+    */
+  private val Nonce = "(\\.v[0-9]+\\.|\\.stage-|\\.trash-)[0-9a-f]{8}(?![0-9a-f])".r
+
   def normalize(p: Path): String = {
     val raw = p.toUri.getPath
     val rel =
       if (prefix.nonEmpty && raw.startsWith(prefix)) raw.substring(prefix.length)
       else raw
-    Uuid.replaceAllIn(rel, "U").replaceAll("[0-9]+", "N")
+    Nonce.replaceAllIn(Uuid.replaceAllIn(rel, "U"), m => s"${m.group(1)}H")
+      .replaceAll("[0-9]+", "N")
   }
 
   /** Called by [[FaultyFileSystem]] on every mutating op. Throws

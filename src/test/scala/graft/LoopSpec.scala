@@ -60,18 +60,31 @@ class LoopSpec extends SparkSpec {
     val localClusters = rows(Dedup.resolveClusters(pairs))
     val localRanks = rows(GraphOps.pageRankInt(edges, "src", "dst", iters = 3))
     val dir = new java.io.File(tmpDir("loop-ckpt"))
-    def written(): Int = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-      walk(dir).count(_.getName.startsWith("part-"))
-    }
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f +: f.listFiles().toSeq.flatMap(walk) else Seq(f)
+    def written(): Int = walk(dir).count(_.getName.startsWith("part-"))
+    // the rdd-N checkpoint dirs left on disk, and those a frame reads
+    def rddDirs(): Set[String] =
+      walk(dir).filter(f => f.isDirectory && f.getName.startsWith("rdd-"))
+        .map(_.getName).toSet
+    def ownDirs(df: DataFrame): Set[String] =
+      df.queryExecution.analyzed.collect { case l: LogicalRDD =>
+        l.rdd.getCheckpointFile.map(new org.apache.hadoop.fs.Path(_).getName)
+      }.flatten.toSet
     spark.sparkContext.setCheckpointDir(dir.getPath)
     try {
-      assert(rows(Dedup.resolveClusters(pairs)) == localClusters)
+      val clusters = Dedup.resolveClusters(pairs)
+      assert(rows(clusters) == localClusters)
       val afterClusters = written()
       assert(afterClusters > 0, "resolveClusters wrote no checkpoint under the dir")
-      assert(rows(GraphOps.pageRankInt(edges, "src", "dst", iters = 3)) == localRanks)
+      assert(ownDirs(clusters).nonEmpty && rddDirs() == ownDirs(clusters),
+        s"released rounds' files stayed: on disk ${rddDirs()}, result reads ${ownDirs(clusters)}")
+      val ranks = GraphOps.pageRankInt(edges, "src", "dst", iters = 3)
+      assert(rows(ranks) == localRanks)
       assert(written() > afterClusters, "pageRankInt wrote no checkpoint under the dir")
+      assert(rddDirs() == ownDirs(clusters) ++ ownDirs(ranks),
+        s"released rounds' files stayed: on disk ${rddDirs()}, results read " +
+          s"${ownDirs(clusters) ++ ownDirs(ranks)}")
     } finally org.apache.spark.CheckpointDirReset(spark)
     assert(spark.sparkContext.getCheckpointDir.isEmpty)
   }

@@ -251,4 +251,25 @@ class SearchIndexSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(shouty == Map(1L -> 1L), shouty)
   }
+
+  test("an erasure landing between a fold's docstats append and its stats publish does not double-count the batch") {
+    import graft.gold.{BaseDelta, SnapshotStore}
+    val st = SearchIndex.State(tmpDir("si-race") + "/s")
+    val b0 = corpus.take(3); val b1 = corpus.drop(3)
+    SearchIndex.fold(spark, st, docs(b0: _*), 0L, "doc_id", "text")
+    // batch 1's docstats delta has landed and its stats merge has not
+    // published yet (a slow fold, or a crash between the two writes)
+    BaseDelta.appendAndMaybeCompact(spark, st.docstatsTable,
+      Seq((4L, 4L), (6L, 3L)).toDF("doc_id", "dl"), 1L, 16)
+    // the erasure's stats recompute counts batch 1's docs
+    SearchIndex.eraseLogical(spark, st, Seq(2L).toDF("doc_id")).collect()
+    SearchIndex.fold(spark, st, docs(b1: _*), 1L, "doc_id", "text")
+    val stats = SnapshotStore.read(spark, st.statsPath)
+      .select("n_docs", "sum_dl", "last_batch").collect().head
+    // docs 1, 3, 4, 6 survive: lengths 5 + 3 + 4 + 3
+    assert((stats.getLong(0), stats.getLong(1), stats.getLong(2)) == ((4L, 15L, 1L)),
+      stats.toString)
+    sameScores(SearchIndex.search(spark, st, query),
+      TextAnalysis.bm25(docs(corpus.filterNot(_._1 == 2L): _*), "doc_id", "text", query))
+  }
 }
