@@ -55,14 +55,23 @@ object AnalystMarts {
     * exchange.
     */
   def foldBatch(spark: SparkSession, batch: DataFrame, mart: Mart,
-                batchId: Long, maxDeltas: Int = 16): Unit = {
+                batchId: Long, maxDeltas: Int = 16): Unit =
+    foldBatchSized(spark, batch, mart, batchId, maxDeltas, graft.Width.ofFold)
+
+  /** [[foldBatch]] with the width rule as an argument: `widthOf` maps the
+    * rows the fold will read to its [[graft.Width]]. [[foldBatch]] passes
+    * `Width.ofFold`; a width measurement passes a fixed width.
+    */
+  private[graft] def foldBatchSized(spark: SparkSession, batch: DataFrame,
+      mart: Mart, batchId: Long, maxDeltas: Int,
+      widthOf: Long => graft.Width): Unit = {
     // both states derive from one read of the micro-batch
     val pinned = batch.persist()
     try {
-      val small = graft.Width.SmallRows
+      val small = graft.Width.FoldRows
       // the count runs on the RDD: one job, where `Dataset.count`'s
       // exchange would add adaptive stages (cache, shuffle, result)
-      val width = graft.Width.of(pinned.queryExecution.toRdd.count() +
+      val width = widthOf(pinned.queryExecution.toRdd.count() +
         BaseDelta.storedRows(spark, mart.activityTable, small) +
         SnapshotStore.storedRows(spark, mart.aggStatePath, small))
       val events = width.pin(pinned)

@@ -12,11 +12,6 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * schema-inference job per dir; a fold reading its committed inputs
   * every micro-batch paid that per table per batch for a schema the
   * writer had already recorded in every footer.
-  *
-  * Committed part files are immutable, so a footer is read once per JVM:
-  * the (path, length, modification time) of a part file keys a bounded
-  * cache of its row count and recorded schema, and a fold re-sizing its
-  * inputs every micro-batch reads only the files written since.
   */
 private[graft] object Footers {
 
@@ -31,27 +26,12 @@ private[graft] object Footers {
   /** One part file's footer facts: row count and the recorded schema. */
   private final case class Footer(rows: Long, schemaJson: Option[String])
 
-  private val MaxCached = 8192
-
-  private val cache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(String, Long, Long), Footer](256, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Long, Long), Footer]): Boolean =
-        size() > MaxCached
-    })
-
   private def footer(spark: SparkSession, st: FileStatus): Footer = {
-    val key = (st.getPath.toString, st.getLen, st.getModificationTime)
-    Option(cache.get(key)).getOrElse {
-      val r = ParquetFileReader.open(
-        HadoopInputFile.fromStatus(st, spark.sparkContext.hadoopConfiguration))
-      val f =
-        try Footer(r.getRecordCount, Option(r.getFooter.getFileMetaData
-          .getKeyValueMetaData.get(SparkSchemaKey)))
-        finally r.close()
-      cache.put(key, f)
-      f
-    }
+    val r = ParquetFileReader.open(
+      HadoopInputFile.fromStatus(st, spark.sparkContext.hadoopConfiguration))
+    try Footer(r.getRecordCount, Option(r.getFooter.getFileMetaData
+      .getKeyValueMetaData.get(SparkSchemaKey)))
+    finally r.close()
   }
 
   /** The row schema recorded in `dir`'s footer; None when the dir holds no

@@ -26,12 +26,13 @@ import org.apache.spark.sql.functions._
   * only the merge-idempotent ones.
   *
   * Upgrade boundary (states written by pre-ledger code, no column):
-  * [[applied]] falls back to the round-8 GENERATION-PARITY check (batch
-  * b committed generation b+1) instead of treating the state as
-  * never-folded. The -1 alternative looked benign ("refold once") but
-  * these merges are ADDITIVE, not idempotent — upgrades force a
-  * restart, restarts commonly replay the last batch, and refolding it
-  * would silently double-count every sum/moment/count in the state.
+  * the ledger check in [[fold]] falls back to the round-8
+  * GENERATION-PARITY check (batch b committed generation b+1) instead
+  * of treating the state as never-folded. The -1 alternative looked
+  * benign ("refold once") but these merges are ADDITIVE, not
+  * idempotent — upgrades force a restart, restarts commonly replay the
+  * last batch, and refolding it would silently double-count every
+  * sum/moment/count in the state.
   * The parity fallback carries round 8's own residual (a maintenance
   * generation published out of band before the upgrade inflates parity
   * and skips one fresh batch) for at most one fold: the first
@@ -62,9 +63,11 @@ object StateLedger {
     * published state. Pre-ledger states (no column) answer via the
     * round-8 generation-parity fallback — see the object scaladoc for
     * why -1 ("just refold") would double-count additive state at the
-    * upgrade boundary.
+    * upgrade boundary. Test-facing: writers get this check from [[fold]],
+    * which runs it on the frame it merges.
     */
-  def applied(spark: SparkSession, path: String, batchId: Long): Boolean =
+  private[graft] def applied(spark: SparkSession, path: String,
+                             batchId: Long): Boolean =
     SnapshotStore.currentGen(spark, path).exists(g =>
       appliedOn(SnapshotStore.readGen(spark, path, g), g, batchId))
 
@@ -98,11 +101,12 @@ object StateLedger {
     }
   }
 
-  /** Stamp the ledger column onto a state frame about to publish.
-    * Callers fold strictly increasing batch ids (the [[fold]] gate),
+  /** Stamp the ledger column onto a state frame about to publish —
+    * [[fold]]'s own step, open to tests that build a ledgered state by
+    * hand. Folds run strictly increasing batch ids (the [[fold]] gate),
     * so the constant stamp is the running maximum.
     */
-  def stamp(df: DataFrame, batchId: Long): DataFrame =
+  private[graft] def stamp(df: DataFrame, batchId: Long): DataFrame =
     df.withColumn(Col, lit(batchId))
 
   /** The state without its ledger column — what merges and readouts

@@ -62,9 +62,10 @@ import graft.gold.{BaseDelta, MultiSnapshot, Scd2Merge, UpsertByKey}
   * (dimension-sized by assumption); a fact that outgrows whole-table
   * rewrites belongs in BaseDelta with the commit pointer naming its
   * manifest — same protocol, O(batch) staging. The fold's width is the
-  * one [[graft.Width]] policy (its scaladoc has the rationale), decided
-  * from the rows the fold reads — the batch plus the committed inputs'
-  * footer row counts — and passed to every read, merge and audit.
+  * one [[graft.Width]] policy's fold rule ([[graft.Width.ofFold]]; the
+  * policy's scaladoc has the rationale and the measured threshold),
+  * decided from the rows the fold reads — the batch plus the committed
+  * inputs' footer row counts — and passed to every read, merge and audit.
   * Committed inputs are read with the schema recorded in their footers,
   * never with an inference job.
   *
@@ -111,6 +112,11 @@ object MultiTableStream {
     * coordinator's full retention window) always stay readable via
     * `readAt`; only readers pinned further back than the retained
     * commits lose their as-of point (the BaseDelta retention contract).
+    *
+    * `project` restates the route's rows (a column selection) and must
+    * keep every row: the fold decides "an empty route stages nothing"
+    * from the route's row count before projecting, so a filtering
+    * project would stage an empty delta.
     */
   final case class DeltaFact(table: String, route: String, keys: Seq[String],
                              orderCols: Seq[String],
@@ -186,11 +192,11 @@ object MultiTableStream {
                 audits: Seq[Audit] = Seq.empty,
                 tombstoneBudget: Long = BaseDelta.DefaultTombstoneBudget): Unit =
     foldBatchSized(spark, root, batch, routeCol, dims, facts, batchId,
-      deltaFacts, audits, tombstoneBudget, Width.of)
+      deltaFacts, audits, tombstoneBudget, Width.ofFold)
 
   /** [[foldBatch]] with the width rule as an argument: `widthOf` maps the
     * rows the fold will read (batch plus committed inputs) to its
-    * [[graft.Width]]. [[foldBatch]] passes `Width.of`; a plan spec passes
+    * [[graft.Width]]. [[foldBatch]] passes `Width.ofFold`; a plan spec passes
     * a fixed width to pin both sides of the threshold.
     */
   private[graft] def foldBatchSized(spark: SparkSession, root: String,
@@ -225,9 +231,9 @@ object MultiTableStream {
         val routeRows = rowsByRoute(pinned, routeCol)
         val width = widthOf(routeRows.values.sum +
           committed.fold(0L)(MultiSnapshot.storedRows(spark, root, _,
-            (dims.map(_.table) ++ facts.map(_.table)), Width.SmallRows)) +
+            (dims.map(_.table) ++ facts.map(_.table)), Width.FoldRows)) +
           deltaFacts.map(f => BaseDelta.storedRows(spark, f.deltaTable(root),
-            Width.SmallRows)).sum)
+            Width.FoldRows)).sum)
         val events = width.pin(pinned)
 
         def slice(route: String, project: DataFrame => DataFrame): DataFrame =

@@ -85,7 +85,7 @@ class FoldWidthSpec extends SparkSpec {
   private def audits(ps: Seq[String]) = ps.filter(_.contains("LeftAnti"))
 
   test("a small fold plans its staged writes and its audit with no exchange and no broadcast") {
-    assert(Width.of(batch1.size) == Width.Single)
+    assert(Width.ofFold(batch1.size) == Width.Single)
     val root = tmpDir("fold-width-small")
     fold(root, batch0, 0L, Width.Single)
     val ps = plans(fold(root, batch1, 1L, Width.Single))
@@ -101,7 +101,7 @@ class FoldWidthSpec extends SparkSpec {
   }
 
   test("above the threshold the same fold keeps its exchanges") {
-    assert(Width.of(Width.SmallRows + 1) == Width.Session)
+    assert(Width.ofFold(Width.FoldRows + 1) == Width.Session)
     val root = tmpDir("fold-width-wide")
     fold(root, batch0, 0L, Width.Session)
     val ps = plans(fold(root, batch1, 1L, Width.Session))
