@@ -56,39 +56,12 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // default matches the harness contract (local[32]); the driver can
-    // still pin a different width via SPARK_GRAFT_CPUS
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // instant-preserving NTZ normalization in Tables.events assumes a
-      // UTC session; pin it here too so a non-UTC JVM can't shift the
-      // q14 watermark split during benchmarking
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    // ERROR, not WARN: the one-line JSON result below must be the only
-    // thing this main emits near shutdown — a WARN between it and process
-    // exit can push it out of the driver's bounded output capture
-    spark.sparkContext.setLogLevel("ERROR")
-    // untimed warmup: session/codegen/file-index init otherwise lands on
-    // whichever query happens to run first and skews its number
-    Tables.names.foreach { n =>
-      try {
-        val df = if (n == "events") Tables.events(spark, sfDir)
-                 else Tables.load(spark, sfDir, n)
-        df.count()
-      } catch { case _: Throwable => }
-    }
-    try { // warm window/join/agg codegen paths on a trivial input
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.expressions.Window
-      val w = spark.range(1000).withColumn("k", col("id") % 10)
-      w.withColumn("rn", row_number().over(
-          Window.partitionBy(col("k")).orderBy(col("id"))))
-        .join(broadcast(w.select(col("k")).distinct()), Seq("k"))
-        .groupBy(col("k")).agg(sum(col("id"))).count()
-    } catch { case _: Throwable => }
+    // still pin a different width via SPARK_GRAFT_CPUS. Log level ERROR
+    // (the session's): the JSON result below must be the only thing this
+    // main emits near shutdown — a WARN between it and process exit can
+    // push it out of the driver's bounded output capture
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    Session.warmup(spark, sfDir)
     // host-calibration probe — after warmup, before the suite
     val (calib1c, calib32w) =
       try calibrate(spark) catch { case _: Throwable => (-1.0, -1.0) }

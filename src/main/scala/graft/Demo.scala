@@ -97,13 +97,7 @@ object Demo {
   def main(args: Array[String]): Unit = {
     val workDir = args.headOption.getOrElse(
       Scratch.dir("graft-demo"))
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(4)
     val r = run(spark, workDir)
     println(s"=== graft.Demo @ $workDir ===")
     println(s"Bronze immutable log (${r.bronze.count()} rows; replay retained, corrupt quarantined):")

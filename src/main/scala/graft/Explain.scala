@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints formatted physical plans for selected queries — the plan-audit
   * tool used to check pushdown/broadcast/shuffle shape per operator.
   * Usage: runMain graft.Explain <sfDir> <queryName>...
@@ -10,13 +8,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.drop(1).toSeq else Queries.all.map(_.name)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(4)
     val qmap = Queries.queries
     names.foreach { n =>
       println(s"\n=== $n ===")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Whole-registry plan lint: run [[graft.plans.PlanLint]] over every
   * registered query's physical plan and print the queries with nonzero
   * hits — the engine auditing its own 237 plans for scale antipatterns.
@@ -14,13 +12,7 @@ import org.apache.spark.sql.SparkSession
 object Lint {
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(8)
     var clean = 0
     Queries.all.sortBy(_.name).foreach { q =>
       try {

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-job time attribution inside a query — optimization-round measurement
   * tool (not part of the driver contract). A query like q268 runs dozens of
@@ -22,14 +21,7 @@ object Prof {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val runs = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     // (site, startedNs) per jobId; finished jobs accumulate into rows
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long)]()
@@ -70,13 +62,7 @@ object Prof {
     spark.sparkContext.addSparkListener(listener)
 
     // same warmup as Bench so first-run init doesn't pollute attribution
-    Tables.names.foreach { n =>
-      try {
-        val df = if (n == "events") Tables.events(spark, sfDir)
-                 else Tables.load(spark, sfDir, n)
-        df.count()
-      } catch { case _: Throwable => }
-    }
+    Session.warmup(spark, sfDir)
 
     val qmap = Queries.queries
     names.foreach { name =>

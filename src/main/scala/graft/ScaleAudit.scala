@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** The mechanical scale adjudication (round-12 verdict #1): for the
   * pair-OUTPUT-bound operators, measure wall time AND output rows at two
   * scale factors and print the ratio table — so "the sf1 outlier is
@@ -40,14 +38,7 @@ object ScaleAudit {
     val names = args.drop(2).headOption
       .map(_.split(",").map(_.trim).toSeq).getOrElse(PairBound)
       .filter(SparkEntry.queries.contains)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     def measure(name: String, dir: String): (Long, Double) = {
       val runs = (1 to 2).map { _ =>

@@ -382,8 +382,11 @@ object Dedup {
   private def resolveClustersBody(pairs: DataFrame, aCol: String,
                                   bCol: String, maxIter: Int): DataFrame = {
     import org.apache.spark.storage.StorageLevel
-    val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .unionByName(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
+    // both directions from ONE evaluation of the pair plan (a union of
+    // two projections would run an unpersisted plan under each branch)
+    val edges = pairs.select(inline(array(
+        struct(col(aCol).as("src"), col(bCol).as("dst")),
+        struct(col(bCol).as("src"), col(aCol).as("dst")))))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       // the edge frame is persisted anyway, so one count sizes the loop

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Diagnostic main for the `broadcast_of_generate` sweep: for every
   * registered query whose plan broadcasts a Generate-bearing subtree,
@@ -59,13 +59,7 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val only: Option[Set[String]] = args.drop(1).headOption.map(_.split(",").toSet)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(4)
     graft.Queries.all.filter(q => only.forall(_.contains(q.name))).foreach { q =>
       try {
         val sides = flaggedBuildSides(q.fn(spark, sfDir))

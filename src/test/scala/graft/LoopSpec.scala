@@ -95,4 +95,15 @@ class LoopSpec extends SparkSpec {
     assert(out.schema.map(f => f.name -> f.dataType) ==
       Seq("id" -> LongType, "cluster_id" -> LongType))
   }
+
+  test("resolveClusters evaluates an unpersisted pair plan once") {
+    val evaluated = spark.sparkContext.longAccumulator("pair-rows")
+    val seen = org.apache.spark.sql.functions.udf { (a: Long) =>
+      evaluated.add(1); a }
+    val chain = (1L to 40L).map(i => (i, i + 1)).toDF("a", "id_b")
+    val pairs = chain.select(seen($"a").as("id_a"), $"id_b")
+    val labels = Dedup.resolveClusters(pairs)
+    assert(labels.select("cluster_id").distinct().as[Long].collect().toSeq == Seq(1L))
+    assert(evaluated.value == 40L, "each pair row is evaluated once")
+  }
 }
