@@ -1,7 +1,20 @@
 package graft
+import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 
 object Bench {
+
+  /** The median of `runs` timed executions of `body`, in seconds, or the
+    * first non-fatal failure: a query that throws has no time, so it can
+    * neither enter the total nor read as a fast query.
+    */
+  def timeQuery(runs: Int)(body: => Unit): Either[Throwable, Double] =
+    try {
+      val times = Vector.fill(runs) {
+        val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
+      }.sorted
+      Right(times(times.length / 2))
+    } catch { case NonFatal(e) => Left(e) }
 
   /** Host-calibration probe (round-13 verdict #1): a fixed ~2 s synthetic
     * workload run before the suite and emitted into every bench JSON, so
@@ -64,7 +77,7 @@ object Bench {
     Session.warmup(spark, sfDir)
     // host-calibration probe — after warmup, before the suite
     val (calib1c, calib32w) =
-      try calibrate(spark) catch { case _: Throwable => (-1.0, -1.0) }
+      try calibrate(spark) catch { case NonFatal(_) => (-1.0, -1.0) }
     // deterministic execution order → reproducible per-query numbers.
     // Each query runs 3× and reports its MEDIAN: a single-shot number on a
     // co-tenant box can read 3× slow (or fast) from load alone, which is
@@ -76,28 +89,30 @@ object Bench {
     // paying for the full suite
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
+    val timed = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (name, fn) =>
-      val times = (1 to runs).map { _ =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      name -> times(times.length / 2)
-    }
+        name -> timeQuery(runs) { fn(spark, sfDir).count(); () }
+      }
+    // a failed query is left out of the total and the timing map and
+    // named, with its exception class, under `failed`
+    val results = timed.collect { case (name, Right(t)) => name -> t }
+    val failed = timed.collect { case (name, Left(e)) => name -> e.getClass.getName }
     def ms(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
     val calibJson =
       s"""{"calib_1c":${ms(calib1c)},"calib_32w":${ms(calib32w)}}"""
     val fullMap = results.map { case (k, v) => s"\"" + k + "\":" + ms(v) }
       .mkString("{", ",", "}")
+    val failedJson = s""""n_failed":${failed.size},""" + failed
+      .map { case (k, c) => s"\"" + k + "\":\"" + c + "\"" }
+      .mkString("\"failed\":{", ",", "}")
     // STRUCTURED top-level fields (round-13 verdict #7): total_s,
     // n_queries, queries{}, calib{} as real JSON — no regex-parsing of
     // log tails required. `metric`/`value` stay for the driver's
     // backward-compatible reader.
     val fullJson =
-      s"""{"metric":"total","value":${ms(total)},"unit":"sec","total_s":${ms(total)},"n_queries":${results.size},"runs":$runs,"calib":$calibJson,"queries":$fullMap,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${ms(total)},"unit":"sec","total_s":${ms(total)},"n_queries":${results.size},$failedJson,"runs":$runs,"calib":$calibJson,"queries":$fullMap,"sf":"$sfDir"}"""
     // The registry outgrew the driver's bounded (2000-char) tail capture:
     // a single line with all 157+ timings gets its HEAD truncated, which
     // makes the JSON unparseable and hides the front of the map (round-5
@@ -111,12 +126,12 @@ object Bench {
     try {
       java.nio.file.Files.write(java.nio.file.Paths.get(out),
         (fullJson + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case _: Throwable => } // read-only cwd: stdout still has it
+    } catch { case NonFatal(_) => } // read-only cwd: stdout still has it
     println(fullJson)
     val slowestAsc = results.sortBy(_._2).takeRight(55).map {
       case (k, v) => s"\"" + k + "\":" + ms(v)
     }.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${ms(total)},"unit":"sec","total_s":${ms(total)},"n_queries":${results.size},"runs":$runs,"calib":$calibJson,"full_map":"$out","queries":$slowestAsc,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${ms(total)},"unit":"sec","total_s":${ms(total)},"n_queries":${results.size},$failedJson,"runs":$runs,"calib":$calibJson,"full_map":"$out","queries":$slowestAsc,"sf":"$sfDir"}""")
     System.out.flush()
     spark.stop()
   }

@@ -8,15 +8,21 @@ import org.apache.spark.sql.streaming.Trigger
 
 import graft.cdc.Envelope
 import graft.model.Schemas
-import graft.streaming.CdcStream
+import graft.streaming.{CdcStream, MultiTableStream}
 
 /** Continuous end-to-end demo (SURVEY.md §7.6): the reference pipeline's
-  * whole lifecycle — CDC envelopes land → streaming Bronze → keyed
-  * base+delta gold (tombstones honored) → streaming SCD2 dim — as ONE
-  * runnable program, including the mid-run restart every production
-  * deployment eventually exercises: all three streams are STOPPED between
-  * epochs and resume from their checkpoints, and the replayed/late events
-  * in epoch 2 land exactly once in the merged views.
+  * whole lifecycle — CDC envelopes land → streaming Bronze → one gold
+  * commit per micro-batch holding the keyed base+delta current state
+  * (tombstones honored) and the SCD2 dim — as ONE runnable program,
+  * including the mid-run restart every production deployment eventually
+  * exercises: both streams are STOPPED between epochs and resume from
+  * their checkpoints, and the replayed/late events in epoch 2 land
+  * exactly once in the merged views.
+  *
+  * The streams are the pipeline's own sinks: `CdcStream.routeToBronze`
+  * with the one `accounts` topic, and `MultiTableStream.start` with an
+  * `Scd2Dim` and a `DeltaFact` on the one `accounts` route, read back
+  * through `MultiTableStream.readCommitted`.
   *
   * Run: `sbt "runMain graft.Demo [workDir]"` — prints the accrued Bronze
   * log, the current-state gold table, and the SCD2 history. The same flow
@@ -42,27 +48,31 @@ object Demo {
   def run(spark: SparkSession, workDir: String): Result = {
     val in = s"$workDir/landing"
     val bronze = s"$workDir/bronze/accounts"
-    val delta = s"$workDir/gold/accounts_current"
-    val scd2 = s"$workDir/gold/accounts_scd2"
+    val gold = s"$workDir/gold"
     Files.createDirectories(Paths.get(in))
 
-    // three independent checkpointed streams off one landing zone — the
-    // medallion fan-out (raw log, merged current state, versioned dim)
+    // the SCD2 history keeps deleted accounts' last version current (the
+    // tombstone removes the key from the current-state fact only)
+    val history = MultiTableStream.Scd2Dim("accounts_scd2", "accounts",
+      keys = Seq("id"), checkCols = Seq("customer_id", "account_type", "balance"),
+      tsCol = "created_at",
+      project = _.filter(col("op") =!= "d").drop("op", "ts_ms"))
+    val current = MultiTableStream.DeltaFact("accounts_current", "accounts",
+      keys = Seq("id"), orderCols = Seq("ts_ms"), opCol = Some("op"),
+      maxDeltas = 2)
+
+    // two checkpointed streams off one landing zone — the medallion
+    // fan-out (raw log; merged current state + versioned dim, committed
+    // together)
     def startStreams() = {
-      def parsed() = CdcStream.fromJsonFiles(spark, in, Schemas.accounts)
-      def clean() = parsed()
+      val clean = CdcStream.fromJsonFiles(spark, in, Schemas.accounts)
         .filter(col(Envelope.CorruptCol).isNull).drop(Envelope.CorruptCol)
+        .withColumn("topic", lit("accounts"))
       Seq(
-        CdcStream.toBronze(clean(), bronze, s"$workDir/ckpt/bronze",
-          trigger = Trigger.ProcessingTime(0)),
-        CdcStream.upsertStreamDelta(parsed().drop(Envelope.CorruptCol), delta,
-          s"$workDir/ckpt/delta", keys = Seq("id"), orderCols = Seq("ts_ms"),
-          opCol = Some("op"), maxDeltas = 2, trigger = Trigger.ProcessingTime(0)),
-        CdcStream.scd2Stream(
-          clean().filter(col("op") =!= "d").drop("op", "ts_ms"),
-          scd2, s"$workDir/ckpt/scd2", keys = Seq("id"),
-          checkCols = Seq("customer_id", "account_type", "balance"),
-          asOfCol = "created_at", orderCols = Seq("created_at"),
+        CdcStream.routeToBronze(clean, Map("accounts" -> bronze),
+          s"$workDir/ckpt/bronze", trigger = Trigger.ProcessingTime(0)),
+        MultiTableStream.start(clean, gold, s"$workDir/ckpt/gold", "topic",
+          Seq(history), Seq.empty, Seq(current),
           trigger = Trigger.ProcessingTime(0)))
     }
 
@@ -87,11 +97,11 @@ object Demo {
     epoch2.foreach(_.processAllAvailable())
     epoch2.foreach(_.stop())
 
-    val table = graft.gold.BaseDelta.Table(delta, Seq("id"), Seq("ts_ms"), Some("op"))
+    val t = MultiTableStream.readCommitted(spark, gold, Seq(current))
     Result(
       bronze = spark.read.parquet(bronze),
-      current = graft.gold.BaseDelta.read(spark, table),
-      history = spark.read.parquet(scd2))
+      current = t(current.table),
+      history = t(history.table))
   }
 
   def main(args: Array[String]): Unit = {

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
   * contract). Each mode generates its own synthetic input:
   *  - `scale`: the batch-core operators over 10M synthetic CDC rows
   *    (README, "Measured vs the reference's published numbers");
-  *  - `sinks`: the per-micro-batch merge cost of the three sink tiers
+  *  - `sinks`: the per-micro-batch merge cost of the two sink tiers
   *    (same README section);
   *  - `fold-width`: single against session width for the per-batch
   *    folds, the measurement behind [[Width.FoldRows]].
@@ -60,10 +60,10 @@ object Perf {
       }
     }
     if (what == "sinks") {
-      // per-micro-batch merge cost of the three sink tiers, same 5M-row
+      // per-micro-batch merge cost of the two sink tiers, same 5M-row
       // fact spread over 30 date partitions, same 50k-row batch touching
-      // exactly ONE partition: whole-table publish is O(table), the pruned
-      // sink O(touched partition), base+delta O(batch)
+      // exactly ONE partition: whole-table publish is O(table), base+delta
+      // O(batch)
       val root = Scratch.dir("sinks")
       val n = 5000000L
       val fact = sources.Synthetic.transactions(spark, n, nAccounts = 500000)
@@ -82,14 +82,7 @@ object Perf {
           gold.SnapshotStore.read(spark, whole), batch, keys, ord), whole)
         gold.SnapshotStore.read(spark, whole).count()
       }
-      // tier 2: partition-pruned dynamic overwrite
-      val pruned = root + "/pruned"
-      gold.PartitionedUpsert.writeDynamic(fact, pruned, "part_date")
-      time("sink-partition-pruned") {
-        gold.PartitionedUpsert.upsert(spark, batch, pruned, keys, ord, "part_date")
-        1L
-      }
-      // tier 3: base+delta append (write cost) + merge-on-read (read cost)
+      // tier 2: base+delta append (write cost) + merge-on-read (read cost)
       val bdTable = gold.BaseDelta.Table(root + "/bd", keys, ord)
       gold.BaseDelta.append(spark, bdTable, fact, 0L)
       gold.BaseDelta.compact(spark, bdTable)

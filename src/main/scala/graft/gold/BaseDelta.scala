@@ -8,10 +8,10 @@ import org.apache.spark.sql.functions._
   * high-frequency CDC at 100 TB (SURVEY.md §2 row 25 taken past
   * per-partition rewrite).
   *
-  * Even the partition-pruned sink (PartitionedUpsert) rewrites every
-  * touched partition per micro-batch — with a minute-level trigger and
-  * scattered keys that converges to rewriting the hot end of the table
-  * 1440× a day. Here a micro-batch only APPENDS its (deduped) rows:
+  * Even a partition-pruned merge rewrites every touched partition per
+  * micro-batch — with a minute-level trigger and scattered keys that
+  * converges to rewriting the hot end of the table 1440× a day. Here a
+  * micro-batch only APPENDS its (deduped) rows:
   *
   * {{{
   * <path>/_manifests/v<V>           {"generation":N,"deltas":[ids…]}, plus
@@ -657,7 +657,8 @@ object BaseDelta {
     * observation CAS with bounded retry: unchanged generation → publish
     * the empty CLEARED state; advanced generation → publish
     * `current \ applied`, keeping exactly the un-materialized newcomers
-    * pending. Retry exhaustion leaves the ledger as-is — safe (reads
+    * pending. Retries follow [[CommitCas.retryConflict]] (6 attempts);
+    * exhaustion leaves the ledger as-is — safe (reads
     * keep filtering; receipts stay 'pending'; the next full fold
     * retires it). Called only after a full fold's manifest commit;
     * bounded folds keep their ledgers because un-folded later deltas
@@ -667,34 +668,30 @@ object BaseDelta {
                                observed: Seq[TombSnap]): Unit =
     observed.foreach { s =>
       val path = t.tombstonePath(s.col)
-      var attempt = 0
-      var done = false
-      while (!done && attempt <= 5) {
-        try {
-          SnapshotStore.currentGen(spark, path) match {
-            case None => done = true // ledger vacuumed away — nothing pending
-            case cur @ Some(g) =>
-              val remaining =
-                if (g == s.gen) s.ids.limit(0)
-                else spark.read.parquet(SnapshotStore.genPath(path, g))
-                  .select(col("__erased"))
-                  .join(s.ids, Seq("__erased"), "left_anti")
-                  .localCheckpoint(true)
-              val gen = SnapshotStore.stage(remaining, path)
-              if (remaining.isEmpty) {
-                // committed-cleared state: marker lands in the staged dir
-                // BEFORE the pointer commit, so readers never resolve a
-                // cleared generation that isn't marked
-                val f = fs(spark, t.path)
-                f.create(new Path(SnapshotStore.genPath(path, gen),
-                  ClearedMarker), true).close()
-              }
-              SnapshotStore.commitFrom(spark, path, gen, cur)
-              done = true
-          }
-        } catch {
-          case _: CommitConflictException => attempt += 1
+      try CommitCas.retryConflict(6) {
+        SnapshotStore.currentGen(spark, path) match {
+          case None => () // ledger vacuumed away — nothing pending
+          case cur @ Some(g) =>
+            val remaining =
+              if (g == s.gen) s.ids.limit(0)
+              else spark.read.parquet(SnapshotStore.genPath(path, g))
+                .select(col("__erased"))
+                .join(s.ids, Seq("__erased"), "left_anti")
+                .localCheckpoint(true)
+            val gen = SnapshotStore.stage(remaining, path)
+            if (remaining.isEmpty) {
+              // committed-cleared state: marker lands in the staged dir
+              // BEFORE the pointer commit, so readers never resolve a
+              // cleared generation that isn't marked
+              val f = fs(spark, t.path)
+              f.create(new Path(SnapshotStore.genPath(path, gen),
+                ClearedMarker), true).close()
+            }
+            SnapshotStore.commitFrom(spark, path, gen, cur)
         }
+      } catch {
+        // exhausted: the ledger stays pending (see above)
+        case _: CommitConflictException => ()
       }
     }
 

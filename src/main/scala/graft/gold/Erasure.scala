@@ -17,8 +17,8 @@ import org.apache.spark.sql.functions._
   *
   *  - [[erasePartitioned]] — Hive-partitioned tables: one pruned
   *    semi-join pass finds the partitions that actually hold subject
-  *    rows (a bounded driver-side value list, the same contract as
-  *    `PartitionedUpsert.touched`), only those partitions are rewritten
+  *    rows (a bounded driver-side value list: one entry per touched
+  *    partition, not per row), only those partitions are rewritten
   *    via dynamic partition overwrite, and a partition whose every row
   *    belonged to subjects is deleted outright (dynamic overwrite only
   *    replaces partitions PRESENT in the output, so an all-erased
@@ -82,7 +82,12 @@ object Erasure {
       // the lineage would re-list the path it just rewrote
       val survivorParts = survivors.select(col(partCol).cast("string"))
         .distinct().collect().map(r => Option(r.getString(0))).toSet
-      PartitionedUpsert.writeDynamic(survivors, path, partCol)
+      // dynamic overwrite: exactly the partitions present in `survivors`
+      // are replaced, every other partition keeps its files
+      survivors.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partCol)
+        .parquet(path)
       // an all-erased partition is absent from `survivors` — dynamic
       // overwrite never touched it, so its files must go explicitly; dir
       // names via the writer's own escaping (null → default partition)

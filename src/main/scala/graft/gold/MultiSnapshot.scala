@@ -374,6 +374,15 @@ object MultiSnapshot {
   /** Second half of [[publishFrom]]: the pointer CAS (rebasing over
     * disjoint contenders up to `s.conflictRetries` times), then
     * retirement below the retained window. Returns the new commit.
+    *
+    * The rebase loop stays outside [[CommitCas.retryConflict]]: it
+    * retries a lost `commitNext` (a boolean — the winner has already
+    * committed, so an immediate re-read rebases onto it with nothing to
+    * wait for), while the [[CommitConflictException]] it raises on an
+    * overlapping member must reach the caller at once — re-running this
+    * body against the same observation would raise the same overlap
+    * after each backoff. Callers that can re-fold wrap the whole
+    * read-fold-stage-commit in `retryConflict`.
     */
   def commit(spark: SparkSession, s: Staged): Commit = {
     val Staged(root, observed, _, _, pointers, conflictRetries) = s

@@ -211,10 +211,11 @@ object Optimize {
     * block, and since round 9 the incremental sinks ledger on
     * [[StateLedger]]'s in-row `__last_batch` marker (part of the
     * contents, so a compaction CARRIES it), the cadence composes with
-    * EVERY sink: merge-idempotent ones (`CdcStream.upsertStreamSnapshot`)
+    * EVERY sink: merge-idempotent whole-table upserts (a
+    * `SnapshotStore.publish` of `UpsertByKey.mergeBatch`, as q189 runs)
     * and ledgered folds (`AnalystMarts.foldBatch`, `DistinctMart`,
-    * `GapStream`, `MomentsStream`, `DriftStream`, `scd2LogStream`)
-    * alike — the round-8 numbering-shift incompatibility is gone.
+    * `GapStream`, `MomentsStream`, `DriftStream`) alike — the round-8
+    * numbering-shift incompatibility is gone.
     * Cadence determinism note: `every` counts GENERATIONS, which
     * maintenance publishes also advance, so under replay the compaction
     * points may shift — harmless, because compaction preserves contents

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Column-embedded exactly-once ledger for SnapshotStore-backed
   * incremental sinks (AnalystMarts, DistinctMart, GapStream,
-  * MomentsStream, DriftStream, scd2LogStream).
+  * MomentsStream, DriftStream).
   *
   * Round 8 ledgered these sinks on GENERATION PARITY (batch b commits
   * generation b+1) — which desyncs the moment anything else publishes a

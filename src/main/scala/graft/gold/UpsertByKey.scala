@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * `existing ▷ incoming (anti) ∪ incoming` — one shuffle on the key (the
   * anti-join), incoming side broadcast when small. This object is only the
   * merge algebra; the sinks persist its result through [[SnapshotStore]]'s
-  * pointer commit or [[PartitionedUpsert]]'s partition overwrite.
+  * or [[MultiSnapshot]]'s pointer commit.
   */
 object UpsertByKey {
 

@@ -106,7 +106,8 @@ object SearchIndex {
     })(body)
 
   /** Publish the stats row through a read-merge-publish OBSERVATION CAS
-    * (bounded retry): plain last-writer-wins publish let a concurrent
+    * (6 attempts under the shared [[graft.gold.CommitCas.retryConflict]]
+    * policy): plain last-writer-wins publish let a concurrent
     * fold's merge — computed from the PRE-correction stats — silently
     * overwrite an erasure's n_docs/sum_dl correction. `merged` receives
     * the pinned current stats row (None for a virgin path) and returns
@@ -114,21 +115,13 @@ object SearchIndex {
     * new current.
     */
   private def publishStatsCas(spark: SparkSession, st: State,
-      merged: Option[DataFrame] => DataFrame): Unit = {
-    var attempts = 0
-    var done = false
-    while (!done) {
+      merged: Option[DataFrame] => DataFrame): Unit =
+    graft.gold.CommitCas.retryConflict(6) {
       val obs = SnapshotStore.currentGen(spark, st.statsPath)
       val cur = obs.map(g =>
         spark.read.parquet(SnapshotStore.genPath(st.statsPath, g)))
-      try { SnapshotStore.publishFrom(merged(cur), st.statsPath, obs); done = true }
-      catch {
-        case e: graft.gold.CommitConflictException =>
-          attempts += 1
-          if (attempts > 5) throw e
-      }
+      SnapshotStore.publishFrom(merged(cur), st.statsPath, obs)
     }
-  }
 
   /** An erasure's stats correction: (n_docs, sum_dl) re-aggregated from
     * the docstats view, stamped with the batches that view holds. A

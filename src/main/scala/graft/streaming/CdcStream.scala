@@ -18,6 +18,18 @@ import org.apache.spark.sql.types.StructType
   * `fromJsonFiles` is the offline-testable source shape; `fromKafka` is the
   * production shape (same downstream plan — the source is the only
   * difference, which is the point of declaring the plan).
+  *
+  * One sink per layer: [[routeToBronze]] is the bronze sink (a
+  * single-table stream routes one topic — add a constant topic column)
+  * and [[MultiTableStream.start]] is the gold sink. A single gold table is
+  * a `MultiTableStream` with one route (`lit(<table>)` as the route
+  * column): an [[MultiTableStream.UpsertFact]] for a whole-table keyed
+  * upsert, a [[MultiTableStream.DeltaFact]] for the O(batch) base+delta
+  * fact, an [[MultiTableStream.Scd2Dim]] for an SCD2 dimension. The dim
+  * folds with [[graft.gold.Scd2Merge.applyLog]]'s per-row effective
+  * timestamps, so it equals the full-log rebuild however the stream cuts
+  * the log — a merge stamped with the batch's max timestamp is strictly
+  * less exact (several versions of a key in one batch collapse to one).
   */
 object CdcStream {
 
@@ -126,191 +138,6 @@ object CdcStream {
             .partitionBy(graft.bronze.Bronze.PartitionCol)
             .parquet(s"$path/batch=$batchId")
         } finally b.unpersist()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
-
-  /** Bronze sink: checkpointed, date-partitioned Parquet append — the
-    * reference's consumer+loader collapsed to one exactly-once stream.
-    */
-  def toBronze(parsed: DataFrame, path: String, checkpoint: String,
-               tsCol: String = "created_at",
-               trigger: Trigger = Trigger.ProcessingTime("1 minute")): StreamingQuery =
-    parsed
-      .withColumn(graft.bronze.Bronze.PartitionCol, to_date(col(tsCol)))
-      .writeStream
-      .format("parquet")
-      .option("path", path)
-      .option("checkpointLocation", checkpoint)
-      .partitionBy(graft.bronze.Bronze.PartitionCol)
-      .trigger(trigger)
-      .start()
-
-  /** Silver→Gold maintenance as a `foreachBatch` stream: per micro-batch,
-    * dedup latest-wins then upsert into the Parquet fact — the streaming
-    * form of the reference's incremental merge (readme.md:142-151). The
-    * checkpoint makes replays idempotent together with the keyed upsert.
-    *
-    * `orderCols` must form a total order per key — CDC replays produce
-    * identical version timestamps, so include a unique id (lsn, event id)
-    * as the final tie-break or the merged sink is nondeterministic across
-    * replays.
-    *
-    * `partCol` is a batch column that is STABLE per key (e.g.
-    * `to_date(created_at)`): the sink is Hive-partitioned and each batch
-    * rewrites only the partitions it touches — O(touched partitions) I/O
-    * instead of O(table) (see PartitionedUpsert). Unpartitioned tables
-    * take [[upsertStreamSnapshot]], which commits the whole merged table
-    * through the snapshot pointer.
-    *
-    * With `opCol` set, Debezium tombstones (op='d') delete their key from
-    * the sink instead of merging a junk row — streaming and batch CDC
-    * semantics match (`UpsertByKey.applyCdc`).
-    */
-  def upsertStream(parsed: DataFrame, sinkPath: String, checkpoint: String,
-                   keys: Seq[String], orderCols: Seq[String],
-                   partCol: String,
-                   opCol: Option[String] = None,
-                   trigger: Trigger = Trigger.ProcessingTime("1 minute")): StreamingQuery =
-    parsed.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.gold.PartitionedUpsert.upsert(
-          batch.sparkSession, batch.toDF(), sinkPath, keys, orderCols, partCol, opCol)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
-
-  /** Base+delta streaming upsert: each micro-batch APPENDS an immutable
-    * per-batch delta (O(batch) I/O — nothing existing is read or
-    * rewritten) and compaction folds deltas into the base once `maxDeltas`
-    * are outstanding. Readers use `BaseDelta.read` (merge-on-read,
-    * latest-wins + tombstones). This is the high-frequency form: where
-    * `upsertStream` rewrites touched partitions every trigger, this sink's
-    * steady-state write cost is independent of table size AND key spread.
-    * Replay safety: the delta dir is keyed on the micro-batch id, so a
-    * replayed batch overwrites its own delta.
-    */
-  def upsertStreamDelta(parsed: DataFrame, sinkPath: String, checkpoint: String,
-                        keys: Seq[String], orderCols: Seq[String],
-                        opCol: Option[String] = None, maxDeltas: Int = 16,
-                        allowSchemaEvolution: Boolean = false,
-                        trigger: Trigger = Trigger.ProcessingTime("1 minute")): StreamingQuery = {
-    val table = graft.gold.BaseDelta.Table(sinkPath, keys, orderCols, opCol)
-    parsed.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.gold.BaseDelta.appendAndMaybeCompact(
-          batch.sparkSession, table, batch.toDF(), batchId, maxDeltas,
-          allowSchemaEvolution)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
-  }
-
-  /** Object-store-safe streaming upsert: per micro-batch, merge into the
-    * committed snapshot and publish through [[graft.gold.SnapshotStore]]'s
-    * pointer protocol — the unpartitioned form of `upsertStream`, safe on
-    * storage where directory rename is copy+delete (S3/MinIO). The merge plan
-    * reads the CURRENT generation while the next is staged elsewhere, and
-    * readers flip atomically on the pointer commit; a crash mid-publish
-    * leaves an orphan generation the replayed batch overwrites. Whole-
-    * table rewrite per batch (dimension-sized tables — facts should take
-    * `upsertStreamDelta`'s O(batch) path). Tombstones honored via
-    * `mergeBatch`, like every other sink here.
-    */
-  def upsertStreamSnapshot(parsed: DataFrame, sinkPath: String,
-                           checkpoint: String, keys: Seq[String],
-                           orderCols: Seq[String],
-                           opCol: Option[String] = None,
-                           optimizeEvery: Option[Int] = None,
-                           optimizeTargetBytes: Long = 128L << 20,
-                           trigger: Trigger = Trigger.ProcessingTime("1 minute")): StreamingQuery =
-    parsed.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        val existing =
-          if (graft.gold.SnapshotStore.exists(spark, sinkPath))
-            Some(graft.gold.SnapshotStore.read(spark, sinkPath))
-          else None
-        graft.gold.SnapshotStore.publish(
-          graft.gold.UpsertByKey.mergeBatch(existing, batch.toDF(), keys,
-            orderCols, opCol),
-          sinkPath)
-        // maintenance cadence: every N generations, fold the accreted
-        // per-trigger files back to ~targetBytes (Optimize.maybeCompact)
-        // — safe here because this sink's idempotence comes from the
-        // merge, not a generation-number ledger
-        optimizeEvery.foreach(n =>
-          graft.gold.Optimize.maybeCompact(spark, sinkPath, n,
-            optimizeTargetBytes))
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
-
-  /** Streaming SCD2 maintenance: per micro-batch, dedup latest-wins then
-    * run the check-strategy merge against the persisted snapshot — the
-    * streaming form of the daily dbt-snapshot cadence
-    * (docker/dags/scd_snapshots.py), at micro-batch granularity. The
-    * batch's asOf timestamp is its max `asOfCol` (deterministic under
-    * replay). The snapshot uses the pruned `scd_part` layout — per-batch
-    * I/O is O(current rows + today's closures) regardless of how deep the
-    * closed history grows (PartitionedUpsert.scd2).
-    */
-  def scd2Stream(parsed: DataFrame, snapshotPath: String, checkpoint: String,
-                 keys: Seq[String], checkCols: Seq[String], asOfCol: String,
-                 orderCols: Seq[String],
-                 trigger: Trigger = Trigger.ProcessingTime("1 minute")): StreamingQuery =
-    parsed.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        val staged = graft.silver.Staging.dedupLatestByMax(
-          batch.toDF(), keys, orderCols)
-        val asOfRow = staged.agg(max(col(asOfCol))).head()
-        if (!asOfRow.isNullAt(0))
-          // pruned layout: the batch reads/writes only the `current`
-          // partition and its own close-date partition — history stays
-          // untouched on disk
-          graft.gold.PartitionedUpsert.scd2(
-            spark, staged, snapshotPath, keys, checkCols, asOfRow.getTimestamp(0))
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
-
-  /** Exact-changelog streaming SCD2: fold each micro-batch of change-log
-    * rows into a [[graft.gold.SnapshotStore]]-published dimension with
-    * PER-ROW effective timestamps ([[graft.gold.Scd2Merge.applyLog]]) —
-    * unlike [[scd2Stream]], a batch carrying several versions of one key
-    * yields several intervals, so the persisted dim always equals the
-    * full-log `fromChangeLog` rebuild regardless of how the stream cut
-    * the log into triggers. Exactly-once by double guard: the ledger is
-    * [[graft.gold.StateLedger]]'s in-row `__last_batch` marker committed
-    * atomically with the snapshot (a replayed batch sees its id already
-    * folded and skips; maintenance generations can't desync it), and
-    * `applyLog`'s anchor-ts drop makes even a ledger-less refold a
-    * no-op. Publish is one pointer PUT — readers on S3/MinIO flip
-    * atomically between consistent dimensions.
-    */
-  def scd2LogStream(parsed: DataFrame, snapshotPath: String,
-                    checkpoint: String, keys: Seq[String],
-                    checkCols: Seq[String], tsCol: String,
-                    tieBreak: Seq[String] = Seq.empty,
-                    opCol: Option[String] = None,
-                    trigger: Trigger = Trigger.ProcessingTime("1 minute")): StreamingQuery =
-    parsed.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val b = batch.toDF()
-        graft.gold.StateLedger.fold(batch.sparkSession, snapshotPath, batchId) {
-          state =>
-            graft.gold.Scd2Merge.applyLog(
-              state.getOrElse(graft.gold.Scd2Merge.emptyLogSnapshot(b, tsCol)),
-              b, keys, checkCols, tsCol, tieBreak, opCol)
-        }
-        ()
       }
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)

@@ -11,8 +11,8 @@ import graft.operators.{ClusterIndex, SearchIndex, VectorIndex}
   * overwrites), so a checkpoint restart or redelivered trigger converges
   * to the same state the batch path produces. These are thin
   * `foreachBatch` shells by design: the fold IS the operator, the
-  * stream only schedules it (the `scd2LogStream`/`upsertStreamDelta`
-  * pattern applied to the index tier).
+  * stream only schedules it (the `MultiTableStream.start` pattern
+  * applied to the index tier).
   *
   * Out-of-band erasure (`erase`/`eraseLogical`) against a live stream is
   * in-contract: a maintenance commit landing inside a fold's read

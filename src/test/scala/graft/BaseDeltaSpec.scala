@@ -194,14 +194,17 @@ class BaseDeltaSpec extends SparkSpec {
       Seq("""{"id":1,"v":"a","ver":1}""", """{"id":2,"v":"b","ver":1}""").mkString("\n"))
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).json(in)
-    val q = graft.streaming.CdcStream.upsertStreamDelta(
-      stream, sink, ckpt, keys = Seq("id"), orderCols = Seq("ver", "id"),
-      maxDeltas = 1, trigger = Trigger.ProcessingTime(0))
+    // the gold sink's DeltaFact over one route
+    val fact = graft.streaming.MultiTableStream.DeltaFact("t", "t",
+      keys = Seq("id"), orderCols = Seq("ver", "id"), maxDeltas = 1)
+    val q = graft.streaming.MultiTableStream.start(
+      stream.withColumn("route", lit("t")), sink, ckpt, "route", Seq.empty,
+      Seq.empty, Seq(fact), trigger = Trigger.ProcessingTime(0))
     q.processAllAvailable()
     Files.writeString(Paths.get(s"$in/b2.json"),
       Seq("""{"id":1,"v":"a2","ver":2}""", """{"id":3,"v":"c","ver":1}""").mkString("\n"))
     q.processAllAvailable(); q.stop()
-    val table = BaseDelta.Table(sink, Seq("id"), Seq("ver", "id"))
+    val table = fact.deltaTable(sink)
     // two batches with maxDeltas=1 → at least one compaction ran
     assert(BaseDelta.readManifest(spark, table).exists(_.generation >= 1))
     assert(snap(BaseDelta.read(spark, table)) ==

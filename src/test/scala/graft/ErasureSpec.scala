@@ -38,6 +38,24 @@ class ErasureSpec extends SparkSpec {
     // the all-101 partition day=2024-01-03 must be deleted outright
     assert(!new java.io.File(s"$root/day=2024-01-03").exists(),
       "all-erased partition directory survived")
+    // escaped partition names: 'US/West' and a timestamp-like value are
+    // percent-encoded by the writer (region=US%2FWest, …%3A…); a subject
+    // whose only partition has such a name must take that real directory
+    // with it, not a raw-interpolated one
+    for (hot <- Seq("US/West", "2024-01-01T12:30:00")) {
+      val esc = tmpDir("erase-esc") + "/t"
+      Seq((1L, 201L, hot), (2L, 202L, "plain")).toDF("row_id", "user_id", "region")
+        .write.partitionBy("region").parquet(esc)
+      val rEsc = Erasure.erasePartitioned(spark, esc, "region", "user_id",
+        Seq(201L).toDF("user_id"))
+      assert(rEsc.collect().map(x => x.getLong(0) -> x.getLong(1)).toMap ==
+        Map(201L -> 1L))
+      val left = spark.read.parquet(esc).select("row_id").as[Long].collect().toSeq
+      assert(left == Seq(2L), s"partition value '$hot' resurrected: $left")
+      val dirs = new java.io.File(esc).listFiles().map(_.getName)
+        .filter(_.startsWith("region="))
+      assert(dirs.toSeq == Seq("region=plain"), dirs.mkString(","))
+    }
   }
 
   test("partitioned erasure: untouched partitions' files are never rewritten") {

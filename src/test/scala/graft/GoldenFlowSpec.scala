@@ -21,10 +21,10 @@ class GoldenFlowSpec extends SparkSpec {
   test("streaming medallion flow: partitioned bronze + base+delta gold with tombstones") {
     import java.nio.file.{Files, Paths}
     import org.apache.spark.sql.streaming.Trigger
-    import graft.streaming.CdcStream
+    import graft.streaming.{CdcStream, MultiTableStream}
     val in = tmpDir("gf2-in")
     val bronze = tmpDir("gf2-bronze") + "/raw"; val ckptB = tmpDir("gf2-ckb")
-    val gold = tmpDir("gf2-gold") + "/accounts"; val ckptG = tmpDir("gf2-ckg")
+    val gold = tmpDir("gf2-gold") + "/r"; val ckptG = tmpDir("gf2-ckg")
     def deleteEnv(id: Int, created: String, lsn: Long): String =
       s"""{"payload":{"before":{"id":$id,"customer_id":1,"account_type":"SAVINGS","balance":0.0,"currency":"USD","created_at":"$created"},"after":null,"source":{"table":"accounts","lsn":$lsn,"ts_ms":$lsn},"op":"d","ts_ms":$lsn}}"""
     // epoch 1: creates, a replayed event, and a corrupt line
@@ -34,13 +34,16 @@ class GoldenFlowSpec extends SparkSpec {
       accountEnv(11, 1, 50.0, "2024-01-02T00:00:00Z", 2),
       """{"payload": {"after": {"id": broken""").mkString("\n"))
     def parsed() = CdcStream.fromJsonFiles(spark, in, Schemas.accounts)
-    val qB = CdcStream.toBronze(
+      .withColumn("topic", lit("accounts"))
+    val qB = CdcStream.routeToBronze(
       parsed().filter(col(Envelope.CorruptCol).isNull).drop(Envelope.CorruptCol),
-      bronze, ckptB, trigger = Trigger.ProcessingTime(0))
-    val qG = CdcStream.upsertStreamDelta(
-      parsed().drop(Envelope.CorruptCol), gold, ckptG,
+      Map("accounts" -> bronze), ckptB, trigger = Trigger.ProcessingTime(0))
+    val fact = MultiTableStream.DeltaFact("accounts", "accounts",
       keys = Seq("id"), orderCols = Seq("ts_ms"), opCol = Some("op"),
-      maxDeltas = 1, trigger = Trigger.ProcessingTime(0))
+      maxDeltas = 1)
+    val qG = MultiTableStream.start(parsed().drop(Envelope.CorruptCol), gold,
+      ckptG, "topic", Seq.empty, Seq.empty, Seq(fact),
+      trigger = Trigger.ProcessingTime(0))
     qB.processAllAvailable(); qG.processAllAvailable()
     // epoch 2: update 10, tombstone 11
     Files.writeString(Paths.get(s"$in/b2.json"), Seq(
@@ -54,8 +57,7 @@ class GoldenFlowSpec extends SparkSpec {
     assert(rawOut.select("ingest_date").distinct().count() == 2)
     // gold (merge-on-read): replay collapsed, tombstone removed key 11,
     // the corrupt row's null key never became a junk row
-    val table = graft.gold.BaseDelta.Table(gold, Seq("id"), Seq("ts_ms"), Some("op"))
-    val current = graft.gold.BaseDelta.read(spark, table)
+    val current = MultiTableStream.readCommitted(spark, gold, Seq(fact))("accounts")
     val out = current.collect()
       .map(r => r.getAs[Int]("id") -> r.getAs[Double]("balance")).toMap
     assert(out == Map(10 -> 999.0))

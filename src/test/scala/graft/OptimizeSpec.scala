@@ -168,19 +168,19 @@ class OptimizeSpec extends SparkSpec {
       "ZORDER rewrite must not change contents")
   }
 
-  test("streaming sink cadence: file count stays bounded, contents exact") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
+  test("maybeCompact cadence: file count stays bounded, contents exact") {
     val path = tmpDir("opt-cadence") + "/t"
-    val ms = MemoryStream[(Long, Long)]
-    val src = ms.toDF().toDF("id", "v").repartition(8)
-    val q = graft.streaming.CdcStream.upsertStreamSnapshot(src, path,
-      tmpDir("opt-cadence-ckpt"), Seq("id"), Seq("v", "id"),
-      optimizeEvery = Some(3), optimizeTargetBytes = 64L << 20,
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    // q189's maintenance loop: per batch, a whole-table keyed upsert
+    // published through the snapshot pointer, then the cadence check
     val rows = (0L until 60L).map(i => (i, i * 10))
-    rows.grouped(10).foreach { g => ms.addData(g.toSeq); q.processAllAvailable() }
-    q.stop()
+    rows.grouped(10).foreach { g =>
+      val existing =
+        if (SnapshotStore.exists(spark, path)) Some(SnapshotStore.read(spark, path))
+        else None
+      SnapshotStore.publish(graft.gold.UpsertByKey.mergeBatch(existing,
+        g.toDF("id", "v").repartition(8), Seq("id"), Seq("v", "id"), None), path)
+      Optimize.maybeCompact(spark, path, 3, 64L << 20)
+    }
     // merge correctness unaffected by the interleaved compactions
     val out = SnapshotStore.read(spark, path)
       .as[(Long, Long)].collect().sorted.toSeq

@@ -305,36 +305,6 @@ class Scd2MergeSpec extends SparkSpec {
       "replay over tombstoned keys changed the snapshot")
   }
 
-  test("scd2LogStream: streamed folds equal the one-shot fold, exactly once") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val path = tmpDir("scd2log") + "/dim"
-    val ms = MemoryStream[(Int, Long, String, String)]
-    val src = ms.toDF().toDF("account_id", "seq", "status", "ts_s")
-      .withColumn("ts", col("ts_s").cast("timestamp")).drop("ts_s")
-    val q = graft.streaming.CdcStream.scd2LogStream(src, path,
-      tmpDir("scd2log-ckpt"), logKey, logCheck, "ts",
-      tieBreak = Seq("seq"),
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
-    val rows = Seq(
-      (1, 1L, "A", "2024-01-01 00:00:00"),
-      (1, 2L, "A", "2024-01-02 00:00:00"),
-      (2, 3L, "X", "2024-01-02 06:00:00"),
-      (1, 4L, "B", "2024-01-03 00:00:00"),
-      (2, 5L, "Y", "2024-01-04 00:00:00"),
-      (1, 6L, "C", "2024-01-05 00:00:00"))
-    rows.grouped(2).foreach { g => ms.addData(g.toSeq); q.processAllAvailable() }
-    q.stop()
-    val streamed = graft.gold.SnapshotStore.read(spark, path)
-    val oneShot = fold(Seq(log(rows: _*)))
-    sameRows(
-      streamed.select("account_id", "seq", "status", "effective_from", "effective_to"),
-      oneShot.select("account_id", "seq", "status", "effective_from", "effective_to"),
-      "streamed SCD2 dim diverges from the one-shot fold")
-    // generation ledger: 3 batches → generation 3 committed
-    assert(graft.gold.SnapshotStore.currentGen(spark, path).contains(3L))
-  }
-
   // ── timestamp strategy (applyTimestamp): updated_at is the change signal ──
 
   private def tsBatch(rows: (Int, String, Double, String)*): DataFrame =

@@ -122,62 +122,6 @@ class SilverSpec extends SparkSpec {
     assert(again.collect().map(r => r.getAs[Long]("id") -> r.getAs[String]("v")).toMap == byId)
   }
 
-  test("PartitionedUpsert merges null partition values against the default partition") {
-    import graft.gold.PartitionedUpsert
-    val path = tmpDir("pu-null") + "/t"
-    val b1 = Seq((1L, "a", 1, Some("2024-01-01")), (2L, "b", 1, None))
-      .toDF("id", "v", "ver", "pd").withColumn("pd", col("pd").cast("date"))
-    PartitionedUpsert.upsert(spark, b1, path, Seq("id"), Seq("ver", "id"), "pd")
-    val b2 = Seq((2L, "b2", 2, None: Option[String]))
-      .toDF("id", "v", "ver", "pd").withColumn("pd", col("pd").cast("date"))
-    PartitionedUpsert.upsert(spark, b2, path, Seq("id"), Seq("ver", "id"), "pd")
-    val out = spark.read.parquet(path).collect()
-      .map(r => r.getAs[Long]("id") -> r.getAs[String]("v")).toMap
-    // the null-partition key was merged, not duplicated
-    assert(out == Map(1L -> "a", 2L -> "b2"))
-    assert(spark.read.parquet(path).count() == 2)
-  }
-
-  test("PartitionedUpsert: a tombstone batch that empties a partition removes its files") {
-    import graft.gold.PartitionedUpsert
-    val path = tmpDir("pu-empty") + "/t"
-    val b1 = Seq((1L, "a", 1, "u", Some("2024-01-01")), (2L, "b", 1, "u", Some("2024-01-02")))
-      .toDF("id", "v", "ver", "op", "pd").withColumn("pd", col("pd").cast("date"))
-    PartitionedUpsert.upsert(spark, b1, path, Seq("id"), Seq("ver", "id"), "pd", Some("op"))
-    // delete the ONLY key of the 2024-01-01 partition
-    val b2 = Seq((1L, "a", 2, "d", Some("2024-01-01")))
-      .toDF("id", "v", "ver", "op", "pd").withColumn("pd", col("pd").cast("date"))
-    PartitionedUpsert.upsert(spark, b2, path, Seq("id"), Seq("ver", "id"), "pd", Some("op"))
-    // dynamic overwrite alone would leave the stale files; the emptied
-    // partition must be gone so the deleted key cannot resurrect
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$path/pd=2024-01-01")))
-    val out = spark.read.parquet(path).collect()
-      .map(r => r.getAs[Long]("id") -> r.getAs[String]("v")).toMap
-    assert(out == Map(2L -> "b"))
-  }
-
-  test("PartitionedUpsert: emptied-partition cleanup finds escaped directory names") {
-    import graft.gold.PartitionedUpsert
-    // 'US/West' and a timestamp-like 'T12:30:00' are percent-encoded by the
-    // writer (pd=US%2FWest, …%3A…); cleanup must hit those real dirs, not
-    // the raw-interpolated names, or tombstoned keys resurrect on read
-    for (hot <- Seq("US/West", "2024-01-01T12:30:00")) {
-      val path = tmpDir("pu-esc") + "/t"
-      val b1 = Seq((1L, "a", 1, "u", hot), (2L, "b", 1, "u", "plain"))
-        .toDF("id", "v", "ver", "op", "pd")
-      PartitionedUpsert.upsert(spark, b1, path, Seq("id"), Seq("ver", "id"), "pd", Some("op"))
-      // delete the only key of the escaped partition
-      val b2 = Seq((1L, "a", 2, "d", hot)).toDF("id", "v", "ver", "op", "pd")
-      PartitionedUpsert.upsert(spark, b2, path, Seq("id"), Seq("ver", "id"), "pd", Some("op"))
-      val out = spark.read.parquet(path).collect()
-        .map(r => r.getAs[Long]("id") -> r.getAs[String]("v")).toMap
-      assert(out == Map(2L -> "b"), s"partition value '$hot' resurrected: $out")
-      // and the escaped directory itself is gone
-      val dirs = new java.io.File(path).listFiles().map(_.getName).filter(_.startsWith("pd="))
-      assert(dirs.toSeq == Seq("pd=plain"), dirs.mkString(","))
-    }
-  }
-
   test("DQ checks flag exactly the planted violations") {
     val txns = Seq(
       (1L, 10, "DEPOSIT", 100.0),

@@ -5,11 +5,12 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.cdc.Envelope
 import graft.model.Schemas
-import graft.streaming.{CdcStream, StatefulOps}
+import graft.streaming.{CdcStream, MultiTableStream, StatefulOps}
 
 /** End-to-end golden flow (SURVEY.md §5.3): Debezium-envelope JSON files →
-  * streaming Bronze sink → streaming keyed upsert → SCD2 over two epochs.
-  * Exercises checkpointing, exactly-once file sink, and replay idempotence.
+  * streaming Bronze sink (`CdcStream.routeToBronze`) → the gold sink
+  * (`MultiTableStream`) as a keyed upsert and as SCD2 over two epochs.
+  * Exercises checkpointing, exactly-once sinks, and replay idempotence.
   */
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
@@ -53,10 +54,12 @@ class StreamingSpec extends SparkSpec {
       Seq(
         envelope(1, 100.0, "c", "2024-01-01T10:00:00Z", 1),
         envelope(2, 50.0, "c", "2024-01-02T10:00:00Z", 2)).mkString("\n"))
-    val parsed = CdcStream.fromJsonFiles(spark, in, Schemas.accounts)
-      .drop(Envelope.CorruptCol)
-    val q = CdcStream.toBronze(parsed, bronze, ckpt,
-      trigger = Trigger.ProcessingTime(0))
+    // a single-table bronze stream is the routed sink with one topic
+    def start() = CdcStream.routeToBronze(
+      CdcStream.fromJsonFiles(spark, in, Schemas.accounts)
+        .drop(Envelope.CorruptCol).withColumn("topic", lit("accounts")),
+      Map("accounts" -> bronze), ckpt, trigger = Trigger.ProcessingTime(0))
+    val q = start()
     q.processAllAvailable()
     // second epoch: update account 1
     Files.writeString(Paths.get(s"$in/batch2.json"),
@@ -68,85 +71,84 @@ class StreamingSpec extends SparkSpec {
     // Hive-style ingest_date partitions exist
     assert(out.select("ingest_date").distinct().count() == 3)
     // restart with same checkpoint: no duplicates (exactly-once)
-    val q2 = CdcStream.toBronze(
-      CdcStream.fromJsonFiles(spark, in, Schemas.accounts).drop(Envelope.CorruptCol),
-      bronze, ckpt, trigger = Trigger.ProcessingTime(0))
+    val q2 = start()
     q2.processAllAvailable(); q2.stop()
     assert(spark.read.parquet(bronze).count() == 3)
   }
 
+  /** The gold sink over one table: the accounts stream on one route. */
+  private def accountsGold(in: String, root: String, ckpt: String,
+                           dims: Seq[MultiTableStream.Scd2Dim] = Nil,
+                           facts: Seq[MultiTableStream.UpsertFact] = Nil) =
+    MultiTableStream.start(
+      CdcStream.fromJsonFiles(spark, in, Schemas.accounts, maxFilesPerTrigger = 1)
+        .drop(Envelope.CorruptCol).withColumn("route", lit("accounts")),
+      root, ckpt, "route", dims, facts, trigger = Trigger.ProcessingTime(0))
+
+  private def balances(df: org.apache.spark.sql.DataFrame): Map[Int, Double] =
+    df.collect().map(r => r.getAs[Int]("id") -> r.getAs[Double]("balance")).toMap
+
   test("streaming keyed upsert maintains latest-wins gold table across batches") {
-    val in = tmpDir("ups-in"); val sink = tmpDir("gold") + "/fact"; val ckpt = tmpDir("ups-ckpt")
+    val in = tmpDir("ups-in"); val root = tmpDir("gold") + "/r"; val ckpt = tmpDir("ups-ckpt")
     Files.writeString(Paths.get(s"$in/b1.json"),
       Seq(
         envelope(1, 100.0, "c", "2024-01-01T10:00:00Z", 1),
         envelope(1, 150.0, "u", "2024-01-01T11:00:00Z", 2),
         envelope(2, 50.0, "c", "2024-01-01T10:30:00Z", 3)).mkString("\n"))
-    val parsed = CdcStream.fromJsonFiles(spark, in, Schemas.accounts)
-      .drop(Envelope.CorruptCol)
-    val q = CdcStream.upsertStreamSnapshot(parsed, sink, ckpt,
-      keys = Seq("id"), orderCols = Seq("ts_ms"), trigger = Trigger.ProcessingTime(0))
+    val q = accountsGold(in, root, ckpt, facts = Seq(MultiTableStream.UpsertFact(
+      "accounts", "accounts", keys = Seq("id"), orderCols = Seq("ts_ms"))))
     q.processAllAvailable()
     Files.writeString(Paths.get(s"$in/b2.json"),
       envelope(2, 75.0, "u", "2024-01-01T12:00:00Z", 4))
     q.processAllAvailable()
     q.stop()
-    val out = graft.gold.SnapshotStore.read(spark, sink).collect()
-      .map(r => r.getAs[Int]("id") -> r.getAs[Double]("balance")).toMap
+    val out = balances(MultiTableStream.readCommitted(spark, root)("accounts"))
     assert(out == Map(1 -> 150.0, 2 -> 75.0))
   }
 
   test("streaming snapshot-publish upsert: pointer flips per batch, tombstones honored") {
-    val in = tmpDir("snapup-in"); val sink = tmpDir("snapup") + "/dim"
+    val in = tmpDir("snapup-in"); val root = tmpDir("snapup") + "/r"
     val ckpt = tmpDir("snapup-ckpt")
     Files.writeString(Paths.get(s"$in/b1.json"),
       Seq(
         envelope(1, 100.0, "c", "2024-01-01T10:00:00Z", 1),
         envelope(2, 50.0, "c", "2024-01-01T10:30:00Z", 2)).mkString("\n"))
-    val parsed = CdcStream.fromJsonFiles(spark, in, Schemas.accounts)
-      .drop(Envelope.CorruptCol)
-    val q = CdcStream.upsertStreamSnapshot(parsed, sink, ckpt,
-      keys = Seq("id"), orderCols = Seq("ts_ms"), opCol = Some("op"),
-      trigger = Trigger.ProcessingTime(0))
+    val q = accountsGold(in, root, ckpt, facts = Seq(MultiTableStream.UpsertFact(
+      "accounts", "accounts", keys = Seq("id"), orderCols = Seq("ts_ms"),
+      opCol = Some("op"))))
     q.processAllAvailable()
-    val gen1 = graft.gold.SnapshotStore.currentGen(spark, sink)
-    assert(gen1.contains(1L))
-    // batch 2: update key 1, tombstone key 2
+    def version = graft.gold.MultiSnapshot.currentCommit(spark, root).map(_.version)
+    assert(version.contains(1L))
+    // batch 2: update key 1, tombstone key 2 (the delete's before-image
+    // carries the key)
     Files.writeString(Paths.get(s"$in/b2.json"),
       Seq(
         envelope(1, 999.0, "u", "2024-01-01T12:00:00Z", 3),
         deleteEnvelope(2, "2024-01-01T10:30:00Z", 4)).mkString("\n"))
     q.processAllAvailable()
     q.stop()
-    assert(graft.gold.SnapshotStore.currentGen(spark, sink).contains(2L),
-      "each batch commits a new generation")
-    val out = graft.gold.SnapshotStore.read(spark, sink).collect()
-      .map(r => r.getAs[Int]("id") -> r.getAs[Double]("balance")).toMap
+    assert(version.contains(2L), "each batch commits a new coordinator version")
+    val out = balances(MultiTableStream.readCommitted(spark, root)("accounts"))
     assert(out == Map(1 -> 999.0), out.toString)
   }
 
   test("streaming SCD2 maintains versioned snapshot across micro-batches") {
-    val in = tmpDir("scd-in"); val snap = tmpDir("scd") + "/dim"; val ckpt = tmpDir("scd-ckpt")
+    val in = tmpDir("scd-in"); val root = tmpDir("scd") + "/r"; val ckpt = tmpDir("scd-ckpt")
     Files.writeString(Paths.get(s"$in/b1.json"),
       Seq(
         envelope(1, 100.0, "c", "2024-01-01T10:00:00Z", 1),
         envelope(2, 50.0, "c", "2024-01-01T10:00:00Z", 2)).mkString("\n"))
-    def start() = CdcStream.scd2Stream(
-      CdcStream.fromJsonFiles(spark, in, Schemas.accounts, maxFilesPerTrigger = 1)
-        .drop(Envelope.CorruptCol).drop("op", "ts_ms"),
-      snap, ckpt,
-      keys = Seq("id"), checkCols = Seq("customer_id", "account_type", "balance"),
-      asOfCol = "created_at", orderCols = Seq("created_at"),
-      trigger = Trigger.ProcessingTime(0))
-    val q = start(); q.processAllAvailable()
+    val q = accountsGold(in, root, ckpt, dims = Seq(MultiTableStream.Scd2Dim(
+      "accounts", "accounts", keys = Seq("id"),
+      checkCols = Seq("customer_id", "account_type", "balance"),
+      tsCol = "created_at", project = _.drop("op", "ts_ms"))))
+    q.processAllAvailable()
     Files.writeString(Paths.get(s"$in/b2.json"),
       envelope(1, 999.0, "u", "2024-01-02T10:00:00Z", 3))
     q.processAllAvailable(); q.stop()
-    val out = spark.read.parquet(snap)
+    val out = MultiTableStream.readCommitted(spark, root)("accounts")
     assert(out.count() == 3)  // 2 current + 1 closed history row
-    val current = out.filter(col("effective_to").isNull).collect()
-      .map(r => r.getAs[Int]("id") -> r.getAs[Double]("balance")).toMap
-    assert(current == Map(1 -> 999.0, 2 -> 50.0))
+    assert(balances(out.filter(col("effective_to").isNull)) == Map(1 -> 999.0, 2 -> 50.0))
     val closed = out.filter(col("effective_to").isNotNull).head()
     assert(closed.getAs[Int]("id") == 1 && closed.getAs[Double]("balance") == 100.0)
   }
@@ -202,111 +204,6 @@ class StreamingSpec extends SparkSpec {
     // batch1 emits inserts with the per-batch winners; batch2: replay of
     // key 1 emits nothing, key 2 emits one update
     assert(out == Set((1L, 2L, "insert"), (2L, 5L, "insert"), (2L, 6L, "update")))
-  }
-
-  test("partitioned streaming upsert rewrites only the partitions a batch touches") {
-    val in = tmpDir("pp-in"); val sink = tmpDir("pp-gold") + "/fact"; val ckpt = tmpDir("pp-ckpt")
-    // created_at is the partition source and stays FIXED per id across
-    // updates (the stable-partition contract); ts_ms orders versions
-    Files.writeString(Paths.get(s"$in/b1.json"),
-      Seq(
-        envelope(1, 100.0, "c", "2024-01-01T10:00:00Z", 1),
-        envelope(2, 50.0, "c", "2024-01-02T10:00:00Z", 2)).mkString("\n"))
-    def start() = {
-      val parsed = CdcStream.fromJsonFiles(spark, in, Schemas.accounts)
-        .drop(Envelope.CorruptCol)
-        .withColumn("part_date", to_date(col("created_at")))
-      CdcStream.upsertStream(parsed, sink, ckpt, keys = Seq("id"),
-        orderCols = Seq("ts_ms"), partCol = "part_date", opCol = Some("op"),
-        trigger = Trigger.ProcessingTime(0))
-    }
-    val q = start(); q.processAllAvailable()
-    def partFiles(day: String): Map[String, Long] = {
-      import scala.jdk.CollectionConverters._
-      Files.list(Paths.get(s"$sink/part_date=$day")).iterator().asScala
-        .filter(_.toString.endsWith(".parquet"))
-        .map(f => f.toString -> Files.getLastModifiedTime(f).toMillis).toMap
-    }
-    val day1Before = partFiles("2024-01-01")
-    assert(day1Before.nonEmpty)
-    // batch 2 updates id=2 only → touches only the 2024-01-02 partition
-    Files.writeString(Paths.get(s"$in/b2.json"),
-      envelope(2, 75.0, "u", "2024-01-02T10:00:00Z", 3))
-    q.processAllAvailable(); q.stop()
-    // untouched partition: identical file set, identical mtimes
-    assert(partFiles("2024-01-01") == day1Before)
-    val out = spark.read.parquet(sink).collect()
-      .map(r => r.getAs[Int]("id") -> r.getAs[Double]("balance")).toMap
-    assert(out == Map(1 -> 100.0, 2 -> 75.0))
-    // replay idempotence: wipe the checkpoint and re-consume everything
-    // against the existing sink — at-least-once reprocessing must converge
-    import scala.jdk.CollectionConverters._
-    Files.walk(Paths.get(ckpt)).iterator().asScala.toSeq.reverse
-      .foreach(p => Files.deleteIfExists(p))
-    val q2 = start(); q2.processAllAvailable(); q2.stop()
-    val replayed = spark.read.parquet(sink).collect()
-      .map(r => r.getAs[Int]("id") -> r.getAs[Double]("balance")).toMap
-    assert(replayed == Map(1 -> 100.0, 2 -> 75.0))
-  }
-
-  test("streaming tombstone (op='d') deletes its key from the partitioned sink") {
-    val in = tmpDir("del-in"); val sink = tmpDir("del-gold") + "/fact"; val ckpt = tmpDir("del-ckpt")
-    Files.writeString(Paths.get(s"$in/b1.json"),
-      Seq(
-        envelope(1, 100.0, "c", "2024-01-01T10:00:00Z", 1),
-        envelope(2, 50.0, "c", "2024-01-01T11:00:00Z", 2)).mkString("\n"))
-    val parsed = CdcStream.fromJsonFiles(spark, in, Schemas.accounts)
-      .drop(Envelope.CorruptCol)
-      .withColumn("part_date", to_date(col("created_at")))
-    val q = CdcStream.upsertStream(parsed, sink, ckpt, keys = Seq("id"),
-      orderCols = Seq("ts_ms"), partCol = "part_date", opCol = Some("op"),
-      trigger = Trigger.ProcessingTime(0))
-    q.processAllAvailable()
-    // the delete's before-image carries the key and the original created_at
-    Files.writeString(Paths.get(s"$in/b2.json"),
-      deleteEnvelope(1, "2024-01-01T10:00:00Z", 3))
-    q.processAllAvailable(); q.stop()
-    val out = spark.read.parquet(sink).collect()
-      .map(r => r.getAs[Int]("id") -> r.getAs[Double]("balance")).toMap
-    assert(out == Map(2 -> 50.0))
-  }
-
-  test("partitioned SCD2 stream leaves prior-day closed partitions untouched") {
-    val in = tmpDir("scdp-in"); val snap = tmpDir("scdp") + "/dim"; val ckpt = tmpDir("scdp-ckpt")
-    Files.writeString(Paths.get(s"$in/b1.json"),
-      Seq(
-        envelope(1, 100.0, "c", "2024-01-01T10:00:00Z", 1),
-        envelope(2, 50.0, "c", "2024-01-01T10:00:00Z", 2)).mkString("\n"))
-    val q = CdcStream.scd2Stream(
-      CdcStream.fromJsonFiles(spark, in, Schemas.accounts, maxFilesPerTrigger = 1)
-        .drop(Envelope.CorruptCol).drop("op", "ts_ms"),
-      snap, ckpt,
-      keys = Seq("id"), checkCols = Seq("customer_id", "account_type", "balance"),
-      asOfCol = "created_at", orderCols = Seq("created_at"),
-      trigger = Trigger.ProcessingTime(0))
-    q.processAllAvailable()
-    // epoch 2: close id=1 at 2024-01-02
-    Files.writeString(Paths.get(s"$in/b2.json"),
-      envelope(1, 999.0, "u", "2024-01-02T10:00:00Z", 3))
-    q.processAllAvailable()
-    def closedFiles(day: String): Map[String, Long] = {
-      import scala.jdk.CollectionConverters._
-      Files.list(Paths.get(s"$snap/scd_part=closed_$day")).iterator().asScala
-        .filter(_.toString.endsWith(".parquet"))
-        .map(f => f.toString -> Files.getLastModifiedTime(f).toMillis).toMap
-    }
-    val day2Closed = closedFiles("2024-01-02")
-    assert(day2Closed.nonEmpty)
-    // epoch 3: close id=2 at 2024-01-03 — the 01-02 closed partition is history
-    Files.writeString(Paths.get(s"$in/b3.json"),
-      envelope(2, 777.0, "u", "2024-01-03T10:00:00Z", 4))
-    q.processAllAvailable(); q.stop()
-    assert(closedFiles("2024-01-02") == day2Closed)
-    val out = graft.gold.PartitionedUpsert.readScd2(spark, snap)
-    assert(out.count() == 4)  // 2 current + 2 closed
-    val current = out.filter(col("effective_to").isNull).collect()
-      .map(r => r.getAs[Int]("id") -> r.getAs[Double]("balance")).toMap
-    assert(current == Map(1 -> 999.0, 2 -> 777.0))
   }
 
   test("Kafka-shaped envelope stream via MemoryStream: create, delete, corrupt") {
