@@ -38,6 +38,9 @@ class ErasureSpec extends SparkSpec {
     // the all-101 partition day=2024-01-03 must be deleted outright
     assert(!new java.io.File(s"$root/day=2024-01-03").exists(),
       "all-erased partition directory survived")
+  }
+
+  test("partitioned erasure: emptied-partition cleanup finds escaped directory names") {
     // escaped partition names: 'US/West' and a timestamp-like value are
     // percent-encoded by the writer (region=US%2FWest, …%3A…); a subject
     // whose only partition has such a name must take that real directory
