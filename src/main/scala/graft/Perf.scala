@@ -8,8 +8,9 @@ import org.apache.spark.sql.functions._
   *    (README, "Measured vs the reference's published numbers");
   *  - `sinks`: the per-micro-batch merge cost of the two sink tiers
   *    (same README section);
-  *  - `fold-width`: single against session width for the per-batch
-  *    folds, the measurement behind [[Width.FoldRows]].
+  *  - `fold-width`: single width (interpreted and with codegen) against
+  *    session width for the per-batch folds, the measurement behind
+  *    [[Width.FoldRows]].
   *
   * Usage: runMain graft.Perf <scale|sinks|fold-width>. The mode is the
   * last argument, so a leading sfDir argument is accepted and ignored.
@@ -94,11 +95,12 @@ object Perf {
     if (what == "fold-width") {
       // where a per-batch fold stops gaining from single-partition width:
       // the same coordinator fold (an SCD2 dim, a DeltaFact, the FK audit)
-      // and marts fold at Width.Single and Width.Session over batches of
-      // B rows, three batches per root (maxDeltas 2, as the CDC benchmark
-      // keeps: the third batch compacts); each line reports the rows the
-      // fold reads (batch + committed state, footer counts). Widths run
-      // in alternating order per size.
+      // and marts fold at Width.Single (interpreted: `interp`), at single
+      // width with codegen (`codegen`) and at Width.Session over batches
+      // of B rows, three batches per root (maxDeltas 2, as the CDC
+      // benchmark keeps: the third batch compacts); each line reports the
+      // rows the fold reads (batch + committed state, footer counts). The
+      // widths' order rotates per size.
       import graft.streaming.MultiTableStream
       import graft.streaming.MultiTableStream.{DeltaFact, Scd2Dim}
       val dimSpec = Scd2Dim("accounts", "acct", Seq("account_id"),
@@ -139,10 +141,10 @@ object Perf {
       val sizes = Seq(10000L, 50000L, 100000L, 150000L, 250000L, 500000L,
         1000000L)
       for ((n, i) <- sizes.zipWithIndex) {
-        val widths = Seq[Width](Width.Single, Width.Session)
-        for (w <- if (i % 2 == 0) widths else widths.reverse) {
-          val tag = (if (w.single) "single" else "session") +
-            (if (i == 0) "-warmup" else "")
+        val widths = Seq[(Width, String)](Width.Single -> "interp",
+          Width.SingleCompiled -> "codegen", Width.Session -> "session")
+        for ((w, mode) <- widths.drop(i % 3) ++ widths.take(i % 3)) {
+          val tag = mode + (if (i == 0) "-warmup" else "")
           val root = Scratch.dir(s"perf-fw-mts-$n-$tag") + "/r"
           for (b <- 0L until 3L) {
             val read = n + gold.MultiSnapshot.currentCommit(spark, root).fold(0L)(c =>

@@ -1,13 +1,18 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.internal.SQLConf
 
 /** The one width policy: how many partitions a bounded piece of work
   * runs at. The iterative loops ([[operators.Loop]]) and the per-batch
   * folds ([[streaming.MultiTableStream.foldBatch]],
   * [[gold.AnalystMarts.foldBatch]]) decide it once from the rows they
-  * will read and pass it down explicitly — no session conf, no
-  * thread-local.
+  * will read and pass it down explicitly — no thread-local, and no
+  * session conf but one scoped exception: a fold runs its work inside
+  * [[Width.run]], which at [[Width.Single]] turns whole-stage codegen
+  * and generated expression classes off for the fold's duration (see
+  * "Why interpreted" below). Spark has no per-plan codegen switch, so
+  * the session conf is the only handle.
   *
   * '''Why single-partition for small work.''' Under its threshold
   * (see below) one task comfortably owns a join, window or
@@ -43,9 +48,41 @@ import org.apache.spark.sql.DataFrame
   * the coordinator fold (an SCD2 dim, a DeltaFact, the FK audit) and the
   * marts fold at both widths over 50k–1M-row batches, three batches per
   * size (the third compacting), two runs: on a 4-vCPU host at session
-  * width 4, single width took 0.78–1.01× session time up to 250k rows
-  * read, 0.93–1.19× between 290k and 500k, and 1.17–2.02× from 700k
-  * on (a fold reading 3M rows: 11.9 s against 6.7 s).
+  * width 4, single width with codegen on (the mode it then ran in) took
+  * 0.78–1.01× session time up to 250k rows read, 0.93–1.19× between
+  * 290k and 500k, and 1.17–2.02× from 700k on (a fold reading 3M rows:
+  * 11.9 s against 6.7 s).
+  *
+  * '''Why interpreted for a small fold.''' A fold of a few thousand rows
+  * runs each of its plans once, and compiling them costs more than
+  * running them: one CDC micro-batch through the bronze, gold and marts
+  * sinks needs ~125 distinct generated classes, more than Spark's codegen
+  * cache keeps (`spark.sql.codegen.cache.maxEntries`, 100, a static
+  * conf), so ~170 Janino compiles per batch (~1 s of CPU) recur on every
+  * batch. [[Width.Single]]'s [[Width.run]] therefore runs the fold with
+  * `spark.sql.codegen.wholeStage=false` and
+  * `spark.sql.codegen.factoryMode=NO_CODEGEN`: the planner fuses no
+  * stage and every projection, predicate and ordering is interpreted, so
+  * a warm fold compiles nothing. Every expression the folds evaluate is a
+  * built-in one with an interpreted `eval`. The scope is counted per
+  * session: the first open scope sets both confs, the last to close
+  * restores each previous value (set or unset), so overlapping folds on
+  * one session leave it as they found it. A streaming sink's session is
+  * the query's own clone, so one stream's scope never reaches another.
+  *
+  * '''What interpreted costs.''' `graft.Perf fold-width` also runs single
+  * width with codegen on ([[Width.SingleCompiled]]). Its one JVM runs one
+  * fold shape at a time, so the codegen cache stays warm and the codegen
+  * column pays almost no compiles: the comparison isolates the slower
+  * interpreted execution. On the same 4-vCPU host (session width 4, mean
+  * of two runs), interpreted single took 0.91× codegen-single time for the
+  * coordinator fold at 50k rows read, 1.03–1.15× at 100k, 1.23–1.36× at
+  * 150–200k and 1.49× at 250k (1.41 s against 0.95 s, and 1.29× session
+  * width's 1.09 s); the marts fold took 0.77× at 50k, 0.95–1.03× at
+  * 100k, 0.96–1.13× at 150–200k and 1.21× at 250k. So [[FoldRows]], which
+  * was measured with codegen on, sends folds of ~100k–250k rows read to a
+  * mode slower than compiled single width on that host; a CDC trickle
+  * batch (a few thousand rows read) is far below that.
   */
 sealed abstract class Width(val single: Boolean) {
 
@@ -59,6 +96,13 @@ sealed abstract class Width(val single: Boolean) {
     * unchanged at session width, where the planner's choice stands.
     */
   def hashSide(df: DataFrame): DataFrame
+
+  /** `body` in this width's execution mode: interpreted at
+    * [[Width.Single]] (no whole-stage codegen, no generated expression
+    * classes, the session's two codegen confs restored afterwards);
+    * unchanged at session width.
+    */
+  def run[A](spark: SparkSession)(body: => A): A
 }
 
 object Width {
@@ -69,11 +113,61 @@ object Width {
   case object Single extends Width(true) {
     def pin(df: DataFrame): DataFrame = df.coalesce(1)
     def hashSide(df: DataFrame): DataFrame = df.hint("shuffle_hash")
+    def run[A](spark: SparkSession)(body: => A): A = interpreted(spark)(body)
   }
 
   case object Session extends Width(false) {
     def pin(df: DataFrame): DataFrame = df
     def hashSide(df: DataFrame): DataFrame = df
+    def run[A](spark: SparkSession)(body: => A): A = body
+  }
+
+  /** [[Single]]'s layout with codegen left on — the mode single-width
+    * folds ran in before [[Single]] ran interpreted, kept only so that
+    * `graft.Perf fold-width` can measure the two side by side.
+    */
+  private[graft] case object SingleCompiled extends Width(true) {
+    def pin(df: DataFrame): DataFrame = Single.pin(df)
+    def hashSide(df: DataFrame): DataFrame = Single.hashSide(df)
+    def run[A](spark: SparkSession)(body: => A): A = body
+  }
+
+  /** The session confs an interpreted scope sets. */
+  private val Interpreted = Seq(
+    SQLConf.WHOLESTAGE_CODEGEN_ENABLED.key -> "false",
+    SQLConf.CODEGEN_FACTORY_MODE.key -> "NO_CODEGEN")
+
+  /** One session's open interpreted scopes and the values they replaced
+    * (`None`: the conf was unset).
+    */
+  private final class Scopes(val saved: Seq[(String, Option[String])]) {
+    var open = 0
+  }
+  private val scopes = new java.util.WeakHashMap[SparkSession, Scopes]()
+
+  private def interpreted[A](spark: SparkSession)(body: => A): A = {
+    scopes.synchronized {
+      val s = Option(scopes.get(spark)).getOrElse {
+        val set = spark.conf.getAll
+        val s = new Scopes(Interpreted.map { case (k, _) => k -> set.get(k) })
+        Interpreted.foreach { case (k, v) => spark.conf.set(k, v) }
+        scopes.put(spark, s)
+        s
+      }
+      s.open += 1
+    }
+    try body
+    finally scopes.synchronized {
+      val s = scopes.get(spark)
+      s.open -= 1
+      if (s.open == 0) {
+        scopes.remove(spark)
+        s.saved.foreach {
+          case (k, Some(v)) => spark.conf.set(k, v)
+          case (k, None)    => spark.conf.unset(k)
+        }
+      }
+    }
   }
 
   /** The width for a loop over `rows` edge rows. */

@@ -52,7 +52,9 @@ object AnalystMarts {
     * replay of the same `batchId`. The fold's [[graft.Width]] comes from
     * the batch's rows (one count, which also fills the batch's cache) plus
     * the two states' stored rows (footer counts); a small fold plans no
-    * exchange.
+    * exchange. Everything after the count runs inside
+    * [[graft.Width.run]], so a small fold also runs interpreted and a
+    * warm one compiles no generated class.
     */
   def foldBatch(spark: SparkSession, batch: DataFrame, mart: Mart,
                 batchId: Long, maxDeltas: Int = 16): Unit =
@@ -74,20 +76,22 @@ object AnalystMarts {
       val width = widthOf(pinned.queryExecution.toRdd.count() +
         BaseDelta.storedRows(spark, mart.activityTable, small) +
         SnapshotStore.storedRows(spark, mart.aggStatePath, small))
-      val events = width.pin(pinned)
-      val act = events
-        .select(col("user_id"), to_date(col("ts")).as("day"))
-        .filter(col("user_id").isNotNull && col("day").isNotNull)
-        .distinct()
-      BaseDelta.appendAndMaybeCompact(spark, mart.activityTable, act,
-        batchId, maxDeltas, width = width)
-      StateLedger.fold(spark, mart.aggStatePath, batchId, width) { state =>
-        val partial = IncrementalAgg.partial(
-          events.withColumn("day", to_date(col("ts"))), AggKeys, AggMeasures)
-        state.fold(partial)(
-          IncrementalAgg.merge(_, partial, AggKeys, AggMeasures, width))
+      width.run(spark) {
+        val events = width.pin(pinned)
+        val act = events
+          .select(col("user_id"), to_date(col("ts")).as("day"))
+          .filter(col("user_id").isNotNull && col("day").isNotNull)
+          .distinct()
+        BaseDelta.appendAndMaybeCompact(spark, mart.activityTable, act,
+          batchId, maxDeltas, width = width)
+        StateLedger.fold(spark, mart.aggStatePath, batchId, width) { state =>
+          val partial = IncrementalAgg.partial(
+            events.withColumn("day", to_date(col("ts"))), AggKeys, AggMeasures)
+          state.fold(partial)(
+            IncrementalAgg.merge(_, partial, AggKeys, AggMeasures, width))
+        }
+        ()
       }
-      ()
     } finally pinned.unpersist()
   }
 

@@ -407,8 +407,10 @@ object BaseDelta {
       // storm after the ledger-first read widened the window); that must
       // surface as the typed retryable conflict, never a raw read fault
       conflictIfRetired(spark, t) {
-    val subj = broadcast(ids.select(col(ids.columns.head).as("__erased"))
-      .distinct())
+    // hinted only where it is a join's build side: the receipt's left
+    // join keeps every id (its preserved side cannot be built) and the
+    // ledger union joins nothing
+    val subj = ids.select(col(ids.columns.head).as("__erased")).distinct()
     // `countRows = false` skips the per-subject row-count scan — the ack
     // is then pure metadata (one ledger publish). Use it when another
     // table's receipt already documents the request (an index erasing
@@ -420,7 +422,7 @@ object BaseDelta {
           lit(null).cast("long").as("n_rows_erased"),
           lit("pending").as("status"))
       else subj.join(
-          read(spark, t).join(subj, col(eraseCol) === col("__erased"))
+          read(spark, t).join(broadcast(subj), col(eraseCol) === col("__erased"))
             .groupBy(col("__erased")).agg(count(lit(1)).as("__n")),
           Seq("__erased"), "left")
         .select(col("__erased").as(eraseCol),

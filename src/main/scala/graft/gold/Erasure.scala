@@ -46,6 +46,15 @@ import org.apache.spark.sql.functions._
   */
 object Erasure {
 
+  /** The request's distinct subject keys as one `__subject` column. The
+    * erasure joins take it broadcast-hinted as their build side; the
+    * receipt joins keep every subject, so it is their preserved side,
+    * which a left join cannot build, and they take it unhinted, as does
+    * [[BaseDelta.logicalErase]], which hints its own join.
+    */
+  private def subjectKeys(subjects: DataFrame): DataFrame =
+    subjects.select(col(subjects.columns.head).as("__subject")).distinct()
+
   /** Erase `subjects` (one column, subject keys) from the
     * Hive-partitioned table at `path`. Rewrites only partitions holding
     * subject rows; deletes partitions left empty. Returns the receipt:
@@ -53,8 +62,8 @@ object Erasure {
     */
   def erasePartitioned(spark: SparkSession, path: String, partCol: String,
                        keyCol: String, subjects: DataFrame): DataFrame = {
-    val subj = broadcast(subjects.select(col(subjects.columns.head)
-      .as("__subject")).distinct())
+    val keys = subjectKeys(subjects)
+    val subj = broadcast(keys)
     val table = spark.read.parquet(path)
 
     // one pruned pass: which partitions hold subject rows, and how many
@@ -111,7 +120,7 @@ object Erasure {
           subj.schema("__subject").dataType, nullable = true),
         org.apache.spark.sql.types.StructField("n_rows_erased",
           org.apache.spark.sql.types.LongType, nullable = false))))
-    subj.join(receipt, Seq("__subject"), "left")
+    keys.join(receipt, Seq("__subject"), "left")
       .select(col("__subject").as(keyCol),
         coalesce(col("n_rows_erased"), lit(0L)).as("n_rows_erased"))
   }
@@ -123,10 +132,10 @@ object Erasure {
     */
   def eraseSnapshot(spark: SparkSession, path: String, keyCol: String,
                     subjects: DataFrame): DataFrame = {
-    val subj = broadcast(subjects.select(col(subjects.columns.head)
-      .as("__subject")).distinct())
+    val keys = subjectKeys(subjects)
+    val subj = broadcast(keys)
     val table = SnapshotStore.read(spark, path)
-    val receipt = subj.join(
+    val receipt = keys.join(
       table.join(subj, col(keyCol) === col("__subject"))
         .groupBy(col("__subject")).agg(count(lit(1)).as("__n")),
       Seq("__subject"), "left")
@@ -217,14 +226,14 @@ object Erasure {
                        deltaMembers: Map[String, BaseDelta.Table] = Map.empty,
                        deferred: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions._
-    val subj = broadcast(subjects.select(col(subjects.columns.head)
-      .as("__subject")).distinct())
+    val keys = subjectKeys(subjects)
+    val subj = broadcast(keys)
     val c = MultiSnapshot.currentCommit(spark, root).getOrElse(
       sys.error(s"Erasure.eraseCoordinated: nothing committed at $root"))
 
     def receiptOf(table: String, df: org.apache.spark.sql.DataFrame,
                   keyCol: String, status: String) =
-      subj.join(
+      keys.join(
           df.join(subj, col(keyCol) === col("__subject"))
             .groupBy(col("__subject")).agg(count(lit(1)).as("__n")),
           Seq("__subject"), "left")
@@ -246,7 +255,7 @@ object Erasure {
             if (deferred) {
               val rec = receiptOf(name, BaseDelta.read(spark, t), keyCol,
                 "pending").localCheckpoint(true)
-              BaseDelta.logicalErase(spark, t, keyCol, subj,
+              BaseDelta.logicalErase(spark, t, keyCol, keys,
                 countRows = false)
               rec
             } else {

@@ -66,6 +66,9 @@ import graft.gold.{BaseDelta, MultiSnapshot, Scd2Merge, UpsertByKey}
   * policy's scaladoc has the rationale and the measured threshold),
   * decided from the rows the fold reads — the batch plus the committed
   * inputs' footer row counts — and passed to every read, merge and audit.
+  * Everything after that decision (slices, folds, stage, audit, commit
+  * and maintenance) runs inside [[graft.Width.run]], so a single-width
+  * fold runs interpreted and a warm one compiles no generated class.
   * Committed inputs are read with the schema recorded in their footers,
   * never with an inference job.
   *
@@ -140,7 +143,9 @@ object MultiTableStream {
     * until upstream or the audit is fixed — WAP's intent: bad data must
     * not publish silently). `check` also receives the fold's
     * [[graft.Width]], which its candidates are pinned to, so its own joins
-    * can keep a small fold exchange-free.
+    * can keep a small fold exchange-free. A single-width fold runs the
+    * check interpreted ([[graft.Width.run]]), so every expression it
+    * evaluates must have an interpreted `eval` — every built-in one does.
     */
   final case class Audit(name: String,
                          check: (Map[String, DataFrame], Width) => DataFrame)
@@ -234,111 +239,115 @@ object MultiTableStream {
             (dims.map(_.table) ++ facts.map(_.table)), Width.FoldRows)) +
           deltaFacts.map(f => BaseDelta.storedRows(spark, f.deltaTable(root),
             Width.FoldRows)).sum)
-        val events = width.pin(pinned)
+        // everything after the width decision runs in the width's mode
+        // (interpreted when single: see graft.Width.run)
+        width.run(spark) {
+          val events = width.pin(pinned)
 
-        def slice(route: String, project: DataFrame => DataFrame): DataFrame =
-          project(events.filter(col(routeCol) === route).drop(routeCol))
+          def slice(route: String, project: DataFrame => DataFrame): DataFrame =
+            project(events.filter(col(routeCol) === route).drop(routeCol))
 
-        val newDims = dims.map { d =>
-          val rows0 = slice(d.route, d.project)
-          val snapshot0 =
-            if (gens.contains(d.table))
-              MultiSnapshot.readPinned(spark, root, committed.get, d.table, width)
-            else width.pin(Scd2Merge.emptyLogSnapshot(rows0, d.tsCol))
-          // opt-in evolution: an upstream ALTER TABLE that grew (or widened)
-          // columns aligns both sides to the least-common-supertype union
-          // schema — old versions read typed nulls for new columns, a NEW
-          // check column opens versions where its value differs from null
-          // (the correct SCD2 reading of "this attribute started existing").
-          // Off by default so accidental drift fails loudly.
-          val (snapshot, rows) =
-            if (!d.allowSchemaEvolution) (snapshot0, rows0)
-            else {
-              import graft.sources.SchemaEvolution
-              val target = SchemaEvolution.evolvedSchema(Seq(
-                snapshot0.drop(Scd2Merge.EffectiveFrom, Scd2Merge.EffectiveTo),
-                rows0.drop(d.tsCol)))
-              val tsType = rows0.schema(d.tsCol).dataType
-              val eff = org.apache.spark.sql.types.TimestampType
-              (SchemaEvolution.alignTo(snapshot0,
-                target :+ (Scd2Merge.EffectiveFrom -> eff)
-                  :+ (Scd2Merge.EffectiveTo -> eff)),
-                SchemaEvolution.alignTo(rows0, target :+ (d.tsCol -> tsType)))
-            }
-          d.table -> Scd2Merge.applyLog(snapshot, rows, d.keys, d.checkCols,
-            d.tsCol, d.tieBreak, d.opCol, width)
-        }
-        val newFacts = facts.map { f =>
-          val rows0 = slice(f.route, f.project)
-          val existing0 =
-            if (gens.contains(f.table))
-              Some(MultiSnapshot.readPinned(spark, root, committed.get, f.table,
-                width))
-            else None
-          val (existing, rows) =
-            if (!f.allowSchemaEvolution || existing0.isEmpty) (existing0, rows0)
-            else {
-              import graft.sources.SchemaEvolution
-              val target = SchemaEvolution.evolvedSchema(Seq(existing0.get, rows0))
-              (Some(SchemaEvolution.alignTo(existing0.get, target)),
-                SchemaEvolution.alignTo(rows0, target))
-            }
-          f.table -> UpsertByKey.mergeBatch(existing, rows, f.keys, f.orderCols,
-            f.opCol, width)
-        }
-        // WRITE. O(batch) facts first: STAGE the delta dir (durable,
-        // invisible — no committed pointer reaches this batch id yet); the
-        // pointer advances to batchId in the same atomic flip as the dims.
-        // An empty route stages nothing — readAt(batchId) then serves the
-        // earlier deltas.
-        val pointers = deltaFacts.map { f =>
-          if (routeRows.getOrElse(f.route, 0L) > 0)
-            // table-tier retired-state guard: an eager coordinated erasure
-            // compacting/rewriting this member mid-append surfaces as the
-            // typed conflict (the stream retries the batch), never a raw
-            // task-level fs failure
-            BaseDelta.conflictIfRetired(spark, f.deltaTable(root)) {
-              BaseDelta.append(spark, f.deltaTable(root),
-                slice(f.route, f.project), batchId)
-            }
-          f.table -> batchId
-        }.toMap
-        // then the new generations. Every batch stages a commit (the
-        // @sys.batch ledger marker rides it) even when all slices are
-        // empty — the replay check needs the marker to advance
-        // monotonically with batch ids. The publish is BASED ON the
-        // commit this fold read (`committed`): an erasure/repair that
-        // advanced one of our tables in between makes this batch a typed
-        // conflict the stream retries, never a silent overwrite of the
-        // erased state with our stale fold
-        val staged = MultiSnapshot.stage(spark, root, committed,
-          (newDims ++ newFacts).toMap, pointers + (BatchLedger -> batchId))
-        // AUDIT the staged bytes before the flip (delta facts read as of
-        // THIS batch — staged deltas included, which coordinator readers
-        // cannot see yet)
-        if (audits.nonEmpty) {
-          val candidates: Map[String, DataFrame] =
-            MultiSnapshot.readStaged(spark, staged, width) ++ deltaFacts.flatMap { f =>
-              val t = f.deltaTable(root)
-              val (base, ds) = BaseDelta.resolveSnapshot(spark, t)
-              if (base.isEmpty && ds.isEmpty) None
-              else Some(f.table -> BaseDelta.readAt(spark, t, batchId,
-                f.allowSchemaEvolution, width))
-            }
-          val failed = audits.flatMap { a =>
-            val n = a.check(candidates, width).limit(21).count()
-            if (n > 0) Some(s"${a.name} (${if (n > 20) ">20" else n} violations)")
-            else None
+          val newDims = dims.map { d =>
+            val rows0 = slice(d.route, d.project)
+            val snapshot0 =
+              if (gens.contains(d.table))
+                MultiSnapshot.readPinned(spark, root, committed.get, d.table, width)
+              else width.pin(Scd2Merge.emptyLogSnapshot(rows0, d.tsCol))
+            // opt-in evolution: an upstream ALTER TABLE that grew (or widened)
+            // columns aligns both sides to the least-common-supertype union
+            // schema — old versions read typed nulls for new columns, a NEW
+            // check column opens versions where its value differs from null
+            // (the correct SCD2 reading of "this attribute started existing").
+            // Off by default so accidental drift fails loudly.
+            val (snapshot, rows) =
+              if (!d.allowSchemaEvolution) (snapshot0, rows0)
+              else {
+                import graft.sources.SchemaEvolution
+                val target = SchemaEvolution.evolvedSchema(Seq(
+                  snapshot0.drop(Scd2Merge.EffectiveFrom, Scd2Merge.EffectiveTo),
+                  rows0.drop(d.tsCol)))
+                val tsType = rows0.schema(d.tsCol).dataType
+                val eff = org.apache.spark.sql.types.TimestampType
+                (SchemaEvolution.alignTo(snapshot0,
+                  target :+ (Scd2Merge.EffectiveFrom -> eff)
+                    :+ (Scd2Merge.EffectiveTo -> eff)),
+                  SchemaEvolution.alignTo(rows0, target :+ (d.tsCol -> tsType)))
+              }
+            d.table -> Scd2Merge.applyLog(snapshot, rows, d.keys, d.checkCols,
+              d.tsCol, d.tieBreak, d.opCol, width)
           }
-          if (failed.nonEmpty)
-            throw new AuditFailedException(
-              s"MultiTableStream: batch $batchId REFUSED at the publish gate — " +
-                s"${failed.mkString("; ")}. Readers keep commit " +
-                s"${committed.map(_.version).getOrElse(0L)}; staged state is " +
-                "invisible and a replay re-audits.")
+          val newFacts = facts.map { f =>
+            val rows0 = slice(f.route, f.project)
+            val existing0 =
+              if (gens.contains(f.table))
+                Some(MultiSnapshot.readPinned(spark, root, committed.get, f.table,
+                  width))
+              else None
+            val (existing, rows) =
+              if (!f.allowSchemaEvolution || existing0.isEmpty) (existing0, rows0)
+              else {
+                import graft.sources.SchemaEvolution
+                val target = SchemaEvolution.evolvedSchema(Seq(existing0.get, rows0))
+                (Some(SchemaEvolution.alignTo(existing0.get, target)),
+                  SchemaEvolution.alignTo(rows0, target))
+              }
+            f.table -> UpsertByKey.mergeBatch(existing, rows, f.keys, f.orderCols,
+              f.opCol, width)
+          }
+          // WRITE. O(batch) facts first: STAGE the delta dir (durable,
+          // invisible — no committed pointer reaches this batch id yet); the
+          // pointer advances to batchId in the same atomic flip as the dims.
+          // An empty route stages nothing — readAt(batchId) then serves the
+          // earlier deltas.
+          val pointers = deltaFacts.map { f =>
+            if (routeRows.getOrElse(f.route, 0L) > 0)
+              // table-tier retired-state guard: an eager coordinated erasure
+              // compacting/rewriting this member mid-append surfaces as the
+              // typed conflict (the stream retries the batch), never a raw
+              // task-level fs failure
+              BaseDelta.conflictIfRetired(spark, f.deltaTable(root)) {
+                BaseDelta.append(spark, f.deltaTable(root),
+                  slice(f.route, f.project), batchId)
+              }
+            f.table -> batchId
+          }.toMap
+          // then the new generations. Every batch stages a commit (the
+          // @sys.batch ledger marker rides it) even when all slices are
+          // empty — the replay check needs the marker to advance
+          // monotonically with batch ids. The publish is BASED ON the
+          // commit this fold read (`committed`): an erasure/repair that
+          // advanced one of our tables in between makes this batch a typed
+          // conflict the stream retries, never a silent overwrite of the
+          // erased state with our stale fold
+          val staged = MultiSnapshot.stage(spark, root, committed,
+            (newDims ++ newFacts).toMap, pointers + (BatchLedger -> batchId))
+          // AUDIT the staged bytes before the flip (delta facts read as of
+          // THIS batch — staged deltas included, which coordinator readers
+          // cannot see yet)
+          if (audits.nonEmpty) {
+            val candidates: Map[String, DataFrame] =
+              MultiSnapshot.readStaged(spark, staged, width) ++ deltaFacts.flatMap { f =>
+                val t = f.deltaTable(root)
+                val (base, ds) = BaseDelta.resolveSnapshot(spark, t)
+                if (base.isEmpty && ds.isEmpty) None
+                else Some(f.table -> BaseDelta.readAt(spark, t, batchId,
+                  f.allowSchemaEvolution, width))
+              }
+            val failed = audits.flatMap { a =>
+              val n = a.check(candidates, width).limit(21).count()
+              if (n > 0) Some(s"${a.name} (${if (n > 20) ">20" else n} violations)")
+              else None
+            }
+            if (failed.nonEmpty)
+              throw new AuditFailedException(
+                s"MultiTableStream: batch $batchId REFUSED at the publish gate — " +
+                  s"${failed.mkString("; ")}. Readers keep commit " +
+                  s"${committed.map(_.version).getOrElse(0L)}; staged state is " +
+                  "invisible and a replay re-audits.")
+          }
+          // PUBLISH: the one pointer flip
+          (MultiSnapshot.commit(spark, staged), width)
         }
-        // PUBLISH: the one pointer flip
-        (MultiSnapshot.commit(spark, staged), width)
       }
       require(c.version > committed.map(_.version).getOrElse(0L),
         s"MultiTableStream: version regressed to ${c.version} publishing " +
@@ -350,7 +359,7 @@ object MultiTableStream {
     // delta separable, so the time-travel floor lands on the previous
     // commit — BOTH retained commits stay readable via readAt for their
     // full retention cycle (matching MultiSnapshot's two-commit window)
-    deltaFacts.foreach { f =>
+    width.run(spark)(deltaFacts.foreach { f =>
       val t = f.deltaTable(root)
       val prevPtr = committed.flatMap(MultiSnapshot.pointer(_, f.table))
       if (BaseDelta.tombstoneBacklogOver(spark, t, tombstoneBudget))
@@ -373,7 +382,7 @@ object MultiTableStream {
         }
       else if (BaseDelta.deltaBatches(spark, t).size > f.maxDeltas)
         BaseDelta.compact(spark, t, upTo = prevPtr, width = width)
-    }
+    })
   }
 
   /** Rows per route value of the persisted batch `b` — ONE job, no
