@@ -46,7 +46,7 @@ object Prof {
     // call site of the exchange/action that produced it — the §1.1
     // "which stage is slow" readout without the UI
     val stageRows = new java.util.concurrent.ConcurrentLinkedQueue[
-      (String, Double, Long, Long, Long)]()
+      (String, Double, Long, Long, Long, Int)]()
     val stageListener = new SparkListener {
       override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
         val si = sc.stageInfo
@@ -55,7 +55,8 @@ object Prof {
           m.executorRunTime / 1e3,
           m.inputMetrics.bytesRead,
           m.shuffleReadMetrics.totalBytesRead,
-          m.shuffleWriteMetrics.bytesWritten))
+          m.shuffleWriteMetrics.bytesWritten,
+          si.numTasks))
       }
     }
     spark.sparkContext.addSparkListener(stageListener)
@@ -104,6 +105,9 @@ object Prof {
           .toSeq.sortBy(-_._2)
         val jobSum = bySite.map(_._2).sum
         println(f"\n### $name run$r total=$total%.2f s rows=$n jobs_sum=$jobSum%.2f s gap=${total - jobSum}%.2f s")
+        // the host-independent cost counts: jobs, stages run, their tasks
+        println(s"  jobs=${rows.size} stages=${stageRows.size} " +
+          s"tasks=${stageRows.asScala.map(_._6).sum}")
         bySite.take(30).foreach { case (site, t, c) =>
           println(f"  $t%8.3f s  x$c%-4d $site")
         }

@@ -2650,10 +2650,11 @@ object Queries {
         SELECT id_a, id_b, cosine FROM cosd WHERE cosine >= 0.2""")),
 
     // ── BPE merge training: learn the subword merge table from the corpus
-    //    — one corpus-sized word-count pass, then nMerges iterations over
-    //    the capped vocabulary frame (pair-count agg + 1-row argmax +
-    //    map-only merge kernel). No SQL oracle (iterative argmax);
-    //    OperatorsSpec pins the exact merge sequence on a known corpus. ──
+    //    — one corpus-sized word-count pass, collected once as the capped
+    //    vocabulary; the nMerges rounds (weighted pair count, argmax,
+    //    merge kernel) then run on the driver and launch no Spark job.
+    //    No SQL oracle (iterative argmax); OperatorsSpec pins the exact
+    //    merge sequence on a known corpus. ──
     // ── BPE merge training, ORACLE-VISIBLE (q106's trick): the learned
     //    merge table is iterative (not SQL-expressible), but its
     //    CONTRACT is — exactly nMerges ranks, contiguous 1..n, positive

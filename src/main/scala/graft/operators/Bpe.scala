@@ -12,23 +12,25 @@ import org.apache.spark.unsafe.types.UTF8String
   * Translation of Rare Words with Subword Units", ACL 2016) — learn the
   * merge table a subword tokenizer runs, from the corpus itself.
   *
-  * Distributed shape: the corpus collapses into a WORD-FREQUENCY table
-  * first (one explode + one hash aggregation — the only corpus-sized
-  * pass), capped at `topVocab` entries by (count desc, word asc) via
-  * distributed TakeOrdered. Every merge iteration then runs on that
-  * vocabulary frame: adjacent-pair counts weighted by word frequency
-  * (one small agg), a 1-row argmax to the driver (count desc, then
-  * lexicographic pair — fully deterministic), and a map-only kernel
-  * rewriting the symbol sequences. Training cost is
-  * O(corpus) + nMerges · O(vocab), the standard practice for BPE at
-  * scale (capping the training vocabulary loses only hapax tails that
-  * can't win a merge anyway once `topVocab` exceeds the distinct-word
-  * count of interest).
+  * Shape: the corpus collapses into a WORD-FREQUENCY table first (one
+  * explode + one hash aggregation — the only corpus-sized pass, at the
+  * session's width and AQE), capped at `topVocab` entries by
+  * (count desc, word asc) via distributed TakeOrdered and split into one
+  * symbol per character. That table comes to the driver in one collect,
+  * and the merge loop runs there in memory, as in the paper: each round
+  * counts adjacent pairs weighted by word frequency, takes the top pair
+  * (count desc, then (left, right) in Spark's string order — fully
+  * deterministic) and rewrites the symbol sequences with
+  * [[BpeKernels.applyMerge]], the kernel [[segment]] runs. Training cost
+  * stays O(corpus) + nMerges · O(vocab) (capping the training vocabulary
+  * loses only hapax tails that can't win a merge anyway once `topVocab`
+  * exceeds the distinct-word count of interest).
   *
-  * The merge loop is a single-partition [[Loop]]: the vocabulary frame is
-  * bounded at `topVocab` rows by construction (a few MB at the 10⁵
-  * default), so each round is one collect job + one checkpoint job with
-  * zero exchanges, and the plan doesn't grow with nMerges.
+  * Why the driver: the vocabulary is bounded at `topVocab` rows by
+  * construction (a few MB at the 10⁵ default), and as a Spark loop it sat
+  * in one partition anyway, so the rounds ran in one task each; on the
+  * driver a round costs no job launch, no checkpoint and no plan, where
+  * it cost a collect job and a checkpoint job.
   */
 object Bpe {
 
@@ -46,50 +48,61 @@ object Bpe {
 
   /** Learn `nMerges` merges. Returns (rank, left, right, pair_count) —
     * rank 1 is the first (highest-count) merge. Deterministic: ties in
-    * pair count break lexicographically on (left, right).
+    * pair count break lexicographically on (left, right). Stops early,
+    * with fewer rows, once no word has two symbols left.
     */
   def train(df: DataFrame, textCol: String, nMerges: Int,
             topVocab: Int = 100000): DataFrame = {
     require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
     val spark = df.sparkSession
     import spark.implicits._
-    // corpus → capped word-frequency table (the one corpus-sized pass)
-    val words = df.select(explode(TextAnalysis.tokens(col(textCol))).as("w"))
+    // corpus → capped word-frequency table (the one corpus-sized pass),
+    // each word split into its initial symbols: one per character
+    val vocab = df.select(explode(TextAnalysis.tokens(col(textCol))).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("w").asc).limit(topVocab)
-    // The corpus pass above keeps the session width and AQE (its shuffle
-    // is corpus-sized; the deployment's knobs are the right ones); only
-    // the merge loop below runs single-partition.
-    Loop.single { loop =>
-      // initial symbol sequences: one character per symbol
-      var vocab = loop.round(words.select(
-          // (?!^)(?!$): split at every inter-char position — NOT at the ends
-          // (Spark's split keeps the trailing empty piece a bare (?!^) emits)
-          split(col("w"), "(?!^)(?!$)").as("syms"), col("cnt")))
-      val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-      var rank = 1
-      while (rank <= nMerges) {
-        val top = vocab.filter(size(col("syms")) >= 2)
-          .select(explode(transform(sequence(lit(1), size(col("syms")) - 1),
-            i => struct(element_at(col("syms"), i).as("l"),
-              element_at(col("syms"), i + 1).as("r")))).as("p"), col("cnt"))
-          .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-          .agg(sum(col("cnt")).as("n"))
-          .orderBy(col("n").desc, col("l").asc, col("r").asc)
-          .limit(1).collect()
-        if (top.isEmpty) rank = nMerges + 1 // every word fully merged — stop
-        else {
-          val row = top.head
-          val (l, r, n) = (row.getString(0), row.getString(1), row.getLong(2))
-          merges += ((rank, l, r, n))
-          vocab = loop.round(
-            vocab.select(applyMerge(col("syms"), l, r).as("syms"), col("cnt")))
-          rank += 1
-        }
-      }
-      merges.toSeq.toDF("rank", "left", "right", "pair_count")
+      // (?!^)(?!$): split at every inter-char position — NOT at the ends
+      // (Spark's split keeps the trailing empty piece a bare (?!^) emits)
+      .select(split(col("w"), "(?!^)(?!$)").as("syms"), col("cnt"))
+      .collect()
+    val cnts = vocab.map(_.getLong(1))
+    var words: Array[ArrayData] = vocab.map(r => new GenericArrayData(
+      r.getSeq[String](0).map(UTF8String.fromString).toArray[Any]))
+    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
+    var done = false
+    while (!done && merges.length < nMerges) topPair(words, cnts) match {
+      case None => done = true // every word fully merged
+      case Some((l, r, n)) =>
+        merges += ((merges.length + 1, l.toString, r.toString, n))
+        val lr = UTF8String.concat(l, r)
+        words = words.map(BpeKernels.applyMerge(_, l, r, lr))
     }
+    merges.toSeq.toDF("rank", "left", "right", "pair_count")
+  }
+
+  /** The adjacent pair with the highest count over `words`, each
+    * occurrence weighted by its word's count; overlapping occurrences all
+    * count (a a a holds (a, a) twice). Ties break on left, then right, in
+    * Spark's string order (`UTF8String.compareTo`). None when no word has
+    * two symbols.
+    */
+  private def topPair(words: Array[ArrayData], cnts: Array[Long])
+      : Option[(UTF8String, UTF8String, Long)] = {
+    val n = scala.collection.mutable.HashMap.empty[(UTF8String, UTF8String), Long]
+    for (w <- words.indices; i <- 0 until words(w).numElements() - 1) {
+      val p = (words(w).getUTF8String(i), words(w).getUTF8String(i + 1))
+      n(p) = n.getOrElse(p, 0L) + cnts(w)
+    }
+    def before(a: ((UTF8String, UTF8String), Long),
+               b: ((UTF8String, UTF8String), Long)): Boolean =
+      if (a._2 != b._2) a._2 > b._2
+      else {
+        val c = a._1._1.compareTo(b._1._1)
+        if (c != 0) c < 0 else a._1._2.compareTo(b._1._2) < 0
+      }
+    n.reduceOption((a, b) => if (before(a, b)) a else b)
+      .map { case ((l, r), c) => (l, r, c) }
   }
 
   /** Tokenize text with a learned merge table: normalized chars → merges

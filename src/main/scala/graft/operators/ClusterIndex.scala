@@ -427,8 +427,10 @@ object ClusterIndex {
           s"(clusters applied through $cMax, postings $pMax) — a " +
           "concurrent fold is between its two appends; retry after it " +
           "commits (or complete a crashed fold by replaying the batch)")
-    val ids = broadcast(docIds.select(col(docIds.columns.head)
-      .as("__erase_id")).distinct())
+    // hinted only where it is a join's build side: the receipt's left
+    // join keeps every id, so it takes the unhinted keys
+    val idKeys = docIds.select(col(docIds.columns.head).as("__erase_id")).distinct()
+    val ids = broadcast(idKeys)
     val cur = BaseDelta.read(spark, st.clustersTable, allowSchemaEvolution = true)
     val affected = cur.join(ids, col("id") === col("__erase_id"))
       .select(col("cluster_id")).distinct()
@@ -453,7 +455,7 @@ object ClusterIndex {
       // + vacuum retire the files `cur` resolved
       val receipt =
         if (!defer) None
-        else Some(ids.join(
+        else Some(idKeys.join(
             cur.join(ids, col("id") === col("__erase_id"))
               .groupBy(col("__erase_id")).agg(count(lit(1)).as("__n")),
             Seq("__erase_id"), "left")

@@ -6,8 +6,8 @@ import org.apache.spark.sql.execution.LogicalRDD
 
 /** The one round policy of the iterative operators —
   * [[Dedup.resolveClusters]], [[GraphOps.pageRankInt]],
-  * [[GraphOps.ancestors]], [[Bpe.train]] and
-  * [[Similarity.centroidsKMeansParallel]] run their rounds through it.
+  * [[GraphOps.ancestors]] and [[Similarity.centroidsKMeansParallel]] run
+  * their rounds through it.
   *
   * '''Materialization.''' Each round's result is an EAGER checkpoint: an
   * iterative plan otherwise embeds the previous round's lineage 2–3× per
@@ -21,8 +21,7 @@ import org.apache.spark.sql.execution.LogicalRDD
   *
   * '''Layout.''' The loop's [[graft.Width]] (the one width policy; its
   * scaladoc states the rationale): a loop over at most
-  * [[graft.Width.SmallRows]] edge rows (or over a frame bounded by
-  * construction, like BPE's vocabulary) runs SINGLE-PARTITION — `pin`
+  * [[graft.Width.SmallRows]] edge rows runs SINGLE-PARTITION — `pin`
   * restates the partitioning fact after every checkpoint, since a
   * checkpoint's LogicalRDD reports Unknown partitioning even for a
   * one-partition RDD, so each round's joins and aggregations plan with
@@ -68,9 +67,6 @@ object Loop {
   /** A loop over `edges` edge rows, laid out by [[graft.Width.of]]. */
   def apply[A](edges: Long)(body: Loop => A): A =
     run(new Loop(graft.Width.of(edges)), body)
-
-  /** A loop over a frame bounded by construction: always single-partition. */
-  def single[A](body: Loop => A): A = run(new Loop(graft.Width.Single), body)
 
   /** A loop that keeps the session width. */
   def wide[A](body: Loop => A): A = run(new Loop(graft.Width.Session), body)

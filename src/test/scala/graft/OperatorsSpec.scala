@@ -2116,6 +2116,47 @@ class OperatorsSpec extends SparkSpec {
     assert(merges.head.getString(1) == "a" && merges.head.getString(2) == "b")
   }
 
+  test("bpe train: pairs count overlapping occurrences, merges apply left to right") {
+    import graft.operators.Bpe
+    val docs = Seq((1L, "aaaa aaa")).toDF("doc_id", "text")
+    val merges = Bpe.train(docs, "text", nMerges = 5)
+      .orderBy($"rank").collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
+    // (a,a): 3 in aaaa + 2 in aaa = 5; the merge leaves [aa,aa] and [aa,a],
+    // so (aa,a)=(aa,aa)=1 and "a" < "aa" breaks the tie; then [aa,aa] and
+    // [aaa] leave (aa,aa)=1, and after it nothing is left to merge
+    assert(merges.toList == List(
+      (1, "a", "a", 5L), (2, "aa", "a", 1L), (3, "aa", "aa", 1L)))
+  }
+
+  test("bpe train: the Spark job count does not grow with nMerges") {
+    import graft.operators.Bpe
+    val docs = (1L to 30L).map(i => (i, s"lower lowest newer newest wider doc$i"))
+      .toDF("doc_id", "text")
+    val tag = "bpe-train-jobs"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(_.getProperty(tag) != null)) jobs.incrementAndGet()
+    }
+    def jobsFor(nMerges: Int): (Int, Long) = {
+      org.apache.spark.ListenerBusDrain(spark)
+      jobs.set(0)
+      spark.sparkContext.setLocalProperty(tag, "1")
+      val merges = try Bpe.train(docs, "text", nMerges)
+        finally spark.sparkContext.setLocalProperty(tag, null)
+      org.apache.spark.ListenerBusDrain(spark)
+      (jobs.get, merges.count())
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val (j2, n2) = jobsFor(2)
+      val (j12, n12) = jobsFor(12)
+      assert((n2, n12) == ((2L, 12L)))
+      assert(j2 > 0 && j12 == j2, s"jobs: $j2 at nMerges=2, $j12 at nMerges=12")
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
   test("tfidf cosine pairs: identical docs score 1.0, disjoint docs never pair") {
     import graft.operators.Dedup
     val docs = Seq(

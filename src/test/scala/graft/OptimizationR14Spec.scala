@@ -52,7 +52,7 @@ class OptimizationR14Spec extends SparkSpec {
       "edge frame should be a checkpointed leaf")
   }
 
-  test("Bpe merge-loop argmax plans are shuffle-free (corpus pass is not pinned)") {
+  test("Bpe corpus pass exchanges at session width (merge rounds run on the driver)") {
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
@@ -68,15 +68,14 @@ class OptimizationR14Spec extends SparkSpec {
       // QueryExecutionListener events are delivered asynchronously
       org.apache.spark.ListenerBusDrain(spark)
       import scala.jdk.CollectionConverters._
-      // the per-merge argmax collects (TakeOrdered over the vocab frame)
-      // must plan without a shuffle; the ONE corpus-sized word count is
-      // the plan allowed to exchange (ADVICE r13: it must NOT run at the
-      // pinned loop width — no width pin exists at all now)
-      val argmax = plans.asScala.filter(_.contains("TakeOrderedAndProject"))
-        .filterNot(_.contains("Exchange hashpartitioning(w"))
-      assert(argmax.nonEmpty, "expected captured argmax plans")
-      argmax.foreach(p => assert(!p.contains("Exchange hashpartitioning"),
-        s"merge-loop argmax should be shuffle-free:\n$p"))
+      // the ONE corpus-sized word count is the only SQL action training
+      // runs, and it keeps the session's width (ADVICE r13: it must NOT
+      // run at a pinned loop width)
+      val corpus = plans.asScala.filter(_.contains("Exchange hashpartitioning(w"))
+      assert(corpus.size == 1, s"expected one corpus-pass plan, got:\n${plans.asScala.mkString("\n")}")
+      val width = spark.conf.get("spark.sql.shuffle.partitions")
+      assert(corpus.head.matches(s"(?s).*Exchange hashpartitioning\\(w#\\d+, $width\\).*"),
+        s"corpus pass should exchange at session width $width:\n${corpus.head}")
     } finally spark.listenerManager.unregister(listener)
   }
 
