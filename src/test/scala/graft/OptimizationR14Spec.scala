@@ -52,7 +52,7 @@ class OptimizationR14Spec extends SparkSpec {
       "edge frame should be a checkpointed leaf")
   }
 
-  test("Bpe corpus pass exchanges at session width (merge rounds run on the driver)") {
+  test("Bpe merge-loop argmax plans are shuffle-free (corpus pass is not pinned)") {
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
@@ -69,9 +69,13 @@ class OptimizationR14Spec extends SparkSpec {
       org.apache.spark.ListenerBusDrain(spark)
       import scala.jdk.CollectionConverters._
       // the ONE corpus-sized word count is the only SQL action training
-      // runs, and it keeps the session's width (ADVICE r13: it must NOT
-      // run at a pinned loop width)
-      val corpus = plans.asScala.filter(_.contains("Exchange hashpartitioning(w"))
+      // runs, and it keeps the session's width (it must NOT run at a
+      // pinned loop width)
+      val (corpus, rest) = plans.asScala.partition(_.contains("Exchange hashpartitioning(w"))
+      // the merge rounds run on the driver: apart from the corpus pass,
+      // nothing training plans (the merge table included) exchanges
+      rest.foreach(p => assert(!p.contains("Exchange"),
+        s"merge loop should plan shuffle-free:\n$p"))
       assert(corpus.size == 1, s"expected one corpus-pass plan, got:\n${plans.asScala.mkString("\n")}")
       val width = spark.conf.get("spark.sql.shuffle.partitions")
       assert(corpus.head.matches(s"(?s).*Exchange hashpartitioning\\(w#\\d+, $width\\).*"),
