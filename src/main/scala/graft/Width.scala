@@ -64,11 +64,11 @@ import org.apache.spark.sql.internal.SQLConf
   * `spark.sql.codegen.factoryMode=NO_CODEGEN`: the planner fuses no
   * stage and every projection, predicate and ordering is interpreted, so
   * a warm fold compiles nothing. Every expression the folds evaluate is a
-  * built-in one with an interpreted `eval`. The scope is counted per
-  * session: the first open scope sets both confs, the last to close
-  * restores each previous value (set or unset), so overlapping folds on
-  * one session leave it as they found it. A streaming sink's session is
-  * the query's own clone, so one stream's scope never reaches another.
+  * built-in one with an interpreted `eval`. The two confs are set through
+  * [[ScopedConf.within]], which counts scopes per session and key, so
+  * overlapping folds on one session leave it as they found it. A
+  * streaming sink's session is the query's own clone, so one stream's
+  * scope never reaches another.
   *
   * '''What interpreted costs.''' `graft.Perf fold-width` also runs single
   * width with codegen on ([[Width.SingleCompiled]]). Its one JVM runs one
@@ -113,7 +113,8 @@ object Width {
   case object Single extends Width(true) {
     def pin(df: DataFrame): DataFrame = df.coalesce(1)
     def hashSide(df: DataFrame): DataFrame = df.hint("shuffle_hash")
-    def run[A](spark: SparkSession)(body: => A): A = interpreted(spark)(body)
+    def run[A](spark: SparkSession)(body: => A): A =
+      ScopedConf.within(spark, Interpreted)(body)
   }
 
   case object Session extends Width(false) {
@@ -136,39 +137,6 @@ object Width {
   private val Interpreted = Seq(
     SQLConf.WHOLESTAGE_CODEGEN_ENABLED.key -> "false",
     SQLConf.CODEGEN_FACTORY_MODE.key -> "NO_CODEGEN")
-
-  /** One session's open interpreted scopes and the values they replaced
-    * (`None`: the conf was unset).
-    */
-  private final class Scopes(val saved: Seq[(String, Option[String])]) {
-    var open = 0
-  }
-  private val scopes = new java.util.WeakHashMap[SparkSession, Scopes]()
-
-  private def interpreted[A](spark: SparkSession)(body: => A): A = {
-    scopes.synchronized {
-      val s = Option(scopes.get(spark)).getOrElse {
-        val set = spark.conf.getAll
-        val s = new Scopes(Interpreted.map { case (k, _) => k -> set.get(k) })
-        Interpreted.foreach { case (k, v) => spark.conf.set(k, v) }
-        scopes.put(spark, s)
-        s
-      }
-      s.open += 1
-    }
-    try body
-    finally scopes.synchronized {
-      val s = scopes.get(spark)
-      s.open -= 1
-      if (s.open == 0) {
-        scopes.remove(spark)
-        s.saved.foreach {
-          case (k, Some(v)) => spark.conf.set(k, v)
-          case (k, None)    => spark.conf.unset(k)
-        }
-      }
-    }
-  }
 
   /** The width for a loop over `rows` edge rows. */
   def of(rows: Long): Width = if (rows <= SmallRows) Single else Session

@@ -29,11 +29,11 @@ import org.apache.spark.sql.functions._
   *    per key → tombstones dropped. One hash-aggregate shuffle, no sort;
   *    the same plan shape Delta Lake/Iceberg merge-on-read readers use.
   *  - `compact` folds the live deltas into base generation N+1 and commits
-  *    by atomically replacing `_manifest`; `appendAndMaybeCompact` runs it
+  *    it as the next manifest version; `appendAndMaybeCompact` runs it
   *    automatically past `maxDeltas` outstanding batches.
   *
   * Snapshot isolation (the manifest move table formats make): a reader
-  * resolves `_manifest` once and then touches only immutable paths, so a
+  * resolves the manifest once and then touches only immutable paths, so a
   * compaction that commits concurrently cannot pull files out from under
   * it — the previous base generation and its delta dirs are RETAINED for
   * one full compaction cycle and retired only by the next `compact`. A
@@ -52,9 +52,11 @@ import org.apache.spark.sql.functions._
   * (latest-wins on the same `orderCols`, and a re-dropped tombstone stays
   * dropped), so the view never regresses.
   *
-  * Legacy layout (pre-manifest: flat `<path>/base` + all deltas on disk)
-  * reads and appends keep working; the first `compact` migrates to the
-  * manifest protocol.
+  * The manifest is the only truth about what is committed: a dir with no
+  * committed manifest is an empty table, whatever the listing shows. A
+  * first append that crashed after writing its delta dir but before its
+  * manifest commit is therefore invisible, and replay checks built on
+  * [[deltaBatches]] re-apply that batch instead of skipping it.
   *
   * The ordering contract is the usual one: `orderCols` must totally order
   * versions of a key (include a unique id as the final tie-break).
@@ -73,8 +75,6 @@ object BaseDelta {
     */
   case class Table(path: String, keys: Seq[String], orderCols: Seq[String],
                    opCol: Option[String] = None) {
-    /** Legacy (pre-manifest) flat base location. */
-    def basePath = s"$path/base"
     def baseGenPath(gen: Long) = s"$path/base_g$gen"
     def deltaRoot = s"$path/delta"
     def deltaPath(batchId: Long) = s"$deltaRoot/batch=$batchId"
@@ -85,8 +85,8 @@ object BaseDelta {
     def tombstonePath(col: String) = s"$path/_tombstones/$col"
   }
 
-  /** Committed table state: base generation (0 = no compacted base yet /
-    * legacy flat base) + live delta batch ids. `foldedThrough` is the
+  /** Committed table state: base generation (0 = no compacted base yet)
+    * + live delta batch ids. `foldedThrough` is the
     * highest batch id ever folded into a base by `compact` — the time-
     * travel floor: as-of points below it are not separable from the fold
     * state, and `readAt` refuses them rather than silently serving newer
@@ -101,7 +101,7 @@ object BaseDelta {
   private def manifestVersions(spark: SparkSession, t: Table): Seq[Long] =
     CommitCas.versions(fs(spark, t.path), new Path(t.manifestRoot))
 
-  /** The committed manifest, or None for a legacy/empty table. */
+  /** The committed manifest, or None for an empty (never committed) table. */
   def readManifest(spark: SparkSession, t: Table): Option[Manifest] =
     readManifestVersioned(spark, t).map(_._2)
 
@@ -156,8 +156,8 @@ object BaseDelta {
           "and redo the append/compact against the new manifest)")
   }
 
-  /** Delta dirs present on disk (live + retained) — cleanup's view, not the
-    * reader's.
+  /** Delta dirs present on disk (live, retained and uncommitted) —
+    * cleanup's view, never the reader's.
     */
   private def diskDeltas(spark: SparkSession, t: Table): Seq[Long] =
     CommitCas.numbered(fs(spark, t.path), new Path(t.deltaRoot), "batch=")
@@ -165,25 +165,18 @@ object BaseDelta {
 
   /** Outstanding (live, unfolded) delta batch ids. */
   def deltaBatches(spark: SparkSession, t: Table): Seq[Long] =
-    readManifest(spark, t) match {
-      case Some(m) => m.deltas
-      case None => diskDeltas(spark, t)
-    }
+    readManifest(spark, t).map(_.deltas).getOrElse(Seq.empty)
 
   /** Resolve one consistent snapshot: (base dir if any, live delta ids).
     * The manifest is read exactly ONCE — resolving it twice could tear
     * across a concurrent compaction commit (old base + new empty delta
-    * list = silently missing data). Legacy (manifest-less) tables resolve
-    * by listing: the flat `base` dir, if any, plus the delta dirs on disk.
+    * list = silently missing data). No manifest: no base, no deltas.
     */
   def resolveSnapshot(spark: SparkSession, t: Table): (Option[String], Seq[Long]) =
     readManifest(spark, t) match {
       case Some(m) =>
-        (if (m.generation > 0) Some(t.baseGenPath(m.generation)) else None,
-          m.deltas)
-      case None =>
-        (Option.when(fs(spark, t.path).exists(new Path(t.basePath)))(t.basePath),
-          diskDeltas(spark, t))
+        (Option.when(m.generation > 0)(t.baseGenPath(m.generation)), m.deltas)
+      case None => (None, Seq.empty)
     }
 
   /** The active base directory, if a compacted base exists. */
@@ -565,16 +558,12 @@ object BaseDelta {
                         transform: DataFrame => DataFrame): Unit = {
     // manifest-less tables fail FAST and non-retryably: swapInDelta's
     // announce-then-swap protocol REQUIRES a manifest to announce
-    // against, so a diskDeltas fallback here could never succeed — it
-    // would only convert a permanent condition into an endless retryable
-    // loop downstream. Migrate the table first (any append/compact
-    // commits a manifest), then rewrite.
+    // against, and a table that never committed one holds no committed
+    // delta to rewrite — a retryable conflict here would only loop
     val live = readManifestVersioned(spark, t).map(_._2.deltas)
       .getOrElse(throw new IllegalStateException(
-        s"BaseDelta.rewriteKeptDeltas: no manifest at ${t.path} — " +
-          "legacy (manifest-less) tables cannot take the in-place " +
-          "announce-then-swap rewrite; run compact() first to commit a " +
-          "manifest, then redo"))
+        s"BaseDelta.rewriteKeptDeltas: no manifest at ${t.path} — the " +
+          "table has committed nothing, so there is no delta to rewrite"))
     live.filter(id => above.forall(id > _)).foreach { id =>
       val p = t.deltaPath(id)
       // materialize BEFORE the swap retires the source files
@@ -770,25 +759,10 @@ object BaseDelta {
           // leave the committed listing as is
           ()
       case None =>
-        // MIGRATE ON FIRST APPEND (not first compaction): commit a
-        // manifest naming every on-disk delta plus this batch. Without
-        // it, every table between its first append and first compaction
-        // lived on raw directory listings, and a fold-vs-OPTIMIZE race
-        // there was a SILENT LOSS: compact's listing could see this
-        // append's dir mid-write, fold a partial/empty snapshot of the
-        // batch, and floor time travel past its id — the replay ledger
-        // then skips the batch forever (caught live by CommitRaceSpec's
-        // index-fold-vs-OPTIMIZE race). With the manifest committed from
-        // birth, compact folds only manifest-listed (fully written)
-        // deltas and every writer serializes on the manifest CAS.
-        // Genuinely legacy tables (a pre-manifest flat base on disk) keep
-        // the old listing path — their migration is compact's, under the
-        // single-writer maintenance contract.
-        val f = fs(spark, t.path)
-        if (!f.exists(new Path(t.basePath)))
-          writeManifest(spark, t,
-            Manifest(0L, (diskDeltas(spark, t).toSet + batchId).toSeq.sorted),
-            basedOn = 0L)
+        // the table's first commit lists this batch alone: delta dirs an
+        // earlier crashed first append left on disk were never committed,
+        // and their replays commit them in turn
+        writeManifest(spark, t, Manifest(0L, Seq(batchId)), basedOn = 0L)
     }
   }
 
@@ -886,8 +860,8 @@ object BaseDelta {
   /** Fold live deltas into base generation N+1 and commit via the manifest.
     * Tombstoned keys are physically removed here. Retention: the previous
     * generation's base and delta dirs survive one more cycle for in-flight
-    * readers; anything older is retired now. The first compaction of a
-    * legacy (pre-manifest) table migrates it to the manifest layout.
+    * readers; anything older is retired now. A table with no committed
+    * manifest has nothing to fold.
     *
     * `upTo` bounds the fold: only deltas with id <= upTo fold into the
     * new base; later deltas stay LIVE (and separable). This is how a
@@ -928,14 +902,14 @@ object BaseDelta {
             "re-derive and retry")
     }
     val mOpt = mvOpt.map(_._2)
-    val live = mOpt.map(_.deltas).getOrElse(diskDeltas(spark, t))
+    val live = mOpt.map(_.deltas).getOrElse(Seq.empty)
     val foldable = upTo.map(b => live.filter(_ <= b)).getOrElse(live)
     val kept = live.diff(foldable)
     // plain compaction with nothing to fold is a no-op; a TRANSFORM
     // (erasure rewrite) must still run against the base alone
     if (foldable.isEmpty && transform.isEmpty) return
-    if (live.isEmpty && currentBasePath(spark, t).isEmpty) return // empty table
     val gen = mOpt.map(_.generation).getOrElse(0L)
+    if (live.isEmpty && gen == 0) return // empty table
     // RESERVE the new base generation number: two concurrent compactors
     // must never co-stage one base dir — each claims a distinct number,
     // the manifest CAS then decides whose lineage commits, and the
@@ -944,8 +918,8 @@ object BaseDelta {
       ".reserve.base", gen + 1)
     val newBase = new Path(t.baseGenPath(newGen))
     if (f.exists(newBase)) f.delete(newBase, true)  // crashed earlier attempt
-    val baseOpt = resolveSnapshot(spark, t)._1
-    val dirs = baseOpt.toSeq ++ foldable.map(t.deltaPath)
+    val dirs = Option.when(gen > 0)(t.baseGenPath(gen)).toSeq ++
+      foldable.map(t.deltaPath)
     require(dirs.nonEmpty,
       s"BaseDelta.compact: nothing to fold at ${t.path}")
     val folded1 = mergedView(spark, t, dirs, allowSchemaEvolution, width)
@@ -987,7 +961,6 @@ object BaseDelta {
     // APPEND's in-flight dir carries a HIGHER batch id — sweeping it
     // would corrupt the appender mid-write; orphans above the floor are
     // vacuum's job, at a writer-quiet moment)
-    if (gen >= 1) f.delete(new Path(t.basePath), true)
     (1L until gen).foreach(g => f.delete(new Path(t.baseGenPath(g)), true))
     (diskDeltas(spark, t).toSet -- live.toSet)
       .filter(id => folded.exists(_ >= id))
@@ -1012,18 +985,18 @@ object BaseDelta {
     * delta dirs and the previous-generation base on disk so readers that
     * resolved the prior snapshot mid-query keep working; once that
     * snapshot window has drained, this deletes them: base generations
-    * below the current one (plus the legacy flat base), delta dirs not
-    * referenced by the current manifest, and all but the newest
-    * `retainManifests` manifest versions.
+    * other than the current one, delta dirs not referenced by the
+    * current manifest, and all but the newest `retainManifests` manifest
+    * versions.
     *
     * Like Delta's VACUUM, this trades history for space: after it, only
     * the current snapshot (and any still-live deltas) is readable —
     * `readAt` below the fold floor already refuses, and vacuumed batch
     * ids now fail loudly rather than resolve. Storage-metadata work
     * only (listings + deletes on O(files) paths), no data pass. Returns
-    * the deleted paths for the operation ledger. No-op (Nil) on tables
-    * that never committed a manifest — there is no snapshot isolation
-    * to retire against.
+    * the deleted paths for the operation ledger. No-op (Nil) on a table
+    * that never committed a manifest: it is empty, and the manifest its
+    * first append commits decides what a later vacuum keeps.
     */
   def vacuum(spark: SparkSession, t: Table,
              retainManifests: Int = 2,
@@ -1038,8 +1011,7 @@ object BaseDelta {
     // base generations OTHER than current — below-current retained
     // history AND above-current orphans from crashed or CAS-losing
     // compactors (reserved numbers are never reused, so orphans don't
-    // self-heal by overwrite); plus reservation markers and the legacy
-    // flat base once any manifest-tracked generation exists. The FULL
+    // self-heal by overwrite); plus reservation markers. The FULL
     // form runs with no writers in flight (the Delta VACUUM
     // zero-retention contract); `writerSafeUpTo = Some(b)` is the
     // concurrent-writer form an EAGER coordinated erasure needs — it
@@ -1053,7 +1025,6 @@ object BaseDelta {
       if (writerSafe) g < m.generation else g != m.generation
     deleted ++= CommitCas.retire(f, new Path(t.path), "base_g")(retired)
     deleted ++= CommitCas.retire(f, new Path(t.manifestRoot), ".reserve.base")(retired)
-    if (m.generation >= 1) drop(new Path(t.basePath))
     // folded (or orphaned) delta dirs: anything not in the live set —
     // bounded at the fold point in writer-safe mode
     (diskDeltas(spark, t).toSet -- m.deltas.toSet).toSeq.sorted

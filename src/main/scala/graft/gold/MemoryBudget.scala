@@ -22,6 +22,10 @@ import org.apache.spark.sql.SparkSession
   *
   * Second lever: parquet writer row groups shrink under the floor
   * (128 MB default × concurrent writers alone exceeds a 3 GB JVM).
+  *
+  * The session-conf degradations hold only inside
+  * [[withLowMemoryProfile]]'s scope; nothing degrades a session for its
+  * lifetime.
   */
 object MemoryBudget {
 
@@ -37,11 +41,7 @@ object MemoryBudget {
   /** Generic floor (MB per task slot) below which degradations engage. */
   val FloorMb = 300L
 
-  private val AppliedKey = "graft.lowmem.appliedFloor"
-  private val BaseKey = "graft.lowmem.basePartitions"
-  private val BaseBroadcastKey = "graft.lowmem.baseAutoBroadcast"
-  private val DepthKey = "graft.lowmem.scopeDepth"
-  private val PriorFloorKey = "graft.lowmem.priorFloor"
+  private val ShuffleKey = "spark.sql.shuffle.partitions"
 
   /** The in-flight cap: how many concurrent tasks the heap can give
     * `floorMb` each (≥1). Uses the effective total (slots × per-slot
@@ -53,143 +53,51 @@ object MemoryBudget {
     math.max(1L, totalMb / floorMb).toInt
   }
 
-  /** STICKY session degradation, applied at pair-generator / fold entry
-    * when the budget sits below `floorMb`: LOWERS the session's default
-    * shuffle partitioning to the in-flight cap, so every downstream
-    * aggregation runs ≤ cap tasks at once and each owns at least the
-    * floor. Idempotent and monotone (a LARGER floor tightens the cap
-    * from the remembered pre-degradation base); an under-provisioned
-    * session stays degraded for its lifetime (tests restore via
-    * [[resetLowMemoryProfile]]). Returns true when the profile is
-    * active.
-    */
-  def applyLowMemoryProfile(spark: SparkSession,
-                            floorMb: Long = FloorMb): Boolean = synchronized {
-    val mb = mbPerSlot(spark)
-    val applied = spark.conf.getOption(AppliedKey).map(_.toLong)
-    if (mb >= floorMb) return applied.isDefined
-    if (applied.exists(_ >= floorMb)) return true
-    val base = spark.conf.getOption(BaseKey).map(_.toInt).getOrElse(
-      spark.conf.get("spark.sql.shuffle.partitions", "200").toInt)
-    spark.conf.set(BaseKey, base.toString)
-    spark.conf.set(AppliedKey, floorMb.toString)
-    spark.conf.set("spark.sql.shuffle.partitions",
-      math.min(base, slotCap(spark, floorMb)).toString)
-    // AUTO-broadcasts size themselves from compressed stats, which
-    // under-estimate in-memory bytes — at a sub-floor heap a single
-    // optimistic auto-broadcast is fatal (measured live at 3 GB/32).
-    // The engine's own broadcast() hints stay: those frames are
-    // deliberately bounded (request-sized subjects, nCells centroids).
-    // Capture the EXACT prior threshold first (builder/spark-submit
-    // values live only in session SQLConf — `unset` would silently
-    // fall back to the built-in 10 MB default, losing a deployment's
-    // custom value), so reset restores it byte-for-byte.
-    if (spark.conf.getOption(BaseBroadcastKey).isEmpty)
-      spark.conf.set(BaseBroadcastKey,
-        spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    true
-  }
+  /** The session's shuffle width, capped at `floorMb`'s in-flight cap. */
+  private def cappedParts(spark: SparkSession, floorMb: Long): Int =
+    math.min(spark.conf.get(ShuffleKey, "200").toInt, slotCap(spark, floorMb))
 
-  /** SCOPED low-memory degradation: engage [[applyLowMemoryProfile]] for
-    * the duration of `body` and restore the session's planning confs on
-    * exit (of the OUTERMOST scope — nesting keeps the tightest floor
-    * until the last scope closes). The eager operators that own their
-    * actions (the cluster fold / re-pair family) wrap their bodies here,
-    * so a 267-query mixed workload doesn't pay shuffle-capped,
-    * broadcast-less plans on every query that happens to run AFTER the
-    * first sub-floor fold — that sticky leak measured as a uniform
-    * ~1.2× across the whole benchmark suite at 256 MB/slot. Concurrent
-    * queries on other threads DURING a scope still see the degraded
-    * confs: conservative-correct, since a memory-starved fold in flight
-    * is exactly when an optimistic auto-broadcast is fatal. No-op at or
-    * above the floor.
+  /** Low-memory degradation, scoped to `body`: when the budget sits below
+    * `floorMb`, `body` runs with the session's default shuffle width
+    * LOWERED to the in-flight cap (every downstream aggregation runs
+    * ≤ cap tasks at once, each owning at least the floor) and
+    * auto-broadcast OFF. Auto-broadcasts size themselves from compressed
+    * stats, which under-estimate in-memory bytes — at a sub-floor heap a
+    * single optimistic auto-broadcast is fatal (measured live at 3 GB/32).
+    * The engine's own broadcast() hints stay: those frames are
+    * deliberately bounded (request-sized subjects, nCells centroids).
+    * No-op at or above the floor.
     *
-    * Scope state (depth + the pre-scope sticky floor) lives in the
-    * SESSION's conf, not JVM globals: two sessions in one JVM get
-    * independent scopes — session A's exit can't restore (or fail to
-    * restore) session B, and A's prior floor can't be re-applied to B.
-    * The depth is bumped only AFTER the engage succeeds, so a throwing
-    * engage can't leak a permanently-degraded session.
+    * Both values are computed at entry from the session as it stands, so
+    * a nested scope with a tighter floor tightens the cap and a looser
+    * one never loosens it. [[graft.ScopedConf]] restores the session's
+    * own values — a deployment-configured broadcast threshold included —
+    * when the last scope closes, also on a throw. The eager operators
+    * that own their actions (the cluster fold / re-pair family) wrap
+    * their bodies here, so a 267-query mixed workload doesn't pay
+    * shuffle-capped, broadcast-less plans on every query that happens to
+    * run AFTER the first sub-floor fold — a session-lifetime degradation
+    * measured as a uniform ~1.2× across the whole benchmark suite at
+    * 256 MB/slot. Concurrent queries on other threads DURING a scope
+    * still see the degraded confs: conservative-correct, since a
+    * memory-starved fold in flight is exactly when an optimistic
+    * auto-broadcast is fatal.
     */
   def withLowMemoryProfile[A](spark: SparkSession,
-                              floorMb: Long = FloorMb)(body: => A): A = {
-    if (mbPerSlot(spark) >= floorMb) return body
-    synchronized {
-      val depth = spark.conf.getOption(DepthKey).map(_.toInt).getOrElse(0)
-      if (depth == 0) {
-        spark.conf.getOption(AppliedKey) match {
-          case Some(f) => spark.conf.set(PriorFloorKey, f)
-          case None    => spark.conf.unset(PriorFloorKey)
-        }
-      }
-      // The engage mutates several confs in sequence; if it throws
-      // part-way, DepthKey was never written and the finally below won't
-      // run for this scope — restore NOW (outermost only; an inner-scope
-      // failure leaves the outer scope's finally responsible) instead of
-      // leaking a partially-degraded session.
-      try applyLowMemoryProfile(spark, floorMb)
-      catch {
-        case t: Throwable =>
-          if (depth == 0) {
-            val prior = spark.conf.getOption(PriorFloorKey).map(_.toLong)
-            spark.conf.unset(PriorFloorKey)
-            resetLowMemoryProfile(spark)
-            prior.foreach(f => applyLowMemoryProfile(spark, f))
-          }
-          throw t
-      }
-      spark.conf.set(DepthKey, (depth + 1).toString)
-    }
-    try body
-    finally synchronized {
-      val depth = spark.conf.getOption(DepthKey).map(_.toInt).getOrElse(1)
-      if (depth <= 1) {
-        spark.conf.unset(DepthKey)
-        val prior = spark.conf.getOption(PriorFloorKey).map(_.toLong)
-        spark.conf.unset(PriorFloorKey)
-        resetLowMemoryProfile(spark)
-        // an explicitly-applied (legacy sticky) profile that predated the
-        // outermost scope is the caller's contract — reinstate it
-        prior.foreach(f => applyLowMemoryProfile(spark, f))
-      } else spark.conf.set(DepthKey, (depth - 1).toString)
-    }
-  }
-
-  /** Undo [[applyLowMemoryProfile]] — restores the exact pre-engage
-    * planning confs (shuffle partitions AND auto-broadcast threshold;
-    * a plain `unset` would revert a deployment-configured threshold to
-    * the built-in default). Also used directly by shared test sessions.
-    */
-  def resetLowMemoryProfile(spark: SparkSession): Unit = synchronized {
-    spark.conf.getOption(BaseKey).foreach(b =>
-      spark.conf.set("spark.sql.shuffle.partitions", b))
-    spark.conf.getOption(BaseBroadcastKey) match {
-      case Some(b) =>
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", b)
-      case None =>
-        if (spark.conf.getOption(AppliedKey).isDefined)
-          spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    }
-    spark.conf.unset(BaseBroadcastKey)
-    spark.conf.unset(AppliedKey)
-    spark.conf.unset(BaseKey)
-  }
+                              floorMb: Long = FloorMb)(body: => A): A =
+    if (mbPerSlot(spark) >= floorMb) body
+    else graft.ScopedConf.within(spark, Seq(
+      ShuffleKey -> cappedParts(spark, floorMb).toString,
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1"))(body)
 
   /** Partition count for a pinned pair shuffle under `floorMb` — the
-    * in-flight cap — or None at/above the floor. Pinned repartitions
-    * are AQE-coalesce-exempt, so the cap holds exactly on the stages
-    * measured to OOM first.
+    * session's shuffle width capped at the in-flight cap — or None
+    * at/above the floor. Pinned repartitions are AQE-coalesce-exempt, so
+    * the cap holds exactly on the stages measured to OOM first.
     */
   private[graft] def pairParts(spark: SparkSession,
-                               floorMb: Long): Option[Int] = {
-    val mb = mbPerSlot(spark)
-    if (mb >= floorMb) None
-    else Some(math.min(
-      spark.conf.getOption(BaseKey).map(_.toInt).getOrElse(
-        spark.conf.get("spark.sql.shuffle.partitions", "200").toInt),
-      slotCap(spark, floorMb)))
-  }
+                               floorMb: Long): Option[Int] =
+    Option.when(mbPerSlot(spark) < floorMb)(cappedParts(spark, floorMb))
 
   /** Parquet writer options for the current budget: empty at or above
     * the floor; below it, row groups shrink to ~budget/4 (floor 4 MB)

@@ -53,12 +53,16 @@ object ErasureSweep {
                    lsh: Seq[LshVectorIndex.State] = Nil): DataFrame = {
     // materialize the request-sized subject set ONCE — every tier's
     // audit count and erase would otherwise re-derive the caller's
-    // subject plan (typically a filter over a source table) per use
-    val subj = broadcast(subjects.select(col(subjects.columns.head)
-      .as("__subject")).distinct().coalesce(1).localCheckpoint(true))
+    // subject plan (typically a filter over a source table) per use.
+    // Unhinted: each eraser hints its own build sides, and a hint on a
+    // frame an eraser unions or keeps as a join's preserved side is one
+    // Spark drops
+    val subj = subjects.select(col(subjects.columns.head).as("__subject"))
+      .distinct().coalesce(1).localCheckpoint(true)
 
     def found(df: DataFrame, keyCol: String): Long =
-      df.join(subj, col(keyCol) === col("__subject"), "left_semi").count()
+      df.join(broadcast(subj), col(keyCol) === col("__subject"), "left_semi")
+        .count()
 
     type Row5 = (String, String, String, String, Long)
 

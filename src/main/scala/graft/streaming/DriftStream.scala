@@ -111,19 +111,6 @@ object DriftStream {
     foldState(spark, Quality.catCurrentHist(batch, catCol, groupCol),
       statePath, Seq(groupCol, catCol), "cur_n", batchId)
 
-  /** The categorical monitor as a `foreachBatch` stream. */
-  def tvdStream(events: DataFrame, statePath: String, checkpoint: String,
-                catCol: String, groupCol: String,
-                trigger: Trigger = Trigger.ProcessingTime("1 minute")): StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        foldCatBatch(batch.sparkSession, batch.toDF(), statePath, catCol,
-          groupCol, batchId)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
-
   /** Total-variation distance per group vs the published reference mix. */
   def tvdReadout(spark: SparkSession, refHistPath: String, statePath: String,
                  catCol: String, groupCol: String): DataFrame =

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.silver.Quality
 
 /** Streaming feature-correlation monitor: the O(batch) form of
@@ -36,18 +35,6 @@ object MomentsStream {
     }
     ()
   }
-
-  /** The monitor as a `foreachBatch` stream. */
-  def momentsStream(events: DataFrame, statePath: String, checkpoint: String,
-                    cols: Seq[String],
-                    trigger: Trigger = Trigger.ProcessingTime("1 minute")): StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        foldBatch(batch.sparkSession, batch.toDF(), statePath, cols, batchId)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
 
   /** Correlation matrix from the persisted 1-row state — no history
     * access.

@@ -115,28 +115,23 @@ class BaseDeltaSpec extends SparkSpec {
     assert(snap(BaseDelta.read(spark, table)) == Map(1L -> (("a", 1)), 2L -> (("b", 1))))
   }
 
-  test("legacy dangling base: read falls back WITHOUT mutating; the writer recovers") {
-    // legacy layout = what pre-manifest code wrote: flat base, no _manifest
-    val path = tmpDir("bd-dangle") + "/t"
+  test("an uncommitted first delta is invisible and its replay commits only that batch") {
+    val path = tmpDir("bd-orphan") + "/t"
     val table = t(path)
-    Seq((1L, "a", 1)).toDF("id", "v", "ver").write.parquet(table.basePath)
-    BaseDelta.append(spark, table, Seq((2L, "b", 1)).toDF("id", "v", "ver"), 1L)
-    val fs = new org.apache.hadoop.fs.Path(table.basePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(BaseDelta.readManifest(spark, table).isEmpty,
-      "an append onto a flat base must stay legacy")
-    // read resolves the flat base plus the on-disk deltas by listing, and
-    // must not migrate anything — a reader racing a writer's compact must
-    // never mutate the layout
-    assert(snap(BaseDelta.read(spark, table)) ==
-      Map(1L -> (("a", 1)), 2L -> (("b", 1))))
+    // a first append that crashed after its delta write, before the
+    // manifest commit: the dir is on disk, no manifest names it
+    Seq((1L, "a", 1)).toDF("id", "v", "ver").write.parquet(table.deltaPath(0L))
     assert(BaseDelta.readManifest(spark, table).isEmpty)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(table.basePath)))
-    // the WRITE path migrates the flat base to a manifest generation
-    BaseDelta.compact(spark, table)
-    assert(BaseDelta.readManifest(spark, table).exists(_.generation == 1))
-    assert(snap(BaseDelta.read(spark, table)) ==
-      Map(1L -> (("a", 1)), 2L -> (("b", 1))))
+    assert(BaseDelta.deltaBatches(spark, table).isEmpty,
+      "an uncommitted delta is visible to the replay check")
+    assert(BaseDelta.resolveSnapshot(spark, table) == ((None, Seq.empty)))
+    val e = intercept[IllegalArgumentException](BaseDelta.read(spark, table))
+    assert(e.getMessage.contains("empty table"))
+    // the replay of batch 0 commits the table's first manifest: [0]
+    BaseDelta.append(spark, table, Seq((1L, "b", 2)).toDF("id", "v", "ver"), 0L)
+    assert(BaseDelta.readManifest(spark, table).contains(
+      BaseDelta.Manifest(0L, Seq(0L))))
+    assert(snap(BaseDelta.read(spark, table)) == Map(1L -> (("b", 2))))
   }
 
   test("snapshot isolation: a read planned before compact() still collects correctly") {
@@ -412,7 +407,7 @@ class BaseDeltaSpec extends SparkSpec {
   test("rewriteKeptDeltas on a manifest-less table fails fast, not retryably") {
     val path = tmpDir("bd-legacyswap") + "/t"
     val table = t(path)
-    // legacy layout: a delta dir on disk, no manifest ever committed
+    // a delta dir on disk, no manifest ever committed
     Seq((1L, "a", 1)).toDF("id", "v", "ver")
       .write.parquet(table.deltaPath(0L))
     val e = intercept[IllegalStateException] {

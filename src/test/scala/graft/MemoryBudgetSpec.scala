@@ -76,27 +76,6 @@ class MemoryBudgetSpec extends SparkSpec {
     } finally sys.props.remove("graft.test.mbPerCore")
   }
 
-  test("a pre-scope sticky profile is reinstated on outermost exit (caller's contract)") {
-    val s = spark.newSession()
-    s.conf.set(ShuffleKey, "13")
-    sys.props("graft.test.mbPerCore") = "150"
-    try {
-      MemoryBudget.applyLowMemoryProfile(s) // legacy sticky engage
-      assert(s.conf.get(BcastKey) == "-1")
-      MemoryBudget.withLowMemoryProfile(s, floorMb = 600L) {
-        assert(s.conf.get(BcastKey) == "-1")
-      }
-      // the sticky profile predates the scope — it must survive the exit
-      assert(s.conf.get(BcastKey) == "-1",
-        "scope exit must reinstate the pre-existing sticky profile")
-      MemoryBudget.resetLowMemoryProfile(s)
-      assert(graftKeys(s).isEmpty)
-    } finally {
-      sys.props.remove("graft.test.mbPerCore")
-      MemoryBudget.resetLowMemoryProfile(s)
-    }
-  }
-
   test("at/above the floor the wrapper is a no-op: zero session-conf mutations") {
     val s = spark.newSession()
     sys.props("graft.test.mbPerCore") = "100000" // roomy heap

@@ -2667,9 +2667,6 @@ class OperatorsSpec extends SparkSpec {
       val got = ClusterIndex.clusters(spark, st)
       assert(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty,
         "degraded incremental clusters diverge from the recompute")
-    } finally {
-      sys.props.remove("graft.test.mbPerCore")
-      graft.gold.MemoryBudget.resetLowMemoryProfile(spark)
-    }
+    } finally sys.props.remove("graft.test.mbPerCore")
   }
 }
